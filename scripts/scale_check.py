@@ -1,0 +1,81 @@
+#!/usr/bin/env python
+"""Off-gate scale point for the ETL: build and write the warehouse from a
+large generated Superstore CSV and report what it cost.
+
+The CSV comes from the benchmark's seeded generator (``perfbench/gen.py``,
+imported as is), so it carries every reference quirk at the benchmark's
+rates. One process starts Spark at ``local[<cores>]`` with a 2 GiB driver
+heap, calls ``build_warehouse`` and ``write_warehouse`` once, and prints
+the wall time and the process-tree CPU (Python driver, JVM and workers;
+JVM start included) plus the row count of every written table.
+
+This is not part of tier-1 or of the benchmark: it checks that a cut in
+fixed per-operation cost does not hide a cost that grows with the data.
+To compare two checkouts, run each one's copy on the same ``--data`` dir
+and compare the printed counts (and the written tables under ``--out``).
+
+The CSV uses generator seed 0. ``--rows`` is 250,000 by default; at
+1,000,000 it checks the headroom of the dimension cap
+(``dims.MAX_MEMBERS``).
+
+Usage: python scripts/scale_check.py [--rows 250000] [--data DIR] [--out DIR]
+"""
+
+from __future__ import annotations
+
+import argparse
+import os
+import shutil
+import sys
+import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
+
+import gen  # noqa: E402
+from tracing import tree_cpu_s  # noqa: E402
+
+SEED = 0
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--rows", type=int, default=250_000)
+    ap.add_argument("--data", default=os.path.join(ROOT, ".perfbench", "data"))
+    ap.add_argument("--out", default=os.path.join(ROOT, ".perfbench", "scale-warehouse"))
+    args = ap.parse_args()
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(args.data, exist_ok=True)
+    info = gen.superstore_csv(args.data, SEED, args.rows)
+    shutil.rmtree(args.out, ignore_errors=True)
+
+    cpu0, t0 = tree_cpu_s(), time.perf_counter()
+    from super_store_datawarehouse_spark.session import get_spark
+    from super_store_datawarehouse_spark.warehouse import build_warehouse, write_warehouse
+
+    spark = get_spark(
+        "scale-check",
+        master=f"local[{len(os.sched_getaffinity(0))}]",
+        extra_conf={"spark.driver.memory": "2g"},
+    )
+    write_warehouse(build_warehouse(spark, info.path), args.out)
+    wall, cpu = time.perf_counter() - t0, tree_cpu_s() - cpu0
+    spark.stop()
+
+    print(f"csv {info.path}: {info.rows} lines, {info.merged_lines} merged")
+    print(f"wall_s {wall:.1f}")
+    print(f"cpu_s {cpu:.1f}")
+    for name in sorted(os.listdir(args.out)):
+        table_dir = os.path.join(args.out, name)
+        if not os.path.isdir(table_dir):
+            continue
+        files = [f for f in os.listdir(table_dir) if f.endswith(".parquet")]
+        rows = sum(pq.read_metadata(os.path.join(table_dir, f)).num_rows for f in files)
+        print(f"{name:20s} {rows:9d} rows {len(files):3d} files")
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from super_store_datawarehouse_spark.functions.exact import cents
-from super_store_datawarehouse_spark.session import localize, scoped_cache
+from super_store_datawarehouse_spark.session import collect_capped, localize, scoped_cache
 from super_store_datawarehouse_spark.operators import dedup, similarity
 from super_store_datawarehouse_spark.operators import sampling as sampling_ops
 from super_store_datawarehouse_spark.operators.sampling import bucket_sql as _bucket_sql
@@ -2637,31 +2637,39 @@ def q26_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
     # after the nation-grain rollup everything is ≤ n² rows. The
     # expensive part of PageRank is building the edge rollup from the
-    # fact join; LOCALIZE the ≤n²-row rollup so the fact join runs
-    # exactly once (a lazy cache would stampede), then run the unrolled
-    # iterations as DRIVER-SIDE integer arithmetic over those ≤625 rows
-    # (round 12, VERDICT r11 #4 / guide §5): the former plan chained
-    # two 32-partition contribution shuffles + four broadcast builds
-    # over ≤25-row frames PER RUN — pure scheduler wait (run/cpu was
-    # ~14× with the fact join itself map-only). Same bounded-driver
+    # fact join; collect the ≤n²-row rollup once (capped), then run the
+    # unrolled iterations as DRIVER-SIDE integer arithmetic over those
+    # ≤625 rows (round 12, VERDICT r11 #4 / guide §5): the former plan
+    # chained two 32-partition contribution shuffles + four broadcast
+    # builds over ≤25-row frames PER RUN — pure scheduler wait (run/cpu
+    # was ~14× with the fact join itself map-only). Same bounded-driver
     # contract as clustering.update_centroids; every op is the oracle's
     # truncating integer div on non-negative ints, so values are
-    # bit-identical. The final plan is one broadcast join against the
-    # 25-row rank table.
-    ew_rows = localize(edges.join(F.broadcast(outw), "src")).collect()
-    node_rows = nation.select(F.col("n_nationkey").alias("id")).collect()
-    node_ids = [r["id"] for r in node_rows]
+    # bit-identical. Like the oracle's joins to nation, an edge with an
+    # end outside nation is dropped before the out-weights are summed.
+    # The final plan is one broadcast join against the 25-row rank
+    # table.
+    node_ids = collect_capped(nation, 100_000, "q26 nations")["n_nationkey"].to_pylist()
+    nodes = set(node_ids)
+    ew_rows = [
+        e
+        for e in collect_capped(edges, 100_000, "q26 edge rollup").to_pylist()
+        if e["src"] in nodes and e["dst"] in nodes
+    ]
+    out_w: dict = {}
+    for e in ew_rows:
+        out_w[e["src"]] = out_w.get(e["src"], 0) + e["w"]
 
     def rank_step(ranks: dict | None) -> dict:
         contrib: dict = {}
         for e in ew_rows:
+            ow = out_w[e["src"]]
             c = (
-                (1000000 * e["w"]) // e["ow"]
+                (1000000 * e["w"]) // ow
                 if ranks is None  # r0 ≡ 1e6: contribution is w-proportional
-                else (ranks[e["src"]] * e["w"]) // e["ow"]
+                else (ranks[e["src"]] * e["w"]) // ow
             )
             contrib[e["dst"]] = contrib.get(e["dst"], 0) + c
         return {

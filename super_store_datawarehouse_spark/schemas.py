@@ -5,6 +5,11 @@ per SURVEY.md §1.2: INT → IntegerType, VARCHAR → StringType, DATE →
 DateType, DECIMAL(10,2)/(3,2) → DecimalType. Surrogate keys use LongType
 (row_number output) — value ranges match INT at reference scale but the
 engine doesn't inherit MySQL's 32-bit ceiling.
+
+``WAREHOUSE_SCHEMAS`` is the contract of ``build_warehouse``: every table
+it returns has exactly the declared column names, types, nullability and
+order (tests/test_dimensions.py). The dimensions are created with these
+schemas; the facts' plans must produce them.
 """
 
 from __future__ import annotations
@@ -62,9 +67,9 @@ CALENDAR_SCHEMA = StructType(
     [
         _f("calendar_id", LongType(), False),
         _f("full_date", DateType()),
-        _f("year_id", IntegerType()),
+        _f("year_id", IntegerType(), False),
         _f("year_number", IntegerType()),
-        _f("month_id", LongType()),
+        _f("month_id", LongType(), False),
         _f("month_number", IntegerType()),
         _f("month_name", StringType()),
         _f("day_id", IntegerType()),
@@ -77,7 +82,7 @@ CALENDAR_MONTH_SCHEMA = StructType(
         _f("calendar_month_id", LongType(), False),
         _f("calendar_month_number", IntegerType()),
         _f("calendar_month_name", StringType()),
-        _f("year_id", IntegerType()),
+        _f("year_id", IntegerType(), False),
         _f("year_number", IntegerType()),
     ]
 )
@@ -95,7 +100,7 @@ REGION_SCHEMA = StructType(
     [
         _f("region_id", LongType(), False),
         _f("region_name", StringType()),
-        _f("country_id", IntegerType()),
+        _f("country_id", IntegerType(), False),
         _f("country_name", StringType()),
     ]
 )
@@ -104,9 +109,9 @@ STATE_SCHEMA = StructType(
     [
         _f("state_id", LongType(), False),
         _f("state_name", StringType()),
-        _f("region_id", LongType()),
+        _f("region_id", LongType(), False),
         _f("region_name", StringType()),
-        _f("country_id", IntegerType()),
+        _f("country_id", IntegerType(), False),
         _f("country_name", StringType()),
     ]
 )
@@ -115,13 +120,13 @@ LOCATION_SCHEMA = StructType(
     [
         _f("location_id", LongType(), False),
         _f("location_code", StringType()),
-        _f("country_id", IntegerType()),
+        _f("country_id", IntegerType(), False),
         _f("country_name", StringType()),
-        _f("region_id", LongType()),
+        _f("region_id", LongType(), False),
         _f("region_name", StringType()),
-        _f("state_id", LongType()),
+        _f("state_id", LongType(), False),
         _f("state_name", StringType()),
-        _f("city_id", IntegerType()),
+        _f("city_id", IntegerType(), False),
         _f("city_name", StringType()),
         _f("postal_code", StringType()),
     ]
@@ -139,9 +144,9 @@ PRODUCT_SCHEMA = StructType(
         _f("product_id", LongType(), False),
         _f("product_code", StringType()),
         _f("product_name", StringType()),
-        _f("category_id", LongType()),
+        _f("category_id", LongType(), False),
         _f("category_name", StringType()),
-        _f("sub_category_id", IntegerType()),
+        _f("sub_category_id", IntegerType(), False),
         _f("sub_category_name", StringType()),
     ]
 )
@@ -155,9 +160,9 @@ SHIPPING_SCHEMA = StructType(
 
 ITEM_SCHEMA = StructType(
     [
-        _f("customer_id", LongType()),
+        _f("customer_id", LongType(), False),
         _f("location_id", LongType()),
-        _f("calendar_id", LongType()),
+        _f("calendar_id", LongType(), False),
         _f("product_id", LongType()),
         _f("order_code", StringType()),
         _f("quantity", IntegerType()),
@@ -170,11 +175,11 @@ ITEM_SCHEMA = StructType(
 
 ORDERS_SCHEMA = StructType(
     [
-        _f("order_calendar_id", LongType()),
-        _f("shipping_calendar_id", LongType()),
-        _f("customer_id", LongType()),
+        _f("order_calendar_id", LongType(), False),
+        _f("shipping_calendar_id", LongType(), False),
+        _f("customer_id", LongType(), False),
         _f("location_id", LongType()),
-        _f("shipping_id", LongType()),
+        _f("shipping_id", LongType(), False),
         _f("order_code", StringType()),
         _f("sales_order", MONEY),
         _f("quantity_order", MONEY),
@@ -185,8 +190,8 @@ ORDERS_SCHEMA = StructType(
 
 ORDER_M_SCHEMA = StructType(
     [
-        _f("calendar_month_id", LongType()),
-        _f("state_id", LongType()),
+        _f("calendar_month_id", LongType(), False),
+        _f("state_id", LongType(), False),
         _f("sales_month", MONEY),
         _f("quantity_month", MONEY),
         _f("lost_value_month", MONEY),
@@ -196,9 +201,9 @@ ORDER_M_SCHEMA = StructType(
 
 PRODUCT_PERFORMANCE_SCHEMA = StructType(
     [
-        _f("category_id", LongType()),
-        _f("state_id", LongType()),
-        _f("calendar_month_id", LongType()),
+        _f("category_id", LongType(), False),
+        _f("state_id", LongType(), False),
+        _f("calendar_month_id", LongType(), False),
         _f("total_sales", MONEY),
         _f("total_profit", MONEY),
         _f("cumulative_profit", MONEY),
@@ -208,21 +213,21 @@ PRODUCT_PERFORMANCE_SCHEMA = StructType(
 
 SHIPPING_BEHAVIOR_SCHEMA = StructType(
     [
-        _f("shipping_id", LongType()),
-        _f("category_id", LongType()),
-        _f("region_id", LongType()),
+        _f("shipping_id", LongType(), False),
+        _f("category_id", LongType(), False),
+        _f("region_id", LongType(), False),
         _f("shipping_delay", IntegerType()),
-        _f("method_freq", IntegerType()),
+        _f("method_freq", IntegerType(), False),
     ]
 )
 
 SHIPPING_BEHAVIOR_S_SCHEMA = StructType(
     [
-        _f("shipping_id", LongType()),
-        _f("category_id", LongType()),
-        _f("state_id", LongType()),
+        _f("shipping_id", LongType(), False),
+        _f("category_id", LongType(), False),
+        _f("state_id", LongType(), False),
         _f("shipping_delay", IntegerType()),
-        _f("method_freq", IntegerType()),
+        _f("method_freq", IntegerType(), False),
     ]
 )
 

@@ -185,6 +185,27 @@ def scoped_cache(df, storage_level=None):
     return df
 
 
+class RowCapExceeded(ValueError):
+    """A driver-side collect met more rows than its cap."""
+
+
+def collect_capped(df, max_rows: int, what: str):
+    """Collect ``df`` to the driver as an Arrow table of at most ``max_rows``.
+
+    Every driver-side collect of a frame that is small by construction
+    goes through here, so each has a loud cap: at most ``max_rows + 1``
+    rows leave the executors, and one row too many raises
+    :class:`RowCapExceeded` (a ``ValueError``) naming ``what``.
+    """
+    table = df.limit(max_rows + 1).toArrow()
+    if table.num_rows > max_rows:
+        raise RowCapExceeded(
+            f"{what} exceeds max_rows={max_rows}; a driver-side collect is "
+            "for results bounded by construction"
+        )
+    return table
+
+
 def localize(df, max_rows: int = 100_000, on_overflow: str = "raise"):
     """Materialize a SMALL DataFrame to a driver-side LocalRelation.
 
@@ -196,8 +217,8 @@ def localize(df, max_rows: int = 100_000, on_overflow: str = "raise"):
     exactly once and costs nothing to re-read — downstream joins
     against it broadcast trivially and canonicalize stably.
 
-    Guard: refuses to localize more than ``max_rows`` (this is a
-    driver-side collect — the same boundedness contract as a broadcast
+    Guard: the rows come through :func:`collect_capped`, which refuses
+    more than ``max_rows`` (the same boundedness contract as a broadcast
     join side). Only use where the row bound holds BY CONSTRUCTION —
     or, when the bound is merely EXPECTED (data-dependent, e.g. IVF
     cell occupancy under clustered embeddings), pass
@@ -208,17 +229,15 @@ def localize(df, max_rows: int = 100_000, on_overflow: str = "raise"):
     (ADVICE r8: a hard ValueError at plan-build time is the wrong
     failure mode for a shape that would merely run slower).
     """
-    rows = df.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
-        if on_overflow == "cache":
-            cached = scoped_cache(df)
-            cached.count()  # eager: one materialization, no stampede
-            return cached
-        raise ValueError(
-            f"localize(): frame exceeds max_rows={max_rows}; "
-            "this helper is for results bounded by construction"
-        )
-    return df.sparkSession.createDataFrame(rows, df.schema)
+    try:
+        table = collect_capped(df, max_rows, "localize()")
+    except RowCapExceeded:
+        if on_overflow != "cache":
+            raise
+        cached = scoped_cache(df)
+        cached.count()  # eager: one materialization, no stampede
+        return cached
+    return df.sparkSession.createDataFrame(table, df.schema)
 
 
 def release_scoped_caches() -> int:

@@ -63,13 +63,14 @@ def read_superstore_csv(spark: SparkSession, path: str = DEFAULT_CSV_PATH) -> Da
         .schema(SUPERSTORE_CSV_SCHEMA)
         .csv(path)
     )
+    # one flat projection: each downstream plan analyses it once
+    cols = []
     for field in SUPERSTORE_CSV_SCHEMA.fields:
+        col = F.col(field.name)
         if field.dataType.simpleString() == "string":
-            df = df.withColumn(
-                field.name, F.translate(field.name, "\x93\x94", "“”")
-            )
-    for old, new in RENAMES.items():
-        df = df.withColumnRenamed(old, new)
-    return df.withColumn("order_date", F.to_date("order_date", "M/d/yyyy")).withColumn(
-        "ship_date", F.to_date("ship_date", "M/d/yyyy")
-    )
+            col = F.translate(col, "\x93\x94", "“”")
+        new = RENAMES[field.name]
+        if new in ("order_date", "ship_date"):
+            col = F.to_date(col, "M/d/yyyy")
+        cols.append(col.alias(new))
+    return df.select(cols)

@@ -1,11 +1,10 @@
 """The Superstore star-schema warehouse: ingest → 9 dims → 6 facts.
 
-Spark rewrite of the reference ETL (``etl.py``): every builder is a lazy
-DataFrame plan; surrogate-key "read-backs" become joins within the same
-DAG; row loops become set-oriented aggregation; batched INSERTs become
-parquet writes. Load-order dependencies (dims before facts, Region →
-State → Location) are plain DataFrame dependencies that the DAG
-scheduler orders.
+Spark rewrite of the reference ETL (``etl.py``): the dimensions are
+built in one pass and held on the driver as local relations, like the
+reference's lookup dicts; every fact is a lazy DataFrame plan whose
+surrogate-key "read-backs" are broadcast joins against them; row loops
+become set-oriented aggregation; batched INSERTs become parquet writes.
 """
 
 from super_store_datawarehouse_spark.warehouse.pipeline import build_warehouse, write_warehouse

@@ -4,11 +4,13 @@ The reference implements fact-to-dimension key resolution as python-dict
 probes built from SELECTs — semantically broadcast hash joins with
 last-write-wins on duplicate probe keys. Here:
 
-- every lookup is ``fact.join(broadcast(dim_keys), ...)`` — the dict IS
-  the broadcast build side (SURVEY §2.3);
+- every lookup is ``fact.join(broadcast(dim_keys), ...)`` against a
+  dimension built on the driver as a LocalRelation (``dims``) — the dict
+  IS the broadcast build side (SURVEY §2.3);
 - non-unique probe keys (product_code with 2 names; (postal_code, city)
-  under 2 states) are resolved to MAX(surrogate id) per key, mirroring
-  the reference's dict-overwrite semantics without duplicating fact rows;
+  under 2 states) resolve through the max-id probe maps that
+  ``dims.build_dimensions`` derives once per build, mirroring the
+  reference's dict-overwrite semantics without duplicating fact rows;
 - rows with unresolvable keys drop via inner-join semantics (J4); the
   ``*_rejects`` helpers report them with left_anti joins (S8) instead of
   the reference's skip-and-count logging. The reference's
@@ -37,9 +39,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from super_store_datawarehouse_spark.functions.scalars import lost_value
+from super_store_datawarehouse_spark.schemas import DISCOUNT, MONEY
+from super_store_datawarehouse_spark.warehouse import dims
 
-MONEY = "decimal(10,2)"
-DISCOUNT = "decimal(3,2)"
 EXACT = "decimal(18,4)"      # raw CSV measures: ≤4 fractional digits
 EXACT_DERIVED = "decimal(28,10)"  # per-line derived doubles (lost_value)
 
@@ -48,47 +50,41 @@ def _customer_keys(customer: DataFrame) -> DataFrame:
     return customer.select("customer_id", "customer_code")
 
 
-def _product_keys(product: DataFrame) -> DataFrame:
-    # product_code is not unique; reference dict keeps the last inserted id
-    return product.groupBy("product_code").agg(F.max("product_id").alias("product_id"))
-
-
 def _calendar_keys(calendar: DataFrame) -> DataFrame:
     return calendar.select("calendar_id", "full_date")
 
 
-def _location_keys(location: DataFrame) -> DataFrame:
-    # probe key is (postal_code, city) ONLY (etl.py:469-470, 486-487) —
-    # the dim's grain is wider, so duplicates resolve to max id
-    return location.groupBy("postal_code", F.col("city_name").alias("city")).agg(
-        F.max("location_id").alias("location_id")
+def _resolve_item(
+    lines: DataFrame,
+    customer: DataFrame,
+    product_keys: DataFrame,
+    calendar: DataFrame,
+    location_keys: DataFrame,
+) -> DataFrame:
+    # the location probe key is (postal_code, city) ONLY (etl.py:469-470,
+    # 486-487), narrower than the dim's grain
+    return (
+        lines.join(F.broadcast(_customer_keys(customer)), "customer_code")
+        .join(F.broadcast(product_keys), "product_code")
+        .join(F.broadcast(_calendar_keys(calendar)), lines.order_date == F.col("full_date"))
+        .join(F.broadcast(location_keys), ["postal_code", "city"])
     )
 
 
 def build_item_fact(
     lines: DataFrame,
     customer: DataFrame,
-    product: DataFrame,
+    product_keys: DataFrame,
     calendar: DataFrame,
-    location: DataFrame,
+    location_keys: DataFrame,
 ) -> DataFrame:
-    """Order-line grain (reference: etl.py:445-552).
+    """Order-line grain (reference: etl.py:445-552). ``product_keys`` and
+    ``location_keys`` are the probe maps of ``dims.build_dimensions``.
 
     lost_value = sales/(1-discount) - sales when discount < 1 else 0
     (etl.py:503-509; Facts Dictionary string 159).
     """
-    resolved = (
-        lines.join(F.broadcast(_customer_keys(customer)), "customer_code")
-        .join(F.broadcast(_product_keys(product)), "product_code")
-        .join(
-            F.broadcast(_calendar_keys(calendar)),
-            lines.order_date == F.col("full_date"),
-        )
-        .join(
-            F.broadcast(_location_keys(location)),
-            ["postal_code", "city"],
-        )
-    )
+    resolved = _resolve_item(lines, customer, product_keys, calendar, location_keys)
     return resolved.select(
         "customer_id",
         "location_id",
@@ -110,14 +106,10 @@ def item_rejects(
     calendar: DataFrame,
     location: DataFrame,
 ) -> DataFrame:
-    """Rows that would fail key resolution (S8 rejects sink feed)."""
-    ok = (
-        lines.join(F.broadcast(_customer_keys(customer)), "customer_code")
-        .join(F.broadcast(_product_keys(product)), "product_code")
-        .join(F.broadcast(_calendar_keys(calendar)), lines.order_date == F.col("full_date"))
-        .join(F.broadcast(_location_keys(location)), ["postal_code", "city"])
-        .select("row_id")
-    )
+    """Rows that would fail key resolution (S8 rejects sink feed), given
+    built dimension tables."""
+    product_keys, location_keys = dims.probe_maps(product, location)
+    ok = _resolve_item(lines, customer, product_keys, calendar, location_keys).select("row_id")
     return lines.join(ok, "row_id", "left_anti")
 
 
@@ -125,10 +117,13 @@ def build_orders_fact(
     lines: DataFrame,
     customer: DataFrame,
     calendar: DataFrame,
-    location: DataFrame,
+    location_keys: DataFrame,
     shipping: DataFrame,
 ) -> DataFrame:
     """Order grain (reference: etl.py:556-681).
+
+    ``location_keys`` is the (postal_code, city) probe map of
+    ``dims.build_dimensions``.
 
     Per-order rollup (A4): sums of quantity/sales/profit plus the sum of
     per-line lost values; order-level attributes (dates, customer,
@@ -160,7 +155,7 @@ def build_orders_fact(
         per_order.join(F.broadcast(order_cal), per_order.order_date == F.col("_od"))
         .join(F.broadcast(ship_cal), per_order.ship_date == F.col("_sd"))
         .join(F.broadcast(_customer_keys(customer)), "customer_code")
-        .join(F.broadcast(_location_keys(location)), ["postal_code", "city"])
+        .join(F.broadcast(location_keys), ["postal_code", "city"])
         .join(F.broadcast(shipping.select("shipping_id", "ship_mode")), "ship_mode")
     )
     return resolved.select(

@@ -1,10 +1,12 @@
 """End-to-end warehouse build: CSV → merge → dims → facts → parquet.
 
-One call materializes the same 15 tables the reference loads into MySQL
-(etl.py:1187-1201), as lazy DataFrames keyed by the reference table
-names. Dimensions are cached before fact construction: every fact plan
-broadcasts dimension key sets, and caching prevents re-deriving each
-dim once per fact (6× at reference shape).
+One call builds the same 15 tables the reference loads into MySQL
+(etl.py:1187-1201), keyed by the reference table names. The merged lines
+are cached: one GROUPING SETS pass over them collects every dimension's
+members to the driver, which numbers them and returns each dimension as
+a one-partition LocalRelation (``dims``). The six facts stay lazy plans
+over the cached lines that broadcast those local leaves, so planning a
+fact never re-analyses a dimension's lineage.
 """
 
 from __future__ import annotations
@@ -16,59 +18,32 @@ from super_store_datawarehouse_spark.warehouse import dims, facts
 from super_store_datawarehouse_spark.warehouse.ingest import merge_duplicate_order_lines
 
 
-def build_warehouse(
-    spark: SparkSession, csv_path: str = DEFAULT_CSV_PATH, cache: bool = True
-) -> dict[str, DataFrame]:
-    """Build all 15 warehouse tables as DataFrames (lazy until acted on)."""
-    raw = read_superstore_csv(spark, csv_path)
-    lines = merge_duplicate_order_lines(raw)
-    if cache:
-        lines = lines.cache()
-
-    calendar, calendar_month = dims.build_calendar_dims(lines)
-    customer = dims.build_customer_dim(lines)
-    region, state, location = dims.build_geography_dims(lines)
-    shipping = dims.build_shipping_dim(lines)
-    category, product = dims.build_product_dims(lines)
-
-    dim_tables = {
-        "Calendar": calendar,
-        "CalendarMonth": calendar_month,
-        "Customer": customer,
-        "Region": region,
-        "State": state,
-        "Location": location,
-        "Category": category,
-        "Product": product,
-        "Shipping": shipping,
-    }
-    if cache:
-        dim_tables = {k: v.cache() for k, v in dim_tables.items()}
-        calendar = dim_tables["Calendar"]
-        calendar_month = dim_tables["CalendarMonth"]
-        customer = dim_tables["Customer"]
-        region = dim_tables["Region"]
-        state = dim_tables["State"]
-        location = dim_tables["Location"]
-        category = dim_tables["Category"]
-        product = dim_tables["Product"]
-        shipping = dim_tables["Shipping"]
-
-    fact_tables = {
-        "Item": facts.build_item_fact(lines, customer, product, calendar, location),
-        "Orders": facts.build_orders_fact(lines, customer, calendar, location, shipping),
-        "OrderM": facts.build_order_m_fact(lines, calendar_month, state),
+def build_warehouse(spark: SparkSession, csv_path: str = DEFAULT_CSV_PATH) -> dict[str, DataFrame]:
+    """Build all 15 warehouse tables: the nine dimensions as local
+    relations (one Spark job collects their members), the six facts as
+    lazy plans."""
+    lines = merge_duplicate_order_lines(read_superstore_csv(spark, csv_path)).cache()
+    d = dims.build_dimensions(lines)
+    t = d.tables
+    return {
+        **t,
+        "Item": facts.build_item_fact(
+            lines, t["Customer"], d.product_keys, t["Calendar"], d.location_keys
+        ),
+        "Orders": facts.build_orders_fact(
+            lines, t["Customer"], t["Calendar"], d.location_keys, t["Shipping"]
+        ),
+        "OrderM": facts.build_order_m_fact(lines, t["CalendarMonth"], t["State"]),
         "ProductPerformance": facts.build_product_performance_fact(
-            lines, category, state, calendar_month
+            lines, t["Category"], t["State"], t["CalendarMonth"]
         ),
         "ShippingBehavior": facts.build_shipping_behavior_fact(
-            lines, shipping, category, region
+            lines, t["Shipping"], t["Category"], t["Region"]
         ),
         "ShippingBehaviorS": facts.build_shipping_behavior_s_fact(
-            lines, shipping, category, state
+            lines, t["Shipping"], t["Category"], t["State"]
         ),
     }
-    return {**dim_tables, **fact_tables}
 
 
 def write_warehouse(

@@ -196,6 +196,8 @@ def test_location_probe_grain(spark):
     city): a shared postal code must NOT cross-match cities, and a
     (postal, city) pair spanning two states collapses to the max
     location_id (the reference's dict-overwrite semantics)."""
+    import datetime as dt
+
     from super_store_datawarehouse_spark.warehouse import dims, facts
 
     cols = (
@@ -206,7 +208,7 @@ def test_location_probe_grain(spark):
 
     def line(row_id, order_id, city, state, postal):
         return (
-            row_id, order_id, "PR1", "2024-01-01", "2024-01-02", "Std", "C1",
+            row_id, order_id, "PR1", dt.date(2024, 1, 1), dt.date(2024, 1, 2), "Std", "C1",
             "Name", "Seg", "US", city, state, postal, "R1", "Cat", "Sub", "Prod",
             10.0, 1, 0.0, 1.0,
         )
@@ -220,14 +222,14 @@ def test_location_probe_grain(spark):
         ],
         cols,
     )
-    calendar, _ = dims.build_calendar_dims(lines)
-    customer = dims.build_customer_dim(lines)
-    _, _, location = dims.build_geography_dims(lines)
-    _, product = dims.build_product_dims(lines)
+    d = dims.build_dimensions(lines)
+    location = d.tables["Location"]
 
     assert location.count() == 4  # dim keeps the full (postal, city, state) grain
 
-    item = facts.build_item_fact(lines, customer, product, calendar, location)
+    item = facts.build_item_fact(
+        lines, d.tables["Customer"], d.product_keys, d.tables["Calendar"], d.location_keys
+    )
     resolved = {
         r["order_code"]: r["city_name"]
         for r in item.join(location, "location_id").select("order_code", "city_name").collect()
