@@ -1,17 +1,36 @@
 """SparkSession factory.
 
-Defaults are chosen for correctness-vs-oracle and for scale-out behavior:
+:func:`get_spark` sets these defaults; an ``extra_conf`` entry for the
+same key wins.
 
 - ``spark.sql.session.timeZone=UTC``: DuckDB timestamps are UTC-naive;
   pinning the session TZ makes timestamp semantics match the oracle.
 - AQE on (coalesce partitions, skew-join handling): at 100 TB the static
   shuffle-partition count is always wrong somewhere; AQE re-plans per stage.
-- ``spark.sql.shuffle.partitions`` sized to the local core count for tests;
-  on a real cluster this should be ~2-3x total executor cores (AQE coalesces
+- ``local[N]`` and ``spark.sql.shuffle.partitions`` both come from one read
+  of ``SPARK_GRAFT_CPUS`` (default 32) per call; on a real cluster the
+  partition count should be ~2-3x total executor cores (AQE coalesces
   down, it does not split up-front partitions).
-- broadcast threshold raised: every dimension table in the reference model
-  (SURVEY.md §1.4 — largest dim is Product at 1,894 rows) is far below it,
-  so all dim joins plan as BroadcastHashJoin with no shuffle.
+- Broadcast threshold 64 MiB: the warehouse dimensions are driver-built
+  local relations of at most ``dims.MAX_MEMBERS`` members each, so every
+  dimension join plans as a BroadcastHashJoin with no shuffle.
+- Two caches sized so that a serving session's compiled code stays
+  resident. A pass of the 13 dashboard queries in SQL and DataFrame form
+  runs the same plans again and again; when a cache is smaller than the
+  pass's cyclic working set it evicts each entry before its next use and
+  never hits.
+
+  - ``spark.sql.codegen.cache.maxEntries=1000``: Spark's generated-class
+    cache (Janino classes, keyed by source). Its default of 100 is below
+    the measured working set: about 215 classes per serving pass and 109
+    per cold ETL build; 1000 leaves several times that as headroom.
+  - ``-XX:ReservedCodeCacheSize=256m`` for the driver JVM, through
+    ``spark.driver.defaultJavaOptions`` so that a user's own
+    ``spark.driver.extraJavaOptions`` still applies. With the JIT limited
+    to C1 the code cache is 48 MB and a serving session fills 44-48 MB of
+    it; below 10 % free the JVM's sweeper flushes compiled methods and C1
+    compiles them again. 256m is about the JVM's own 240 MB tiered
+    default, so a default JVM is unchanged.
 """
 
 from __future__ import annotations
@@ -21,8 +40,6 @@ import threading
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(
     app_name: str = "superstore-spark",
@@ -30,8 +47,13 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the singleton SparkSession with engine defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Build (or fetch) the singleton SparkSession with engine defaults.
+
+    The driver's JVM options and the codegen cache size apply only when
+    this call launches the JVM; a session already running keeps the JVM
+    it has.
+    """
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -41,12 +63,14 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.driver.defaultJavaOptions", "-XX:ReservedCodeCacheSize=256m")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # InferFiltersFromGenerate adds `size(arr)>0 AND isnotnull(arr)`
         # above every inner explode; filter-pushdown then substitutes the
