@@ -22,14 +22,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from super_store_datawarehouse_spark.plans import HARNESS  # noqa: E402
 
-# Importing the query modules populates the registry.
+# Importing the query modules populates the registry. A module that fails
+# to import fails here, loudly, rather than shrinking the verified set.
+from super_store_datawarehouse_spark.plans import extensions as _extensions  # noqa: E402,F401
 from super_store_datawarehouse_spark.plans import harness as _harness  # noqa: E402,F401
-
-try:  # extensions are additive; never break the parity surface
-    from super_store_datawarehouse_spark.plans import extensions as _extensions  # noqa: E402,F401
-    from super_store_datawarehouse_spark.plans import pipeline_ops as _pipeline_ops  # noqa: E402,F401
-except ImportError:
-    pass
+from super_store_datawarehouse_spark.plans import pipeline_ops as _pipeline_ops  # noqa: E402,F401
 
 
 def entry(spark: SparkSession) -> DataFrame:

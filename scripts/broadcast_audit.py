@@ -14,10 +14,10 @@ a scale factor where the frame is plausibly large surfaces it.
 
 Usage: python scripts/broadcast_audit.py [sf_dir] [--expect-clean]
 
+Exit 1 on a violation, an unauditable query, or an allowlisted name the
+registry no longer holds (an exception must not outlive its query).
+
 Known-accepted flags (ALLOW below):
-- x169_mmr_rerank: the flagged broadcasts are WindowGroupLimit-bounded
-  top-k-per-query frames (<= 10 * |queries| rows) — auto-cleared by the
-  WindowGroupLimit bound check, kept in ALLOW as documentation.
 - The exact-Jaccard / containment shingle SELF-joins: the planner's
   hash-probe (broadcast) choice is DELIBERATELY kept — a merge hint was
   measured >10x slower at sf10 because hot-shingle keys serialize in a
@@ -42,13 +42,8 @@ from super_store_datawarehouse_spark.session import (  # noqa: E402
     get_spark,
     release_scoped_caches,
 )
-from super_store_datawarehouse_spark.plans.registry import HARNESS  # noqa: E402
-
-for _m in ("harness", "extensions", "pipeline_ops"):
-    try:
-        __import__(f"super_store_datawarehouse_spark.plans.{_m}")
-    except ModuleNotFoundError:
-        pass
+from super_store_datawarehouse_spark.plans import HARNESS  # noqa: E402
+from super_store_datawarehouse_spark.plans import extensions, harness, pipeline_ops  # noqa: E402,F401
 
 CORPUS_TABLES = ("documents", "embeddings", "lineitem", "events", "orders")
 AGGREGATES = ("HashAggregate", "SortAggregate", "ObjectHashAggregate")
@@ -61,19 +56,13 @@ _BASELINE_SELF_JOIN = (
     "q19 LSH / q43 PPJoin (ex-x161) / q17 df cap — see operators/dedup.py"
 )
 ALLOW = {
-    "x169_mmr_rerank": "WindowGroupLimit-bounded top-k-per-query frames (<=10*|queries| rows)",
     "x317_ngram_jaccard_exact": _BASELINE_SELF_JOIN,
     "x138_ngram_containment_pairs": _BASELINE_SELF_JOIN,
-    "x151_minhash_estimate_eval": _BASELINE_SELF_JOIN,
-    "x163_cross_source_dup_matrix": _BASELINE_SELF_JOIN,
-    "x220_near_dup_overlap_eval": _BASELINE_SELF_JOIN,
-    "x314_ngram_jaccard_dfcap_noop": _BASELINE_SELF_JOIN,
-    "x328_ngram_jaccard_dfcap": _BASELINE_SELF_JOIN,
     # round 9: x114 became the xxhash-LSH subset-invariant EVAL — it
     # deliberately recomputes the declared exact-baseline pair set
-    # (ngram_jaccard_pairs, the same self-join shape as x220's eval)
-    # as its ground truth; the LSH half carries the non-broadcast
-    # hints, the baseline half keeps the documented hash-probe choice.
+    # (ngram_jaccard_pairs, x317's self-join shape) as its ground truth;
+    # the LSH half carries the non-broadcast hints, the baseline half
+    # keeps the documented hash-probe choice.
     "x114_minhash_lsh_xxhash": _BASELINE_SELF_JOIN,
     # round 12 (sf1 audit): after the CORPUS-side ivf_assign joins got
     # merge hints (operators/similarity.py — the real hazard this audit
@@ -85,7 +74,6 @@ ALLOW = {
     # contract named rather than taught to the heuristic (a filter is
     # not a bound in general).
     "q33_pq_ivf_ann_topk": "query-side ivf_assign broadcast: |queries|·nprobe rows by the search contract",
-    "x150_ann_recall_eval": "query-side ivf_assign broadcast: |queries|·nprobe rows by the search contract",
     "x263_ivf_ann_topk": "query-side ivf_assign broadcast: |queries|·nprobe rows by the search contract",
     "x318_pq_ivf_hash_fraction": "query-side ivf_assign broadcast: |queries|·nprobe rows by the search contract",
 }
@@ -126,6 +114,10 @@ def audit_plan(plan: str) -> list[str]:
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     sf_dir = args[0] if args else "/root/repo/testdata_sf10"
+    stale = sorted(set(ALLOW) - set(HARNESS))
+    if stale:
+        print(f"allowlisted but not registered: {', '.join(stale)}")
+        return 1
     if not os.path.isdir(sf_dir):
         print(f"sf dir {sf_dir} missing — generate with "
               f"SF1_COPIES=100 python scripts/make_sf1.py /root/testdata/sf0.1 {sf_dir}")

@@ -1,5 +1,5 @@
 """Generate QUERIES.md: an index of every harness query — name, defining
-module, oracle status — so reviewers can navigate the ~170-query surface
+module, oracle status — so a reader can navigate the harness
 without grepping. Pure static generation (no Spark session).
 
 Usage: python scripts/gen_query_index.py

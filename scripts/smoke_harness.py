@@ -4,7 +4,7 @@ force one row through it.
 Analysis errors (schema drift in driver-regenerated testdata, renamed
 columns, bad SQL) surface in seconds here, without waiting for the
 driver's DuckDB oracle. Run this before shipping a round, next to
-scripts/check_bench.py.
+scripts/oracle_check.py and scripts/plan_audit.py.
 
 Usage:
     python scripts/smoke_harness.py [sf_dir]        # default sf0.001

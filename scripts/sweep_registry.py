@@ -20,12 +20,12 @@ known to exceed any reasonable timeout at sf10 (measured decade points
 already in SCALE.md) are annotated via DECLARED_SLOW so a timeout on
 them reads as "declared", not "straggler".
 
-Declared-budget lane (VERDICT r10 #6): the five DECLARED_SLOW entries
+Declared-budget lane (VERDICT r10 #6): the DECLARED_SLOW entries
 burn their full timeout (~67 min of every sweep) proving a documented
 fact — each already has a measured decade point and a contract-scale
 twin in the registry that the same sweep covers (q34→q35/x327 LSH
-twins, x04→x114's 16-bit production banding, x18→the parquet-sink
-STREAMBENCH jobs, ...). ``--declared-budget N`` caps the watchdog for
+twins, x04→x114's 16-bit production banding, ...).
+``--declared-budget N`` caps the watchdog for
 DECLARED_SLOW queries at N seconds, so a routine sweep spends ~N s
 confirming each declared form still *starts* (a plan-build error or
 instant crash still surfaces) without re-proving the documented
@@ -35,7 +35,7 @@ declared decade points themselves stay honest.
 Usage:
   python scripts/sweep_registry.py [sf_dir] [--timeout 600]
       [--declared-budget 60]
-      [--out SWEEP_sf10_r10.jsonl] [--resume] [--only name ...]
+      [--out SWEEP_sf10.jsonl] [--resume] [--only name ...]
 """
 
 from __future__ import annotations
@@ -69,11 +69,6 @@ DECLARED_SLOW = {
     "q34_embedding_near_dup": "exact GEMM near-dup baseline; sf10 1966s (SCALE §13)",
     "x318_pq_ivf_hash_fraction": "O(fraction*n^2) IVFADC baseline; sf10 257s (SCALE §13)",
     "x317_ngram_jaccard_exact": "exact shingle self-join baseline; sf10 measured (SCALE §13/§15)",
-    "x148_cross_split_embedding_contamination": (
-        "declared exact-baseline GEMM (0.2n x 0.8n cross-split; q34's family — "
-        "'IVF/LSH modules bound the candidate set at production scale', "
-        "plans/extensions.py registration comment)"
-    ),
     "x134_pq_refined_topk": (
         "hash-fraction refined codebook (x318's O(fraction*n^2) encode family; "
         "ship config is the capped book: q33/q20 lifecycle)"
@@ -96,15 +91,13 @@ DECLARED_SLOW = {
     "x18_stream_dedup": (
         "memory-sink streaming oracle vehicle: dropDuplicatesWithinWatermark "
         "state over 5M sf10 events + full driver materialization is the "
-        "oracle contract, not the deployment shape — the parquet-sink jobs "
-        "are (STREAMBENCH sf10 knee measured); >1800s at sf10"
+        "oracle contract, not the deployment shape; >1800s at sf10"
     ),
 }
 
 # Per-query timeout overrides: the streaming oracle vehicles run a real
 # micro-batch stream into a MEMORY sink (driver materialization is the
-# oracle contract, not the deployment shape — the parquet-sink jobs in
-# streaming/jobs.py are, and STREAMBENCH measures those at sf10).
+# oracle contract, not the deployment shape).
 TIMEOUT_OVERRIDES = {
     "x18_stream_dedup": 1800.0,
 }

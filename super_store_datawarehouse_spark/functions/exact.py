@@ -42,14 +42,3 @@ def money_avg(col: Column | str, alias: str) -> Column:
     return (F.sum(cents(col)).cast("double") / 100.0 / F.count(F.lit(1))).alias(alias)
 
 
-def sql_money_sum(expr: str, alias: str) -> str:
-    """The ANSI-SQL twin of :func:`money_sum` (DuckDB oracle side)."""
-    return f"CAST(SUM(CAST(ROUND(({expr}) * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS {alias}"
-
-
-def sql_money_avg(expr: str, alias: str) -> str:
-    """The ANSI-SQL twin of :func:`money_avg`."""
-    return (
-        f"CAST(SUM(CAST(ROUND(({expr}) * 100) AS BIGINT)) AS DOUBLE) / 100.0"
-        f" / COUNT(*) AS {alias}"
-    )

@@ -1,6 +1,7 @@
 """Reusable dataflow operators beyond the reference's surface.
 
-The training-data-pipeline operator families (BASELINE.json north star):
+The curation-operator families that run beside the warehouse (each is
+reached by a harness entry in ``plans``):
 
 - ``dedup``: exact, n-gram Jaccard, MinHash+LSH, SimHash, embedding-cosine
 - ``similarity``: brute-force cosine top-k + LSH-bucketed ANN

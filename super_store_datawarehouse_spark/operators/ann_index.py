@@ -509,38 +509,6 @@ def pq_index_search(
     return pq_adc_topk_wide(codes, dtab, k, meta["m"])
 
 
-def ivfadc_index_build(
-    corpus: DataFrame,
-    path: str,
-    m: int = 4,
-    dim: int = 64,
-    codebook_buckets: int = 300,
-    salt: int = 13,
-    codebook_size: int | None = 256,
-    centroid_fraction: float | str = 0.03,
-    centroid_salt: int = 7,
-    max_cells: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
-    """Build BOTH halves of a persisted IVFADC index (Jégou et al. 2011
-    §V — the composition ``similarity.pq_ivf_topk`` runs in-plan): the
-    IVF store (centroids + cell assignments) bounds candidates, the PQ
-    store answers distances from codes. One corpus read per half; both
-    linear. The stores are independently reusable (``ivf_index_search``
-    / ``pq_index_search``) and compose in :func:`ivfadc_index_search`.
-    """
-    ivf_stats = ivf_index_build(
-        corpus, path, centroid_fraction, centroid_salt, id_col, vec_col,
-        max_cells=max_cells,
-    )
-    pq_stats = pq_index_build(
-        corpus, path, m, dim, codebook_buckets, salt, codebook_size,
-        id_col, vec_col,
-    )
-    return {**ivf_stats, **pq_stats}
-
-
 def ivfadc_index_search(
     spark: SparkSession,
     path: str,

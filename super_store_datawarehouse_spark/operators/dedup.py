@@ -19,7 +19,6 @@ Scale design (the whole point of these over a naive O(n²) pass):
 from __future__ import annotations
 
 import random
-from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -83,9 +82,10 @@ def _widen_narrow_scan(df: DataFrame) -> DataFrame:
 
 # source-scan size above which a shared shingle/posting explode is
 # worth caching: the columnar cache's cost is ~fixed per task-read
-# (allocation-bound, see BASELINE.md "columnar-cache contention"),
-# while the k-branch explode recompute it saves grows linearly with
-# corpus bytes. Measured crossover: at 0.6 MB of docs (sf0.1) the
+# (allocation-bound: a 256k-row frame read back through groupBy cost
+# 42 s CPU from 32 cached partitions against 1.1 s from 4), while
+# the k-branch explode recompute it saves grows linearly with corpus
+# bytes. Measured crossover: at 0.6 MB of docs (sf0.1) the
 # no-cache form wins every family query by 1.2-2x; at 175 MB (sf10)
 # the cached shingle frame wins q17 by 1.8x (23.8 s vs 42.8 s) and
 # ppjoin by 1.4x. 8 MB splits the decades between those points.
@@ -296,8 +296,9 @@ def weighted_jaccard_pairs(
     # files, re-running only the final agg. At toy scale an
     # unconditional cache here was measured STRICTLY WORSE (q26 at
     # sf0.1: 23-30 s CPU cached vs 2-5 s with exchange reuse — the
-    # AQE-lazy-cache stampede plus the columnar cache's build/read tax,
-    # see BASELINE.md "columnar-cache contention"); at corpus scale the
+    # AQE-lazy-cache stampede, where every branch that starts before the
+    # cache fills re-runs the full lineage, plus the columnar cache's
+    # ~45 us/row build and contended reads); at corpus scale the
     # 4x re-run of the final agg over the reused exchange costs more
     # than the cache, so the size-conditional cache applies (sf10:
     # 34.3 s uncached vs 31.3 s cached).
@@ -366,8 +367,7 @@ def ngram_jaccard_pairs(
       shares the cookie banner" is the classic near-dup false
       positive);
     * a cap at or above the corpus max df is a bit-identical no-op —
-      x314's oracle is literally the uncapped q17 SQL, so the value
-      hash proves it.
+      the uncapped SQL is then an exact oracle for the capped run.
     """
     sh = word_shingles(df, text_col, id_col, n, hashed=True)
     if max_doc_freq is not None:
@@ -1389,119 +1389,6 @@ def cross_split_contamination(
 
 
 # -- Incremental MinHash-LSH index -------------------------------------------
-
-class LshIndexState(NamedTuple):
-    """Persistent state of an incrementally-maintained LSH dedup index.
-
-    ``band_rows``: (sid, band, bucket) — the searchable index; grows by
-    O(batch × bands) per update. ``shingles``: (sid, shingle<long>) —
-    kept for exact verification of future candidates. Both are plain
-    DataFrames: persist them with any table mechanism (parquet,
-    ``sources.translog``) and reload into a new state; nothing here is
-    driver-resident.
-
-    ``delta_band_rows`` / ``delta_shingles`` carry just the rows the
-    last update added (None on a hand-built state): persistence layers
-    append the deltas instead of rewriting the whole index —
-    O(batch), not O(corpus), per checkpoint (see
-    ``streaming.jobs.stream_lsh_dedup_to_txn``).
-    """
-
-    band_rows: DataFrame
-    shingles: DataFrame
-    delta_band_rows: DataFrame | None = None
-    delta_shingles: DataFrame | None = None
-
-
-def lsh_index_update(
-    state: LshIndexState | None,
-    batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.2,
-    seed: int = 42,
-) -> tuple[DataFrame, LshIndexState]:
-    """Fold one batch of new documents into the LSH index, returning
-    (dup_pairs, new_state) — the incremental form of
-    :func:`minhash_lsh_pairs` for a corpus that arrives over time
-    (crawl snapshots, streaming ingest via foreachBatch).
-
-    dup_pairs holds every verified near-dup pair involving at least one
-    batch document: batch-vs-index and batch-vs-batch; pairs canonicalize
-    as (least, greatest) so replaying batches in any split reproduces the
-    one-shot run exactly (see the two-batch ≡ one-shot identity test).
-
-    Scale shape — the reason to maintain an index instead of re-running
-    the full join per snapshot: candidate generation touches only the
-    index buckets the NEW docs hash into (equi-join on (band, bucket)),
-    and exact verification touches only candidate docs' shingles, so
-    per-update cost is O(batch) + collisions, independent of corpus
-    size. All hashing is the same deterministic xxhash64/universal-hash
-    pipeline as the batch operator, so incremental and one-shot results
-    are identical, not merely similar.
-
-    The same parameters must be used for every update against a given
-    index (signatures are parameter-dependent); persist them with the
-    state.
-    """
-    sh_new = word_shingles(batch, text_col, id_col, n, hashed=True)
-    sig = minhash_signatures(
-        batch, text_col, id_col, n, num_hashes, seed, shingles=sh_new
-    )
-    rows_per_band = num_hashes // bands
-    new_bands = sig.select(
-        F.col(id_col).alias("sid"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.hash(
-                            F.slice(
-                                F.col("minhash"), b * rows_per_band + 1, rows_per_band
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("sid", "bb.band", "bb.bucket")
-
-    if state is None:
-        spark = batch.sparkSession
-        empty_bands = spark.createDataFrame(
-            [], "sid long, band int, bucket int"
-        )
-        empty_sh = spark.createDataFrame([], "sid long, shingle long")
-        state = LshIndexState(empty_bands, empty_sh)
-
-    # batch-vs-index: strictly one new side, so no self-pair risk;
-    # batch-vs-batch: the usual ordered self-join
-    cand_cross = (
-        new_bands.alias("x")
-        .join(state.band_rows.alias("y"), ["band", "bucket"])
-        .select(
-            F.least(F.col("x.sid"), F.col("y.sid")).alias("id_a"),
-            F.greatest(F.col("x.sid"), F.col("y.sid")).alias("id_b"),
-        )
-    )
-    cand_within = (
-        new_bands.alias("x")
-        .join(new_bands.alias("y"), ["band", "bucket"])
-        .filter(F.col("x.sid") < F.col("y.sid"))
-        .select(F.col("x.sid").alias("id_a"), F.col("y.sid").alias("id_b"))
-    )
-    cand = cand_cross.unionByName(cand_within).distinct()
-
-    all_sh = state.shingles.unionByName(sh_new)
-    pairs = _exact_jaccard_on_candidates(cand, all_sh, threshold)
-    return pairs, LshIndexState(
-        state.band_rows.unionByName(new_bands), all_sh, new_bands, sh_new
-    )
 
 
 def longest_shared_spans(

@@ -1,6 +1,6 @@
 """Multi-dimensional data layout: Z-order (Morton) clustering.
 
-Single-key range clustering (``sinks.compact_parquet(sort_by=[k])``)
+Single-key range clustering (sorting on one key before the write)
 gives perfect min/max skipping on one column and none on any other. For
 the two- and three-column predicate mixes real warehouse tables see
 (e.g. events filtered by user AND time, lineitem by part AND date),
@@ -24,7 +24,7 @@ from __future__ import annotations
 from functools import reduce
 from operator import add
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -64,28 +64,3 @@ def zorder_sql(cols: list[str], bits: int = 16) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def cluster_by_zorder(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Write ``df`` range-clustered on the Morton key of ``cols`` (each
-    taken mod 2^bits), so per-file parquet min/max stats stay narrow on
-    every clustering column simultaneously.
-
-    The key is dropped before the write — it's a layout device, not
-    data. ``repartitionByRange`` samples the key distribution, so files
-    get balanced row counts even on skewed inputs.
-    """
-    keyed = df.withColumn(
-        "__z", zorder_key(*[F.col(c) % (1 << bits) for c in cols], bits=bits)
-    )
-    (
-        keyed.repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

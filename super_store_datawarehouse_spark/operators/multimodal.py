@@ -223,20 +223,6 @@ def decode_assets(
     return df.mapInPandas(decode_batches, DECODED_SCHEMA)
 
 
-AUDIO_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("media_type", StringType(), True),
-        StructField("byte_len", LongType(), True),
-        StructField("channels", IntegerType(), True),
-        StructField("sample_rate_hz", IntegerType(), True),
-        StructField("bits_per_sample", IntegerType(), True),
-        StructField("n_frames", LongType(), True),
-        StructField("duration_ms", LongType(), True),
-    ]
-)
-
-
 def _sniff_wav(payload: bytes) -> tuple[int, int, int, int] | None:
     """REAL audio metadata decode, stdlib-only: walk the RIFF/WAVE
     chunk list for the fmt and data chunks. Returns (channels,
@@ -264,44 +250,6 @@ def _sniff_wav(payload: bytes) -> tuple[int, int, int, int] | None:
         return None
     frames = (data_len // block_align) if data_len is not None else 0
     return channels, rate, bits or 0, frames
-
-
-def decode_audio_meta(df: DataFrame) -> DataFrame:
-    """Audio twin of :func:`decode_assets`: real WAV/RIFF header decode
-    over Arrow batches via mapInPandas. Non-WAV payloads yield NULL
-    metadata (audio pipelines routinely carry mixed containers; the
-    NULL rows are the route-to-transcode queue). duration_ms is derived
-    from the actual data-chunk frame count and sample rate."""
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "asset_id": pdf["asset_id"],
-                "media_type": pdf["media_type"],
-                "byte_len": pdf["payload"].map(
-                    lambda b: len(b) if b is not None else 0
-                ),
-            }
-            chans, rates, bits, frames, durs = [], [], [], [], []
-            for b in pdf["payload"]:
-                meta = _sniff_wav(bytes(b)) if b is not None else None
-                if meta is None:
-                    chans.append(None); rates.append(None); bits.append(None)
-                    frames.append(None); durs.append(None)
-                else:
-                    c, r, bit, n = meta
-                    chans.append(c); rates.append(r); bits.append(bit)
-                    frames.append(n)
-                    durs.append(n * 1000 // r if r else None)
-            out = pd.DataFrame(rows)
-            out["channels"] = pd.array(chans, dtype="Int32")
-            out["sample_rate_hz"] = pd.array(rates, dtype="Int32")
-            out["bits_per_sample"] = pd.array(bits, dtype="Int32")
-            out["n_frames"] = pd.array(frames, dtype="Int64")
-            out["duration_ms"] = pd.array(durs, dtype="Int64")
-            yield out.astype({"asset_id": "int64", "byte_len": "int64"})
-
-    return df.mapInPandas(decode_batches, AUDIO_SCHEMA)
 
 
 FRAME_SCHEMA = StructType(
@@ -413,8 +361,7 @@ def wav_pcm_stats(df: DataFrame) -> DataFrame:
     loudness-gating or silence-trimming; one mapInPandas pass over
     Arrow batches, no Python per sample (numpy reinterpretation + three
     vector reductions per payload). Non-WAV / non-16-bit payloads yield
-    NULL stats (the route-to-transcode queue, same contract as
-    :func:`decode_audio_meta`).
+    NULL stats (the route-to-transcode queue).
     """
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -20,7 +20,7 @@ No counterpart in the reference (reference core is the Superstore ETL
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 

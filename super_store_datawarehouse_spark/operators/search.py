@@ -143,7 +143,7 @@ def bm25_scores_multi(
 
     ``queries`` is a (query_id, term) frame — one row per query term,
     already normalized the way :func:`~.text.words` normalizes (single
-    lowercase tokens). The scoring is x137's fixed-point formulation
+    lowercase tokens). The scoring is the fixed-point BM25 formulation
     (RSJ odds ratio ×1000 in place of the transcendental log, trunc-div
     saturation/length terms) generalized to many queries: tf/df/dl are
     computed ONCE over the union of all query terms and each query sums
@@ -153,14 +153,15 @@ def bm25_scores_multi(
 
     Plan: posting tf agg (one term-key shuffle) → tiny df/const
     broadcasts → broadcast fan-out to query ids → one (query, doc) hash
-    agg. Same 100 TB shape as TF-IDF (q44) / single-query BM25 (x137).
+    agg. Same 100 TB shape as TF-IDF (q44).
     """
     qterms = queries.select("query_id", "term")
     # the postings explode feeds BOTH dl and tf — NO cache (same
     # convention as dedup.weighted_jaccard_pairs): each branch fuses
     # the tokenize+explode into its own map stage, which is an order
     # of magnitude cheaper than building and re-reading the in-memory
-    # columnar cache (see BASELINE.md "columnar-cache contention")
+    # columnar cache (~45 us/row to build; reads contend under wide
+    # task concurrency)
     p = token_postings(df, text_col, id_col)
     dl = p.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     tf = (

@@ -31,15 +31,6 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity; inputs should already be array<double>.
-
-    NULL (not an error) when either vector has zero norm — try_divide
-    keeps a single all-zero embedding from aborting the job under ANSI.
-    """
-    return F.try_divide(dot(a, b), F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -146,37 +137,6 @@ def brute_force_topk(
     )
 
 
-def hyperplane_signature(
-    vec: Column, n_planes: int = 16, dim: int = 64, table: int = 0
-) -> Column:
-    """Random-hyperplane LSH signature as an integer bucket id.
-
-    Plane weights are pseudo-random but *deterministic*: weight(p, d) is a
-    pure integer function of (table, p, d) via a splitmix-style scramble,
-    so the same signature is computed on any executor, any run, with no
-    stored plane matrix and no Python. sign(v · w_p) contributes bit p.
-    """
-    bit_terms = []
-    for p in range(n_planes):
-        # deterministic ±1 weights per (table, plane, dim)
-        weights = [_scramble_sign(table * 1024 + p, d) for d in range(dim)]
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(float(w)) for w in weights]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        )
-        bit = F.when(proj > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        bit_terms.append(F.shiftleft(bit, p))
-    sig = bit_terms[0]
-    for t in bit_terms[1:]:
-        sig = sig.bitwiseOR(t)
-    return sig
-
-
 def _scramble_sign(p: int, d: int) -> int:
     """Deterministic ±1 from (plane, dim) — splitmix64-style integer mix."""
     z = (p * 0x9E3779B97F4A7C15 + d * 0xBF58476D1CE4E5B9 + 0x94D049BB133111EB) % (1 << 64)
@@ -190,14 +150,14 @@ def _all_table_signatures(n_planes: int, n_tables: int, dim: int):
     """Arrow-vectorized signature UDF: vectorized over rows and planes,
     but accumulated dimension-by-dimension in ascending order — each
     projection is therefore the exact left-to-right IEEE fold
-    Σ_d (v_d · s_d), bit-identical to ``hyperplane_signature``'s
-    Catalyst fold AND to a SQL engine's list_reduce fold. That exactness
+    Σ_d (v_d · s_d), bit-identical to a Catalyst aggregate fold AND to
+    a SQL engine's list_reduce fold. That exactness
     is what lets the whole LSH pipeline carry a value oracle (q35): a
     blas matmul would sum in an unspecified order and flip sign bits on
     projections near 0.
 
-    The ±1 plane matrix is generated on the driver from the same
-    deterministic scramble as ``hyperplane_signature``.
+    The ±1 plane matrix is generated on the driver from the
+    deterministic ``_scramble_sign`` mix.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -1032,17 +992,6 @@ def _pq_sampled_codebook(
         F.posexplode(
             F.array(*[F.slice("v", j * sd + 1, sd) for j in range(m)])
         ).alias("j", "cv"),
-    )
-
-
-def int_sq_l2(a: Column, b: Column) -> Column:
-    """Integer squared-L2 fold — order-free (integer addition is
-    associative/commutative), so unlike :func:`sq_l2` it is exact under
-    ANY evaluation order or partitioning."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, z: acc + z,
     )
 
 

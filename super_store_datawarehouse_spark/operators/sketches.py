@@ -370,7 +370,7 @@ def rank_compaction_summary(
     """Mergeable distributed quantile summary via DETERMINISTIC
     stratified rank compaction — the sketch-family answer to "exact
     nearest-rank percentiles need a per-key sort of the whole column"
-    (the q40/x265 trade): a bounded summary whose weighted nearest-rank
+    (the q40 trade): a bounded summary whose weighted nearest-rank
     read-off carries a proven rank-error bound.
 
     Construction (both engines can replay it, so it value-oracles like
@@ -396,7 +396,7 @@ def rank_compaction_summary(
     additionally overshoot the target by up to its own weight (< k),
     giving the read-off guarantee ``0 ≤ rank_err < P·(k−1) + k``, the
     bound a caller sizes (P, k) against, at summary size N/k (the
-    x334/x335/x336/x337 oracles certify exactly this). k=1 degenerates
+    q40, q15 and x337 oracles certify exactly this). k=1 degenerates
     to the exact column.
 
     Returns (stratum, value, weight) — value/weight are what a reader
@@ -521,7 +521,7 @@ def grouped_rank_compaction_summary(
     """Per-group :func:`rank_compaction_summary`: windows partition by
     (group, stratum), so EVERY group's sort spreads across ``strata``
     parallel tasks — the scale answer to the declared few-groups
-    ceiling of the exact forms (x265's window median funnels each group
+    ceiling of the exact forms (an exact window median funnels each group
     through ONE task no matter how many executors; here a 3-group
     60M-row column sorts on 3·P tasks). Same per-group guarantee as the
     global operator: read-off rank error < P·(k−1) + k within each

@@ -9,7 +9,7 @@ Spark and any ANSI engine agree bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Tiny embedded English stopword list — enough for a ratio heuristic;
@@ -178,35 +178,6 @@ def pii_counts(text: Column | str) -> dict[str, Column]:
         "n_emails": F.size(F.regexp_extract_all(c, F.lit(EMAIL_PATTERN), F.lit(0))),
         "n_urls": F.size(F.regexp_extract_all(c, F.lit(URL_PATTERN), F.lit(0))),
     }
-
-
-def sentence_udtf():
-    """Python UDTF splitting text into sentence rows — the table-function
-    escape hatch (one input row → N output rows with LATERAL), completing
-    the UDF surface next to pandas_udf / mapInPandas /
-    applyInPandasWithState. Prefer the native ``chunk_words`` for
-    fixed-size chunking; a UDTF is for logic that genuinely needs Python
-    (model-based segmentation, tokenizer libraries).
-    """
-    import re
-
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="sent_no: int, sentence: string")
-    class SplitSentences:
-        def eval(self, text: str):
-            if text:
-                parts = (p for p in re.split(r"(?<=[.!?])\s+", text.strip()) if p)
-                for i, s in enumerate(parts):
-                    yield i, s
-
-    return SplitSentences
-
-
-def register_sentence_udtf(spark) -> None:
-    """Register the sentence splitter as SQL table function
-    ``split_sentences`` (use via LATERAL)."""
-    spark.udtf.register("split_sentences", sentence_udtf())
 
 
 # Per-language stopword lists (tiny, deterministic). A production list is

@@ -250,38 +250,6 @@ def q06_order_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q07 — date-difference aggregation (SURVEY §2 F5 + J7 role analog).
-# Reference: Data_Analysis.ipynb:456-465 (Q7: AVG(DATEDIFF(ship, order))
-# via the role-playing Calendar self-join); etl.py:953-957 shipping_delay.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x82_shipping_delay_by_priority",
-    oracle="""
-    SELECT o.o_orderpriority,
-           CAST(SUM(date_diff('day', CAST(o.o_orderdate AS DATE), CAST(l.l_shipdate AS DATE))) AS DOUBLE)
-             / COUNT(*) AS avg_delay_days,
-           COUNT(*) AS n_lines
-    FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    GROUP BY o.o_orderpriority
-    ORDER BY o.o_orderpriority
-    """,
-)
-def x82_shipping_delay_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    delay = F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
-    return (
-        orders.join(li, li.l_orderkey == orders.o_orderkey)
-        .groupBy("o_orderpriority")
-        .agg(
-            (F.sum(delay).cast("double") / F.count(F.lit(1))).alias("avg_delay_days"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-        .orderBy("o_orderpriority")
-    )
-
-
-# --------------------------------------------------------------------------
 # q08 — duplicate-line merge with quantity-weighted discount
 # (SURVEY §2 P5 + A12 + P3).
 # Reference: etl.py:57-134 — group order-lines by (Order ID, Product ID);
@@ -321,97 +289,6 @@ def q08_dup_merge_weighted_discount(spark: SparkSession, sf_dir: str) -> DataFra
             ).alias("weighted_discount"),
         )
         .filter(F.col("n_merged") > 1)
-    )
-
-
-# --------------------------------------------------------------------------
-# q09 — explicit ROWS frame running total over a pushed-down date slice
-# (SURVEY §2 W3 + P2). Reference: Data_Analysis.ipynb:763-783 (Q12 frame
-# "ROWS UNBOUNDED PRECEDING"). The shipdate filter lands in the parquet
-# scan (PushedFilters), so the window only sorts one month of data.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x83_rows_frame_running",
-    oracle="""
-    SELECT l_orderkey, l_linenumber, l_returnflag,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) OVER (
-             PARTITION BY l_returnflag
-             ORDER BY CAST(ROUND(l_extendedprice * 100) AS BIGINT) DESC, l_orderkey, l_linenumber
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS DOUBLE) / 100.0 AS running_sales
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-02-01'
-    """,
-)
-def x83_rows_frame_running(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    price_cents = cents("l_extendedprice")
-    w = (
-        Window.partitionBy("l_returnflag")
-        .orderBy(price_cents.desc(), "l_orderkey", "l_linenumber")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1996-02-01").cast("timestamp"))
-        )
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            "l_returnflag",
-            (F.sum(price_cents).over(w).cast("double") / 100.0).alias("running_sales"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# q10 — share of grand total + cumulative share (SURVEY §2 W5 + A11).
-# Reference: Data_Analysis.ipynb:630-641 (Q10: SUM(SUM(x)) OVER (ORDER BY
-# state) with a scalar-subquery denominator). Aggregate first; both the
-# grand total and the cumulative sum are windows over the 25-row aggregate,
-# never over the fact table.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x84_nation_share_of_total",
-    oracle="""
-    WITH agg AS (
-      SELECT n.n_name, SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS rev_cents
-      FROM orders o
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN nation n ON c.c_nationkey = n.n_nationkey
-      GROUP BY n.n_name
-    )
-    SELECT n_name,
-           CAST(rev_cents AS DOUBLE) / 100.0 AS revenue,
-           CAST(rev_cents AS DOUBLE) / CAST(SUM(rev_cents) OVER () AS DOUBLE) AS share,
-           CAST(SUM(rev_cents) OVER (ORDER BY n_name) AS DOUBLE)
-             / CAST(SUM(rev_cents) OVER () AS DOUBLE) AS cum_share
-    FROM agg
-    ORDER BY n_name
-    """,
-)
-def x84_nation_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    agg = (
-        orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .groupBy("n_name")
-        .agg(F.sum(cents("o_totalprice")).alias("rev_cents"))
-    )
-    w_all = Window.partitionBy()
-    w_cum = Window.orderBy("n_name")
-    total = F.sum("rev_cents").over(w_all).cast("double")
-    return (
-        agg.select(
-            "n_name",
-            (F.col("rev_cents").cast("double") / 100.0).alias("revenue"),
-            (F.col("rev_cents").cast("double") / total).alias("share"),
-            (F.sum("rev_cents").over(w_cum).cast("double") / total).alias("cum_share"),
-        )
-        .orderBy("n_name")
     )
 
 
@@ -538,76 +415,6 @@ def q12_top_parts_concat_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # --------------------------------------------------------------------------
-# q13 — HAVING-style filter on an aggregate (SURVEY §2 P3).
-# Reference: etl.py:77-80 (keep groups with count > 1); etl.ipynb:1159.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x85_busy_suppliers",
-    oracle="""
-    SELECT l_suppkey, COUNT(*) AS n_lines,
-           CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
-    FROM lineitem
-    GROUP BY l_suppkey
-    HAVING COUNT(*) > 550
-    ORDER BY l_suppkey
-    """,
-)
-def x85_busy_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_suppkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum(F.col("l_quantity").cast("long")).alias("total_qty"),
-        )
-        .filter(F.col("n_lines") > 550)
-        .orderBy("l_suppkey")
-    )
-
-
-# --------------------------------------------------------------------------
-# q14 — multi-column distinct (SURVEY §2 P4) — the dimension-membership
-# primitive. Reference: etl.py:257,277,293,316-318 (drop_duplicates defines
-# every dimension's row set).
-# --------------------------------------------------------------------------
-@harness_query(
-    "x86_distinct_segment_nation",
-    oracle="""
-    SELECT DISTINCT c_mktsegment, c_nationkey
-    FROM customer
-    """,
-)
-def x86_distinct_segment_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = load_table(spark, sf_dir, "customer")
-    return customer.select("c_mktsegment", "c_nationkey").distinct()
-
-
-# --------------------------------------------------------------------------
-# x339 — union-distinct date domain (SURVEY §2 U1; ex-q15, demoted in
-# the round-11 rotation — the slot now carries the streaming quantile
-# state oracle in plans/extensions.py).
-# Reference: etl.py:164-167 — Calendar dim = set(order dates) ∪ set(ship
-# dates). Same shape: the engine's calendar domain over the testdata.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x339_union_date_domain",
-    oracle="""
-    SELECT CAST(o_orderdate AS DATE) AS cal_date FROM orders
-    UNION
-    SELECT CAST(l_shipdate AS DATE) FROM lineitem
-    """,
-)
-def x339_union_date_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        orders.select(F.col("o_orderdate").cast("date").alias("cal_date"))
-        .union(li.select(F.col("l_shipdate").cast("date")))
-        .distinct()
-    )
-
-
-# --------------------------------------------------------------------------
 # q16 — anti-join rejects report (SURVEY §2 J4 + S8).
 # Reference: etl.py:489-496 — rows with unresolvable dimension keys are
 # skipped and logged; the Spark-native report is a left_anti join (parts
@@ -630,35 +437,6 @@ def q16_unreferenced_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         part.join(li, part.p_partkey == li.l_partkey, "left_anti")
         .select("p_partkey", "p_name")
         .orderBy("p_partkey")
-    )
-
-
-# --------------------------------------------------------------------------
-# q17 — deterministic surrogate keys (SURVEY §2 F12, §7.3).
-# Reference: AUTO_INCREMENT dims (setup_database.sql:33) + enumerate maps
-# (etl.py:140-158). row_number over the natural key is deterministic and
-# stable across runs — unlike insertion order under parallelism. The
-# single-partition exchange is acceptable for dimension-sized inputs only
-# (document zipWithIndex for 100 TB-scale dims).
-# --------------------------------------------------------------------------
-@harness_query(
-    "x87_nation_surrogate_keys",
-    oracle="""
-    SELECT CAST(ROW_NUMBER() OVER (ORDER BY n_name) AS BIGINT) AS nation_sk,
-           n_name, n_nationkey
-    FROM nation
-    ORDER BY nation_sk
-    """,
-)
-def x87_nation_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = load_table(spark, sf_dir, "nation")
-    return (
-        nation.select(
-            F.row_number().over(Window.orderBy("n_name")).cast("long").alias("nation_sk"),
-            "n_name",
-            "n_nationkey",
-        )
-        .orderBy("nation_sk")
     )
 
 
@@ -710,39 +488,6 @@ def q18_cumulative_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # --------------------------------------------------------------------------
-# q19 — count-distinct per group (SURVEY §2 A7).
-# Reference: etl.ipynb:1229-1232 (grouped nunique data-quality checks).
-# --------------------------------------------------------------------------
-@harness_query(
-    "x88_active_customers_per_nation",
-    oracle="""
-    SELECT n.n_name,
-           CAST(COUNT(DISTINCT o.o_custkey) AS BIGINT) AS n_active_customers,
-           COUNT(*) AS n_orders
-    FROM orders o
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    GROUP BY n.n_name
-    ORDER BY n.n_name
-    """,
-)
-def x88_active_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    return (
-        orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.countDistinct("o_custkey").alias("n_active_customers"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-        .orderBy("n_name")
-    )
-
-
-# --------------------------------------------------------------------------
 # q20 — conditional + label scalar functions (SURVEY §2 F7/F8/F11).
 # Reference: IF() in Data_Analysis.ipynb:262, year-month zfill label at :85.
 # No ROUND on derived quotients: Java shortest-repr vs C multiply-rounding
@@ -788,71 +533,6 @@ def x89_monthly_order_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q21 — snowflake join chain across 4 tables (SURVEY §2 J6).
-# Reference: Data_Analysis.ipynb:137-144, 688-700 (Orders ⋈ Location ⋈
-# State ⋈ Region walks). All dims broadcast → zero shuffle on the fact side.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x90_revenue_by_region",
-    oracle="""
-    SELECT r.r_name,
-           CAST(SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS total_revenue,
-           COUNT(*) AS n_orders
-    FROM orders o
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
-    GROUP BY r.r_name
-    ORDER BY r.r_name
-    """,
-)
-def x90_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    return (
-        orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("r_name")
-        .agg(
-            money_sum("o_totalprice", "total_revenue"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-        .orderBy("r_name")
-    )
-
-
-# --------------------------------------------------------------------------
-# q22 — substring extraction (SURVEY §2 F9): first word of part name.
-# Reference: SUBSTRING_INDEX(str, sep, n) in Data_Analysis.ipynb:899-903.
-# Spark has substring_index verbatim; DuckDB's twin is split_part.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x91_part_name_first_word",
-    oracle="""
-    SELECT split_part(p_name, ' ', 1) AS first_word,
-           COUNT(*) AS n_parts,
-           CAST(SUM(CAST(ROUND(p_retailprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS total_price
-    FROM part
-    GROUP BY split_part(p_name, ' ', 1)
-    ORDER BY first_word
-    """,
-)
-def x91_part_name_first_word(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = load_table(spark, sf_dir, "part")
-    return (
-        part.groupBy(F.substring_index("p_name", " ", 1).alias("first_word"))
-        .agg(
-            F.count(F.lit(1)).alias("n_parts"),
-            money_sum("p_retailprice", "total_price"),
-        )
-        .orderBy("first_word")
-    )
-
-
-# --------------------------------------------------------------------------
 # q23 — scalar-subquery threshold (SURVEY §2 A11).
 # Reference: Data_Analysis.ipynb:635 (scalar subquery denominator).
 # DataFrame form: 1-row aggregate broadcast-cross-joined into the filter,
@@ -880,614 +560,6 @@ def q23_orders_above_average(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_totalprice") > F.col("avg_price"))
         .select("o_orderkey", "o_totalprice")
         .orderBy("o_orderkey")
-    )
-
-
-# --------------------------------------------------------------------------
-# x126 (was q24 r1-r2; driver slot rotated to sequence packing — COVERAGE.md
-# §rotation) — CUBE with grouping labels (SURVEY §2.4 note: cube/grouping-sets as
-# Catalyst bonuses beyond the reference's ROLLUP-only surface).
-# --------------------------------------------------------------------------
-@harness_query(
-    "x126_cube_flag_status",
-    oracle="""
-    SELECT CASE WHEN GROUPING(l_returnflag) = 1 THEN 'ALL' ELSE l_returnflag END AS return_flag,
-           CASE WHEN GROUPING(l_linestatus) = 1 THEN 'ALL' ELSE l_linestatus END AS line_status,
-           COUNT(*) AS n_lines,
-           CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
-    FROM lineitem
-    GROUP BY CUBE(l_returnflag, l_linestatus)
-    ORDER BY return_flag, line_status
-    """,
-)
-def x126_cube_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.when(F.grouping("l_returnflag") == 1, F.lit("ALL"))
-            .otherwise(F.col("l_returnflag"))
-            .alias("return_flag"),
-            F.when(F.grouping("l_linestatus") == 1, F.lit("ALL"))
-            .otherwise(F.col("l_linestatus"))
-            .alias("line_status"),
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum(F.col("l_quantity").cast("long")).alias("total_qty"),
-        )
-        .select("return_flag", "line_status", "n_lines", "total_qty")
-        .orderBy("return_flag", "line_status")
-    )
-
-
-# --------------------------------------------------------------------------
-# x127 (was q25 r1-r2; driver slot rotated to contamination audit) — pivot:
-# order counts per year × status (SURVEY §4 "free Catalyst
-# bonus"; pivot/unpivot from the PySpark surface). Oracle = conditional
-# aggregation; nulls filled to 0 to match COUNT(CASE ...) semantics.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x127_pivot_status_by_year",
-    oracle="""
-    SELECT CAST(year(o_orderdate) AS BIGINT) AS order_year,
-           CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_open,
-           CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_filled,
-           CAST(SUM(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS n_partial
-    FROM orders
-    GROUP BY year(o_orderdate)
-    ORDER BY order_year
-    """,
-)
-def x127_pivot_status_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot demo. All output columns are BIGINT and pivot-generated nulls
-    go through explicit coalesce (r01 hash-mismatched on the int32 +
-    na.fill shape despite bit-identical local values; this keeps the
-    relational pivot while canonicalizing the output representation)."""
-    orders = load_table(spark, sf_dir, "orders")
-    pivoted = (
-        orders.groupBy(F.year("o_orderdate").cast("long").alias("order_year"))
-        .pivot("o_orderstatus", ["O", "F", "P"])
-        .count()
-    )
-    return (
-        pivoted.select(
-            "order_year",
-            F.coalesce(F.col("O"), F.lit(0)).cast("long").alias("n_open"),
-            F.coalesce(F.col("F"), F.lit(0)).cast("long").alias("n_filled"),
-            F.coalesce(F.col("P"), F.lit(0)).cast("long").alias("n_partial"),
-        )
-        .orderBy("order_year")
-    )
-
-
-# --------------------------------------------------------------------------
-# q26-q28 — the classic TPC-H analytics shapes (Q3/Q5/Q10) over the
-# driver's TPC-H-ish testdata: multi-join + filter + agg + top-k. Not in
-# the reference's corpus, but the canonical check that the engine speaks
-# standard warehouse SQL at standard shapes. Money through exact cents.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x267_shipping_priority",
-    oracle="""
-    SELECT l.l_orderkey,
-           CAST(SUM(CAST(ROUND(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS revenue,
-           o.o_orderdate
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-      AND o.o_orderdate < DATE '1998-01-01'
-      AND l.l_shipdate > DATE '1998-01-01'
-    GROUP BY l.l_orderkey, o.o_orderdate
-    ORDER BY revenue DESC, o_orderdate, l_orderkey
-    LIMIT 10
-    """,
-)
-def x267_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: segment filter pushed to the customer scan, both
-    dims broadcast, aggregate on the fact, TakeOrderedAndProject top-10."""
-    c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1998-01-01")
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1998-01-01")
-    return (
-        li.join(F.broadcast(o), li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
-        .select("l_orderkey", "revenue", "o_orderdate")
-        .orderBy(F.desc("revenue"), "o_orderdate", "l_orderkey")
-        .limit(10)
-    )
-
-
-@harness_query(
-    "x268_local_supplier_volume",
-    oracle="""
-    SELECT n.n_name,
-           CAST(SUM(CAST(ROUND(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS revenue
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey AND s.s_nationkey = c.c_nationkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
-    WHERE o.o_orderdate >= DATE '1996-01-01' AND o.o_orderdate < DATE '1998-01-01'
-    GROUP BY n.n_name
-    ORDER BY revenue DESC
-    """,
-)
-def x268_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: the snowflake walk customer→orders→lineitem→
-    supplier→nation→region with the local-supplier equality; every
-    dimension side broadcasts."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1998-01-01")
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    return (
-        li.join(F.broadcast(o), li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(
-            F.broadcast(s),
-            (li.l_suppkey == s.s_suppkey) & (s.s_nationkey == c.c_nationkey),
-        )
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
-        .orderBy(F.desc("revenue"))
-    )
-
-
-@harness_query(
-    "x264_returned_item_revenue",
-    oracle="""
-    SELECT c.c_custkey, c.c_name, n.n_name,
-           CAST(SUM(CAST(ROUND(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS revenue
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE l.l_returnflag = 'R'
-    GROUP BY c.c_custkey, c.c_name, n.n_name
-    ORDER BY revenue DESC, c_custkey
-    LIMIT 20
-    """,
-)
-def x264_returned_item_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: returned-lines filter on the fact scan, customer
-    revenue ranking, top-20."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = load_table(spark, sf_dir, "nation")
-    return (
-        li.join(F.broadcast(o), li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
-        .orderBy(F.desc("revenue"), "c_custkey")
-        .limit(20)
-    )
-
-
-# --------------------------------------------------------------------------
-# q29 — LAG/LEAD/NTILE ranking functions (not in the reference corpus;
-# rounding out the window-function surface). Unique ORDER BY keys keep
-# both engines deterministic.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x269_order_gaps_and_quartiles",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS d,
-             COUNT(*) AS n_orders,
-             SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS cents
-      FROM orders GROUP BY 1
-    )
-    SELECT d AS order_date, n_orders,
-           CAST(lag(n_orders) OVER (ORDER BY d) AS BIGINT) AS prev_day_orders,
-           CAST(lead(n_orders) OVER (ORDER BY d) AS BIGINT) AS next_day_orders,
-           CAST(ntile(4) OVER (ORDER BY cents, d) AS INT) AS revenue_quartile
-    FROM daily
-    ORDER BY order_date
-    """,
-)
-def x269_order_gaps_and_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(cents("o_totalprice")).alias("cents"),
-    )
-    wd = Window.orderBy("d")
-    wq = Window.orderBy("cents", "d")
-    return (
-        daily.select(
-            F.col("d").alias("order_date"),
-            "n_orders",
-            F.lag("n_orders").over(wd).alias("prev_day_orders"),
-            F.lead("n_orders").over(wd).alias("next_day_orders"),
-            F.ntile(4).over(wq).alias("revenue_quartile"),
-        )
-        .orderBy("order_date")
-    )
-
-
-# --------------------------------------------------------------------------
-# x298 (ex-q30) — left-semi join (EXISTS): customers with at least one open order.
-# Complements q16's left_anti; semi avoids the row-multiplication a plain
-# join + distinct would shuffle.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x298_customers_with_open_orders",
-    oracle="""
-    SELECT c.c_custkey, c.c_name, c.c_nationkey
-    FROM customer c
-    WHERE EXISTS (
-      SELECT 1 FROM orders o
-      WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'O'
-    )
-    ORDER BY c.c_custkey
-    """,
-)
-def x298_customers_with_open_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_semi")
-        .select("c_custkey", "c_name", "c_nationkey")
-        .orderBy("c_custkey")
-    )
-
-
-# --------------------------------------------------------------------------
-# x324 (ex-q31, demoted in the round-8 rotation — the q31 driver slot
-# now runs the sampled int8-recall eval, ex-x321) — full outer join of
-# two aggregates: order counts vs lineitem counts per key-bucket; either
-# side can be missing (COALESCE fills). Full oracle unchanged.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x324_full_outer_reconciliation",
-    oracle="""
-    WITH ob AS (
-      SELECT o_orderkey % 1000 AS bucket, COUNT(*) AS n_orders
-      FROM orders GROUP BY 1
-    ), lb AS (
-      SELECT l_partkey % 1000 AS bucket, COUNT(*) AS n_lines
-      FROM lineitem GROUP BY 1
-    )
-    SELECT COALESCE(ob.bucket, lb.bucket) AS bucket,
-           COALESCE(n_orders, 0) AS n_orders,
-           COALESCE(n_lines, 0) AS n_lines
-    FROM ob FULL OUTER JOIN lb ON ob.bucket = lb.bucket
-    ORDER BY bucket
-    """,
-)
-def x324_full_outer_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ob = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy((F.col("o_orderkey") % 1000).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
-    lb = (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy((F.col("l_partkey") % 1000).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n_lines"))
-    )
-    return (
-        ob.join(lb, "bucket", "full_outer")
-        .select(
-            "bucket",
-            F.coalesce("n_orders", F.lit(0)).alias("n_orders"),
-            F.coalesce("n_lines", F.lit(0)).alias("n_lines"),
-        )
-        .orderBy("bucket")
-    )
-
-
-# --------------------------------------------------------------------------
-# x128 (was q32 r1-r2; driver slot rotated to repetition quality) —
-# bounded sliding frame: 7-day moving average of daily revenue
-# (ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) plus FIRST_VALUE anchoring.
-# Rounds out the frame-spec surface: W2 default RANGE, W3 unbounded ROWS,
-# and here a bounded ROWS frame.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x128_moving_average_revenue",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS d,
-             SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS cents
-      FROM orders GROUP BY 1
-    )
-    SELECT d AS order_date,
-           CAST(cents AS DOUBLE) / 100.0 AS revenue,
-           CAST(AVG(cents) OVER (ORDER BY d ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE) / 100.0 AS ma7,
-           CAST(first_value(cents) OVER (ORDER BY d ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE) / 100.0 AS window_first
-    FROM daily
-    ORDER BY order_date
-    """,
-)
-def x128_moving_average_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-        F.sum(cents("o_totalprice")).alias("cents")
-    )
-    w = Window.orderBy("d").rowsBetween(-6, Window.currentRow)
-    return (
-        daily.select(
-            F.col("d").alias("order_date"),
-            (F.col("cents").cast("double") / 100.0).alias("revenue"),
-            (F.avg("cents").over(w) / 100.0).alias("ma7"),
-            (F.first("cents").over(w).cast("double") / 100.0).alias("window_first"),
-        )
-        .orderBy("order_date")
-    )
-
-
-# --------------------------------------------------------------------------
-# x92 — TPC-H Q4 shape: existential semi-join. Orders in a quarter that
-# have at least one line shipped >30 days after ordering, counted by
-# priority. Spark plans the EXISTS as a left-semi hash join; the date
-# filter sits on the scan (PushedFilters) so the probe side is one
-# quarter, not seven years.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x92_late_shipment_priority",
-    oracle="""
-    SELECT o_orderpriority, COUNT(*) AS n_late_orders
-    FROM orders o
-    WHERE CAST(o_orderdate AS DATE) >= DATE '1996-01-01'
-      AND CAST(o_orderdate AS DATE) < DATE '1996-04-01'
-      AND EXISTS (
-        SELECT 1 FROM lineitem l
-        WHERE l.l_orderkey = o.o_orderkey
-          AND CAST(l.l_shipdate AS DATE) > CAST(o_orderdate AS DATE) + INTERVAL 30 DAY
-      )
-    GROUP BY o_orderpriority
-    """,
-)
-def x92_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority", F.col("o_orderdate").cast("date").alias("od")
-    ).filter((F.col("od") >= "1996-01-01") & (F.col("od") < "1996-04-01"))
-    lines = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", F.col("l_shipdate").cast("date").alias("sd")
-    )
-    late = orders.join(
-        lines,
-        (orders.o_orderkey == lines.l_orderkey) & (lines.sd > F.date_add(orders.od, 30)),
-        "left_semi",
-    )
-    return late.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n_late_orders"))
-
-
-# --------------------------------------------------------------------------
-# q34 — TPC-H Q14 shape: promo revenue share in one month. Conditional
-# aggregation over an integer-cents base; one deterministic division at
-# the end so the percentage is engine-exact.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x93_promo_revenue_share",
-    oracle="""
-    SELECT 100.0 * CAST(SUM(CASE WHEN p.p_type = 'PROMO'
-                     THEN CAST(ROUND(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)
-                     ELSE 0 END) AS DOUBLE)
-             / CAST(SUM(CAST(ROUND(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)) AS DOUBLE)
-             AS promo_share_pct,
-           CAST(SUM(CAST(ROUND(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)) AS DOUBLE) / 100.0
-             AS total_revenue
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    WHERE CAST(l.l_shipdate AS DATE) >= DATE '1996-03-01'
-      AND CAST(l.l_shipdate AS DATE) < DATE '1996-04-01'
-    """,
-)
-def x93_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lines = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    sd = F.col("l_shipdate").cast("date")
-    return (
-        lines.filter((sd >= "1996-03-01") & (sd < "1996-04-01"))
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            (
-                100.0
-                * F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0))).cast("double")
-                / F.sum(rev).cast("double")
-            ).alias("promo_share_pct"),
-            (F.sum(rev).cast("double") / 100.0).alias("total_revenue"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# q35 — TPC-H Q19 shape: disjunctive compound predicate (brand × size ×
-# quantity bands). Catalyst splits the OR across the join: the shared
-# conjuncts push to the scans, the residual OR evaluates post-join —
-# the classic predicate-pushdown stress test.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x94_banded_revenue",
-    oracle="""
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_lines,
-           CAST(SUM(CAST(ROUND(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)) AS DOUBLE) / 100.0
-             AS revenue
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15 AND l.l_quantity BETWEEN 1 AND 20)
-       OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 10 AND 30 AND l.l_quantity BETWEEN 10 AND 35)
-       OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 20 AND 50 AND l.l_quantity BETWEEN 20 AND 50)
-    """,
-)
-def x94_banded_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lines = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    band = (
-        ((F.col("p_brand") == "Brand#1") & F.col("p_size").between(1, 15) & F.col("l_quantity").between(1, 20))
-        | ((F.col("p_brand") == "Brand#2") & F.col("p_size").between(10, 30) & F.col("l_quantity").between(10, 35))
-        | ((F.col("p_brand") == "Brand#3") & F.col("p_size").between(20, 50) & F.col("l_quantity").between(20, 50))
-    )
-    rev = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    return (
-        lines.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .filter(band)
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            (F.sum(rev).cast("double") / 100.0).alias("revenue"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# q36 — TPC-H Q2 shape: per-group minimum with full row recovery. The
-# cheapest line per brand via window rank (unique tie-breakers), the
-# DataFrame twin of a correlated MIN subquery.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x95_cheapest_line_per_brand",
-    oracle="""
-    SELECT p_brand, l_orderkey, l_linenumber, l_extendedprice AS min_price
-    FROM (
-      SELECT p.p_brand, l.l_orderkey, l.l_linenumber, l.l_extendedprice,
-             ROW_NUMBER() OVER (PARTITION BY p.p_brand
-               ORDER BY l.l_extendedprice, l.l_orderkey, l.l_linenumber) AS rn
-      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    ) WHERE rn = 1
-    """,
-)
-def x95_cheapest_line_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lines = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_orderkey", "l_linenumber", "l_extendedprice"
-    )
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    w = Window.partitionBy("p_brand").orderBy(
-        "l_extendedprice", "l_orderkey", "l_linenumber"
-    )
-    return (
-        lines.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "p_brand",
-            "l_orderkey",
-            "l_linenumber",
-            F.col("l_extendedprice").alias("min_price"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# q37 — TPC-H Q22 shape: above-average dormant customers per nation
-# (no orders since 2000). "Above average" compares in pure integers
-# (bal_cents · n > total_cents) so no float threshold crosses engines;
-# the dormancy test is an anti-join against the filtered orders scan.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x96_dormant_rich_customers",
-    oracle="""
-    WITH stats AS (
-      SELECT SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS total_cents,
-             COUNT(*) AS n FROM customer WHERE c_acctbal > 0
-    ), rich AS (
-      SELECT c.c_custkey, c.c_nationkey, c.c_acctbal
-      FROM customer c, stats s
-      WHERE CAST(ROUND(c.c_acctbal * 100) AS BIGINT) * s.n > s.total_cents
-    ), dormant AS (
-      SELECT r.* FROM rich r
-      WHERE NOT EXISTS (
-        SELECT 1 FROM orders o
-        WHERE o.o_custkey = r.c_custkey
-          AND CAST(o.o_orderdate AS DATE) >= DATE '2000-01-01'
-      )
-    )
-    SELECT n.n_name, COUNT(*) AS n_customers,
-           CAST(SUM(CAST(ROUND(d.c_acctbal * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS total_balance
-    FROM dormant d JOIN nation n ON n.n_nationkey = d.c_nationkey
-    GROUP BY n.n_name
-    """,
-)
-def x96_dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey", "c_acctbal"
-    )
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate").cast("date") >= "2000-01-01")
-        .select("o_custkey")
-    )
-    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    pos = cust.filter(F.col("c_acctbal") > 0)
-    stats = pos.agg(
-        F.sum(cents("c_acctbal")).alias("total_cents"), F.count(F.lit(1)).alias("n")
-    )
-    rich = cust.join(F.broadcast(stats)).filter(
-        cents("c_acctbal") * F.col("n") > F.col("total_cents")
-    )
-    dormant = rich.join(
-        orders, rich.c_custkey == orders.o_custkey, "left_anti"
-    )
-    return (
-        dormant.join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            money_sum("c_acctbal", "total_balance"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# q38 — TPC-H Q7 shape (volume shipping between two nations): fact
-# joins to both the supplier-side and customer-side nation dims (both
-# broadcast), disjunctive nation-pair predicate, yearly rollup.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x97_bilateral_trade_volume",
-    oracle="""
-    SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
-           CAST(EXTRACT(year FROM CAST(l.l_shipdate AS DATE)) AS BIGINT) AS l_year,
-           CAST(SUM(CAST(ROUND(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)) AS DOUBLE) / 100.0
-             AS volume
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation ns ON s.s_nationkey = ns.n_nationkey
-    JOIN nation nc ON c.c_nationkey = nc.n_nationkey
-    WHERE (ns.n_name = 'NATION_8' AND nc.n_name = 'NATION_9')
-       OR (ns.n_name = 'NATION_9' AND nc.n_name = 'NATION_8')
-    GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
-    """,
-)
-def x97_bilateral_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    ns = n.select(F.col("n_nationkey").alias("ns_key"), F.col("n_name").alias("supp_nation"))
-    nc = n.select(F.col("n_nationkey").alias("nc_key"), F.col("n_name").alias("cust_nation"))
-    pair = (
-        (F.col("supp_nation") == "NATION_8") & (F.col("cust_nation") == "NATION_9")
-    ) | ((F.col("supp_nation") == "NATION_9") & (F.col("cust_nation") == "NATION_8"))
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(ns), F.col("s_nationkey") == F.col("ns_key"))
-        .join(F.broadcast(nc), F.col("c_nationkey") == F.col("nc_key"))
-        .filter(pair)
-        .groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year(F.col("l_shipdate").cast("date")).cast("long").alias("l_year"),
-        )
-        .agg(money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "volume"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -1568,290 +640,6 @@ def x98_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q40 — TPC-H Q9 shape (profit by supplier nation and year), with
-# p_retailprice·quantity standing in for ps_supplycost (no partsupp
-# table in this schema). Margin stays in integer cents end-to-end.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x99_margin_by_nation_year",
-    oracle="""
-    SELECT n.n_name AS nation,
-           CAST(EXTRACT(year FROM CAST(l.l_shipdate AS DATE)) AS BIGINT) AS o_year,
-           CAST(SUM(CAST(ROUND(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)
-                    - CAST(l.l_quantity AS BIGINT) * CAST(ROUND(p.p_retailprice * 100) AS BIGINT)) AS DOUBLE) / 100.0
-             AS margin
-    FROM lineitem l
-    JOIN part p ON l.l_partkey = p.p_partkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    JOIN nation n ON s.s_nationkey = n.n_nationkey
-    WHERE p.p_name LIKE '%red%'
-    GROUP BY 1, 2 ORDER BY 1, 2 DESC
-    """,
-)
-def x99_margin_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = load_table(spark, sf_dir, "lineitem")
-    p = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_name").like("%red%"))
-        .select("p_partkey", "p_retailprice")
-    )
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    margin_cents = cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))) - F.col(
-        "l_quantity"
-    ).cast("long") * cents(F.col("p_retailprice"))
-    return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year(F.col("l_shipdate").cast("date")).cast("long").alias("o_year"),
-        )
-        .agg((F.sum(margin_cents).cast("double") / 100.0).alias("margin"))
-        .orderBy("nation", F.desc("o_year"))
-    )
-
-
-# --------------------------------------------------------------------------
-# q41 — TPC-H Q13 shape (customer distribution): LEFT join so
-# zero-order customers survive, per-customer count, then a histogram of
-# the counts — two aggregations at different grains.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x100_customer_order_distribution",
-    oracle="""
-    WITH per_cust AS (
-      SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-      FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-      GROUP BY 1
-    )
-    SELECT c_count, COUNT(*) AS custdist
-    FROM per_cust GROUP BY 1 ORDER BY custdist DESC, c_count DESC
-    """,
-)
-def x100_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer").select("c_custkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
-    )
-
-
-# --------------------------------------------------------------------------
-# q42 — TPC-H Q17 shape (small-quantity revenue): lines below 20% of
-# their part's average quantity. The float threshold qty < 0.2·avg is
-# restated in integers — 5·qty·n < sum_qty — so the predicate cannot
-# straddle engines. Per-part averages come from a re-aggregation of the
-# same scan, broadcast back (no correlated per-row subquery execution).
-# --------------------------------------------------------------------------
-@harness_query(
-    "x101_small_quantity_revenue",
-    oracle="""
-    WITH perpart AS (
-      SELECT l_partkey, COUNT(*) AS n, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-      FROM lineitem GROUP BY 1
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_small_lines,
-           CAST(SUM(CAST(ROUND(l.l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 700.0
-             AS avg_weekly_revenue
-    FROM lineitem l JOIN perpart pp ON l.l_partkey = pp.l_partkey
-    WHERE 5 * CAST(l.l_quantity AS BIGINT) * pp.n < pp.sum_qty
-    """,
-)
-def x101_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = load_table(spark, sf_dir, "lineitem")
-    perpart = l.groupBy("l_partkey").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
-    )
-    return (
-        l.join(F.broadcast(perpart.withColumnRenamed("l_partkey", "pk")), F.col("l_partkey") == F.col("pk"))
-        .filter(
-            5 * F.col("l_quantity").cast("long") * F.col("n") < F.col("sum_qty")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_small_lines"),
-            (F.sum(cents(F.col("l_extendedprice"))).cast("double") / 700.0).alias(
-                "avg_weekly_revenue"
-            ),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# q43 — TPC-H Q18 shape (large-volume orders): HAVING on a per-order
-# rollup, then enrich winners with customer + order attributes. The
-# rollup output is tiny → broadcast into the enrichment joins.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x102_large_volume_orders",
-    oracle="""
-    WITH big AS (
-      SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
-      FROM lineitem GROUP BY 1
-      HAVING SUM(CAST(l_quantity AS BIGINT)) > 250
-    )
-    SELECT c.c_name, o.o_orderkey, CAST(o.o_orderdate AS DATE) AS o_orderdate,
-           CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS totalprice_cents,
-           b.total_qty
-    FROM big b
-    JOIN orders o ON b.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    ORDER BY totalprice_cents DESC, o.o_orderkey
-    LIMIT 50
-    """,
-)
-def x102_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    big = (
-        l.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("long")).alias("total_qty"))
-        .filter(F.col("total_qty") > 250)
-    )
-    return (
-        F.broadcast(big)
-        .join(o, big.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .select(
-            "c_name",
-            "o_orderkey",
-            F.col("o_orderdate").cast("date").alias("o_orderdate"),
-            cents(F.col("o_totalprice")).alias("totalprice_cents"),
-            "total_qty",
-        )
-        .orderBy(F.desc("totalprice_cents"), "o_orderkey")
-        .limit(50)
-    )
-
-
-# --------------------------------------------------------------------------
-# q44 — TPC-H Q15 shape (top supplier): per-supplier revenue for a
-# quarter, then the suppliers achieving the global max (scalar-subquery
-# aggregate over an aggregate, exact cents so "equals max" is safe).
-# --------------------------------------------------------------------------
-@harness_query(
-    "x103_top_revenue_suppliers",
-    oracle="""
-    WITH rev AS (
-      SELECT l_suppkey,
-             CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT)
-               AS total_cents
-      FROM lineitem
-      WHERE CAST(l_shipdate AS DATE) >= DATE '1996-01-01'
-        AND CAST(l_shipdate AS DATE) < DATE '1996-04-01'
-      GROUP BY 1
-    )
-    SELECT s.s_suppkey, s.s_name, r.total_cents
-    FROM rev r JOIN supplier s ON r.l_suppkey = s.s_suppkey
-    WHERE r.total_cents = (SELECT MAX(total_cents) FROM rev)
-    ORDER BY s.s_suppkey
-    """,
-)
-def x103_top_revenue_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    sd = F.col("l_shipdate").cast("date")
-    rev = (
-        l.filter((sd >= "1996-01-01") & (sd < "1996-04-01"))
-        .groupBy("l_suppkey")
-        .agg(F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias("total_cents"))
-    )
-    mx = rev.agg(F.max("total_cents").alias("mx"))
-    return (
-        rev.crossJoin(F.broadcast(mx))
-        .filter(F.col("total_cents") == F.col("mx"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .select("s_suppkey", "s_name", "total_cents")
-        .orderBy("s_suppkey")
-    )
-
-
-# --------------------------------------------------------------------------
-# q45 — TPC-H Q16 shape (supplier count by part attributes), with the
-# part↔supplier relation derived from lineitem (no partsupp table):
-# distinct (brand, type, size, supplier) then count per attribute
-# triple — a distinct-then-count at a coarser grain.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x104_supplier_count_by_part_attrs",
-    oracle="""
-    SELECT p.p_brand, p.p_type, p.p_size,
-           COUNT(DISTINCT l.l_suppkey) AS supplier_cnt
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    WHERE p.p_brand <> 'Brand#1' AND p.p_size IN (10, 20, 30, 40)
-    GROUP BY 1, 2, 3
-    ORDER BY supplier_cnt DESC, 1, 2, 3
-    LIMIT 100
-    """,
-)
-def x104_supplier_count_by_part_attrs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    p = (
-        load_table(spark, sf_dir, "part")
-        .filter((F.col("p_brand") != "Brand#1") & F.col("p_size").isin(10, 20, 30, 40))
-        .select("p_partkey", "p_brand", "p_type", "p_size")
-    )
-    return (
-        l.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
-        .limit(100)
-    )
-
-
-# --------------------------------------------------------------------------
-# q46 — time-hierarchy ROLLUP: revenue subtotals at (year, quarter),
-# (year), and grand-total levels with GROUPING() flags — the calendar
-# counterpart of q03's segment rollup (reference uses ROLLUP in its
-# monthly-sales query, Data_Analysis.ipynb Q10).
-# --------------------------------------------------------------------------
-@harness_query(
-    "x105_time_hierarchy_rollup",
-    oracle="""
-    SELECT CAST(EXTRACT(year FROM CAST(o_orderdate AS DATE)) AS BIGINT) AS yr,
-           CAST(quarter(CAST(o_orderdate AS DATE)) AS BIGINT) AS qtr,
-           GROUPING(CAST(EXTRACT(year FROM CAST(o_orderdate AS DATE)) AS BIGINT)) AS g_yr,
-           GROUPING(CAST(quarter(CAST(o_orderdate AS DATE)) AS BIGINT)) AS g_qtr,
-           COUNT(*) AS n_orders,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS revenue
-    FROM orders
-    GROUP BY ROLLUP(1, 2)
-    ORDER BY g_yr, g_qtr, yr NULLS FIRST, qtr NULLS FIRST
-    """,
-)
-def x105_time_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    d = F.col("o_orderdate").cast("date")
-    return (
-        o.select(
-            F.year(d).cast("long").alias("yr"),
-            F.quarter(d).cast("long").alias("qtr"),
-            "o_totalprice",
-        )
-        .rollup("yr", "qtr")
-        .agg(
-            F.grouping("yr").cast("long").alias("g_yr"),
-            F.grouping("qtr").cast("long").alias("g_qtr"),
-            F.count(F.lit(1)).alias("n_orders"),
-            money_sum(F.col("o_totalprice"), "revenue"),
-        )
-        .select("yr", "qtr", "g_yr", "g_qtr", "n_orders", "revenue")
-        .orderBy("g_yr", "g_qtr", F.asc_nulls_first("yr"), F.asc_nulls_first("qtr"))
-    )
-
-
-# --------------------------------------------------------------------------
 # q47 — TPC-H Q6 shape (forecast revenue change): pure scan-side
 # conjunctive predicate + single agg — the canonical predicate-pushdown
 # / whole-stage-codegen benchmark (every filter reaches the parquet
@@ -1887,222 +675,3 @@ def x106_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------------------
-# q48 — TPC-H Q11 shape (important inventory share): per-(nation, part)
-# shipped value vs a scalar-subquery global threshold — partsupp is
-# derived from lineitem⋈supplier (schema has no partsupp table). The
-# HAVING threshold (0.01% of global) is exact: both sides integer
-# cents, scaled by 10000 instead of divided.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x107_important_part_value",
-    oracle="""
-    WITH pv AS (
-      SELECT s.s_nationkey, l.l_partkey,
-             CAST(SUM(CAST(ROUND(l.l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS value_cents
-      FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      GROUP BY 1, 2
-    ), tot AS (
-      SELECT CAST(SUM(value_cents) AS BIGINT) AS t FROM pv
-    )
-    SELECT pv.s_nationkey, pv.l_partkey, pv.value_cents
-    FROM pv CROSS JOIN tot
-    WHERE pv.value_cents * 10000 > tot.t
-    ORDER BY pv.value_cents DESC, pv.s_nationkey, pv.l_partkey
-    """,
-)
-def x107_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_extendedprice"
-    )
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    pv = (
-        l.join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .groupBy("s_nationkey", "l_partkey")
-        .agg(F.sum(cents(F.col("l_extendedprice"))).alias("value_cents"))
-    )
-    tot = pv.agg(F.sum("value_cents").alias("t"))
-    return (
-        pv.crossJoin(F.broadcast(tot))
-        .filter(F.col("value_cents") * 10000 > F.col("t"))
-        .select("s_nationkey", "l_partkey", "value_cents")
-        .orderBy(F.desc("value_cents"), "s_nationkey", "l_partkey")
-    )
-
-
-# --------------------------------------------------------------------------
-# q49 — TPC-H Q20 shape (suppliers with significant share of a part's
-# volume): suppliers shipping > 20% of a red part's total quantity —
-# the correlated "excess availability" predicate restated in exact
-# integers (5·supp_qty > part_qty).
-# --------------------------------------------------------------------------
-@harness_query(
-    "x108_dominant_part_suppliers",
-    oracle="""
-    WITH red AS (
-      SELECT p_partkey FROM part WHERE p_name LIKE '%red%'
-    ), per_supp AS (
-      SELECT l.l_partkey, l.l_suppkey,
-             CAST(SUM(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS supp_qty
-      FROM lineitem l JOIN red r ON l.l_partkey = r.p_partkey
-      GROUP BY 1, 2
-    ), per_part AS (
-      SELECT l_partkey, CAST(SUM(supp_qty) AS BIGINT) AS part_qty
-      FROM per_supp GROUP BY 1
-    )
-    SELECT s.s_name, ps.l_partkey, ps.supp_qty, pp.part_qty
-    FROM per_supp ps
-    JOIN per_part pp ON ps.l_partkey = pp.l_partkey
-    JOIN supplier s ON ps.l_suppkey = s.s_suppkey
-    WHERE 5 * ps.supp_qty > pp.part_qty
-    ORDER BY s.s_name, ps.l_partkey
-    """,
-)
-def x108_dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    red = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_name").like("%red%"))
-        .select("p_partkey")
-    )
-    l = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_quantity"
-    )
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    per_supp = (
-        l.join(F.broadcast(red), l.l_partkey == red.p_partkey)
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.sum(F.col("l_quantity").cast("long")).alias("supp_qty"))
-    )
-    per_part = per_supp.groupBy("l_partkey").agg(F.sum("supp_qty").alias("part_qty"))
-    return (
-        per_supp.join(F.broadcast(per_part.withColumnRenamed("l_partkey", "pk")),
-                      F.col("l_partkey") == F.col("pk"))
-        .filter(5 * F.col("supp_qty") > F.col("part_qty"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .select("s_name", "l_partkey", "supp_qty", "part_qty")
-        .orderBy("s_name", "l_partkey")
-    )
-
-
-# --------------------------------------------------------------------------
-# x116 — TPC-H Q12 shape (shipping-mode priority audit): conditional
-# priority counts per lineitem category over a one-year ship window.
-# The driver schema has no l_shipmode/l_commitdate, so the "mode" axis
-# is l_linestatus and the date predicate sits on l_shipdate — the Q12
-# essence (fact⋈orders, CASE-split counts of urgent vs other order
-# priorities, date-window pushdown) is preserved.
-# Scale: predicate pushes to the parquet scan; orders side is the
-# shuffle-free broadcast probe only if small — here orders is the BIG
-# side, so the join shuffles on orderkey while counts pre-aggregate
-# map-side.
-# Reference anchor: Data_Analysis.ipynb conditional aggregation cells
-# (CASE WHEN inside SUM, e.g. raw lines 470-520).
-# --------------------------------------------------------------------------
-@harness_query(
-    "x116_linestatus_priority_counts",
-    oracle="""
-    SELECT l.l_linestatus,
-           CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-           CAST(SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    WHERE CAST(l.l_shipdate AS DATE) >= DATE '1996-01-01'
-      AND CAST(l.l_shipdate AS DATE) < DATE '1997-01-01'
-    GROUP BY l.l_linestatus
-    ORDER BY l.l_linestatus
-    """,
-)
-def x116_linestatus_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sd = F.col("l_shipdate").cast("date")
-    l = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter((sd >= "1996-01-01") & (sd < "1997-01-01"))
-        .select("l_orderkey", "l_linestatus")
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-        .orderBy("l_linestatus")
-    )
-
-
-# --------------------------------------------------------------------------
-# x117 — TPC-H Q21 shape (suppliers who kept orders waiting): for
-# multi-supplier orders, find the supplier whose line was the ONLY late
-# one — EXISTS(another supplier's line) AND NOT EXISTS(another
-# supplier's LATE line). "Late" is restated on the driver schema as
-# shipped >60 days after order date (no l_receiptdate/l_commitdate).
-# Shape parity: two correlated self-joins on the fact table (one semi,
-# one anti), dim broadcast, top-k count ranking — the classic Q21 plan.
-# Scale: lineitem self-joins shuffle on l_orderkey (the natural
-# co-partition key); both EXISTS sides reduce to semi/anti joins, so no
-# row explosion; supplier/nation broadcast.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x117_waiting_suppliers",
-    oracle="""
-    WITH late AS (
-      SELECT l.l_orderkey, l.l_suppkey
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-      WHERE CAST(l.l_shipdate AS DATE) > CAST(o.o_orderdate AS DATE) + INTERVAL 60 DAY
-    )
-    SELECT s.s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-    FROM late l1
-    JOIN supplier s ON l1.l_suppkey = s.s_suppkey
-    WHERE EXISTS (
-        SELECT 1 FROM lineitem l2
-        WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey
-    )
-    AND NOT EXISTS (
-        SELECT 1 FROM late l3
-        WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-    )
-    GROUP BY s.s_name
-    ORDER BY numwait DESC, s.s_name
-    LIMIT 25
-    """,
-)
-def x117_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    late = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .filter(
-            F.col("l_shipdate").cast("date")
-            > F.date_add(F.col("o_orderdate").cast("date"), 60)
-        )
-        .select("l_orderkey", "l_suppkey")
-    )
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    l2 = l.select(
-        F.col("l_orderkey").alias("k2"), F.col("l_suppkey").alias("s2")
-    )
-    l3 = late.select(
-        F.col("l_orderkey").alias("k3"), F.col("l_suppkey").alias("s3")
-    )
-    return (
-        late.join(
-            l2,
-            (F.col("l_orderkey") == F.col("k2")) & (F.col("l_suppkey") != F.col("s2")),
-            "left_semi",
-        )
-        .join(
-            l3,
-            (F.col("l_orderkey") == F.col("k3")) & (F.col("l_suppkey") != F.col("s3")),
-            "left_anti",
-        )
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .orderBy(F.desc("numwait"), "s_name")
-        .limit(25)
-    )

@@ -220,47 +220,6 @@ def x112_deterministic_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# x113 — recursive CTE (Spark 4 WITH RECURSIVE): traverse the implicit
-# binary tree parent(k) = k div 2 over supplier keys from the root and
-# report per-depth node counts. Iterative traversal expressed in pure
-# declarative SQL on BOTH engines — the recursion text is identical
-# modulo the integer-division spelling (Spark `div`, DuckDB `//`).
-# --------------------------------------------------------------------------
-@harness_query(
-    "x113_recursive_supplier_tree",
-    oracle="""
-    WITH RECURSIVE tree(s_suppkey, depth) AS (
-      SELECT s_suppkey, 0 AS depth FROM supplier WHERE s_suppkey = 1
-      UNION ALL
-      SELECT s.s_suppkey, t.depth + 1
-      FROM supplier s JOIN tree t ON s.s_suppkey // 2 = t.s_suppkey
-      WHERE s.s_suppkey > 1
-    )
-    SELECT depth, COUNT(*) AS n_nodes, CAST(SUM(s_suppkey) AS BIGINT) AS key_sum
-    FROM tree GROUP BY depth ORDER BY depth
-    """,
-)
-def x113_recursive_supplier_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "supplier").createOrReplaceTempView(
-        "supplier_rec_x113"
-    )
-    return spark.sql(
-        """
-        WITH RECURSIVE tree(s_suppkey, depth) AS (
-          SELECT s_suppkey, 0 AS depth FROM supplier_rec_x113 WHERE s_suppkey = 1
-          UNION ALL
-          SELECT s.s_suppkey, t.depth + 1
-          FROM supplier_rec_x113 s JOIN tree t ON s.s_suppkey div 2 = t.s_suppkey
-          WHERE s.s_suppkey > 1
-        )
-        SELECT depth, COUNT(*) AS n_nodes,
-               CAST(SUM(s_suppkey) AS BIGINT) AS key_sum
-        FROM tree GROUP BY depth ORDER BY depth
-        """
-    )
-
-
-# --------------------------------------------------------------------------
 # x115 — custom aggregate via GROUPED_AGG pandas UDF (SURVEY §2.9 UDAF
 # surface): per-flag median absolute deviation of line prices, plus a
 # companion pandas-UDAF count in the same agg() (Spark forbids mixing
@@ -304,207 +263,6 @@ def x115_mad_udaf_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("l_returnflag")
     )
-
-
-# --------------------------------------------------------------------------
-# x118 — grouped-map applyInPandas (SURVEY §2.9 surface): per-returnflag
-# median-centering, returning each flag's 5 largest absolute deviations.
-# The pandas body is pure selection + integer arithmetic (np.median on
-# int cents, integer subtraction, deterministic sort), so a two-pass
-# median SQL formulation replays it exactly — the grouped-map analogue
-# of the x115 UDAF determinism rule.
-# Scale: each group materializes on one executor (fine to ~10^7 rows per
-# group); the grouping key here has cardinality 3, so at 100 TB this
-# exact plan would need a salted two-level top-k instead — documented in
-# SCALE.md; the API surface under test is the Arrow grouped-map path.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x118_grouped_map_median_center",
-    oracle="""
-    WITH c AS (
-      SELECT l_returnflag, l_orderkey, l_linenumber,
-             CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS cents
-      FROM lineitem
-    ), m AS (
-      SELECT l_returnflag, median(cents) AS med FROM c GROUP BY 1
-    ), d AS (
-      SELECT c.l_returnflag, c.l_orderkey, c.l_linenumber,
-             CAST(c.cents - CAST(trunc(m.med) AS BIGINT) AS BIGINT) AS dev_cents
-      FROM c JOIN m USING (l_returnflag)
-    ), r AS (
-      SELECT *, row_number() OVER (
-        PARTITION BY l_returnflag
-        ORDER BY abs(dev_cents) DESC, l_orderkey, l_linenumber) AS rn
-      FROM d
-    )
-    SELECT l_returnflag, l_orderkey, l_linenumber, dev_cents
-    FROM r WHERE rn <= 5
-    ORDER BY l_returnflag, l_orderkey, l_linenumber
-    """,
-)
-def x118_grouped_map_median_center(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    def top_devs(pdf: pd.DataFrame) -> pd.DataFrame:
-        cents_arr = pdf["cents"].to_numpy(dtype=np.int64)
-        # group medians of ints are at worst int + 0.5 — exact in float64,
-        # and the truncation to int64 below matches the oracle's CAST
-        med = int(np.median(cents_arr))
-        out = pdf.assign(dev_cents=cents_arr - med)
-        out["absdev"] = out["dev_cents"].abs()
-        out = out.sort_values(
-            ["absdev", "l_orderkey", "l_linenumber"],
-            ascending=[False, True, True],
-            kind="mergesort",
-        ).head(5)
-        return out[["l_returnflag", "l_orderkey", "l_linenumber", "dev_cents"]]
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        "l_orderkey",
-        "l_linenumber",
-        cents(F.col("l_extendedprice")).alias("cents"),
-    )
-    return (
-        li.groupBy("l_returnflag")
-        .applyInPandas(
-            top_devs,
-            "l_returnflag string, l_orderkey long, l_linenumber int, dev_cents long",
-        )
-        .orderBy("l_returnflag", "l_orderkey", "l_linenumber")
-    )
-
-
-# --------------------------------------------------------------------------
-# x119 — cogrouped applyInPandas (SURVEY §2.9 surface): customer and
-# supplier tables cogrouped per nation, merged in one pandas call into
-# a per-nation account-balance reconciliation (counts + exact-cents
-# medians per side). Cogroup delivers BOTH groups for a key in a single
-# call — the Arrow path for custom two-table merge logic (interval
-# matching, custom as-of variants) that a plain join can't express
-# row-wise. Body is selection + integer arithmetic → fully oracled.
-# Scale: shuffles both tables once on the cogroup key; each (key,
-# left-group, right-group) pair must fit one executor's Arrow batch.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x119_cogroup_balance_reconciliation",
-    oracle="""
-    WITH c AS (
-      SELECT c_nationkey AS nk, COUNT(*) AS n,
-             median(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS med
-      FROM customer GROUP BY 1
-    ), s AS (
-      SELECT s_nationkey AS nk, COUNT(*) AS n,
-             median(CAST(ROUND(s_acctbal * 100) AS BIGINT)) AS med
-      FROM supplier GROUP BY 1
-    )
-    SELECT COALESCE(c.nk, s.nk) AS nationkey,
-           CAST(COALESCE(c.n, 0) AS BIGINT) AS n_customers,
-           CAST(COALESCE(s.n, 0) AS BIGINT) AS n_suppliers,
-           CAST(COALESCE(c.med, 0) AS DOUBLE) AS cust_median_cents,
-           CAST(COALESCE(s.med, 0) AS DOUBLE) AS supp_median_cents
-    FROM c FULL OUTER JOIN s ON c.nk = s.nk
-    ORDER BY nationkey
-    """,
-)
-def x119_cogroup_balance_reconciliation(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    def reconcile(key, cust: pd.DataFrame, supp: pd.DataFrame) -> pd.DataFrame:
-        def med(df: pd.DataFrame) -> float:
-            if len(df) == 0:
-                return 0.0
-            return float(np.median(df["bal_cents"].to_numpy(dtype=np.float64)))
-
-        return pd.DataFrame(
-            {
-                "nationkey": [int(key[0])],
-                "n_customers": [len(cust)],
-                "n_suppliers": [len(supp)],
-                "cust_median_cents": [med(cust)],
-                "supp_median_cents": [med(supp)],
-            }
-        )
-
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_nationkey").alias("nk"), cents(F.col("c_acctbal")).alias("bal_cents")
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        F.col("s_nationkey").alias("nk"), cents(F.col("s_acctbal")).alias("bal_cents")
-    )
-    return (
-        cust.groupBy("nk")
-        .cogroup(supp.groupBy("nk"))
-        .applyInPandas(
-            reconcile,
-            "nationkey int, n_customers long, n_suppliers long,"
-            " cust_median_cents double, supp_median_cents double",
-        )
-        .orderBy("nationkey")
-    )
-
-
-# --------------------------------------------------------------------------
-# x120 — mapInArrow (SURVEY §2.9 surface): revenue-cents projection +
-# quantity filter computed with pyarrow.compute kernels directly on
-# Arrow RecordBatches — zero pandas materialization, the cheapest
-# Python escape hatch for columnar row-wise logic. round half-away-
-# from-zero matches Spark/DuckDB ROUND; all other ops integer.
-# Scale: map-only (no shuffle); batch size bounded by
-# spark.sql.execution.arrow.maxRecordsPerBatch.
-# --------------------------------------------------------------------------
-@harness_query(
-    "x120_arrow_batch_revenue",
-    oracle="""
-    SELECT l_orderkey,
-           CAST(l_linenumber AS INTEGER) AS l_linenumber,
-           CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)
-             AS revenue_cents
-    FROM lineitem
-    WHERE l_quantity >= 45
-    ORDER BY l_orderkey, l_linenumber
-    """,
-)
-def x120_arrow_batch_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def per_batch(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for b in batches:
-            qty = b.column(b.schema.get_field_index("l_quantity"))
-            mask = pc.greater_equal(qty, pa.scalar(45.0))
-            f = b.filter(mask)
-            price = f.column(f.schema.get_field_index("l_extendedprice"))
-            disc = f.column(f.schema.get_field_index("l_discount"))
-            rev = pc.multiply(price, pc.subtract(pa.scalar(1.0), disc))
-            cents_col = pc.cast(
-                pc.round(
-                    pc.multiply(rev, pa.scalar(100.0)),
-                    ndigits=0,
-                    round_mode="half_towards_infinity",
-                ),
-                pa.int64(),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    f.column(f.schema.get_field_index("l_orderkey")),
-                    f.column(f.schema.get_field_index("l_linenumber")),
-                    cents_col,
-                ],
-                names=["l_orderkey", "l_linenumber", "revenue_cents"],
-            )
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_discount"
-    )
-    return li.mapInArrow(
-        per_batch,
-        "l_orderkey long, l_linenumber int, revenue_cents long",
-    ).orderBy("l_orderkey", "l_linenumber")
 
 
 # --------------------------------------------------------------------------

@@ -200,8 +200,8 @@ def scoped_cache(df, storage_level=None):
     host: ~45 us/row build cost and reads that contend under 32-way
     task concurrency (q26 at sf0.1: 23-30 s CPU cached vs 2-5 s with
     exchange reuse; 256k-row synthetic: cache read+groupBy 42 s CPU at
-    32 partitions vs 1.1 s at 4 — see BASELINE.md "columnar-cache
-    contention").
+    32 partitions vs 1.1 s at 4 — the cost follows task concurrency,
+    not rows).
     """
     df = df.persist(storage_level) if storage_level is not None else df.cache()
     with _SCOPED_CACHE_LOCK:

@@ -1,13 +1,13 @@
 """Warehouse sinks (SURVEY §2.1 S6-S8).
 
-- parquet writer: the set-oriented replacement for the reference's
-  batched row INSERTs (etl.py:514-541 etc.).
-- Excel export: the reference's ``generate_excel.py`` (one sheet per
-  table). xlsx writing needs openpyxl/xlsxwriter, which this container
-  lacks — gated behind an import-try with a CSV-per-table fallback so
-  the export *capability* stays testable.
+- Delta sink: ``write_warehouse``'s transactional format, gated on the
+  delta-spark bindings.
 - rejects sink: the designed error-file path ("File: Errors.txt" in the
   BPMN diagrams; skip-and-count at etl.py:489-496) as a real table.
+- write-audit-publish: a parquet write that returns metrics observed by
+  the same job.
+- compaction: rewrite a parquet table into fewer files through a
+  rename swap that ``recover_compact`` repairs after a crash.
 """
 
 from __future__ import annotations
@@ -16,120 +16,10 @@ import os
 
 from pyspark.sql import DataFrame
 
-# export_tables is a COLLECT-side sink (a workbook is a driver-local
-# artifact by nature): every sheet round-trips through toPandas(). The
-# reference's largest table is ~10k rows (SURVEY §3.3); this cap is 10x
-# that, mirroring reporting/svg.py's MAX_CHART_ROWS — an accidental
-# fact-table export should fail loudly at the cap, not OOM the driver.
-MAX_EXPORT_ROWS = 100_000
-
-
-def write_parquet_tables(tables: dict[str, DataFrame], out_dir: str) -> None:
-    for name, df in tables.items():
-        df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
-
-
-def _collect_capped(name: str, df: DataFrame):
-    """toPandas() bounded by MAX_EXPORT_ROWS, loud on overflow.
-
-    The probe reads cap+1 rows through a limit, so the overflow check
-    itself never materializes more than cap+1 rows driver-side.
-    """
-    pdf = df.limit(MAX_EXPORT_ROWS + 1).toPandas()
-    if len(pdf) > MAX_EXPORT_ROWS:
-        raise ValueError(
-            f"export_tables: table {name!r} exceeds MAX_EXPORT_ROWS="
-            f"{MAX_EXPORT_ROWS} — a workbook export is a driver-side "
-            "collect and is meant for reference-scale dimension/report "
-            "tables. Write large tables with write_parquet_tables / "
-            "write_partitioned, or aggregate before exporting."
-        )
-    return pdf
-
-
-def export_tables(tables: dict[str, DataFrame], out_path: str) -> str:
-    """Export every table to one workbook (sheet per table), as the
-    reference's generate_excel.py does — or CSV-per-table when no Excel
-    writer library is installed. Collect-side, capped at
-    MAX_EXPORT_ROWS per table (loud ValueError beyond).
-    """
-    try:
-        import openpyxl  # noqa: F401
-
-        with_excel = True
-    except ImportError:
-        try:
-            import xlsxwriter  # noqa: F401
-
-            with_excel = True
-        except ImportError:
-            with_excel = False
-
-    if with_excel:
-        import pandas as pd
-
-        with pd.ExcelWriter(out_path) as writer:
-            for name, df in tables.items():
-                _collect_capped(name, df).to_excel(
-                    writer, sheet_name=name[:31], index=False
-                )
-        return out_path
-
-    # fallback: CSV directory next to the requested path
-    out_dir = out_path + ".csvdir"
-    os.makedirs(out_dir, exist_ok=True)
-    for name, df in tables.items():
-        _collect_capped(name, df).to_csv(
-            os.path.join(out_dir, f"{name}.csv"), index=False
-        )
-    return out_dir
-
 
 def write_rejects(rejects: DataFrame, out_dir: str) -> None:
     """Persist unresolved-key rows (left_anti output) as a rejects table."""
     rejects.write.mode("overwrite").parquet(os.path.join(out_dir, "_rejects"))
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], target_partitions: int | None = None
-) -> None:
-    """Hive-partitioned parquet write — the 100 TB fact-table layout.
-
-    Partitioning by a date-derived column gives readers partition pruning
-    (filters on the partition column never touch non-matching directories
-    — visible as PartitionFilters in the scan plan) and dynamic partition
-    pruning on joins. Reference-scale tables (≤10k rows) deliberately
-    stay unpartitioned in write_parquet_tables: directory-per-value
-    layouts below ~100 MB/partition cost more in small files than they
-    save in pruning.
-
-    ``target_partitions`` repartitions by the partition columns first so
-    each directory gets few, large files instead of one file per task.
-    """
-    if target_partitions:
-        from pyspark.sql import functions as F
-
-        df = df.repartition(target_partitions, *[F.col(c) for c in partition_cols])
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-
-
-def write_orc(df: DataFrame, path: str, partition_cols: list[str] | None = None) -> None:
-    """ORC sink (Spark-native, zero extra deps). ORC carries the same
-    columnar virtues as parquet — column pruning, predicate pushdown via
-    min/max stripe stats and bloom indexes — and is the interchange
-    format for Hive-lineage warehouses; an engine claiming "switch to
-    us" completeness needs both directions.
-    """
-    w = df.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.orc(path)
-
-
-def read_orc(spark, path: str) -> DataFrame:
-    """ORC scan; filters/pruning push down exactly as with parquet
-    (verify via PushedFilters in the scan node)."""
-    return spark.read.orc(path)
 
 
 def delta_available() -> bool:
@@ -154,31 +44,10 @@ def write_delta_table(df: DataFrame, path: str, mode: str = "overwrite") -> None
     """
     if not delta_available():
         raise ImportError(
-            "delta-spark not installed: use write_parquet_tables as the "
+            "delta-spark not installed: write plain parquet as the "
             "non-transactional fallback"
         )
     df.write.format("delta").mode(mode).save(path)
-
-
-def merge_into_delta(
-    spark, updates: DataFrame, path: str, key_cols: list[str]
-) -> None:
-    """MERGE (upsert) an update batch into a Delta table — the
-    transactional twin of ``operators.cdc.apply_upserts`` (which is the
-    engine's format-agnostic latest-wins merge)."""
-    if not delta_available():
-        raise ImportError("delta-spark not installed: use operators.cdc.apply_upserts")
-    from delta.tables import DeltaTable
-
-    target = DeltaTable.forPath(spark, path)
-    cond = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-    (
-        target.alias("t")
-        .merge(updates.alias("s"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
 
 
 def compact_parquet(

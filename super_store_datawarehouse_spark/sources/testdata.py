@@ -1,7 +1,7 @@
-"""Driver-generated TPC-H-ish parquet tables (see /root/repo/TESTDATA.md).
+"""Driver-generated TPC-H-ish parquet tables (see TESTDATA.md).
 
 One parquet file per table under ``{sf_dir}/{name}.parquet``. These are the
-inputs for the correctness harness (``__spark_entry__.py``) and ``bench.py``.
+inputs for the correctness harness (``__spark_entry__.py``).
 
 At 100 TB these reads stay efficient because everything downstream is
 expressed declaratively: Catalyst pushes filters and column pruning into the
@@ -27,7 +27,6 @@ TESTDATA_TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Session-level table catalog: the testdata directories are immutable, so
 # the unresolved scan plan for a table can be built once per SparkSession

@@ -298,8 +298,7 @@ def txn_upsert(
     version_col: str,
 ) -> int:
     """MERGE: latest-wins upsert committed as one atomic overwrite —
-    the transactional twin of ``operators.cdc.apply_upserts`` (and of
-    ``sinks.merge_into_delta`` for runtimes without delta-spark)."""
+    the transactional twin of ``operators.cdc.apply_upserts``."""
     from super_store_datawarehouse_spark.operators.cdc import apply_upserts
 
     if txn_versions(path):

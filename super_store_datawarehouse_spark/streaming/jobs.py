@@ -31,7 +31,7 @@ from super_store_datawarehouse_spark.functions.exact import cents
 # Bloom-dedup, quantile, count-min, and HLL sinks (the last two moved
 # off their separate marker files in round 11; a legacy side file is
 # read once for migration and retired on the next publish). The upsert
-# sinks carry no marker at all — their merge is idempotent per version
+# sink carries no marker at all — its merge is idempotent per version
 # (latest event_id wins), so a replay rewrites the same state.
 # ---------------------------------------------------------------------------
 
@@ -279,89 +279,6 @@ def purchase_click_join_stream(
     return spark.table(name)
 
 
-def purchase_click_left_join_stream(
-    spark: SparkSession, sf_dir: str, lookback: str = "1 hour"
-) -> DataFrame:
-    """Stream-stream LEFT OUTER join: every purchase, with its preceding
-    clicks when they exist and NULL click columns when none arrived.
-
-    Outer stream-stream joins need both the watermarks and the event-time
-    range condition (otherwise the unmatched side could never be declared
-    final); a purchase emits its NULL row only once the watermark passes
-    ``p_ts`` + lookback, so end-of-stream tests must push the watermark
-    past the data (plant a later file) before asserting unmatched rows.
-    State size stays bounded exactly as in the inner variant.
-    """
-    base = read_events_stream(spark, sf_dir)
-    purchases = (
-        base.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 minute")
-    )
-    clicks = (
-        base.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 minute")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-        "leftOuter",
-    ).select(
-        "purchase_id", F.col("p_user").alias("user_id"), "p_ts", "click_id", "c_ts"
-    )
-    name = f"pc_ljoin_{uuid.uuid4().hex[:8]}"
-    q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
-
-
-def hourly_counts_to_parquet(
-    spark: SparkSession, sf_dir: str, out_dir: str, watermark: str = "2 hours"
-) -> int:
-    """foreachBatch sink: reuse the batch parquet writer per micro-batch.
-
-    The standard escape hatch for sinks Structured Streaming lacks
-    natively (JDBC upserts, MERGE, multi-table fanout): each trigger
-    hands the micro-batch result to arbitrary batch code with the
-    batch_id for idempotence. Complete mode here overwrites the
-    aggregate per trigger, so the directory always holds the
-    latest-converged table. Returns the number of batches written.
-    """
-    agg = (
-        read_events_stream(spark, sf_dir)
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
-    batches = {"n": 0}
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out_dir)
-        batches["n"] += 1
-
-    q = agg.writeStream.outputMode("complete").foreachBatch(write_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return batches["n"]
-
-
 class _ProgressCounter:
     """Counts a streaming query's non-empty micro-batches through the
     listener bus instead of ``query.recentProgress`` (which Spark caps
@@ -571,7 +488,7 @@ def stream_upserts_to_parquet(
     This is the upsert-sink topology for runtimes without Delta: read
     current state, reconcile with the batch, write to a scratch dir and
     swap. The swap is what Delta's MERGE replaces with a transactional
-    commit (``sinks.merge_into_delta`` when delta-spark is present);
+    commit when delta-spark is present;
     state stays on disk between triggers, so restarts resume from the
     last swapped table. Returns the number of micro-batches merged.
     """
@@ -593,38 +510,6 @@ def stream_upserts_to_parquet(
             state = batch_df.limit(0)
         merged = apply_upserts(state, batch_df, ["user_id"], "version")
         _publish_state_atomic(out_dir, merged)
-        batches["n"] += 1
-
-    q = ev.writeStream.outputMode("append").foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return batches["n"]
-
-
-def stream_upserts_to_txn(
-    spark: SparkSession, src_dir: str, table_dir: str
-) -> int:
-    """Streaming CDC into the transactional table format
-    (``sources.translog``): each micro-batch MERGEs into the table via
-    ``txn_upsert`` — one atomic manifest commit per batch, so readers
-    never observe a half-swapped state directory (the isolation gap
-    ``stream_upserts_to_parquet``'s rmtree+replace swap leaves open) and
-    every batch boundary is a time-travelable version. Returns the
-    number of micro-batches merged.
-    """
-    from super_store_datawarehouse_spark.sources.translog import txn_upsert
-
-    ev = read_events_stream(spark, src_dir).select(
-        "user_id", "event_type", "value", F.col("event_id").alias("version")
-    )
-    batches = {"n": 0}
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        txn_upsert(
-            batch_df.sparkSession, batch_df, table_dir, ["user_id"], "version"
-        )
         batches["n"] += 1
 
     q = ev.writeStream.outputMode("append").foreachBatch(merge_batch).start()
@@ -804,162 +689,6 @@ def stream_countmin_to_parquet(
     finally:
         q.stop()
     return batches["n"]
-
-
-def stream_lsh_dedup_to_txn(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    threshold: float = 0.2,
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> int:
-    """Streaming near-dup detection: each micro-batch of documents folds
-    into the incremental MinHash-LSH index (``operators.dedup
-    .lsh_index_update``) and the verified dup pairs append to a
-    transactional pairs table. The crawl-pipeline shape: dedup every
-    snapshot against the accumulated corpus in O(batch), never
-    re-joining the world.
-
-    State (band index + shingle store) and output all live as
-    ``sources.translog`` tables under ``out_dir``; each batch appends
-    only the DELTAS (new band rows, new shingles, new pairs), so
-    checkpoint cost is O(batch) regardless of corpus size. The three
-    appends are separate manifest commits: a crash between them followed
-    by a replay re-emits that batch's rows (at-least-once; pairs are
-    deterministic, so readers dedupe with ``dropDuplicates`` — or compare
-    the txn versions). Returns the number of micro-batches processed.
-    """
-    import os as _os
-
-    from super_store_datawarehouse_spark.operators.dedup import (
-        LshIndexState,
-        lsh_index_update,
-    )
-    from super_store_datawarehouse_spark.sources.translog import (
-        txn_read,
-        txn_versions,
-        txn_write,
-    )
-
-    schema = (
-        spark.read.option("pathGlobFilter", "documents*.parquet")
-        .parquet(src_dir)
-        .schema
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents*.parquet")
-        .parquet(src_dir)
-    )
-    bands_p = _os.path.join(out_dir, "band_rows")
-    sh_p = _os.path.join(out_dir, "shingles")
-    pairs_p = _os.path.join(out_dir, "pairs")
-    batches = {"n": 0}
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        state = None
-        if txn_versions(bands_p):
-            state = LshIndexState(txn_read(sess, bands_p), txn_read(sess, sh_p))
-        pairs, new_state = lsh_index_update(
-            state,
-            batch_df,
-            threshold=threshold,
-            num_hashes=num_hashes,
-            bands=bands,
-        )
-        # pairs first: they are derivable from (index ∪ delta) state, so
-        # a crash before the state appends replays into identical pairs
-        txn_write(pairs, pairs_p, "append")
-        txn_write(new_state.delta_band_rows, bands_p, "append")
-        txn_write(new_state.delta_shingles, sh_p, "append")
-        batches["n"] += 1
-
-    q = stream.writeStream.outputMode("append").foreachBatch(handle).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return batches["n"]
-
-
-def session_counts_stream(
-    spark: SparkSession, sf_dir: str, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Native streaming sessionization: session_window merges per-user
-    event-time sessions incrementally in the state store (no custom
-    state code — contrast user_running_counts_stream, the escape-hatch
-    version). Complete mode so the drained result equals batch x26; in
-    production, append mode + the watermark emits sessions once they
-    can no longer grow."""
-    return (
-        read_events_stream(spark, sf_dir)
-        .withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas (Spark 4 arbitrary-stateful API) needs
-    protobuf for its state-server protocol; gate on it like the Delta
-    sink gates on delta-spark."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def user_totals_tws_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running per-user event totals via transformWithStateInPandas —
-    the successor to applyInPandasWithState (user_running_counts_stream
-    implements the same logic on the old API): typed ValueState, an
-    explicit processor lifecycle (init/handleInputRows/close), timers,
-    and state-schema evolution. Requires protobuf (``tws_available``)."""
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType(
-        [StructField("user_id", LongType()), StructField("total", LongType())]
-    )
-
-    class RunningTotal(StatefulProcessor):
-        def init(self, handle) -> None:
-            self.state = handle.getValueState(
-                "total", StructType([StructField("t", LongType())])
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            total = self.state.get()[0] if self.state.exists() else 0
-            for pdf in rows:
-                total += len(pdf)
-            self.state.update((total,))
-            yield pd.DataFrame({"user_id": [key[0]], "total": [total]})
-
-        def close(self) -> None:
-            pass
-
-    return (
-        read_events_stream(spark, sf_dir)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningTotal(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
 
 
 def stream_misra_gries_to_parquet(

@@ -59,8 +59,8 @@ def write_warehouse(
     Delta/Parquet", so the Delta toggle is first-class. When
     ``fmt="delta"`` and the runtime lacks delta-spark (this sandbox
     does), the write FALLS BACK LOUDLY to parquet — a logged warning
-    per call, same layout, weaker isolation — mirroring the Excel/Avro
-    gates: capability gated, never silently stubbed. Returns the format
+    per call, same layout, weaker isolation: the capability is gated,
+    never silently stubbed. Returns the format
     actually written.
     """
     if fmt == "delta":

@@ -129,7 +129,7 @@ def test_pq_index_ensure_reuses_then_rebuilds_on_change(spark, vectors, tmp_path
 
 def test_ivfadc_index_search_equals_in_plan_pq_ivf_topk(spark, vectors, tmp_path):
     from super_store_datawarehouse_spark.operators.ann_index import (
-        ivfadc_index_build,
+        ivfadc_index_ensure,
         ivfadc_index_search,
     )
     from super_store_datawarehouse_spark.operators.similarity import pq_ivf_topk
@@ -139,7 +139,7 @@ def test_ivfadc_index_search_equals_in_plan_pq_ivf_topk(spark, vectors, tmp_path
         m=4, dim=8, codebook_buckets=500, salt=13, codebook_size=16,
         centroid_fraction=0.05, centroid_salt=7,
     )
-    stats = ivfadc_index_build(vectors, path, **budget)
+    stats = ivfadc_index_ensure(vectors, path, **budget)
     assert stats["n_vectors"] == 300 and stats["n_centroids"] >= 2
 
     queries = vectors.filter("vec_id < 5")

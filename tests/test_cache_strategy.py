@@ -1,7 +1,7 @@
 """Round-8 cache-strategy guards.
 
 Round 8 replaced the "cache every multi-consumer frame" convention with
-three measured rules (BASELINE.md "columnar-cache contention"):
+three rules, measured at sf0.1 on 32 cores:
 
 1. NO cache on cheap-to-recompute explode/agg intermediates — within
    one action ReuseExchange dedupes equal exchanges and each branch

@@ -34,7 +34,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from super_store_datawarehouse_spark.sources.xlsx_lite import read_sheet
+from xlsx_lite import read_sheet
 
 XLSX = "/root/reference/superstore_dw_export.xlsx"
 CSV = "/root/reference/Sample - Superstore.csv"

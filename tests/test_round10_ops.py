@@ -169,12 +169,12 @@ def test_stored_codes_faces_use_wide_pivot(spark, vectors, tmp_path):
     assert p.count("BroadcastHashJoin") >= 4  # m per-subspace lookups
 
     from super_store_datawarehouse_spark.operators.ann_index import (
-        ivfadc_index_build,
+        ivfadc_index_ensure,
         ivfadc_index_search,
     )
 
     path2 = str(tmp_path / "ivfadc_regime")
-    ivfadc_index_build(
+    ivfadc_index_ensure(
         vectors, path2, m=4, dim=8, codebook_buckets=500, salt=13,
         codebook_size=16, centroid_fraction=0.05, centroid_salt=7,
     )

@@ -49,45 +49,6 @@ def test_state_meta_absent_and_zero_row_defaults(tmp_path, spark):
     assert meta == {"query_id": None, "applied_batch": -1}
 
 
-def test_bench_mid_canary_three_point_interpolation():
-    """VERDICT r11 #8: a valid mid-run canary anchors the per-query
-    host-factor interpolation at the HEADLINE/EXTENDED boundary; an
-    aged mid pair (py/jvm divergence ≥ guard) is recorded but refused,
-    falling back to the two-point form."""
-    import math
-
-    from bench import CANARY_REF_SEC, build_payloads
-
-    timings = {f"q{i:02d}": 1.0 for i in range(24)}
-    ext = {f"x{i}": 2.0 for i in range(29)}
-    cpu = {k: 0.5 for k in list(timings) + list(ext)}
-    line, detail = build_payloads(
-        0.1, timings, ext, cpu, cpu, 3.0, 1.4,
-        canary_end_sec=6.0, py_canary_end_sec=2.8,
-        canary_mid_sec=4.5, py_canary_mid_sec=2.0,
-    )
-    qhf = detail["queries_host_factor"]
-    names = list(qhf)
-    assert math.isclose(qhf[names[0]], 3.0 / CANARY_REF_SEC, abs_tol=1e-3)
-    # last headline query sits exactly on the mid anchor
-    assert math.isclose(qhf[names[23]], 4.5 / CANARY_REF_SEC, abs_tol=1e-3)
-    assert math.isclose(qhf[names[-1]], 6.0 / CANARY_REF_SEC, abs_tol=1e-3)
-    assert line["canary_mid_sec"] == 4.5 and "canary_mid_valid" not in line
-    # aged mid pair: recorded, refused, two-point interpolation kept
-    line2, det2 = build_payloads(
-        0.1, timings, ext, cpu, cpu, 3.0, 1.4,
-        canary_end_sec=6.0, py_canary_end_sec=2.8,
-        canary_mid_sec=4.5, py_canary_mid_sec=13.0,
-    )
-    assert line2["canary_mid_valid"] is False
-    q2 = det2["queries_host_factor"]
-    n2 = list(q2)
-    f0, f1 = 3.0 / CANARY_REF_SEC, 6.0 / CANARY_REF_SEC
-    assert math.isclose(q2[n2[23]], f0 + (f1 - f0) * 23 / 52, abs_tol=1e-3)
-    # scalar host_factor unchanged by the mid pair (start/end geomean)
-    assert line["host_factor"] == line2["host_factor"]
-
-
 def test_kmeans_fused_update_matches_unfused(spark):
     """Round-12 k-means optimization: the fused assign+partial-sum
     Arrow pass must produce bit-identical centroid updates to the

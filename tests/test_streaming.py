@@ -150,31 +150,6 @@ def test_dedup_stream_with_rocksdb_state_store(spark):
         spark.conf.unset(key)
 
 
-def test_foreach_batch_parquet_sink(tmp_path, spark):
-    """foreachBatch: arbitrary batch-writer reuse per micro-batch — the
-    standard pattern for sinks Structured Streaming lacks natively."""
-    from super_store_datawarehouse_spark.streaming.jobs import (
-        hourly_counts_to_parquet,
-    )
-
-    out = str(tmp_path / "hourly")
-    n_batches = hourly_counts_to_parquet(spark, SF_DIR, out)
-    assert n_batches >= 1
-    back = spark.read.parquet(out)
-    # complete-mode rewrite per batch: final directory equals the batch agg
-    from super_store_datawarehouse_spark.plans.extensions import x290_events_hourly
-
-    want = {
-        (r["window_start"], r["event_type"]): r["n_events"]
-        for r in x290_events_hourly(spark, SF_DIR).collect()
-    }
-    got = {
-        (r["window_start"], r["event_type"]): r["n_events"]
-        for r in back.collect()
-    }
-    assert got == want
-
-
 def test_stream_stream_join_equals_batch(spark):
     from super_store_datawarehouse_spark.sources.testdata import load_table
     from super_store_datawarehouse_spark.streaming.jobs import purchase_click_join_stream
@@ -261,119 +236,6 @@ def test_stream_upserts_converge_to_batch_latest(tmp_path, spark):
     assert got == want
 
 
-def test_stream_upserts_to_txn_atomic_versions(tmp_path, spark):
-    """Transactional CDC sink: converges to batch latest-per-user like
-    the parquet-swap sink, but each micro-batch is one atomic manifest
-    commit — versions 1..n_batches are all time-travelable."""
-    import os
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from super_store_datawarehouse_spark.sources.testdata import load_table
-    from super_store_datawarehouse_spark.sources.translog import (
-        txn_read,
-        txn_versions,
-    )
-    from super_store_datawarehouse_spark.streaming.jobs import stream_upserts_to_txn
-
-    events = load_table(spark, SF_DIR, "events")
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    for i in range(3):
-        events.filter(F.col("event_id") % 3 == i).coalesce(1).write.parquet(
-            str(tmp_path / f"part{i}"), mode="overwrite"
-        )
-        part = [f for f in os.listdir(tmp_path / f"part{i}") if f.endswith(".parquet")][0]
-        os.rename(tmp_path / f"part{i}" / part, os.path.join(src, f"events{i}.parquet"))
-
-    table = str(tmp_path / "state")
-    n_batches = stream_upserts_to_txn(spark, src, table)
-    assert n_batches == 3
-    assert txn_versions(table) == [1, 2, 3]
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("event_id"))
-    want = {
-        (r["user_id"], r["version"])
-        for r in events.withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .select("user_id", F.col("event_id").alias("version"))
-        .collect()
-    }
-    got = {
-        (r["user_id"], r["version"])
-        for r in txn_read(spark, table).select("user_id", "version").collect()
-    }
-    assert got == want
-    # intermediate versions are complete snapshots, not deltas
-    assert txn_read(spark, table, version=1).count() <= txn_read(
-        spark, table, version=3
-    ).count()
-
-
-def test_session_window_stream_equals_batch(spark):
-    """Streaming session_window (incremental state-store merge) drains
-    to exactly the batch sessionization of the same data (x26)."""
-    from super_store_datawarehouse_spark.plans.extensions import x26_session_windows
-    from super_store_datawarehouse_spark.streaming.jobs import session_counts_stream
-    from tests.conftest import TESTDATA_SF
-
-    out = session_counts_stream(spark, TESTDATA_SF)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions_stream")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        tuple(r) for r in spark.sql("SELECT * FROM sessions_stream").collect()
-    }
-    want = {tuple(r) for r in x26_session_windows(spark, TESTDATA_SF).collect()}
-    assert got == want and len(want) > 0
-
-
-def test_transform_with_state_totals_or_gated(spark):
-    """New-API stateful totals equal the batch groupBy count. Skips
-    where protobuf (the TWS state-protocol dependency) is absent."""
-    from super_store_datawarehouse_spark.streaming.jobs import (
-        tws_available,
-        user_totals_tws_stream,
-    )
-    from tests.conftest import TESTDATA_SF
-
-    if not tws_available():
-        import pytest
-
-        pytest.skip("protobuf not installed; transformWithStateInPandas gated off")
-    from super_store_datawarehouse_spark.sources.testdata import load_table
-
-    out = user_totals_tws_stream(spark, TESTDATA_SF)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_totals")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["user_id"]: r["total"]
-        for r in spark.sql(
-            "SELECT user_id, MAX(total) AS total FROM tws_totals GROUP BY user_id"
-        ).collect()
-    }
-    want = {
-        r["user_id"]: r["n"]
-        for r in load_table(spark, TESTDATA_SF, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == want
-
-
 def test_stream_restart_resumes_from_checkpoint_exactly_once(tmp_path, spark):
     """File-source offsets live in the checkpoint: a stopped query that
     restarts with the same checkpointLocation neither re-reads old files
@@ -415,110 +277,6 @@ def test_stream_restart_resumes_from_checkpoint_exactly_once(tmp_path, spark):
     got = spark.read.parquet(sink)
     assert got.count() == 300  # 250 old NOT reprocessed, 50 new not lost
     assert got.select("id").distinct().count() == 300
-
-
-def test_stream_stream_left_outer_join_emits_unmatched(tmp_path, spark):
-    """Left-outer stream-stream join: purchases with no click in the
-    lookback hour must emit NULL click columns once the watermark passes
-    their expiry — driven here by planting a later sentinel file that
-    advances the watermark past all real data."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from super_store_datawarehouse_spark.streaming.jobs import (
-        purchase_click_left_join_stream,
-    )
-
-    base_ns = 1_700_000_000_000_000_000
-    MIN = 60_000_000_000  # one minute in ns
-
-    def table(rows):  # rows: (event_id, minutes_offset, user, type)
-        return pa.table(
-            {
-                "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                "ts": pa.array(
-                    [base_ns + r[1] * MIN for r in rows], pa.timestamp("ns")
-                ),
-                "user_id": pa.array([r[2] for r in rows], pa.int64()),
-                "event_type": pa.array([r[3] for r in rows]),
-                "value": pa.array([1.0] * len(rows), pa.float64()),
-                "props": pa.array(["{}"] * len(rows)),
-            }
-        )
-
-    # user 1: click at t+0, purchase at t+10  -> matched
-    # user 2: purchase at t+10, click AFTER it -> unmatched (left row, NULL)
-    # user 3: purchase at t+10, no clicks at all -> unmatched
-    pq.write_table(
-        table(
-            [
-                (100, 0, 1, "click"),
-                (101, 10, 1, "purchase"),
-                (200, 10, 2, "purchase"),
-                (201, 20, 2, "click"),
-                (300, 10, 3, "purchase"),
-            ]
-        ),
-        tmp_path / "events.parquet",
-    )
-    # sentinel file, far future. The join's eviction watermark is the MIN
-    # of both sides' watermarks, and each side computes its watermark
-    # AFTER its event_type filter — so the file carries one far-future
-    # click AND one far-future purchase (disjoint users, so they add no
-    # real matches; the sentinel purchase itself stays unfinalized).
-    pq.write_table(
-        table([(998, 24 * 60 * 7, 98, "purchase"), (999, 24 * 60 * 7, 99, "click")]),
-        tmp_path / "events2.parquet",
-    )
-
-    out = [
-        r
-        for r in purchase_click_left_join_stream(spark, str(tmp_path)).collect()
-        if r["purchase_id"] < 900
-    ]
-    got = {(r["purchase_id"], r["click_id"]) for r in out}
-    assert (101, 100) in got                      # matched pair
-    assert (200, None) in got and (300, None) in got  # finalized NULL rows
-    assert len([r for r in out if r["purchase_id"] == 101]) == 1
-
-
-def test_stream_lsh_dedup_matches_one_shot(tmp_path, spark):
-    """Documents arriving as three micro-batches must yield exactly the
-    one-shot minhash_lsh_pairs result in the transactional pairs table —
-    the streaming face of the incremental-index ≡ one-shot identity."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from super_store_datawarehouse_spark.operators.dedup import minhash_lsh_pairs
-    from super_store_datawarehouse_spark.sources.testdata import load_table
-    from super_store_datawarehouse_spark.sources.translog import txn_read
-    from super_store_datawarehouse_spark.streaming.jobs import stream_lsh_dedup_to_txn
-
-    docs = load_table(spark, SF_DIR, "documents").limit(200).cache()
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    for i in range(3):
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
-            str(tmp_path / f"p{i}"), mode="overwrite"
-        )
-        part = [f for f in os.listdir(tmp_path / f"p{i}") if f.endswith(".parquet")][0]
-        os.rename(tmp_path / f"p{i}" / part, os.path.join(src, f"documents{i}.parquet"))
-
-    out = str(tmp_path / "lsh")
-    n = stream_lsh_dedup_to_txn(spark, src, out, threshold=0.2)
-    assert n == 3
-
-    got = {
-        (r.id_a, r.id_b): round(r.jaccard, 9)
-        for r in txn_read(spark, os.path.join(out, "pairs")).collect()
-    }
-    want = {
-        (r.id_a, r.id_b): round(r.jaccard, 9)
-        for r in minhash_lsh_pairs(docs, threshold=0.2).collect()
-    }
-    assert got == want
-    assert want, "trivially-empty comparison"
 
 
 def test_stream_countmin_equals_batch(tmp_path, spark):
@@ -1636,3 +1394,5 @@ def test_stream_hll_marker_is_in_state(tmp_path, spark):
     assert "applied_batch" in state.columns
     assert state.agg(F.max("applied_batch")).collect()[0][0] == 0
     assert not os.path.exists(out + ".applied_batch")
+
+

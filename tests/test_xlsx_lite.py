@@ -1,4 +1,4 @@
-"""Unit tests for the stdlib xlsx reader (sources/xlsx_lite.py).
+"""Unit tests for the stdlib xlsx reader (tests/xlsx_lite.py).
 
 The golden-parity suite exercises it against the reference's real
 export; these tests cover the ragged-row edge cases a generated
@@ -8,11 +8,7 @@ from __future__ import annotations
 
 import zipfile
 
-from super_store_datawarehouse_spark.sources.xlsx_lite import (
-    read_sheet,
-    sheet_names,
-    xlsx_to_df,
-)
+from xlsx_lite import read_sheet
 
 _WORKBOOK = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
 <workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
@@ -53,28 +49,9 @@ def test_read_sheet_row_wider_than_header(tmp_path):
       </row>
     </sheetData></worksheet>"""
     path = _make_xlsx(str(tmp_path / "wide.xlsx"), sheet)
-    assert sheet_names(path) == ["S1"]
     header, data = read_sheet(path, "S1")
     assert header == ["a", "b"]
     assert all(len(r) == len(header) for r in data)
     assert data == [[1, 2], [3, None]]
 
 
-def test_xlsx_to_df_ragged_rows(tmp_path, spark):
-    """createDataFrame must succeed on a sheet mixing narrow and wide
-    data rows (the failure mode before the truncation fix)."""
-    sheet = f"""<?xml version="1.0"?><worksheet {_NS}><sheetData>
-      <row r="1">
-        <c r="A1" t="str"><v>k</v></c><c r="B1" t="str"><v>v</v></c>
-      </row>
-      <row r="2">
-        <c r="A2"><v>1</v></c><c r="B2"><v>1.5</v></c><c r="C2"><v>7</v></c>
-        <c r="D2" t="str"><v>junk</v></c>
-      </row>
-      <row r="3"><c r="A3"><v>2</v></c></row>
-    </sheetData></worksheet>"""
-    path = _make_xlsx(str(tmp_path / "ragged.xlsx"), sheet)
-    df = xlsx_to_df(spark, path, "S1")
-    assert df.columns == ["k", "v"]
-    rows = {r["k"]: r["v"] for r in df.collect()}
-    assert rows == {1: 1.5, 2: None}

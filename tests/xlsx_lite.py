@@ -1,17 +1,14 @@
-"""Minimal read-only xlsx source — stdlib only (zipfile + ElementTree).
+"""Minimal read-only xlsx reader — stdlib only (zipfile + ElementTree).
 
 The reference publishes its loaded warehouse as an Excel workbook
 (reference ``generate_excel.py:38-47`` → ``superstore_dw_export.xlsx``,
-one sheet per table). The sandbox has no openpyxl, but xlsx is just a
+one sheet per table). openpyxl is not a dependency, but xlsx is just a
 zip of SpreadsheetML: this module parses the workbook → sheet mapping,
 the shared-string table and each sheet's ``<row>/<c>/<v>`` cells, which
 is all the reference export uses (no formulas, no inline strings).
 
-Used by the cell-exact golden-parity tests and exposed as a tiny Spark
-source (``xlsx_to_df``) so xlsx round-trips through the engine. At
-scale an xlsx is a driver-sized artifact (config tables, published
-reports) — parsing it driver-side then parallelizing is the correct
-plan; bulk data belongs in parquet.
+The cell-exact golden-parity tests read the reference export with it;
+the engine itself reads no xlsx.
 """
 
 from __future__ import annotations
@@ -44,14 +41,6 @@ def _shared_strings(z: zipfile.ZipFile) -> list[str]:
         # plain <t> or rich-text runs <r><t>; concatenate all text nodes
         out.append("".join(t.text or "" for t in si.iter(f"{_NS}t")))
     return out
-
-
-def sheet_names(path: str) -> list[str]:
-    with zipfile.ZipFile(path) as z:
-        wb = ET.fromstring(z.read("xl/workbook.xml"))
-        return [
-            s.attrib["name"] for s in wb.find(f"{_NS}sheets").findall(f"{_NS}sheet")
-        ]
 
 
 def _sheet_target(z: zipfile.ZipFile, sheet: str) -> str:
@@ -124,33 +113,3 @@ def read_sheet(path: str, sheet: str) -> tuple[list[str], list[list]]:
     return header, data
 
 
-def xlsx_to_df(spark, path: str, sheet: str):
-    """Load one sheet as a DataFrame (schema inferred per column from
-    the observed Python types; mixed int/float promotes to double)."""
-    from pyspark.sql import types as T
-
-    header, data = read_sheet(path, sheet)
-
-    def field_type(i: int):
-        seen = {type(r[i]) for r in data if r[i] is not None}
-        if seen <= {int}:
-            return T.LongType()
-        if seen <= {int, float}:
-            return T.DoubleType()
-        if seen <= {bool}:
-            return T.BooleanType()
-        return T.StringType()
-
-    schema = T.StructType(
-        [T.StructField(h, field_type(i), True) for i, h in enumerate(header)]
-    )
-    coerced = [
-        tuple(
-            float(v)
-            if isinstance(schema[i].dataType, T.DoubleType) and v is not None
-            else v
-            for i, v in enumerate(row)
-        )
-        for row in data
-    ]
-    return spark.createDataFrame(coerced, schema)
