@@ -55,11 +55,7 @@ def main() -> int:
     from super_store_datawarehouse_spark.session import get_spark
     from super_store_datawarehouse_spark.warehouse import build_warehouse, write_warehouse
 
-    spark = get_spark(
-        "scale-check",
-        master=f"local[{len(os.sched_getaffinity(0))}]",
-        extra_conf={"spark.driver.memory": "2g"},
-    )
+    spark = get_spark("scale-check", extra_conf={"spark.driver.memory": "2g"})
     write_warehouse(build_warehouse(spark, info.path), args.out)
     wall, cpu = time.perf_counter() - t0, tree_cpu_s() - cpu0
     spark.stop()

@@ -103,8 +103,6 @@ def ivf_index_update(
     spark: SparkSession,
     path: str,
     new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     applied_batch: int = -1,
 ) -> int:
     """Append a batch: assign new vectors to the EXISTING centroids and
@@ -115,16 +113,16 @@ def ivf_index_update(
     assign = ivf_assign(
         new_vectors,
         stored.select(
-            F.col("centroid_id").alias(id_col), F.col("embedding").alias(vec_col)
+            F.col("centroid_id").alias("vec_id"), F.col("embedding")
         ),
         1,
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         "vid",
     )
     rows = (
         new_vectors.select(
-            F.col(id_col).alias("vid"), F.col(vec_col).alias("embedding")
+            F.col("vec_id").alias("vid"), F.col("embedding")
         )
         .join(assign, "vid")
         .sortWithinPartitions("centroid_id")
@@ -173,23 +171,21 @@ def ivf_index_search(
     path: str,
     queries: DataFrame,
     k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Top-k per query over the persisted index. Same arithmetic and
     tie order as ``similarity.ivf_topk`` — only the corpus side comes
     from the stored inverted lists instead of an in-plan assignment."""
+    nprobe = 2
     cent_path, cell_path = _paths(path)
     stored = spark.read.parquet(cent_path)
     q_assign = ivf_assign(
         queries,
         stored.select(
-            F.col("centroid_id").alias(id_col), F.col("embedding").alias(vec_col)
+            F.col("centroid_id").alias("vec_id"), F.col("embedding")
         ),
         nprobe,
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         "query_id",
     )
     # Materialize the assignment once (contract-small: <= |queries| ·
@@ -237,7 +233,7 @@ def ivf_index_search(
             & (F.col("cnrm") != F.lit(float("inf")))
         )
     )
-    q = _prep(queries, id_col, vec_col, "query_id", "qv", "qnrm").join(
+    q = _prep(queries, "vec_id", "embedding", "query_id", "qv", "qnrm").join(
         q_assign, "query_id"
     )
     scored = (
@@ -488,14 +484,7 @@ def pq_index_ensure(
     return {"rebuilt": True, **stats}
 
 
-def pq_index_search(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_index_search(spark: SparkSession, path: str, queries: DataFrame, k: int = 5) -> DataFrame:
     """ADC top-k over the persisted code table — bit-identical to
     ``similarity.pq_topk`` at the same budget (shared ``pq_adc_topk_wide`` /
     ``pq_query_dtab`` arithmetic), but the corpus side is a 3-int-column
@@ -505,7 +494,7 @@ def pq_index_search(
     sd = meta["dim"] // meta["m"]
     sub = spark.read.parquet(book_path)
     codes = spark.read.parquet(codes_path)
-    dtab = pq_query_dtab(queries, sub, sd, vec_col, id_col)
+    dtab = pq_query_dtab(queries, sub, sd, "embedding", "vec_id")
     return pq_adc_topk_wide(codes, dtab, k, meta["m"])
 
 
@@ -514,9 +503,6 @@ def ivfadc_index_search(
     path: str,
     queries: DataFrame,
     k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVFADC top-k over the persisted stores — bit-identical to the
     in-plan ``similarity.pq_ivf_topk`` at the same budgets (pinned by
@@ -526,15 +512,16 @@ def ivfadc_index_search(
     O(|corpus|·nprobe/n_centroids) candidate rows and no corpus vector
     is re-read or re-encoded.
     """
+    nprobe = 2
     cent_path, cell_path = _paths(path)
     _book, codes_path, meta_path = _pq_paths(path)
     meta = spark.read.parquet(meta_path).first()
     sd = meta["dim"] // meta["m"]
 
     stored_cents = spark.read.parquet(cent_path).select(
-        F.col("centroid_id").alias(id_col), F.col("embedding").alias(vec_col)
+        F.col("centroid_id").alias("vec_id"), F.col("embedding")
     )
-    q_assign = ivf_assign(queries, stored_cents, nprobe, id_col, vec_col, "query_id")
+    q_assign = ivf_assign(queries, stored_cents, nprobe, "vec_id", "embedding", "query_id")
     # one GEMM execution + literal rebuild (see ivf_index_search): the
     # probed cell ids become a literal IN-filter on the sorted cells
     # scan, so row-group stats skip non-probed cells
@@ -568,17 +555,11 @@ def ivfadc_index_search(
 
     sub = spark.read.parquet(_book)
     codes = spark.read.parquet(codes_path)
-    dtab = pq_query_dtab(queries, sub, sd, vec_col, id_col)
+    dtab = pq_query_dtab(queries, sub, sd, "embedding", "vec_id")
     return pq_adc_topk_bounded_wide(cand, codes, dtab, k, meta["m"])
 
 
-def pq_index_update(
-    spark: SparkSession,
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
+def pq_index_update(spark: SparkSession, path: str, new_vectors: DataFrame) -> int:
     """Append a batch to the persisted PQ index: encode the new vectors
     against the FROZEN codebook (the standard PQ update contract —
     retraining codebooks is an offline rebuild, same as IVF's frozen
@@ -598,11 +579,11 @@ def pq_index_update(
     m, sd = meta["m"], meta["dim"] // meta["m"]
     sub = spark.read.parquet(book_path)
     empty_q = spark.createDataFrame(
-        [], f"{id_col} long, {vec_col} array<double>"
+        [], "vec_id long, embedding array<double>"
     )
     codes, _ = _pq_codes_and_dtab(
         new_vectors, empty_q, m, sd, meta["codebook_buckets"], meta["salt"],
-        vec_col, id_col, sub=sub,
+        "embedding", "vec_id", sub=sub,
     )
     codes = codes.persist()
     try:
@@ -617,7 +598,7 @@ def pq_index_update(
         n_rows = codes.count()
         n = n_rows // m
         if n:
-            dn, dh = corpus_fingerprint(new_vectors, id_col, vec_col)
+            dn, dh = corpus_fingerprint(new_vectors, "vec_id", "embedding")
             codes.sortWithinPartitions("j", "code").write.mode("append").parquet(
                 codes_path
             )

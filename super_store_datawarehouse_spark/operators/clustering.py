@@ -47,14 +47,13 @@ def _trunc_div(a: int, b: int) -> int:
     return -q if a < 0 else q
 
 
-def quantize_vec(vec: Column, scale: int = 1000) -> Column:
+def quantize_vec(vec: Column) -> Column:
     """float array → int64 array via trunc(v*scale); exact cross-engine."""
+    scale = 1000
     return F.transform(vec, lambda v: (v.cast("double") * scale).cast("long"))
 
 
-def assign_clusters(
-    qdf: DataFrame, centroids: list[tuple[int, list[int]]], qcol: str = "q"
-) -> DataFrame:
+def assign_clusters(qdf: DataFrame, centroids: list[tuple[int, list[int]]]) -> DataFrame:
     """Map-only assignment: argmin of integer squared distance to each
     centroid, ties to the lowest centroid id.
 
@@ -76,7 +75,7 @@ def assign_clusters(
         cent_arr,
         lambda s: F.struct(
             F.aggregate(
-                F.zip_with(F.col(qcol), s["c"], lambda a, b: (a - b) * (a - b)),
+                F.zip_with(F.col("q"), s["c"], lambda a, b: (a - b) * (a - b)),
                 F.lit(0).cast("long"),
                 lambda acc, x: acc + x,
             ).alias("dist2"),
@@ -90,7 +89,6 @@ def assign_clusters(
 def update_centroids(
     assigned: DataFrame,
     prev: list[tuple[int, list[int]]],
-    qcol: str = "q",
 ) -> list[tuple[int, list[int]]]:
     """One reduce: per-cluster component sums (d+1 aggregates, map-side
     partial combine) → k rows to the driver → trunc-div means. Empty
@@ -100,7 +98,7 @@ def update_centroids(
         assigned.groupBy("cluster")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            *[F.sum(F.col(qcol)[i]).alias(f"s{i}") for i in range(dim)],
+            *[F.sum(F.col("q")[i]).alias(f"s{i}") for i in range(dim)],
         )
         .collect()
     )
@@ -114,7 +112,6 @@ def update_centroids(
 def updated_centroids_np(
     qdf: DataFrame,
     centroids: list[tuple[int, list[int]]],
-    qcol: str = "q",
 ) -> list[tuple[int, list[int]]]:
     """Fused assign+partial-sum centroid update — one Arrow pass.
 
@@ -152,7 +149,7 @@ def updated_centroids_np(
             if len(pdf) == 0:
                 continue
             seen = True
-            q = np.stack(pdf[qcol].to_numpy()).astype(np.int64)
+            q = np.stack(pdf["q"].to_numpy()).astype(np.int64)
             diff = q[:, None, :] - cmat[None, :, :]
             d2 = np.einsum("nkd,nkd->nk", diff, diff)
             best = d2.argmin(axis=1)
@@ -168,7 +165,7 @@ def updated_centroids_np(
             )
 
     sums = (
-        qdf.select(qcol)
+        qdf.select("q")
         .mapInPandas(part, "cluster long, n long, s array<long>")
         .groupBy("cluster")
         .agg(
@@ -188,7 +185,6 @@ def updated_centroids_np(
 def assign_clusters_np(
     qdf: DataFrame,
     centroids: list[tuple[int, list[int]]],
-    qcol: str = "q",
     out_cols: list[str] | None = None,
 ) -> DataFrame:
     """Arrow-vectorized assignment twin of :func:`assign_clusters`.
@@ -230,7 +226,7 @@ def assign_clusters_np(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            q = np.stack(pdf[qcol].to_numpy()).astype(np.int64)  # N×d
+            q = np.stack(pdf["q"].to_numpy()).astype(np.int64)  # N×d
             diff = q[:, None, :] - cmat[None, :, :]              # N×k×d
             d2 = np.einsum("nkd,nkd->nk", diff, diff)            # int64 exact
             best = d2.argmin(axis=1)
@@ -246,9 +242,6 @@ def kmeans_quantized(
     emb: DataFrame,
     k: int = 8,
     iters: int = 2,
-    scale: int = 1000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     impl: str = "numpy",
 ) -> DataFrame:
     """Lloyd's k-means, ``iters`` assignment passes with ``iters - 1``
@@ -265,10 +258,10 @@ def kmeans_quantized(
     # re-scanning per iteration would dominate; MLlib caches likewise).
     qdf = scoped_cache(
         emb.select(
-            F.col(id_col), quantize_vec(F.col(vec_col), scale).alias("q")
+            F.col("vec_id"), quantize_vec(F.col("embedding")).alias("q")
         )
     )
-    seed_rows = qdf.orderBy(id_col).limit(k).collect()
+    seed_rows = qdf.orderBy("vec_id").limit(k).collect()
     centroids = [(i, list(row["q"])) for i, row in enumerate(seed_rows)]
     if impl == "numpy":
         # fused assign+partial-sum update per iteration (one Arrow pass
@@ -279,23 +272,17 @@ def kmeans_quantized(
         # row-wise (guide §4 / §2.3)
         for _ in range(iters - 1):
             centroids = updated_centroids_np(qdf, centroids)
-        return assign_clusters_np(qdf, centroids, out_cols=[id_col]).select(
-            id_col, "cluster", "dist2"
+        return assign_clusters_np(qdf, centroids, out_cols=["vec_id"]).select(
+            "vec_id", "cluster", "dist2"
         )
     assigned = assign_clusters(qdf, centroids)
     for _ in range(iters - 1):
         centroids = update_centroids(assigned, centroids)
         assigned = assign_clusters(qdf, centroids)
-    return assigned.select(id_col, "cluster", "dist2")
+    return assigned.select("vec_id", "cluster", "dist2")
 
 
-def pca_power_iteration(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_iter: int = 3,
-    v_scale: int = 10_000,
-) -> list[int]:
+def pca_power_iteration(emb: DataFrame, n_iter: int = 3) -> list[int]:
     """First principal direction of a vector column by distributed
     power iteration — v ← (XᵀX)v, renormalized each round — with every
     step in exact int64 arithmetic so the whole trajectory replays in
@@ -332,11 +319,13 @@ def pca_power_iteration(
     import numpy as np
     import pandas as pd
 
+    v_scale = 10_000
+
     # NULL/empty embeddings contribute nothing (the former posexplode
     # formulation skipped them implicitly; the Gram path must too)
     q = emb.filter(
-        F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0)
-    ).select(quantize_vec(F.col(vec_col), 1000).alias("__q"))
+        F.col("embedding").isNotNull() & (F.size(F.col("embedding")) > 0)
+    ).select(quantize_vec(F.col("embedding")).alias("__q"))
 
     def gram(batches):
         acc = None

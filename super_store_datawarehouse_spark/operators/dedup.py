@@ -153,7 +153,7 @@ def normalize_text(text: Column | str) -> Column:
     return F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """One representative row (min id) per normalized text; counts duplicates.
 
     Hash aggregation on the normalized key — a single shuffle; at scale,
@@ -161,21 +161,15 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     long, and verify collisions afterwards.
     """
     return (
-        df.groupBy(normalize_text(text_col).alias("norm_text"))
+        df.groupBy(normalize_text("text").alias("norm_text"))
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
 
 
-def word_shingles(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    hashed: bool = False,
-) -> DataFrame:
+def word_shingles(df: DataFrame, n: int = 3, hashed: bool = False) -> DataFrame:
     """Distinct word n-gram shingles per document: (id, shingle) rows.
 
     ``hashed=True`` replaces each shingle string with its xxhash64 —
@@ -203,7 +197,7 @@ def word_shingles(
     # (measured 7× slower on a 150-token corpus). As an attribute
     # reference it is computed once per row; CollapseProject keeps the
     # projection because the alias is referenced more than once.
-    base = df.select(F.col(id_col).alias("sid"), words(text_col).alias("__ws"))
+    base = df.select(F.col("doc_id").alias("sid"), words("text").alias("__ws"))
     w = F.col("__ws")
     # documents shorter than n words have no shingles (empty array, row
     # dropped by the explode) — sequence() would otherwise go descending
@@ -230,12 +224,7 @@ def word_shingles(
     return out
 
 
-def shingle_tf(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 2,
-) -> DataFrame:
+def shingle_tf(df: DataFrame) -> DataFrame:
     """Word n-gram shingles WITH multiplicity: (sid, shingle, tf) rows.
 
     The multiset twin of :func:`word_shingles` (which deduplicates per
@@ -243,8 +232,9 @@ def shingle_tf(
     occurs, not just whether it does. Same bound-tokenization + outer
     explode discipline; one (sid, shingle) hash agg on top.
     """
+    n = 2
     base = _widen_narrow_scan(df).select(
-        F.col(id_col).alias("sid"), words(text_col).alias("__ws")
+        F.col("doc_id").alias("sid"), words("text").alias("__ws")
     )
     w = F.col("__ws")
     shingles = F.when(
@@ -262,9 +252,6 @@ def shingle_tf(
 
 def weighted_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 2,
     max_doc_freq: int = 50,
     threshold_permille: int = 50,
 ) -> DataFrame:
@@ -302,7 +289,7 @@ def weighted_jaccard_pairs(
     # 4x re-run of the final agg over the reused exchange costs more
     # than the cache, so the size-conditional cache applies (sf10:
     # 34.3 s uncached vs 31.3 s cached).
-    tf = _cache_if_corpus_scale(shingle_tf(df, text_col, id_col, n), df)
+    tf = _cache_if_corpus_scale(shingle_tf(df), df)
     dfw = tf.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     kept = tf.join(dfw.filter(F.col("df") <= max_doc_freq), "shingle").select(
         "sid", "shingle", "tf"
@@ -333,9 +320,6 @@ def weighted_jaccard_pairs(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     threshold: float = 0.2,
     max_doc_freq: int | None = None,
     corpus_cache: bool | None = None,
@@ -369,7 +353,7 @@ def ngram_jaccard_pairs(
     * a cap at or above the corpus max df is a bit-identical no-op —
       the uncapped SQL is then an exact oracle for the capped run.
     """
-    sh = word_shingles(df, text_col, id_col, n, hashed=True)
+    sh = word_shingles(df, hashed=True)
     if max_doc_freq is not None:
         dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
         sh = sh.join(
@@ -425,13 +409,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def ppjoin_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.2,
-) -> DataFrame:
+def ppjoin_jaccard_pairs(df: DataFrame, threshold: float = 0.2) -> DataFrame:
     """Exact Jaccard join with prefix filtering (PPJoin-style, Chaudhuri
     et al. 2006 / Xiao et al. 2008) — the *lossless* scale path for
     exact set similarity, complementing MinHash-LSH's approximate one.
@@ -459,7 +437,7 @@ def ppjoin_jaccard_pairs(
     # supplies the verification sizes). The explode itself is cached
     # only at corpus scale (see _cache_if_corpus_scale).
     sh = _cache_if_corpus_scale(
-        word_shingles(df, text_col, id_col, n, hashed=True), df
+        word_shingles(df, hashed=True), df
     )
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
 
@@ -550,9 +528,6 @@ def jaccard_strategy_for(threshold: float) -> str:
 
 def jaccard_pairs_auto(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     threshold: float = 0.2,
     strategy: str = "auto",
 ) -> DataFrame:
@@ -566,22 +541,16 @@ def jaccard_pairs_auto(
     if strategy == "auto":
         strategy = jaccard_strategy_for(threshold)
     if strategy == "ppjoin":
-        return ppjoin_jaccard_pairs(df, text_col, id_col, n, threshold)
+        return ppjoin_jaccard_pairs(df, threshold)
     if strategy == "plain":
-        return ngram_jaccard_pairs(df, text_col, id_col, n, threshold)
+        return ngram_jaccard_pairs(df, threshold)
     raise ValueError(
         f"jaccard_pairs_auto: unknown strategy {strategy!r} "
         "(expected 'auto', 'ppjoin', or 'plain')"
     )
 
 
-def ngram_containment_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
+def ngram_containment_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Exact *asymmetric* n-gram containment join: |src ∩ dst| / |src|.
 
     Jaccard misses quote/subset relationships — a short document fully
@@ -598,7 +567,7 @@ def ngram_containment_pairs(
     # Size-conditional cache (see _cache_if_corpus_scale): per-branch
     # fused explodes win at toy scale, the cache wins at corpus scale.
     sh = _cache_if_corpus_scale(
-        word_shingles(df, text_col, id_col, n, hashed=True), df
+        word_shingles(df, hashed=True), df
     )
     sizes = sh.groupBy("sid").agg(F.count(F.lit(1)).alias("n_shingles"))
 
@@ -647,7 +616,8 @@ def ngram_containment_pairs(
     )
 
 
-def _ratio_as_ints(threshold: float, den: int = 1000) -> tuple[int, int]:
+def _ratio_as_ints(threshold: float) -> tuple[int, int]:
+    den = 1000
     return round(threshold * den), den
 
 
@@ -663,15 +633,7 @@ def _minhash_coeffs(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-    seed: int = 42,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, shingles: DataFrame | None = None) -> DataFrame:
     """MinHash signature per document: array<long> of length num_hashes.
 
     Base shingle hash is xxhash64 (JVM-side, deterministic across runs);
@@ -682,19 +644,20 @@ def minhash_signatures(
     Pass ``shingles`` (a cached (sid, shingle) frame) to reuse the
     shingle explosion across signature build and candidate verification.
     """
-    sh = shingles if shingles is not None else word_shingles(df, text_col, id_col, n)
+    num_hashes = 32
+    sh = shingles if shingles is not None else word_shingles(df)
     # accept either raw shingle strings or pre-hashed longs (same values:
     # the hashed path stores exactly xxhash64(shingle))
     pre_hashed = dict(sh.dtypes)["shingle"] == "bigint"
     base = F.abs(F.col("shingle") if pre_hashed else F.xxhash64("shingle")) % F.lit(1 << 31)
-    coeffs = _minhash_coeffs(num_hashes, seed)
+    coeffs = _minhash_coeffs(num_hashes)
     mins = [
         F.min((F.lit(a) * base + F.lit(b)) % F.lit(MERSENNE61)).alias(f"h{i}")
         for i, (a, b) in enumerate(coeffs)
     ]
     sig = sh.groupBy("sid").agg(*mins)
     return sig.select(
-        F.col("sid").alias(id_col),
+        F.col("sid").alias("doc_id"),
         F.array(*[f"h{i}" for i in range(num_hashes)]).alias("minhash"),
     )
 
@@ -772,16 +735,7 @@ MD5_HASH31_SQL = (
 )
 
 
-def minhash_band_rows_md5(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    seed: int = 42,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
+def minhash_band_rows_md5(df: DataFrame, shingles: DataFrame | None = None) -> DataFrame:
     """LSH band rows ``(sid, band, bucket)`` of the fully-portable md5
     MinHash: md5-based 31-bit shingle hash, (a·h+b) mod 2³¹
     permutations, polynomial band buckets — each stage bit-replayable in
@@ -795,14 +749,15 @@ def minhash_band_rows_md5(
     Pass ``shingles`` (a cached unhashed (sid, shingle) frame) to reuse
     the shingle explosion with downstream verification.
     """
+    num_hashes, bands = 16, 4
     rows_per_band = num_hashes // bands
     sh = (
         shingles
         if shingles is not None
-        else word_shingles(df, text_col, id_col, n, hashed=False)
+        else word_shingles(df, hashed=False)
     )
     feats = sh.withColumn("hs", md5_hash31(F.col("shingle")))
-    coeffs = _minhash_coeffs(num_hashes, seed=seed)
+    coeffs = _minhash_coeffs(num_hashes)
     mins = [
         F.min((F.col("hs") * a + b) % F.lit(1 << 31)).alias(f"m{j:02d}")
         for j, (a, b) in enumerate(coeffs)
@@ -832,16 +787,7 @@ def minhash_band_rows_md5(
     ).select("sid", "bb.band", "bb.bucket")
 
 
-def minhash_lsh_pairs_md5(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    threshold: float = 0.2,
-    seed: int = 42,
-) -> DataFrame:
+def minhash_lsh_pairs_md5(df: DataFrame) -> DataFrame:
     """Fully portable MinHash+LSH near-dup join: md5-based shingle hash,
     (a·h+b) mod 2³¹ permutations, polynomial band buckets, exact Jaccard
     verification — every step replays bit-for-bit in any SQL engine, so
@@ -862,6 +808,7 @@ def minhash_lsh_pairs_md5(
     ``_exact_jaccard_on_candidates(cand, sh, threshold)`` with the
     string-shingle frame ``sh`` already built above.
     """
+    threshold = 0.2
     # No cache (see weighted_jaccard_pairs): the signature build and the
     # exact verification each re-run the explode as part of their own
     # fused map stage — cheaper than materializing the exploded frame.
@@ -871,9 +818,9 @@ def minhash_lsh_pairs_md5(
     # both of its shuffles go fixed-width — measured ~4x cheaper per
     # pass than re-exploding strings, with value-identical pairs since
     # xxhash64 equality ≡ string equality at any realistic corpus).
-    sh = word_shingles(df, text_col, id_col, n, hashed=False)
+    sh = word_shingles(df, hashed=False)
     band_rows = minhash_band_rows_md5(
-        df, text_col, id_col, n, num_hashes, bands, seed, shingles=sh
+        df, shingles=sh
     )
     # size-gated merge hint on the self-join (round-12, guide §2.4/§3):
     # at corpus scale the static planner otherwise BROADCASTS one side —
@@ -898,21 +845,12 @@ def minhash_lsh_pairs_md5(
         .distinct()
     )
     sh_h = _cache_if_corpus_scale(
-        word_shingles(df, text_col, id_col, n, hashed=True), df
+        word_shingles(df, hashed=True), df
     )
     return _exact_jaccard_on_candidates(cand, sh_h, threshold)
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.2,
-    seed: int = 42,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame) -> DataFrame:
     """LSH candidate generation + exact Jaccard verification.
 
     Documents sharing any band bucket become candidates (band join);
@@ -921,17 +859,18 @@ def minhash_lsh_pairs(
     At 100 TB this replaces the quadratic similarity join with
     O(docs·bands) bucket rows.
     """
+    num_hashes, bands, threshold = 32, 8, 0.2
     rows_per_band = num_hashes // bands
     # hashed shingles keep the candidate-verification join fixed-width;
     # size-conditional cache (see _cache_if_corpus_scale) — the
     # signature build and the exact verification otherwise each fuse
     # their own explode, which wins at toy scale only.
     sh = _cache_if_corpus_scale(
-        word_shingles(df, text_col, id_col, n, hashed=True), df
+        word_shingles(df, hashed=True), df
     )
-    sig = minhash_signatures(df, text_col, id_col, n, num_hashes, seed, shingles=sh)
+    sig = minhash_signatures(df, shingles=sh)
     band_rows = sig.select(
-        F.col(id_col).alias("sid"),
+        F.col("doc_id").alias("sid"),
         F.explode(
             F.array(
                 *[
@@ -969,7 +908,7 @@ def minhash_lsh_pairs(
 
 # -- SimHash -----------------------------------------------------------------
 
-def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash64(df: DataFrame) -> DataFrame:
     """64-bit SimHash over distinct word features.
 
     Per bit position: sign-sum of feature-hash bits; bit set iff the sum is
@@ -977,8 +916,8 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     explode — no UDF, fully codegen'd.
     """
     features = df.select(
-        F.col(id_col).alias("sid"),
-        F.explode(F.array_distinct(words(text_col))).alias("word"),
+        F.col("doc_id").alias("sid"),
+        F.explode(F.array_distinct(words("text"))).alias("word"),
     )
     h = F.xxhash64("word")
     bit_sums = [
@@ -993,14 +932,11 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         bit = F.when(F.col(f"b{i}") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
         term = F.shiftleft(bit, i)
         sim = term if sim is None else sim.bitwiseOR(term)
-    return agg.select(F.col("sid").alias(id_col), sim.alias("simhash"))
+    return agg.select(F.col("sid").alias("doc_id"), sim.alias("simhash"))
 
 
 def simhash_near_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
     signatures: DataFrame | None = None,
     sig_bits: int = 64,
 ) -> DataFrame:
@@ -1013,7 +949,7 @@ def simhash_near_pairs(
     differing bits while keeping one chunk clean); larger budgets keep
     the same candidate generation and become best-effort recall.
 
-    ``signatures``: precomputed ``(id_col, simhash)`` frame — pass
+    ``signatures``: precomputed ``(doc_id, simhash)`` frame — pass
     :func:`simhash_portable`'s output to run the identical pair
     pipeline over the cross-engine-reproducible hash (x04's oracle
     path); default builds xxhash64 signatures via :func:`simhash64`.
@@ -1022,11 +958,12 @@ def simhash_near_pairs(
     buckets per band; the coarser banding is the declared trade of the
     auditable variant, the production path keeps 16-bit chunks).
     """
+    max_hamming = 3
     chunk_bits = sig_bits // 4
     chunk_mask = (1 << chunk_bits) - 1
-    sig = signatures if signatures is not None else simhash64(df, text_col, id_col)
+    sig = signatures if signatures is not None else simhash64(df)
     chunks = sig.select(
-        F.col(id_col).alias("sid"),
+        F.col("doc_id").alias("sid"),
         "simhash",
         F.explode(
             F.array(
@@ -1070,12 +1007,7 @@ def simhash_near_pairs(
 
 # -- Embedding near-dup ------------------------------------------------------
 
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-) -> DataFrame:
+def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Brute-force cosine near-duplicate pairs (the exact baseline).
 
     Quadratic by definition — the LSH-bucketed variant in
@@ -1102,8 +1034,8 @@ def embedding_near_dup_pairs(
 
     spark = df.sparkSession
     e = df.select(
-        F.col(id_col).cast("long").alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vec_id").cast("long").alias("vid"),
+        F.col("embedding").cast("array<double>").alias("v"),
     )
     # One collect of the comparison side — the explicit scale contract of
     # the exact baseline (same memory bound as broadcasting a join side).
@@ -1172,15 +1104,7 @@ def embedding_near_dup_pairs(
     return probe.mapInPandas(score, "id_a long, id_b long, cosine double")
 
 
-def semantic_near_dup_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.35,
-    k: int = 8,
-    iters: int = 2,
-    scale: int = 1000,
-) -> DataFrame:
+def semantic_near_dup_pairs(df: DataFrame, threshold: float = 0.35, k: int = 8) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster
     the embedding space with k-means, then compute exact cosine pairs
     only *within* each cluster.
@@ -1207,13 +1131,11 @@ def semantic_near_dup_pairs(
     )
     from super_store_datawarehouse_spark.operators.similarity import dot
 
-    assigned = kmeans_quantized(
-        df, k=k, iters=iters, scale=scale, id_col=id_col, vec_col=vec_col
-    ).select(F.col(id_col).alias("vid"), "cluster")
+    assigned = kmeans_quantized(df, k=k).select(F.col("vec_id").alias("vid"), "cluster")
     e = (
         df.select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).cast("array<double>").alias("v"),
+            F.col("vec_id").alias("vid"),
+            F.col("embedding").cast("array<double>").alias("v"),
         )
         .withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
         .filter(F.col("nrm") > 0)
@@ -1262,9 +1184,7 @@ def semantic_near_dup_pairs(
     )
 
 
-def simhash_portable(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 32
-) -> DataFrame:
+def simhash_portable(df: DataFrame) -> DataFrame:
     """SimHash over a portable polynomial word hash (h·31+ascii mod 2³²).
 
     Same construction as ``simhash64`` but every step — char fold, bit
@@ -1273,9 +1193,10 @@ def simhash_portable(
     xxhash64 variant for production (better bit diffusion); use this one
     when cross-engine auditability of the sketch itself matters.
     """
+    bits = 32
     feats = df.select(
-        F.col(id_col).alias("sid"),
-        F.explode(F.array_distinct(words(text_col))).alias("word"),
+        F.col("doc_id").alias("sid"),
+        F.explode(F.array_distinct(words("text"))).alias("word"),
     )
     codes = F.transform(F.split("word", ""), lambda ch: F.ascii(ch).cast("long"))
     hw = F.aggregate(
@@ -1296,17 +1217,10 @@ def simhash_portable(
         bit = F.when(F.col(f"b{i}") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
         term = F.shiftleft(bit, i)
         sim = term if sim is None else sim.bitwiseOR(term)
-    return agg.select(F.col("sid").alias(id_col), sim.alias("simhash"))
+    return agg.select(F.col("sid").alias("doc_id"), sim.alias("simhash"))
 
 
-def minhash_portable(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 16,
-    seed: int = 42,
-) -> DataFrame:
+def minhash_portable(df: DataFrame) -> DataFrame:
     """MinHash signatures over a portable polynomial shingle hash —
     the auditable twin of ``minhash_signatures`` (which uses xxhash64
     and is therefore only rows-only checkable; same relationship as
@@ -1317,7 +1231,8 @@ def minhash_portable(
     int64) → MIN per document. Every step replays in any SQL engine;
     x73 verifies all ``num_hashes`` signature components bit-for-bit.
     """
-    sh = word_shingles(df, text_col, id_col, n=n, hashed=False)
+    num_hashes = 16
+    sh = word_shingles(df, hashed=False)
     codes = F.transform(F.split("shingle", ""), lambda ch: F.ascii(ch).cast("long"))
     hs = F.aggregate(
         codes,
@@ -1325,23 +1240,15 @@ def minhash_portable(
         lambda h, c: (h * 31 + c) % F.lit(1 << 31),
     )
     feats = sh.withColumn("hs", hs)
-    coeffs = _minhash_coeffs(num_hashes, seed=seed)
+    coeffs = _minhash_coeffs(num_hashes)
     mins = [
         F.min((F.col("hs") * a + b) % F.lit(1 << 31)).alias(f"m{j:02d}")
         for j, (a, b) in enumerate(coeffs)
     ]
-    return feats.groupBy("sid").agg(*mins).withColumnRenamed("sid", id_col)
+    return feats.groupBy("sid").agg(*mins).withColumnRenamed("sid", "doc_id")
 
 
-def cross_split_contamination(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 5,
-    train_split: str = "train",
-    eval_splits: tuple[str, ...] = ("val", "test"),
-    salt: int = 0,
-) -> DataFrame:
+def cross_split_contamination(df: DataFrame, n: int = 5) -> DataFrame:
     """Train→eval contamination report: for every eval document, how many
     of its word n-gram shingles also occur anywhere in the train split.
 
@@ -1363,19 +1270,21 @@ def cross_split_contamination(
     """
     from super_store_datawarehouse_spark.operators.sampling import split_column
 
-    tagged = df.withColumn("split", split_column(id_col, salt=salt))
-    sh = word_shingles(tagged, text_col, id_col, n).join(
-        tagged.select(F.col(id_col).alias("sid"), "split"), "sid"
+    eval_splits = ("val", "test")
+
+    tagged = df.withColumn("split", split_column("doc_id"))
+    sh = word_shingles(tagged, n).join(
+        tagged.select(F.col("doc_id").alias("sid"), "split"), "sid"
     )
     train_shingles = (
-        sh.filter(F.col("split") == train_split).select("shingle").distinct()
+        sh.filter(F.col("split") == "train").select("shingle").distinct()
     )
     eval_sh = sh.filter(F.col("split").isin(*eval_splits))
     hits = eval_sh.join(
         train_shingles.withColumn("hit", F.lit(1)), "shingle", "left"
     )
     return (
-        hits.groupBy(F.col("sid").alias(id_col), "split")
+        hits.groupBy(F.col("sid").alias("doc_id"), "split")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
             F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_contaminated"),
@@ -1393,8 +1302,6 @@ def cross_split_contamination(
 
 def longest_shared_spans(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 5,
     max_doc_freq: int = 10,
     min_span: int | None = None,
@@ -1429,7 +1336,7 @@ def longest_shared_spans(
     df = _widen_narrow_scan(df)
     # bound-column tokenization: see word_shingles — an inline words()
     # would re-run the regex split per shingle inside the lambda
-    base = df.select(F.col(id_col).alias("sid"), words(text_col).alias("__ws"))
+    base = df.select(F.col("doc_id").alias("sid"), words("text").alias("__ws"))
     w = F.col("__ws")
     shingles = F.when(
         F.size(w) >= n,
@@ -1488,18 +1395,10 @@ def longest_shared_spans(
     )
 
 
-def cross_split_span_contamination(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 5,
-    max_doc_freq: int = 10,
-    min_span: int | None = None,
-    salt: int = 0,
-) -> DataFrame:
+def cross_split_span_contamination(df: DataFrame) -> DataFrame:
     """Span-level train→eval decontamination: for every val/test
-    document that shares a verbatim token span of at least ``min_span``
-    tokens with ANY train document, report the longest such leak and
+    document that shares a verbatim token span of at least 6 tokens
+    (two 5-word shingles) with ANY train document, report the longest such leak and
     the train doc it leaks from.
 
     This is the stricter sibling of :func:`cross_split_contamination`
@@ -1517,11 +1416,9 @@ def cross_split_span_contamination(
     """
     from super_store_datawarehouse_spark.operators.sampling import split_column
 
-    spans = longest_shared_spans(
-        df, text_col, id_col, n, max_doc_freq, min_span
-    )
+    spans = longest_shared_spans(df)
     labels = df.select(
-        F.col(id_col).alias("__id"), split_column(id_col, salt=salt).alias("__sp")
+        F.col("doc_id").alias("__id"), split_column("doc_id").alias("__sp")
     )
     lab_a = labels.select(
         F.col("__id").alias("doc_a"), F.col("__sp").alias("split_a")

@@ -30,18 +30,14 @@ from pyspark.sql import functions as F
 from super_store_datawarehouse_spark.session import checkpoint_cut
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 50,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Component label (= min node id in the component) for every node
     that appears in ``edges``. Returns (u, component).
     """
+    max_iter = 50
     sym = checkpoint_cut(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+        .union(edges.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
         .distinct()
     )
     labels = sym.select("u").distinct().withColumn("label", F.col("u"))
@@ -89,26 +85,22 @@ def connected_components(
     return labels.select("u", F.col("label").alias("component"))
 
 
-def dedup_by_components(
-    docs: DataFrame, edges: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def dedup_by_components(docs: DataFrame, edges: DataFrame) -> DataFrame:
     """Attach a duplicate-cluster id to every document (its own id when
     it has no near-duplicates) and flag the cluster survivor (min id).
     Filter ``is_kept`` for the deduplicated corpus; keep the component
     column for provenance."""
     comp = connected_components(edges).select(
-        F.col("u").alias(id_col), "component"
+        F.col("u").alias("doc_id"), "component"
     )
     return (
-        docs.join(comp, id_col, "left")
-        .withColumn("component", F.coalesce("component", F.col(id_col)))
-        .withColumn("is_kept", F.col(id_col) == F.col("component"))
+        docs.join(comp, "doc_id", "left")
+        .withColumn("component", F.coalesce("component", F.col("doc_id")))
+        .withColumn("is_kept", F.col("doc_id") == F.col("component"))
     )
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts by degree-ordered orientation — the
     node-iterator++ algorithm (Schank & Wagner 2005; the shape Cohen's
     MapReduce triangle papers distribute).
@@ -129,7 +121,7 @@ def triangle_count(
     Three equi-joins + two hash aggregations, all shuffle-partitioned
     on node/edge keys.
     """
-    a, b = F.col(src), F.col(dst)
+    a, b = F.col("src"), F.col("dst")
     canon = (
         edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
         .filter(F.col("a") != F.col("b"))

@@ -28,16 +28,17 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def zorder_key(*cols: Column | str, bits: int = 16) -> Column:
-    """Interleave the low ``bits`` bits of 2+ non-negative int columns
+def zorder_key(*cols: Column | str) -> Column:
+    """Interleave the low 16 bits of 2+ non-negative int columns
     into one Morton key (column i contributes bit positions
     ``i, i+n, i+2n, ...``).
 
     Callers normalize first: values must be non-negative and fit in
-    ``bits`` bits (e.g. ``F.col("k") % (1 << bits)``, or a rank/bucket
+    16 bits (e.g. ``F.col("k") % (1 << 16)``, or a rank/bucket
     for doubles). Disjoint target bits mean SUM == OR, and a sum of
     shifts is expressible identically in any SQL engine.
     """
+    bits = 16
     n = len(cols)
     if n < 2:
         raise ValueError("zorder needs >= 2 columns")
@@ -52,9 +53,10 @@ def zorder_key(*cols: Column | str, bits: int = 16) -> Column:
     return reduce(add, terms)
 
 
-def zorder_sql(cols: list[str], bits: int = 16) -> str:
+def zorder_sql(cols: list[str]) -> str:
     """The DuckDB-dialect twin of :func:`zorder_key` — kept beside the
     implementation so harness oracles can't drift from it."""
+    bits = 16
     n = len(cols)
     terms = [
         f"((({c} >> {i}) & 1) << {i * n + j})"

@@ -30,23 +30,20 @@ def blocked_fuzzy_link(
     left_text: str,
     right_id: str,
     right_text: str,
-    max_dist: int = 2,
-    len_band: int = 2,
-    best_only: bool = True,
 ) -> DataFrame:
-    """Link each left row to right rows within ``max_dist`` edit distance,
+    """Link each left row to its closest right row within edit distance 2,
     comparing only candidates that share a block (same first character,
-    length within ``len_band``).
+    length within 2).
 
-    Returns (left_id, left_text, right_id, right_text, dist[, match_rank]);
-    with ``best_only`` a deterministic top-1 per left row (min distance,
-    ties by right text then right id).
+    Returns (l_id, l_text, r_id, r_text, dist): a deterministic top-1 per
+    left row (min distance, ties by right text then right id).
 
     Recall contract: a true match is missed only if the edit touched the
     first character or changed the length beyond the band — the classic
     blocking trade-off; run a second pass with a different block key
     (e.g. last character) and union for higher recall.
     """
+    max_dist, len_band = 2, 2
     l = left.select(
         F.col(left_id).alias("l_id"),
         F.col(left_text).alias("l_text"),
@@ -65,8 +62,6 @@ def blocked_fuzzy_link(
         .withColumn("dist", F.levenshtein("l_text", "r_text"))
         .filter(F.col("dist") <= max_dist)
     )
-    if not best_only:
-        return cand.select("l_id", "l_text", "r_id", "r_text", "dist")
     w = Window.partitionBy("l_id").orderBy("dist", "r_text", "r_id")
     return (
         cand.withColumn("match_rank", F.row_number().over(w))

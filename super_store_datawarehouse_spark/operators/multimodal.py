@@ -57,22 +57,22 @@ DECODED_SCHEMA = StructType(
 )
 
 
-def attach_binary_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def attach_binary_metadata(df: DataFrame) -> DataFrame:
     """JVM-side metadata for a binary column: byte length + sha256 hex.
 
     Native expressions — no Python; at 100 TB this is the cheap first
     pass that dedups payloads (group on sha256) before any decoding.
     """
-    return df.withColumn("byte_len", F.length(payload_col).cast("long")).withColumn(
-        "sha256", F.sha2(F.col(payload_col), 256)
+    return df.withColumn("byte_len", F.length("payload").cast("long")).withColumn(
+        "sha256", F.sha2(F.col("payload"), 256)
     )
 
 
-def texts_as_assets(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def texts_as_assets(df: DataFrame) -> DataFrame:
     """Adapt a text table into the asset convention (for plumbing tests)."""
     return df.select(
-        F.col(id_col).alias("asset_id"),
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
+        F.col("doc_id").alias("asset_id"),
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
         F.lit("text/plain").alias("media_type"),
     )
 
@@ -305,7 +305,7 @@ PCM_STATS_SCHEMA = StructType(
 )
 
 
-def synth_wav_assets(df: DataFrame, id_col: str = "doc_id", rate: int = 8000) -> DataFrame:
+def synth_wav_assets(df: DataFrame) -> DataFrame:
     """Deterministic mono 16-bit PCM WAV synthesis, one asset per id:
     ``n = 64 + id % 64`` samples with
     ``s_k = ((id·7919 + k·104729) mod 65536) − 32768``.
@@ -319,10 +319,12 @@ def synth_wav_assets(df: DataFrame, id_col: str = "doc_id", rate: int = 8000) ->
     """
     import struct
 
+    rate = 8000
+
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, payloads = [], []
-            for i in pdf[id_col]:
+            for i in pdf["doc_id"]:
                 i = int(i)
                 n = 64 + i % 64
                 samples = ((i * 7919 + np.arange(n, dtype=np.int64) * 104729) % 65536) - 32768
@@ -346,7 +348,7 @@ def synth_wav_assets(df: DataFrame, id_col: str = "doc_id", rate: int = 8000) ->
                 }
             )
 
-    return df.select(id_col).mapInPandas(
+    return df.select("doc_id").mapInPandas(
         synth, "asset_id long, media_type string, payload binary"
     )
 

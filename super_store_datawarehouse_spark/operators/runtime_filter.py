@@ -117,25 +117,16 @@ def bloom_prefilter(
     return probe.mapInPandas(part, schema=schema)
 
 
-def bloom_join(
-    probe: DataFrame,
-    build: DataFrame,
-    on: str,
-    how: str = "inner",
-    n_hashes: int = 5,
-) -> DataFrame:
+def bloom_join(probe: DataFrame, build: DataFrame, on: str) -> DataFrame:
     """Equi-join with a Bloom runtime filter on the probe side.
 
-    Result is identical to ``probe.join(build, on, how)`` for inner and
-    left-semi joins (no false negatives; false positives die in the real
-    join). Outer joins would need the dropped rows back — not supported.
+    Result is identical to ``probe.join(build, on)`` (no false negatives;
+    false positives die in the real join).
     """
-    if how not in ("inner", "semi", "left_semi", "leftsemi"):
-        raise ValueError(f"bloom_join supports inner/semi joins, not {how!r}")
-    bloom = build_bloom(build, on, n_hashes=n_hashes)
+    bloom = build_bloom(build, on)
     # Pin the broadcast to the build side: the prefiltered probe comes out
     # of mapInPandas with no size statistics, and Catalyst's default
     # estimate can otherwise pick the PROBE as the broadcast side — fine
     # at test scale, catastrophic at 100 TB where the prefiltered fact is
     # still huge. The build side already fit in memory to build the bloom.
-    return bloom_prefilter(probe, on, bloom).join(F.broadcast(build), on, how)
+    return bloom_prefilter(probe, on, bloom).join(F.broadcast(build), on)

@@ -112,13 +112,11 @@ def hash_sample_n_sql(key: str, sample_n: int, salt: int = 0) -> str:
     return f"ORDER BY {knuth_sql(key, salt)}, {key} LIMIT {sample_n}"
 
 
-def split_column(
-    key_col: str, weights: tuple[float, ...] = (0.8, 0.1, 0.1),
-    names: tuple[str, ...] = ("train", "val", "test"), salt: int = 0,
-) -> Column:
+def split_column(key_col: str) -> Column:
     """Split label from contiguous bucket ranges: disjoint and exhaustive
     by construction."""
-    bucket = hash_bucket(key_col, salt)
+    weights, names = (0.8, 0.1, 0.1), ("train", "val", "test")
+    bucket = hash_bucket(key_col)
     bounds = []
     acc = 0.0
     for w in weights:
@@ -130,9 +128,7 @@ def split_column(
     return expr.otherwise(F.lit(names[-1]))
 
 
-def weighted_mix(
-    sources: dict[str, tuple[DataFrame, float]], key_col: str, salt: int = 0
-) -> DataFrame:
+def weighted_mix(sources: dict[str, tuple[DataFrame, float]], key_col: str) -> DataFrame:
     """Deterministic dataset mixture: union each source's hash-sample at
     its mixture fraction, tagging rows with the source name. The standard
     training-mix operator (e.g. 100% curated + 30% web crawl), fully
@@ -149,7 +145,7 @@ def weighted_mix(
         # crc32 of the name: distinct sources get decorrelated hash
         # streams (a character-sum salt would collide for anagrams,
         # silently correlating their samples)
-        src_salt = salt + zlib.crc32(name.encode("utf-8")) % (1 << 20)
+        src_salt = zlib.crc32(name.encode("utf-8")) % (1 << 20)
         part = hash_sample(df, key_col, fraction, salt=src_salt).withColumn(
             "mix_source", F.lit(name)
         )
@@ -424,14 +420,7 @@ def temperature_quotas(
     )
 
 
-def quota_sample(
-    df: DataFrame,
-    key_col: str,
-    domain_col: str,
-    quotas: DataFrame,
-    quota_col: str = "target_n",
-    salt: int = 0,
-) -> DataFrame:
+def quota_sample(df: DataFrame, key_col: str, domain_col: str, quotas: DataFrame) -> DataFrame:
     """Keep exactly ``quota_d`` rows per domain — the lowest
     :func:`knuth_hash` ranks, so the draw is deterministic, auditable in
     portable SQL, and stable under any partitioning. Generalizes
@@ -444,11 +433,11 @@ def quota_sample(
     quotas at the extreme.
     """
     w = Window.partitionBy(domain_col).orderBy(
-        knuth_hash(key_col, salt), F.col(key_col)
+        knuth_hash(key_col), F.col(key_col)
     )
     return (
-        df.join(F.broadcast(quotas.select(domain_col, quota_col)), domain_col)
+        df.join(F.broadcast(quotas.select(domain_col, "target_n")), domain_col)
         .withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= F.col(quota_col))
-        .drop("__r", quota_col)
+        .filter(F.col("__r") <= F.col("target_n"))
+        .drop("__r", "target_n")
     )

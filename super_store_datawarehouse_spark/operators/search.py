@@ -28,15 +28,13 @@ from super_store_datawarehouse_spark.operators.dedup import (
 from super_store_datawarehouse_spark.operators.text import words
 
 
-def token_postings(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def token_postings(df: DataFrame) -> DataFrame:
     """(doc_id, pos, term) rows — the map-side expansion an indexer
     shuffles. Pure explode: ~n_tokens rows out per document, no shuffle
     of its own (the narrow-scan widen guard from the shingle path
     applies, since the explode multiplies row count ~50-500×)."""
     base = _widen_narrow_scan(df).select(
-        F.col(id_col).alias("doc_id"), words(text_col).alias("__ws")
+        F.col("doc_id"), words("text").alias("__ws")
     )
     # outer explode + null-filter (see dedup.word_shingles): an inner
     # explode's inferred `size>0` filter would re-inline the tokenization
@@ -47,12 +45,7 @@ def token_postings(
     )
 
 
-def inverted_index(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    postings_head: int = 5,
-) -> DataFrame:
+def inverted_index(df: DataFrame, postings_head: int = 5) -> DataFrame:
     """Per-term posting-list summary: document frequency, collection
     frequency, first document, and the head of the (doc_id, pos)-sorted
     posting list rendered ``doc:pos`` (an ordered-collect exercised
@@ -66,7 +59,7 @@ def inverted_index(
     ``dedup.longest_shared_spans``); the summary stats here aggregate
     scalably either way.
     """
-    p = token_postings(df, text_col, id_col)
+    p = token_postings(df)
     postings = F.slice(
         F.sort_array(F.collect_list(F.struct("doc_id", "pos"))), 1, postings_head
     )
@@ -83,12 +76,7 @@ def inverted_index(
     )
 
 
-def phrase_matches(
-    df: DataFrame,
-    phrase: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def phrase_matches(df: DataFrame, phrase: DataFrame) -> DataFrame:
     """Occurrences per document of an n-term phrase, by positional join.
 
     ``phrase`` is a 1-row frame with a space-separated ``phrase``
@@ -116,7 +104,7 @@ def phrase_matches(
         "phrase", F.col("off").cast("long").alias("off"), "term"
     )
     k = F.count_distinct("off")
-    p = token_postings(df, text_col, id_col)
+    p = token_postings(df)
     hits = p.join(F.broadcast(terms), "term").select(
         "doc_id", "phrase", (F.col("pos") - F.col("off")).alias("anchor"), "off"
     )
@@ -131,14 +119,7 @@ def phrase_matches(
     )
 
 
-def bm25_scores_multi(
-    df: DataFrame,
-    queries: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1_milli: int = 1200,
-    b_milli: int = 750,
-) -> DataFrame:
+def bm25_scores_multi(df: DataFrame, queries: DataFrame) -> DataFrame:
     """Integer BM25 scores for a batch of queries in one pass.
 
     ``queries`` is a (query_id, term) frame — one row per query term,
@@ -155,6 +136,7 @@ def bm25_scores_multi(
     broadcasts → broadcast fan-out to query ids → one (query, doc) hash
     agg. Same 100 TB shape as TF-IDF (q44).
     """
+    k1_milli, b_milli = 1200, 750
     qterms = queries.select("query_id", "term")
     # the postings explode feeds BOTH dl and tf — NO cache (same
     # convention as dedup.weighted_jaccard_pairs): each branch fuses
@@ -162,7 +144,7 @@ def bm25_scores_multi(
     # of magnitude cheaper than building and re-reading the in-memory
     # columnar cache (~45 us/row to build; reads contend under wide
     # task concurrency)
-    p = token_postings(df, text_col, id_col)
+    p = token_postings(df)
     dl = p.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     tf = (
         p.join(F.broadcast(qterms.select("term").distinct()), "term")
@@ -198,14 +180,13 @@ def bm25_scores_multi(
     )
 
 
-def top_ngram(
-    df: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def top_ngram(df: DataFrame) -> DataFrame:
     """The corpus's most frequent word n-gram as a 1-row frame
     (count desc, gram asc tie-break — deterministic on any engine).
     Feeds :func:`phrase_matches` as a data-derived query phrase."""
+    n = 3
     base = _widen_narrow_scan(df).select(
-        F.col(id_col).alias("doc_id"), words(text_col).alias("__ws")
+        F.col("doc_id"), words("text").alias("__ws")
     )
     w = F.col("__ws")
     grams = F.when(
@@ -226,9 +207,7 @@ def top_ngram(
     )
 
 
-def bigram_surprise(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def bigram_surprise(df: DataFrame) -> DataFrame:
     """Per-document mean bigram surprise — the integer stand-in for
     bigram-LM perplexity (CCNet-style quality filtering scores each doc
     under a corpus LM and keeps the low-perplexity tail; here the LM is
@@ -248,7 +227,7 @@ def bigram_surprise(
     the bigram key — the standard LM-training shape.
     """
     base = _widen_narrow_scan(df).select(
-        F.col(id_col).alias("doc_id"), words(text_col).alias("__ws")
+        F.col("doc_id"), words("text").alias("__ws")
     )
     w = F.col("__ws")
     bigrams = F.when(
@@ -285,9 +264,7 @@ def bigram_surprise(
     )
 
 
-def token_rarity(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def token_rarity(df: DataFrame) -> DataFrame:
     """Corpus-frequency-rank rarity score per document — the integer
     stand-in for unigram-LM perplexity (quality pipelines bucket docs by
     "how unusual are its words" before spending model-based scoring).
@@ -304,7 +281,7 @@ def token_rarity(
     bands), broadcast join back to tokens, one doc-key groupBy.
     ``mean_rank`` is a single int/int double division — bit-exact.
     """
-    p = token_postings(df, text_col, id_col)
+    p = token_postings(df)
     vocab = p.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
     ranked = vocab.select(
         "term",

@@ -30,12 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def grouped_ranks(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    n_parts: int | None = None,
-) -> DataFrame:
+def grouped_ranks(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Add ``rn`` (1-based rank of ``value_col`` within ``group_col``)
     and ``n`` (group size) to ``df``, computed with partition-parallel
     sorting as described in the module docstring.
@@ -50,10 +45,7 @@ def grouped_ranks(
     """
     import pandas as pd
 
-    if n_parts is None:
-        n_parts = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
+    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     t = df.repartitionByRange(n_parts, group_col, value_col).sortWithinPartitions(
         group_col, value_col
     )

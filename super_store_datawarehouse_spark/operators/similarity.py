@@ -31,13 +31,7 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     Executed as a blocked GEMM (the q34 technique): the query set is
@@ -77,7 +71,7 @@ def brute_force_topk(
     if we_persisted:
         queries = queries.persist()
     try:
-        q = _prep(queries, id_col, vec_col, "query_id", "qv", "qnrm")
+        q = _prep(queries, "vec_id", "embedding", "query_id", "qv", "qnrm")
         q_rows = q.toPandas()
     finally:
         if we_persisted:
@@ -122,7 +116,7 @@ def brute_force_topk(
                 {"query_id": out_q, "neighbor_id": out_n, "cosine": out_c}
             )
 
-    c = _prep(corpus, id_col, vec_col, "neighbor_id", "cv", "cnrm").select(
+    c = _prep(corpus, "vec_id", "embedding", "neighbor_id", "cv", "cnrm").select(
         "neighbor_id", "cv", "cnrm"
     )
     target = spark.sparkContext.defaultParallelism
@@ -189,10 +183,7 @@ def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    n_planes: int = 4,
     n_tables: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     dim: int = 64,
 ) -> DataFrame:
     """Approximate top-k: multi-table hyperplane LSH + exact re-rank.
@@ -203,9 +194,10 @@ def lsh_topk(
     collide in ANY of the L independent tables. Recall rises as
     1-(1-p^k)^L while the equi-join still touches only bucket-mates —
     at corpus scale the cost is L signature columns and an L-way
-    exploded join, not an all-pairs product. Tune (n_planes, n_tables):
-    more planes → smaller buckets; more tables → higher recall.
+    exploded join, not an all-pairs product. Each table has 4 planes;
+    more tables → higher recall.
     """
+    n_planes = 4
     sig_udf = _all_table_signatures(n_planes, n_tables, dim)
 
     def with_buckets(df: DataFrame, idc: str, vc: str, nrm: str) -> DataFrame:
@@ -213,8 +205,8 @@ def lsh_topk(
             idc, vc, nrm, F.posexplode(sig_udf(F.col(vc))).alias("tbl", "sig")
         )
 
-    c = _prep(corpus, id_col, vec_col, "neighbor_id", "cv", "cnrm")
-    q = _prep(queries, id_col, vec_col, "query_id", "qv", "qnrm")
+    c = _prep(corpus, "vec_id", "embedding", "neighbor_id", "cv", "cnrm")
+    q = _prep(queries, "vec_id", "embedding", "query_id", "qv", "qnrm")
     cb = with_buckets(c, "neighbor_id", "cv", "cnrm")
     qb = with_buckets(q, "query_id", "qv", "qnrm")
 
@@ -238,16 +230,7 @@ def lsh_topk(
     )
 
 
-def lsh_multiprobe_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_planes: int = 4,
-    n_tables: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-) -> DataFrame:
+def lsh_multiprobe_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Multi-probe hyperplane LSH (Lv et al. 2007): each query probes
     its own bucket PLUS every 1-bit-flip bucket in each table.
 
@@ -261,9 +244,10 @@ def lsh_multiprobe_topk(
     not another corpus explode — the cheapest recall knob there is.
     Candidates are exact-cosine re-ranked like :func:`lsh_topk`.
     """
+    k, n_planes, n_tables, dim = 5, 4, 4, 64
     sig_udf = _all_table_signatures(n_planes, n_tables, dim)
-    c = _prep(corpus, id_col, vec_col, "neighbor_id", "cv", "cnrm")
-    q = _prep(queries, id_col, vec_col, "query_id", "qv", "qnrm")
+    c = _prep(corpus, "vec_id", "embedding", "neighbor_id", "cv", "cnrm")
+    q = _prep(queries, "vec_id", "embedding", "query_id", "qv", "qnrm")
     cb = c.select(
         "neighbor_id", "cv", "cnrm",
         F.posexplode(sig_udf(F.col("cv"))).alias("tbl", "sig"),
@@ -320,18 +304,13 @@ def _prep(df: DataFrame, id_col: str, vec_col: str, id_out: str, v: str, nrm: st
     )
 
 
-def scalar_quantize_unit(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    levels: int = 127,
-) -> DataFrame:
+def scalar_quantize_unit(df: DataFrame) -> DataFrame:
     """Symmetric int8-style scalar quantization of L2-normalized vectors.
 
     The standard embedding-compression step (n-dim float32 → n bytes):
     each vector is divided by its L2 norm, then every component is
     mapped to ``floor(x/‖x‖ · levels + 0.5)`` — an integer in
-    [-levels, levels] for the default ``levels=127``. Zero-norm and
+    [-levels, levels] with ``levels`` = 127. Zero-norm and
     non-finite vectors are dropped under the same contract as
     :func:`_prep`.
 
@@ -346,8 +325,9 @@ def scalar_quantize_unit(
     Map-side only — no shuffle; at 100 TB this is the one-pass
     compression sweep before the index build.
     """
+    levels = 127
     v = "__v"
-    prepped = _prep(df, id_col, vec_col, id_col, v, "__nrm")
+    prepped = _prep(df, "vec_id", "embedding", "vec_id", v, "__nrm")
     scale = float(levels)
     # The norm must reach the lambda as a per-row ARGUMENT
     # (zip_with + array_repeat), never as a column reference inside the
@@ -358,12 +338,12 @@ def scalar_quantize_unit(
     # the fold evaluated once per row. Same IEEE ops on identical
     # operands, so the quantized grid is bit-identical (oracles pin it).
     return prepped.select(
-        id_col,
+        "vec_id",
         F.zip_with(
             F.col(v),
             F.array_repeat(F.col("__nrm"), F.size(F.col(v))),
             lambda x, n: F.floor(x / n * scale + F.lit(0.5)).cast("double"),
-        ).alias(vec_col),
+        ).alias("embedding"),
     )
 
 
@@ -513,8 +493,6 @@ def ivf_topk(
     k: int = 5,
     centroid_fraction: float | str = 0.03,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-style ANN: hash-sampled centroids partition the corpus into
     cells; each query exactly re-ranks only the cells its ``nprobe``
@@ -528,9 +506,9 @@ def ivf_topk(
     ``brute_force_topk``, so the whole algorithm (centroid choice,
     assignment, ranking) is reproducible by the SQL oracle.
     """
-    cents = ivf_centroids(corpus, centroid_fraction, id_col)
-    c_assign = ivf_assign(corpus, cents, 1, id_col, vec_col, "neighbor_id")
-    q_assign = ivf_assign(queries, cents, nprobe, id_col, vec_col, "query_id")
+    cents = ivf_centroids(corpus, centroid_fraction, "vec_id")
+    c_assign = ivf_assign(corpus, cents, 1, "vec_id", "embedding", "neighbor_id")
+    q_assign = ivf_assign(queries, cents, nprobe, "vec_id", "embedding", "query_id")
 
     # merge hint (round-12 sf1 broadcast audit): c_assign is one row per
     # CORPUS vector behind a stat-less mapInPandas — the static planner
@@ -538,10 +516,10 @@ def ivf_topk(
     # OOM pattern; the semantic-dedup assignment join carries the same
     # hint). AQE still converts back to broadcast at runtime from real
     # shuffle sizes, so toy corpora keep the fast plan.
-    c = _prep(corpus, id_col, vec_col, "neighbor_id", "cv", "cnrm").join(
+    c = _prep(corpus, "vec_id", "embedding", "neighbor_id", "cv", "cnrm").join(
         c_assign.hint("merge"), "neighbor_id"
     )
-    q = _prep(queries, id_col, vec_col, "query_id", "qv", "qnrm").join(
+    q = _prep(queries, "vec_id", "embedding", "query_id", "qv", "qnrm").join(
         q_assign, "query_id"
     )
     scored = (
@@ -567,12 +545,8 @@ def ivf_candidates_ranked(
     corpus: DataFrame,
     queries: DataFrame,
     centroid_fraction: float | str = 0.03,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_cells: int | None = None,
 ) -> DataFrame:
-    """Every corpus vector in a query's ``nprobe`` nearest cells, scored
+    """Every corpus vector in a query's ``nprobe`` = 4 nearest cells, scored
     ONCE and tagged with its cell's probe rank: ``(query_id,
     neighbor_id, probe_rank, cosine)``.
 
@@ -586,17 +560,18 @@ def ivf_candidates_ranked(
     is the same bit-exact double fold as :func:`ivf_topk`, so every
     derived frontier remains reproducible by the SQL oracle.
     """
-    cents = ivf_centroids(corpus, centroid_fraction, id_col, max_cells=max_cells)
-    ca = ivf_assign(corpus, cents, 1, id_col, vec_col, "neighbor_id")
+    nprobe = 4
+    cents = ivf_centroids(corpus, centroid_fraction, "vec_id")
+    ca = ivf_assign(corpus, cents, 1, "vec_id", "embedding", "neighbor_id")
     qa = ivf_assign(
-        queries, cents, nprobe, id_col, vec_col, "query_id", with_rank=True
+        queries, cents, nprobe, "vec_id", "embedding", "query_id", with_rank=True
     )
     # merge hint: ca is corpus-scaled and stat-less — never broadcast it
     # (see ivf_topk; round-12 sf1 broadcast audit)
-    c = _prep(corpus, id_col, vec_col, "neighbor_id", "cv", "cnrm").join(
+    c = _prep(corpus, "vec_id", "embedding", "neighbor_id", "cv", "cnrm").join(
         ca.hint("merge"), "neighbor_id"
     )
-    q = _prep(queries, id_col, vec_col, "query_id", "qv", "qnrm").join(
+    q = _prep(queries, "vec_id", "embedding", "query_id", "qv", "qnrm").join(
         qa, "query_id"
     )
     return (
@@ -613,9 +588,7 @@ def ivf_candidates_ranked(
     )
 
 
-def quantize_int8(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def quantize_int8(df: DataFrame) -> DataFrame:
     """Symmetric int8 quantization of an embedding column: 4× smaller
     vectors for the ANN candidate stage (exact re-rank can re-read fp32).
 
@@ -625,13 +598,13 @@ def quantize_int8(
     vectors are dropped (no defined scale). Pure codegen'd array
     expressions — no UDF.
     """
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     return (
-        df.select(F.col(id_col).alias(id_col), v.alias("v"))
+        df.select(F.col("vec_id"), v.alias("v"))
         .withColumn("maxabs", F.array_max(F.transform(F.col("v"), lambda x: F.abs(x))))
         .filter(F.col("maxabs") > 0)
         .select(
-            id_col,
+            "vec_id",
             (F.lit(127.0) / F.col("maxabs")).alias("scale"),
             # scale reaches the lambda as a per-row zip_with ARGUMENT,
             # not a lambda-body column reference: CollapseProject
@@ -693,8 +666,6 @@ def pq_topk(
     change) — every float op is a fixed IEEE tree, bit-identical in the
     DuckDB oracle.
     """
-    from super_store_datawarehouse_spark.operators.sampling import hash_bucket
-
     if dim is None:
         # Declared dim beats a driver-side probe: at 100 TB a .first()
         # here is a whole job before planning even starts.
@@ -1119,28 +1090,24 @@ def pq_topk_refined(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    m: int = 4,
     dim: int | None = None,
     codebook_buckets: int = 300,
-    salt: int = 13,
-    scale: int = 1000,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """PQ ADC top-k against the Lloyd-refined codebook: identical join
     topology to :func:`pq_topk` (encode + broadcast distance tables),
     only the codewords change — demonstrating that codebook training
     slots into the pipeline without touching its scale shape."""
+    m, salt, scale = 4, 13, 1000
     if dim is None:
         raise ValueError("pass dim= explicitly (the embedding length)")
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sd = dim // m
     sub = pq_refined_codebook(
-        corpus, m, dim, codebook_buckets, salt, scale, vec_col, id_col
+        corpus, m, dim, codebook_buckets, salt, scale, "embedding", "vec_id"
     )
     codes, dtab = _pq_codes_and_dtab(
-        corpus, queries, m, sd, codebook_buckets, salt, vec_col, id_col, sub=sub
+        corpus, queries, m, sd, codebook_buckets, salt, "embedding", "vec_id", sub=sub
     )
     return pq_adc_topk(codes, dtab, k)
 

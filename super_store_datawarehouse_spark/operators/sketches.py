@@ -38,25 +38,19 @@ def poly_word_hash(col: Column | str) -> Column:
     )
 
 
-def cms_coeffs(depth: int, seed: int = 7) -> list[tuple[int, int]]:
+def cms_coeffs(depth: int) -> list[tuple[int, int]]:
     """Affine row-hash coefficients (aᵢ, bᵢ), both < 2³¹."""
-    return _minhash_coeffs(depth, seed=seed)
+    return _minhash_coeffs(depth, seed=7)
 
 
-def countmin_build(
-    tokens: DataFrame,
-    token_col: str = "word",
-    depth: int = 4,
-    width: int = 64,
-    seed: int = 7,
-) -> DataFrame:
+def countmin_build(tokens: DataFrame, depth: int = 4, width: int = 64) -> DataFrame:
     """Build the sketch from a token *stream* (duplicates = counts).
 
     Returns (r, pos, cnt) — at most depth·width rows. Cells never
     touched are simply absent (an implicit zero).
     """
-    coeffs = cms_coeffs(depth, seed)
-    hs = poly_word_hash(token_col)
+    coeffs = cms_coeffs(depth)
+    hs = poly_word_hash("word")
     cells = tokens.select(
         F.explode(
             F.array(
@@ -76,20 +70,18 @@ def countmin_build(
 def countmin_estimate(
     sketch: DataFrame,
     items: DataFrame,
-    token_col: str = "word",
     depth: int = 4,
     width: int = 64,
-    seed: int = 7,
 ) -> DataFrame:
     """Point-estimate each item's frequency: min over the d counters.
 
     The sketch side is tiny (≤ depth·width rows) — broadcast it so the
     estimate never shuffles the item table.
     """
-    coeffs = cms_coeffs(depth, seed)
-    hs = poly_word_hash(token_col)
+    coeffs = cms_coeffs(depth)
+    hs = poly_word_hash("word")
     probes = items.select(
-        F.col(token_col),
+        F.col("word"),
         F.explode(
             F.array(
                 *[
@@ -101,17 +93,15 @@ def countmin_estimate(
                 ]
             )
         ).alias("c"),
-    ).select(token_col, "c.r", "c.pos")
+    ).select("word", "c.r", "c.pos")
     return (
         probes.join(F.broadcast(sketch), ["r", "pos"], "left")
-        .groupBy(token_col)
+        .groupBy("word")
         .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("est_cnt"))
     )
 
 
-def misra_gries_candidates(
-    tokens: DataFrame, token_col: str = "word", k: int = 30
-) -> DataFrame:
+def misra_gries_candidates(tokens: DataFrame, k: int = 30) -> DataFrame:
     """Per-partition Misra–Gries summaries (Misra & Gries 1982) — the
     deterministic heavy-hitter sketch: k counters per partition, so the
     full pass over an arbitrarily large token stream returns at most
@@ -132,12 +122,12 @@ def misra_gries_candidates(
     """
     import pandas as pd
 
-    out_schema = f"{token_col} string, mg_cnt long"
+    out_schema = "word string, mg_cnt long"
 
     def summarize(batches):
         counters: dict[str, int] = {}
         for pdf in batches:
-            vc = pdf[token_col].value_counts()
+            vc = pdf["word"].value_counts()
             for w, c in vc.items():
                 counters[w] = counters.get(w, 0) + int(c)
             if len(counters) > k:
@@ -146,24 +136,22 @@ def misra_gries_candidates(
                     w: c - kth for w, c in counters.items() if c - kth > 0
                 }
         yield pd.DataFrame(
-            {token_col: list(counters.keys()), "mg_cnt": list(counters.values())}
+            {"word": list(counters.keys()), "mg_cnt": list(counters.values())}
         )
 
-    return tokens.select(token_col).mapInPandas(summarize, schema=out_schema)
+    return tokens.select("word").mapInPandas(summarize, schema=out_schema)
 
 
-def heavy_hitters_exact(
-    tokens: DataFrame, token_col: str = "word", k: int = 30
-) -> DataFrame:
+def heavy_hitters_exact(tokens: DataFrame, k: int = 30) -> DataFrame:
     """Exact heavy hitters (count·(k+1) > N) at sketch cost: MG
     candidates (tiny) → semi-join recount of candidates only → exact
     threshold filter. The only full-data shuffle keys on the candidate
     subset, never the whole vocabulary."""
-    cand = misra_gries_candidates(tokens, token_col, k).select(token_col).distinct()
+    cand = misra_gries_candidates(tokens, k).select("word").distinct()
     total = tokens.count()
     return (
-        tokens.join(F.broadcast(cand), token_col, "left_semi")
-        .groupBy(token_col)
+        tokens.join(F.broadcast(cand), "word", "left_semi")
+        .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .filter(F.col("cnt") * (k + 1) > F.lit(total))
     )
@@ -260,16 +248,14 @@ BLOOM_MOD = CMS_MOD  # one load-bearing modulus: the affine maps reduce
 # over the same field as poly_word_hash, or cross-engine replay breaks
 
 
-def _positions_of_hash(
-    h: Column, m_bits: int, k_hashes: int, seed: int = 7
-) -> Column:
+def _positions_of_hash(h: Column, m_bits: int, k_hashes: int) -> Column:
     """Affine maps ``(aᵢ·h + bᵢ) % 2³¹ % m`` over an ALREADY-COMPUTED
     key hash — callers bind the polynomial fold to a column first, so
     the O(len) char fold runs once per row, not once per hash function
     (the bound-column house rule: the array constructor references its
     element expressions independently and HOF/array paths get no common
     subexpression elimination)."""
-    coeffs = _minhash_coeffs(k_hashes, seed=seed)
+    coeffs = _minhash_coeffs(k_hashes, seed=7)
     return F.array(
         *[
             ((F.lit(a) * h + F.lit(b)) % F.lit(BLOOM_MOD) % F.lit(m_bits)).cast("long")
@@ -278,7 +264,7 @@ def _positions_of_hash(
     )
 
 
-def bloom_positions(key: Column | str, m_bits: int, k_hashes: int, seed: int = 7) -> Column:
+def bloom_positions(key: Column | str, m_bits: int, k_hashes: int) -> Column:
     """The ``k_hashes`` bit positions a key sets in an ``m_bits`` Bloom
     filter (Bloom 1970): affine maps over the portable polynomial key
     hash — the same coefficient generator the CMS rows use, so
@@ -287,16 +273,10 @@ def bloom_positions(key: Column | str, m_bits: int, k_hashes: int, seed: int = 7
     the same bit twice). Inline convenience form — inside operators,
     bind ``poly_word_hash`` to a column and use ``_positions_of_hash``
     so the char fold is evaluated once per row."""
-    return _positions_of_hash(poly_word_hash(key), m_bits, k_hashes, seed)
+    return _positions_of_hash(poly_word_hash(key), m_bits, k_hashes)
 
 
-def bloom_build(
-    keys: DataFrame,
-    key_col: str,
-    m_bits: int = 256,
-    k_hashes: int = 2,
-    seed: int = 7,
-) -> DataFrame:
+def bloom_build(keys: DataFrame, key_col: str, m_bits: int = 256) -> DataFrame:
     """Build a Bloom filter over a key set as its SET-BIT LIST: one row
     per distinct set position (≤ min(m_bits, k·|keys|) rows).
 
@@ -306,11 +286,12 @@ def bloom_build(
     construction. Build is one explode + distinct (hash-agg shuffle on
     the position key, at most m distinct values).
     """
+    k_hashes = 2
     return (
         keys.select(poly_word_hash(key_col).alias("__h"))
         .select(
             F.explode_outer(
-                _positions_of_hash(F.col("__h"), m_bits, k_hashes, seed)
+                _positions_of_hash(F.col("__h"), m_bits, k_hashes)
             ).alias("pos")
         )
         .filter(F.col("pos").isNotNull())
@@ -327,14 +308,7 @@ def bloom_bits(bloom: DataFrame) -> list[int]:
     return sorted(r["pos"] for r in bloom.collect())
 
 
-def bloom_probe(
-    df: DataFrame,
-    key_col: str,
-    bits: list[int],
-    m_bits: int = 256,
-    k_hashes: int = 2,
-    seed: int = 7,
-) -> DataFrame:
+def bloom_probe(df: DataFrame, key_col: str, bits: list[int], m_bits: int = 256) -> DataFrame:
     """Flag each row whose key is Bloom-POSITIVE (all ``k_hashes``
     positions set). One-sided like the real thing: every true member is
     positive; non-members are positive with the classic
@@ -346,9 +320,10 @@ def bloom_probe(
     of an exact anti-join at 100 TB: the anti-join then only has to
     process the Bloom-positive sliver.
     """
+    k_hashes = 2
     if not bits:
         return df.withColumn("bloom_positive", F.lit(False))
-    pos = _positions_of_hash(F.col("__h"), m_bits, k_hashes, seed)
+    pos = _positions_of_hash(F.col("__h"), m_bits, k_hashes)
     return (
         df.withColumn("__h", poly_word_hash(key_col))
         .withColumn("bloom_positive", F.forall(pos, lambda p: p.isin(*bits)))

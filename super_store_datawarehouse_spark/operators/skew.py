@@ -39,13 +39,7 @@ def salted_count_distinct(
     )
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    n_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
+def salted_join(left: DataFrame, right: DataFrame, on: str, how: str = "inner") -> DataFrame:
     """Equi-join with the left (large/skewed) side salted into n sub-keys
     and the right side replicated n× — identical result to
     ``left.join(right, on, how)``, but a hot key occupies n tasks
@@ -59,6 +53,7 @@ def salted_join(
     per-partition row index, so it spreads rows of the same key without
     requiring any extra column from the caller.
     """
+    n_salts = 8
     allowed = {"inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi", "left_anti", "leftanti"}
     if how not in allowed:
         raise ValueError(

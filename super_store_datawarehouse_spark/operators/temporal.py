@@ -19,7 +19,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _BUCKET_SECONDS = {"1 hour": 3600, "1 day": 86400, "1 minute": 60}
@@ -183,15 +183,13 @@ def interval_join(
     on: str,
     left_start: str,
     left_end: str,
-    right_ts: str = "ts",
-    bucket: str = "1 hour",
 ) -> DataFrame:
-    """Range join: pairs (left, right) with ``left_start < right_ts <=
+    """Range join: pairs (left, right) with ``left_start < right.ts <=
     left_end`` and equal keys, via bucketed equi-join + exact residual
     filter. Returns the left rows joined to each matching right row
     (right columns prefixed ``r_``).
     """
-    step = _BUCKET_SECONDS[bucket]
+    step = _BUCKET_SECONDS["1 hour"]
     lb = left.withColumn(
         "__bucket",
         F.explode(
@@ -203,15 +201,15 @@ def interval_join(
     )
     rb = right.select(
         F.col(on).alias("__rkey"),
-        (F.unix_timestamp(right_ts) / step).cast("long").alias("__bucket"),
+        (F.unix_timestamp("ts") / step).cast("long").alias("__bucket"),
         F.struct(*right.columns).alias("__rrow"),
     )
     joined = lb.join(
         rb,
         (F.col(on) == F.col("__rkey")) & (lb["__bucket"] == rb["__bucket"]),
     ).filter(
-        (F.col(f"__rrow.{right_ts}") > F.col(left_start))
-        & (F.col(f"__rrow.{right_ts}") <= F.col(left_end))
+        (F.col("__rrow.ts") > F.col(left_start))
+        & (F.col("__rrow.ts") <= F.col(left_end))
     )
     return joined.select(
         *left.columns,
@@ -219,14 +217,7 @@ def interval_join(
     )
 
 
-def seasonal_decompose(
-    series: DataFrame,
-    ts_col: str = "h",
-    val_col: str = "y",
-    period: int = 24,
-    series_keys: list[str] | None = None,
-    phase_expr: Column | None = None,
-) -> DataFrame:
+def seasonal_decompose(series: DataFrame, period: int = 24) -> DataFrame:
     """Classical additive seasonal decomposition (the moving-average
     method of Macaulay 1931, the `decompose()` of every stats stack):
     trend by centered moving average, seasonal indices as the per-phase
@@ -248,23 +239,19 @@ def seasonal_decompose(
     full centered window (the first/last ``period//2``) are dropped, as
     in every classical implementation.
 
-    Scale: one window pass ordered by time. With ``series_keys`` the
-    window partitions by key (a million independent series parallelize
-    perfectly); a single unkeyed series is a series-length frame — the
-    corpus was already reduced by the upstream aggregation, declared.
+    Scale: one window pass ordered by time over a single unkeyed
+    series, a series-length frame — the corpus was already reduced by
+    the upstream aggregation, declared.
     The 2·period-row seasonal-index frame broadcasts back.
     """
-    keys, base, seas, scale = _decompose_base(
-        series, ts_col, val_col, period, series_keys, phase_expr
-    )
+    base, seas, scale = _decompose_base(series, period)
     trend = F.col("__tnum").cast("double") / F.lit(float(scale))
     seasonal = F.col("__snum").cast("double") / (
         F.lit(float(scale)) * F.col("__sn").cast("double")
     )
     return (
-        base.join(F.broadcast(seas), keys + ["phase"])
+        base.join(F.broadcast(seas), "phase")
         .select(
-            *keys,
             "h",
             "y",
             trend.alias("trend"),
@@ -274,28 +261,16 @@ def seasonal_decompose(
     )
 
 
-def _decompose_base(
-    series: DataFrame,
-    ts_col: str,
-    val_col: str,
-    period: int,
-    series_keys: list[str] | None,
-    phase_expr: Column | None = None,
-) -> tuple[list[str], DataFrame, DataFrame, int]:
+def _decompose_base(series: DataFrame, period: int) -> tuple[DataFrame, DataFrame, int]:
     """Shared integer core of the decomposition: per-row scaled trend
     numerator + phase (``base``) and per-phase seasonal numerator sums
     (``seas``), everything int64 — see :func:`seasonal_decompose` for
     the exactness contract."""
-    keys = list(series_keys or [])
     half = period // 2
     scale = 2 * period if period % 2 == 0 else period
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(ts_col)
-        .rowsBetween(-half, half)
-    )
-    wlag = Window.partitionBy(*keys).orderBy(ts_col)
-    y = F.col(val_col).cast("long")
+    w = Window.orderBy("h").rowsBetween(-half, half)
+    wlag = Window.orderBy("h")
+    y = F.col("y").cast("long")
     if period % 2 == 0:
         # 2 x (sum of 2·half+1 rows) - ends == classical half-weighted MA,
         # scaled by 2·period
@@ -309,17 +284,12 @@ def _decompose_base(
         tnum = F.sum(y).over(w)
         full = F.count(F.lit(1)).over(w) == period
     # integer div end-to-end (CAST(double AS BIGINT) rounds in DuckDB
-    # but truncates in Spark — the house cross-engine trap). The default
+    # but truncates in Spark — the house cross-engine trap). The phase
     # assumes HOURLY spacing — see seasonal_anomalies' docstring.
-    phase = (
-        phase_expr
-        if phase_expr is not None
-        else F.pmod(F.expr(f"unix_timestamp({ts_col}) div 3600"), F.lit(period))
-    )
+    phase = F.pmod(F.expr("unix_timestamp(h) div 3600"), F.lit(period))
     base = (
         series.select(
-            *keys,
-            F.col(ts_col).alias("h"),
+            "h",
             y.alias("y"),
             tnum.alias("__tnum"),
             full.alias("__full"),
@@ -327,22 +297,14 @@ def _decompose_base(
         )
         .filter(F.col("__full"))
     )
-    seas = base.groupBy(*keys, "phase").agg(
+    seas = base.groupBy("phase").agg(
         F.sum(F.lit(scale) * F.col("y") - F.col("__tnum")).alias("__snum"),
         F.count(F.lit(1)).alias("__sn"),
     )
-    return keys, base, seas, scale
+    return base, seas, scale
 
 
-def seasonal_anomalies(
-    series: DataFrame,
-    ts_col: str = "h",
-    val_col: str = "y",
-    period: int = 24,
-    n_sigma: int = 2,
-    series_keys: list[str] | None = None,
-    phase_expr: Column | None = None,
-) -> DataFrame:
+def seasonal_anomalies(series: DataFrame, period: int = 24, n_sigma: int = 2) -> DataFrame:
     """Anomaly flags on the decomposition remainder, judged against the
     remainder's PER-PHASE spread (3 am behaves like other 3 ams) — and
     the test is an INTEGER comparison, so the flag itself value-oracles
@@ -366,22 +328,16 @@ def seasonal_anomalies(
     ~8·10³. Beyond that, pre-scale ``y`` down (the flag is
     scale-invariant) or window the series.
 
-    ``phase_expr`` overrides the phase derivation — the default
-    (hours-since-epoch mod period) assumes an HOURLY series; any other
-    spacing aliases phases silently (a daily series at period 12 puts
-    every row in one phase), so pass e.g.
-    ``F.pmod(F.expr("datediff(h, DATE'2024-01-01')"), F.lit(7))`` for
-    daily data with weekly seasonality.
+    The phase (hours-since-epoch mod period) assumes an HOURLY series;
+    any other spacing aliases phases silently (a daily series at period
+    12 puts every row in one phase).
     """
-    keys, base, seas, scale = _decompose_base(
-        series, ts_col, val_col, period, series_keys, phase_expr
-    )
-    joined = base.join(F.broadcast(seas), keys + ["phase"])
+    base, seas, scale = _decompose_base(series, period)
+    joined = base.join(F.broadcast(seas), "phase")
     num = F.col("__sn") * (
         F.lit(scale) * F.col("y") - F.col("__tnum")
     ) - F.col("__snum")
     scored = joined.select(
-        *keys,
         "h",
         "y",
         "phase",
@@ -389,7 +345,7 @@ def seasonal_anomalies(
         (F.lit(float(scale)) * F.col("__sn").cast("double")).alias("__d"),
         "__sn",
     )
-    stats = scored.groupBy(*keys, "phase").agg(
+    stats = scored.groupBy("phase").agg(
         F.sum(F.col("__num") * F.col("__num")).alias("__ss"),
         F.sum("__num").alias("__s1"),
         F.count(F.lit(1)).alias("__n"),
@@ -403,9 +359,8 @@ def seasonal_anomalies(
         > F.lit(n_sigma * n_sigma) * F.col("__ss")
     )
     return (
-        scored.join(F.broadcast(stats), keys + ["phase"])
+        scored.join(F.broadcast(stats), "phase")
         .select(
-            *keys,
             "h",
             "y",
             "phase",

@@ -42,24 +42,25 @@ def token_count_bpe(text: Column | str) -> Column:
     return F.regexp_count(c, F.lit(BPE_TOKEN_PATTERN))
 
 
-def stopword_ratio(text: Column | str, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
+def stopword_ratio(text: Column | str) -> Column:
     """Fraction of whitespace tokens that are known stopwords.
 
     Integer/integer division — bit-exact across engines.
     """
     w = words(text)
-    hits = F.size(F.filter(w, lambda x: x.isin(*stopwords)))
+    hits = F.size(F.filter(w, lambda x: x.isin(*EN_STOPWORDS)))
     # NULL for empty docs rather than an ANSI divide-by-zero abort
     return F.try_divide(hits.cast("double"), F.size(w).cast("double"))
 
 
-def lang_id(text: Column | str, en_threshold: float = 0.05) -> Column:
+def lang_id(text: Column | str) -> Column:
     """N-gram-free language-ID heuristic: English-stopword density.
 
     A production version extends this to per-language marker lists and
     character-class votes (CJK ranges → zh/ja, diacritics → eu langs);
     the decision structure stays a CASE expression either way.
     """
+    en_threshold = 0.05
     c = F.col(text) if isinstance(text, str) else text
     return (
         F.when(c.rlike("[一-鿿]"), F.lit("zh"))
@@ -94,21 +95,23 @@ def quality_components(text: Column | str) -> dict[str, Column]:
     }
 
 
-def quality_keep(text: Column | str, min_tokens: int = 10, max_avg_token_len: float = 12.0) -> Column:
+def quality_keep(text: Column | str, min_tokens: int = 10) -> Column:
     """Keep/drop classification from integer-threshold rules (no float edges)."""
+    max_avg_token_len = 12.0
     comps = quality_components(text)
     return (
         (comps["n_tokens"] >= min_tokens) & (comps["avg_token_len"] <= max_avg_token_len)
     )
 
 
-def poly_fingerprint(text: Column | str, prefix_len: int = 64) -> Column:
-    """Rolling polynomial hash of the first ``prefix_len`` characters.
+def poly_fingerprint(text: Column | str) -> Column:
+    """Rolling polynomial hash of the first 64 characters.
 
     ``h = fold(h*31 + ascii(ch)) mod 1e9+7`` — pure bigint arithmetic, so
     any engine computes the identical fingerprint (unlike xxhash/murmur,
     which differ per engine). Used for cheap document-prefix bucketing.
     """
+    prefix_len = 64
     c = F.col(text) if isinstance(text, str) else text
     chars = F.split(F.substring(c, 1, prefix_len), "")
     codes = F.transform(chars, lambda ch: F.ascii(ch).cast("long"))
@@ -192,9 +195,7 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-def stopword_hits_by_lang(
-    docs: DataFrame, text_col: str = "text", lang_col: str = "lang"
-) -> DataFrame:
+def stopword_hits_by_lang(docs: DataFrame) -> DataFrame:
     """Per-document stopword hits using the language's own stopword list.
 
     The lists live in a 4-row (lang, stops) DataFrame broadcast to every
@@ -206,10 +207,10 @@ def stopword_hits_by_lang(
     spark = docs.sparkSession
     rows = [(lang, list(ws)) for lang, ws in sorted(LANG_STOPWORDS.items())]
     lookup = spark.createDataFrame(rows, "lang string, stops array<string>")
-    w = words(F.col(text_col))
+    w = words(F.col("text"))
     empty = F.array().cast("array<string>")
     return (
-        docs.join(F.broadcast(lookup), docs[lang_col] == lookup["lang"], "left")
+        docs.join(F.broadcast(lookup), docs["lang"] == lookup["lang"], "left")
         .drop(lookup["lang"])
         .withColumn("stops", F.coalesce("stops", empty))
         .withColumn("n_tokens", F.size(w).cast("long"))
@@ -223,12 +224,7 @@ def stopword_hits_by_lang(
     )
 
 
-def bpe_learn(
-    words: DataFrame,
-    word_col: str = "w",
-    freq_col: str = "freq",
-    n_merges: int = 3,
-):
+def bpe_learn(words: DataFrame, n_merges: int = 3):
     """Learn the first ``n_merges`` byte-pair-encoding merges from a
     (word, frequency) table — Sennrich et al. 2016's tokenizer-training
     loop, distributed.
@@ -250,13 +246,13 @@ def bpe_learn(
     """
     spark = words.sparkSession
     seq = words.select(
-        F.col(word_col),
+        F.col("w"),
         F.concat(
             F.lit(" "),
-            F.array_join(F.split(F.col(word_col), ""), "  "),
+            F.array_join(F.split(F.col("w"), ""), "  "),
             F.lit(" "),
         ).alias("s"),
-        F.col(freq_col).cast("long").alias("freq"),
+        F.col("freq").cast("long").alias("freq"),
     ).localCheckpoint()
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, n_merges + 1):
@@ -291,13 +287,7 @@ def bpe_learn(
 CDC_MOD = 1_000_000_007
 
 
-def cdc_chunks(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 4,
-    divisor: int = 16,
-) -> DataFrame:
+def cdc_chunks(df: DataFrame) -> DataFrame:
     """Content-defined chunking at word granularity (Rabin-style): a
     rolling polynomial hash over the trailing ``window`` words places a
     chunk boundary wherever the hash is divisible by ``divisor`` —
@@ -316,7 +306,8 @@ def cdc_chunks(
     Scale: per-doc work is O(words · window) inside one codegen'd
     projection — no shuffle until the caller aggregates chunks.
     """
-    w = words(text_col)
+    window, divisor = 4, 16
+    w = words("text")
     code = lambda ch: F.ascii(ch).cast("long")
     fold = lambda h, c: (h * 31 + c) % F.lit(CDC_MOD)
     hw = F.transform(
@@ -326,7 +317,7 @@ def cdc_chunks(
         ),
     )
     base = df.select(
-        F.col(id_col).alias("doc_id"), w.alias("ws"), hw.alias("hw")
+        F.col("doc_id"), w.alias("ws"), hw.alias("hw")
     ).filter(F.size("ws") > 0)
     n = F.size("ws")
     idx = F.sequence(F.lit(0), n - 1)
@@ -418,12 +409,7 @@ UNIGRAM_COUNT_CAP = 100_000
 UNIGRAM_MAX_PIECE = 4
 
 
-def unigram_segment(
-    df: DataFrame,
-    word_col: str = "w",
-    freq_col: str = "freq",
-    max_piece: int = UNIGRAM_MAX_PIECE,
-) -> DataFrame:
+def unigram_segment(df: DataFrame, max_piece: int = UNIGRAM_MAX_PIECE) -> DataFrame:
     """Unigram-LM-style subword segmentation by exact Viterbi DP — the
     SentencePiece decoding step (Kudo 2018), distributed, integer-exact.
 
@@ -459,8 +445,8 @@ def unigram_segment(
     # and the DP output turns nondeterministic.
     base = (
         df.select(
-            F.col(word_col).alias("__w"),
-            F.col(freq_col).cast("long").alias("__f"),
+            F.col("w").alias("__w"),
+            F.col("freq").cast("long").alias("__f"),
         )
         .groupBy("__w")
         .agg(F.sum("__f").alias("__f"))
@@ -576,13 +562,7 @@ REPETITION_TOP_CHAR_FRAC = 0.20
 REPETITION_DUP_FRAC = 0.60
 
 
-def repetition_signals(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_n: int = 2,
-    dup_n: int = 3,
-) -> DataFrame:
+def repetition_signals(df: DataFrame) -> DataFrame:
     """Gopher-style repetition quality signals per document.
 
     Rae et al. 2021 (Gopher, appendix A1.1) and Penedo et al. 2023
@@ -621,14 +601,13 @@ def repetition_signals(
     IEEE-754 engine reproduces them bit-exactly; overlapping grams
     share characters (the standard Gopher approximation).
     """
-    if top_n == dup_n:
-        raise ValueError("top_n and dup_n must differ (tagged union would double-count)")
+    top_n, dup_n = 2, 3
     # narrow-scan widen guard, same as every sibling explode operator
     # (function-local import: dedup imports text at module level)
     from super_store_datawarehouse_spark.operators.dedup import _widen_narrow_scan
 
     base = _widen_narrow_scan(df).select(
-        F.col(id_col).alias("doc_id"), words(text_col).alias("__ws")
+        F.col("doc_id"), words("text").alias("__ws")
     )
     w = F.col("__ws")
 

@@ -90,7 +90,7 @@ def q14_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x317_ngram_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.2)
+    return dedup.ngram_jaccard_pairs(docs, threshold=0.2)
 
 
 # --------------------------------------------------------------------------
@@ -164,7 +164,7 @@ _Q19_BANDS = "\nUNION ALL\n".join(
 )
 def q19_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_pairs_md5(docs, threshold=0.2)
+    return dedup.minhash_lsh_pairs_md5(docs)
 
 
 # --------------------------------------------------------------------------
@@ -292,7 +292,7 @@ def x286_token_counts_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x287_poly_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.select("doc_id", poly_fingerprint("text", 64).alias("fingerprint"))
+        docs.select("doc_id", poly_fingerprint("text").alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(F.min("doc_id").alias("first_doc"), F.count(F.lit(1)).alias("n_docs"))
     )
@@ -645,7 +645,7 @@ def x28_salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_orderkey").alias("o_orderkey"), "l_extendedprice"
     )
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    joined = salted_join(li, orders, on="o_orderkey", n_salts=8)
+    joined = salted_join(li, orders, on="o_orderkey")
     return (
         joined.groupBy("o_orderpriority")
         .agg(
@@ -774,7 +774,6 @@ def x04_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.simhash_near_pairs(
         docs,
-        max_hamming=3,
         signatures=dedup.simhash_portable(docs),
         sig_bits=32,
     )
@@ -1316,7 +1315,7 @@ def x325_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from super_store_datawarehouse_spark.operators.graph import dedup_by_components
 
     docs = load_table(spark, sf_dir, "documents")
-    edges = dedup.minhash_lsh_pairs_md5(docs, threshold=0.2).select("id_a", "id_b")
+    edges = dedup.minhash_lsh_pairs_md5(docs).select("id_a", "id_b")
     return dedup_by_components(docs, edges).select("doc_id", "component", "is_kept")
 
 
@@ -1443,7 +1442,7 @@ def q45_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from super_store_datawarehouse_spark.operators.clustering import kmeans_quantized
 
     emb = load_table(spark, sf_dir, "embeddings")
-    assigned = kmeans_quantized(emb, k=8, iters=2, scale=1000)
+    assigned = kmeans_quantized(emb, k=8, iters=2)
     return (
         assigned.groupBy("cluster")
         .agg(
@@ -1686,7 +1685,7 @@ def x261_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from super_store_datawarehouse_spark.operators.dedup import minhash_portable
 
     docs = load_table(spark, sf_dir, "documents")
-    return minhash_portable(docs, n=3, num_hashes=16)
+    return minhash_portable(docs)
 
 
 # --------------------------------------------------------------------------
@@ -1953,7 +1952,6 @@ def x131_fuzzy_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     linked = blocked_fuzzy_link(
         dirty, clean, "dirty_id", "dirty_name", "cid", "p_name",
-        max_dist=2, len_band=2,
     )
     return linked.select(
         F.col("l_id").alias("dirty_id"),
@@ -2073,7 +2071,7 @@ def x134_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return similarity.pq_topk_refined(
-        emb, queries, k=5, m=4, dim=64, codebook_buckets=300, salt=13, scale=1000
+        emb, queries, k=5, dim=64, codebook_buckets=300
     )
 
 
@@ -2106,7 +2104,7 @@ def x134_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q35_semantic_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return dedup.semantic_near_dup_pairs(emb, threshold=0.35, k=8, iters=2)
+    return dedup.semantic_near_dup_pairs(emb, threshold=0.35, k=8)
 
 
 # --------------------------------------------------------------------------
@@ -2144,7 +2142,7 @@ def x136_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_suppkey").alias("s_suppkey"),
         (cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias("rev_cents"),
     )
-    joined = bloom_join(li, supp, on="s_suppkey", how="inner")
+    joined = bloom_join(li, supp, on="s_suppkey")
     return (
         joined.groupBy("s_suppkey", "s_name")
         .agg(
@@ -2212,12 +2210,12 @@ _X141_POLY = (
 )
 _X141_CELLS = "\n      UNION ALL ".join(
     f"SELECT {r} AS r, ((hs * {a} + {b}) % 2147483648) % {_X141_W} AS pos FROM h"
-    for r, (a, b) in enumerate(_x141_coeffs(_X141_D, seed=7))
+    for r, (a, b) in enumerate(_x141_coeffs(_X141_D))
 )
 _X141_PROBES = "\n      UNION ALL ".join(
     f"SELECT word, true_cnt, {r} AS r,"
     f" ((hs * {a} + {b}) % 2147483648) % {_X141_W} AS pos FROM items"
-    for r, (a, b) in enumerate(_x141_coeffs(_X141_D, seed=7))
+    for r, (a, b) in enumerate(_x141_coeffs(_X141_D))
 )
 
 
@@ -2255,9 +2253,9 @@ def x141_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(words("text")).alias("word"))
-    sketch = countmin_build(toks, "word", depth=_X141_D, width=_X141_W)
+    sketch = countmin_build(toks, depth=_X141_D, width=_X141_W)
     items = toks.groupBy("word").agg(F.count(F.lit(1)).alias("true_cnt"))
-    est = countmin_estimate(sketch, items, "word", depth=_X141_D, width=_X141_W)
+    est = countmin_estimate(sketch, items, depth=_X141_D, width=_X141_W)
     return (
         items.join(est, "word")
         .select("word", "true_cnt", "est_cnt")
@@ -2481,7 +2479,7 @@ def x177_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("word")
     )
     words = words.localCheckpoint()  # one materialization feeds all 3 passes
-    return heavy_hitters_exact(words, "word", k=30).orderBy("word")
+    return heavy_hitters_exact(words, k=30).orderBy("word")
 
 
 # --------------------------------------------------------------------------
@@ -2548,7 +2546,7 @@ def q50_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    merges, _ = bpe_learn(wf, word_col="w", freq_col="freq", n_merges=3)
+    merges, _ = bpe_learn(wf, n_merges=3)
     return merges.orderBy("merge_rank")
 
 
@@ -3449,7 +3447,7 @@ def x271_longest_shared_span(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x273_span_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return dedup.cross_split_span_contamination(
-        docs, n=5, max_doc_freq=10
+        docs
     ).orderBy("eval_doc")
 
 
@@ -3465,7 +3463,8 @@ def x273_span_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the dynamic program is value-hash verified. Words are capped at 16
 # chars on both sides to bound the unroll.
 # --------------------------------------------------------------------------
-def _unigram_oracle(max_len: int = 16, max_piece: int = 4) -> str:
+def _unigram_oracle() -> str:
+    max_len, max_piece = 16, 4
     ctes = ["""
     toks AS MATERIALIZED (
       SELECT w, CAST(COUNT(*) AS BIGINT) AS freq FROM (
@@ -3796,7 +3795,7 @@ def x279_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return phrase_matches(docs, top_ngram(docs, n=3)).orderBy("doc_id")
+    return phrase_matches(docs, top_ngram(docs)).orderBy("doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -3937,8 +3936,8 @@ def q10_bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # benchmark keys: the eval split + a deliberately leaked 3% of train
     keys = docs.filter((F.col("b") < 300) | (F.col("b") >= 9700)).select("norm")
     tr = docs.filter(F.col("b") >= 300)
-    bits = bloom_bits(bloom_build(keys, "norm", m_bits=256, k_hashes=2))
-    probed = bloom_probe(tr, "norm", bits, m_bits=256, k_hashes=2)
+    bits = bloom_bits(bloom_build(keys, "norm", m_bits=256))
+    probed = bloom_probe(tr, "norm", bits, m_bits=256)
     # exact-membership audit join — this is the expensive path the Bloom
     # pre-filter exists to shrink; no broadcast hint (the key set is a
     # corpus fraction, so Catalyst/AQE must pick the strategy by size)
@@ -4086,7 +4085,7 @@ def x319_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
         F.count(F.lit(1)).alias("y")
     )
-    return seasonal_decompose(hourly, "h", "y", period=24).orderBy("h")
+    return seasonal_decompose(hourly, period=24).orderBy("h")
 
 
 # --------------------------------------------------------------------------
@@ -4164,7 +4163,7 @@ def x313_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("y"),
     )
-    return seasonal_anomalies(hourly, "h", "y", period=24, n_sigma=2).orderBy("h")
+    return seasonal_anomalies(hourly, period=24, n_sigma=2).orderBy("h")
 
 
 # --------------------------------------------------------------------------
@@ -4586,7 +4585,7 @@ def q30_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x326_weighted_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.weighted_jaccard_pairs(
-        docs, n=2, max_doc_freq=25, threshold_permille=100
+        docs, max_doc_freq=25, threshold_permille=100
     )
     return pairs.orderBy(
         F.desc("wj_pm"), F.desc("min_sum"), "doc_a", "doc_b"
@@ -4948,12 +4947,12 @@ def x327_lsh_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "neighbor_id"
     )
     single = (
-        similarity.lsh_topk(emb, q, k=5, n_planes=4, n_tables=4)
+        similarity.lsh_topk(emb, q, k=5, n_tables=4)
         .select("query_id", "neighbor_id")
         .withColumn("s_hit", F.lit(1))
     )
     multi = (
-        similarity.lsh_multiprobe_topk(emb, q, k=5, n_planes=4, n_tables=4)
+        similarity.lsh_multiprobe_topk(emb, q)
         .select("query_id", "neighbor_id")
         .withColumn("m_hit", F.lit(1))
     )
@@ -5276,7 +5275,7 @@ def x306_ivf_nprobe_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # overflow falls back to an eager scoped cache instead of raising
     # (ADVICE r8 medium)
     scored = localize(
-        similarity.ivf_candidates_ranked(emb, q, 0.03, nprobe=4),
+        similarity.ivf_candidates_ranked(emb, q, 0.03),
         on_overflow="cache",
     )
     out = None
@@ -5436,10 +5435,10 @@ _X317_SQL_BODY = _HARNESS["x317_ngram_jaccard_exact"][1]
 )
 def x114_minhash_lsh_xxhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    lsh = dedup.minhash_lsh_pairs(docs, threshold=0.2).select(
+    lsh = dedup.minhash_lsh_pairs(docs).select(
         "id_a", "id_b", F.col("jaccard").alias("j_lsh")
     )
-    exact = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.2).select(
+    exact = dedup.ngram_jaccard_pairs(docs, threshold=0.2).select(
         "id_a", "id_b", F.col("jaccard").alias("j_exact")
     )
     joined = lsh.join(exact, ["id_a", "id_b"], "full_outer")
@@ -5751,7 +5750,7 @@ def q13_near_dup_overlap_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle frame is toy-regime regardless of the SOURCE scan size the
     # auto gate would read (ADVICE r8).
     e = dedup.ngram_jaccard_pairs(
-        universe, n=3, threshold=0.2, corpus_cache=False
+        universe, threshold=0.2, corpus_cache=False
     ).select("id_a", "id_b")
     # Band rows of the UNIVERSE via a fresh banding pass over the
     # ~(base_n + comp_n × member_cap)-doc sample instead of re-deriving
@@ -5904,7 +5903,7 @@ def x331_ivfadc_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             "the two-half reuse contract is broken"
         )
     queries = emb.filter(F.col("vec_id") < 10)
-    return ann_index.ivfadc_index_search(spark, path, queries, k=5, nprobe=2)
+    return ann_index.ivfadc_index_search(spark, path, queries, k=5)
 
 
 # IVF update round-trip: build on the EVEN-id half (centroids frozen
@@ -5936,7 +5935,7 @@ def x332_ivf_index_update_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     if not appended:
         raise AssertionError("ivf_index_update appended no rows for a non-empty batch")
     queries = emb.filter(F.col("vec_id") < 10)
-    return ann_index.ivf_index_search(spark, path, queries, k=5, nprobe=2)
+    return ann_index.ivf_index_search(spark, path, queries, k=5)
 
 
 # PQ update round-trip: codes encoded under the even-half's FROZEN

@@ -33,8 +33,9 @@ def _esc(s: object) -> str:
     return html.escape(str(s), quote=True)
 
 
-def _nice_ticks(lo: float, hi: float, n: int = 5) -> list[float]:
+def _nice_ticks(lo: float, hi: float) -> list[float]:
     """Round tick positions covering [lo, hi] (matplotlib-ish)."""
+    n = 5
     if hi <= lo:
         hi = lo + 1.0
     raw = (hi - lo) / max(n, 1)
@@ -83,11 +84,7 @@ def _y_axis(parts: list[str], lo: float, hi: float) -> None:
         )
 
 
-def bar_chart(
-    pairs: Sequence[tuple[object, float]],
-    title: str = "",
-    color: str = "#4878a8",
-) -> str:
+def bar_chart(pairs: Sequence[tuple[object, float]], title: str = "") -> str:
     """Vertical bar chart: [(label, value), ...] → SVG string."""
     vals = [float(v) for _, v in pairs]
     lo = min(0.0, min(vals, default=0.0))
@@ -104,7 +101,7 @@ def bar_chart(
         top, height = (y, y0 - y) if float(v) >= 0 else (y0, y - y0)
         parts.append(
             f'<rect class="bar" x="{x:.1f}" y="{top:.1f}" width="{bw:.1f}" '
-            f'height="{max(height, 0):.1f}" fill="{color}">'
+            f'height="{max(height, 0):.1f}" fill="#4878a8">'
             f"<title>{_esc(label)}: {float(v):g}</title></rect>"
         )
         if n <= 40:  # readable label density only
@@ -122,11 +119,7 @@ def bar_chart(
     return "".join(parts)
 
 
-def line_chart(
-    pairs: Sequence[tuple[object, float]],
-    title: str = "",
-    color: str = "#4878a8",
-) -> str:
+def line_chart(pairs: Sequence[tuple[object, float]], title: str = "") -> str:
     """Line chart over an ordered category axis: [(label, value), ...]."""
     vals = [float(v) for _, v in pairs]
     lo = min(0.0, min(vals, default=0.0))
@@ -142,7 +135,7 @@ def line_chart(
         pts.append(f"{x:.1f},{y:.1f}")
     parts.append(
         f'<polyline class="series" points="{" ".join(pts)}" fill="none" '
-        f'stroke="{color}" stroke-width="2"/>'
+        'stroke="#4878a8" stroke-width="2"/>'
     )
     step = max(1, n // 12)
     for i, (label, _) in enumerate(pairs):

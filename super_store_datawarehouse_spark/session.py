@@ -8,9 +8,10 @@ same key wins.
 - AQE on (coalesce partitions, skew-join handling): at 100 TB the static
   shuffle-partition count is always wrong somewhere; AQE re-plans per stage.
 - ``local[N]`` and ``spark.sql.shuffle.partitions`` both come from one read
-  of ``SPARK_GRAFT_CPUS`` (default 32) per call; on a real cluster the
-  partition count should be ~2-3x total executor cores (AQE coalesces
-  down, it does not split up-front partitions).
+  of ``SPARK_GRAFT_CPUS`` per call, by default the number of CPUs this
+  process may run on; on a real cluster the partition count should be
+  ~2-3x total executor cores (AQE coalesces down, it does not split
+  up-front partitions).
 - Broadcast threshold 64 MiB: the warehouse dimensions are driver-built
   local relations of at most ``dims.MAX_MEMBERS`` members each, so every
   dimension join plans as a BroadcastHashJoin with no shuffle.
@@ -43,7 +44,6 @@ from pyspark.sql import SparkSession
 
 def get_spark(
     app_name: str = "superstore-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
@@ -53,10 +53,10 @@ def get_spark(
     this call launches the JVM; a session already running keeps the JVM
     it has.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(f"local[{cpus}]")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -116,7 +116,6 @@ def checkpoint_cut(df):
     import shutil
     import tempfile
 
-    from pyspark import StorageLevel
 
     spark = df.sparkSession
     jsc = spark.sparkContext
@@ -183,9 +182,9 @@ _SCOPED_CACHE_LOCK = threading.Lock()
 _SCOPED_CACHED_FRAMES: list = []
 
 
-def scoped_cache(df, storage_level=None):
-    """``df.cache()`` (or ``persist(storage_level)``) registered for
-    deferred release via :func:`release_scoped_caches`.
+def scoped_cache(df):
+    """``df.cache()`` registered for deferred release via
+    :func:`release_scoped_caches`.
 
     Reach for this ONLY when the shared frame is re-consumed by plans
     whose canonical form differs (so ReuseExchange cannot dedupe them)
@@ -203,7 +202,7 @@ def scoped_cache(df, storage_level=None):
     32 partitions vs 1.1 s at 4 — the cost follows task concurrency,
     not rows).
     """
-    df = df.persist(storage_level) if storage_level is not None else df.cache()
+    df = df.cache()
     with _SCOPED_CACHE_LOCK:
         _SCOPED_CACHED_FRAMES.append(df)
     return df

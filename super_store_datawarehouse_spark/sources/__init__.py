@@ -7,6 +7,6 @@
 - ``sinks``: parquet warehouse writer, Excel export, rejects sink (S6-S8).
 """
 
-from super_store_datawarehouse_spark.sources.testdata import TESTDATA_TABLES, load_table, register_views
+from super_store_datawarehouse_spark.sources.testdata import TESTDATA_TABLES, load_table
 
-__all__ = ["TESTDATA_TABLES", "load_table", "register_views"]
+__all__ = ["TESTDATA_TABLES", "load_table"]

@@ -1,7 +1,5 @@
 """Warehouse sinks (SURVEY §2.1 S6-S8).
 
-- Delta sink: ``write_warehouse``'s transactional format, gated on the
-  delta-spark bindings.
 - rejects sink: the designed error-file path ("File: Errors.txt" in the
   BPMN diagrams; skip-and-count at etl.py:489-496) as a real table.
 - write-audit-publish: a parquet write that returns metrics observed by
@@ -20,34 +18,6 @@ from pyspark.sql import DataFrame
 def write_rejects(rejects: DataFrame, out_dir: str) -> None:
     """Persist unresolved-key rows (left_anti output) as a rejects table."""
     rejects.write.mode("overwrite").parquet(os.path.join(out_dir, "_rejects"))
-
-
-def delta_available() -> bool:
-    """True when the delta-spark bindings are importable."""
-    try:
-        import delta  # noqa: F401
-    except ImportError:
-        return False
-    return True
-
-
-def write_delta_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ACID table sink via Delta Lake when the runtime carries
-    delta-spark; parquet is the storage layer either way.
-
-    Delta is the right sink at 100 TB (transactional overwrite,
-    concurrent readers, OPTIMIZE/Z-ORDER compaction, time travel); this
-    container lacks the package, so the capability is gated rather than
-    stubbed silently — callers can branch on ``delta_available()`` and
-    fall back to plain parquet + overwrite (same layout, weaker
-    isolation).
-    """
-    if not delta_available():
-        raise ImportError(
-            "delta-spark not installed: write plain parquet as the "
-            "non-transactional fallback"
-        )
-    df.write.format("delta").mode(mode).save(path)
 
 
 def compact_parquet(
@@ -154,12 +124,7 @@ def recover_compact(path: str) -> str | None:
     return None
 
 
-def write_with_metrics(
-    df: DataFrame,
-    path: str,
-    metrics: dict | None = None,
-    mode: str = "overwrite",
-) -> dict:
+def write_with_metrics(df: DataFrame, path: str, metrics: dict | None = None) -> dict:
     """Parquet write that returns pipeline metrics from the SAME job
     that wrote the data (``df.observe`` / ``Observation``).
 
@@ -176,5 +141,5 @@ def write_with_metrics(
         metrics = {"n_rows": F.count(F.lit(1))}
     obs = Observation()
     observed = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
-    observed.write.mode(mode).parquet(path)
+    observed.write.mode("overwrite").parquet(path)
     return dict(obs.get)

@@ -96,9 +96,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(path)
     _TABLE_CACHE[key] = df
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name in TESTDATA_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -45,7 +45,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -230,20 +229,14 @@ def txn_read(
     return spark.read.parquet(*files)
 
 
-def txn_prune_files(
-    path: str,
-    col: str,
-    lo=None,
-    hi=None,
-    version: int | None = None,
-) -> tuple[list[str], int]:
-    """Manifest-level file skipping: absolute paths of the snapshot's
+def txn_prune_files(path: str, col: str, lo=None, hi=None) -> tuple[list[str], int]:
+    """Manifest-level file skipping: absolute paths of the head snapshot's
     files whose [min, max] for ``col`` overlaps [lo, hi] (either bound
     may be None = unbounded), plus the snapshot's total file count.
     Files without recorded stats for ``col`` are conservatively kept —
     skipping is an optimization, never a correctness lever.
     """
-    v, files = _snapshot_files(path, version)
+    v, files = _snapshot_files(path, None)
     if v is None:
         raise FileNotFoundError(f"no committed versions at {path}")
     stats = _read_manifest(path, v).get("stats", {})
@@ -261,15 +254,8 @@ def txn_prune_files(
     return kept, len(files)
 
 
-def txn_scan(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    lo=None,
-    hi=None,
-    version: int | None = None,
-) -> DataFrame:
-    """Snapshot read with manifest min/max file skipping on one column,
+def txn_scan(spark: SparkSession, path: str, col: str, lo=None, hi=None) -> DataFrame:
+    """Head-snapshot read with manifest min/max file skipping on one column,
     plus the residual row filter (skipping prunes whole files; rows
     inside surviving files still need the predicate). Equivalent to
     ``txn_read(...).filter(lo <= col <= hi)`` — only faster, because
@@ -277,9 +263,9 @@ def txn_scan(
     """
     from pyspark.sql import functions as F
 
-    kept, _ = txn_prune_files(path, col, lo, hi, version)
+    kept, _ = txn_prune_files(path, col, lo, hi)
     if not kept:
-        v, files = _snapshot_files(path, version)
+        v, files = _snapshot_files(path, None)
         # preserve schema via an empty read of any snapshot file
         return spark.read.parquet(*files).limit(0).filter(F.lit(False))
     df = spark.read.parquet(*kept)
@@ -369,16 +355,15 @@ def txn_diff_versions(path: str, v_old: int, v_new: int) -> dict:
     }
 
 
-def txn_vacuum(path: str, keep_versions: int = 1) -> int:
-    """Garbage-collect: retain the newest ``keep_versions`` manifests,
-    delete older manifests plus any data file none of the retained
-    manifests reference (including orphans from crashed writes).
-    Returns the number of data files deleted. Time travel is only
-    possible within the retained window afterwards."""
+def txn_vacuum(path: str) -> int:
+    """Garbage-collect: retain the newest manifest, delete older
+    manifests plus any data file the head does not reference (including
+    orphans from crashed writes). Returns the number of data files
+    deleted. Time travel is no longer possible afterwards."""
     versions = txn_versions(path)
     if not versions:
         return 0
-    keep = versions[-max(1, keep_versions):]
+    keep = versions[-1:]
     live: set[str] = set()
     for v in keep:
         live.update(_read_manifest(path, v)["files"])

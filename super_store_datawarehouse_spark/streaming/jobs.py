@@ -168,9 +168,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
-def hourly_counts_stream(
-    spark: SparkSession, sf_dir: str, watermark: str = "2 hours"
-) -> DataFrame:
+def hourly_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time windows per event_type, run to completion.
 
     Complete output mode so the finished result equals the batch
@@ -180,7 +178,7 @@ def hourly_counts_stream(
     """
     agg = (
         read_events_stream(spark, sf_dir)
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -202,9 +200,7 @@ def hourly_counts_stream(
     return spark.table(name)
 
 
-def dedup_events_stream(
-    spark: SparkSession, sf_dir: str, watermark: str = "2 hours"
-) -> DataFrame:
+def dedup_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup on event_id within the watermark horizon.
 
     dropDuplicatesWithinWatermark keeps per-key state only until the
@@ -213,7 +209,7 @@ def dedup_events_stream(
     """
     deduped = (
         read_events_stream(spark, sf_dir)
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "2 hours")
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "ts", "user_id", "event_type", "value")
     )
@@ -231,9 +227,7 @@ def dedup_events_stream(
     return spark.table(name)
 
 
-def purchase_click_join_stream(
-    spark: SparkSession, sf_dir: str, lookback: str = "1 hour"
-) -> DataFrame:
+def purchase_click_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join: each purchase paired with every click by
     the same user in the preceding hour.
 
@@ -266,7 +260,7 @@ def purchase_click_join_stream(
     joined = purchases.join(
         clicks,
         (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}"))
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 hour"))
         & (F.col("c_ts") <= F.col("p_ts")),
         "inner",
     ).select("purchase_id", F.col("p_user").alias("user_id"), "p_ts", "click_id", "c_ts")
@@ -316,10 +310,12 @@ class _ProgressCounter:
         self._listener = _L()
         spark.streams.addListener(self._listener)
 
-    def non_empty_batches(self, query, drain_timeout_s: float = 10.0) -> int:
+    def non_empty_batches(self, query) -> int:
         """Non-empty batch count for ``query``, draining the async bus
         until its final progress (``lastProgress``) has been observed."""
         import time as _time
+
+        drain_timeout_s = 10.0
 
         last = query.lastProgress
         if last is not None:
@@ -342,8 +338,6 @@ def stream_sessionize_to_parquet(
     spark: SparkSession,
     src_dir: str,
     out_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
     checkpoint: str | None = None,
 ) -> int:
     """Streaming sessionization: ``session_window`` gap-merge per user
@@ -364,8 +358,8 @@ def stream_sessionize_to_parquet(
     """
     sess = (
         read_events_stream(spark, src_dir)
-        .withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap).alias("w"))
+        .withWatermark("ts", "2 hours")
+        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.min("event_id").alias("first_event_id"),
@@ -492,9 +486,6 @@ def stream_upserts_to_parquet(
     state stays on disk between triggers, so restarts resume from the
     last swapped table. Returns the number of micro-batches merged.
     """
-    import shutil
-    import tempfile
-
     from super_store_datawarehouse_spark.operators.cdc import apply_upserts
 
     ev = read_events_stream(spark, src_dir).select(
@@ -586,8 +577,6 @@ def stream_countmin_to_parquet(
     spark: SparkSession,
     src_dir: str,
     out_dir: str,
-    depth: int = 4,
-    width: int = 64,
     checkpoint: str | None = None,
 ) -> int:
     """Maintain a count-min sketch over a token stream: each micro-batch
@@ -623,8 +612,6 @@ def stream_countmin_to_parquet(
     Returns micro-batches processed (skips excluded).
     """
     import json
-    import shutil
-    import tempfile
 
     from super_store_datawarehouse_spark.operators.sketches import countmin_build
 
@@ -660,7 +647,7 @@ def stream_countmin_to_parquet(
         )
         if batch_id <= meta["applied_batch"]:
             return  # replayed batch: already folded into the sketch
-        delta = countmin_build(batch_df, "word", depth=depth, width=width)
+        delta = countmin_build(batch_df)
         if state is not None:
             merged = (
                 state.select("r", "pos", "cnt")
@@ -727,9 +714,6 @@ def stream_misra_gries_to_parquet(
     ``last_applied`` restores it if a crash strands the rename.
     Returns micro-batches processed (skips excluded).
     """
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     ev = read_events_stream(spark, src_dir).select(
@@ -824,9 +808,6 @@ def stream_hll_to_parquet(
     (``operators.sketches.hll_distinct``) reads the same registers, so
     stream == batch exactly (pinned by the test).
     """
-    import shutil
-    import tempfile
-
     ev = read_events_stream(spark, src_dir).select("event_type", "user_id")
     batches = {"n": 0}
     applied_marker = out_dir + ".applied_batch"  # legacy side file (read-only)
@@ -895,7 +876,6 @@ def stream_drift_monitor(
     src_dir: str,
     reference: DataFrame,
     out_path: str,
-    bins: int = 10,
     checkpoint: str | None = None,
 ) -> int:
     """Per-micro-batch distribution drift vs a frozen reference window:
@@ -906,6 +886,7 @@ def stream_drift_monitor(
     shape of a data-quality monitor on an ingest stream (alert when
     chi2 jumps).
     """
+    bins = 10
     ref_stats = (
         reference.select(F.round(F.col("value") * 100).cast("long").alias("cents"))
         .agg(
@@ -1181,7 +1162,6 @@ def stream_bloom_dedup_to_parquet(
     out_dir: str,
     state_dir: str,
     m_bits: int = 4096,
-    k_hashes: int = 2,
     checkpoint: str | None = None,
 ) -> int:
     """Streaming approximate first-occurrence dedup with BOUNDED state:
@@ -1220,12 +1200,7 @@ def stream_bloom_dedup_to_parquet(
 
     Returns micro-batches processed.
     """
-    import shutil
-    import tempfile
-
-    from super_store_datawarehouse_spark.operators.sketches import (
-        bloom_positions,
-    )
+    k_hashes = 2
 
     ev = read_events_stream(spark, src_dir).select(
         "event_id",
@@ -1487,9 +1462,6 @@ def stream_quantile_summary_to_parquet(
     directory swap with .prev crash recovery, lineage check raising on
     a foreign checkpoint. Returns micro-batches applied.
     """
-    import shutil
-    import tempfile
-
     from super_store_datawarehouse_spark.operators.sampling import knuth_hash
     from super_store_datawarehouse_spark.operators.sketches import (
         weighted_rank_compaction,

@@ -46,49 +46,14 @@ def build_warehouse(spark: SparkSession, csv_path: str = DEFAULT_CSV_PATH) -> di
     }
 
 
-def write_warehouse(
-    tables: dict[str, DataFrame], out_dir: str, fmt: str = "parquet"
-) -> str:
-    """Persist every table columnar (the reference's INSERT sink, S6).
+def write_warehouse(tables: dict[str, DataFrame], out_dir: str) -> None:
+    """Persist every table as parquet (the reference's INSERT sink, S6).
 
     Set-oriented columnar writes — the reference's 500/50/10/100-row
     commit batching (etl.py:538-541 etc.) has no equivalent cost here.
-
-    ``fmt``: ``"parquet"`` (default), ``"orc"``, or ``"delta"`` — the
-    stated production approach is "Spark SQL + DataFrame API over
-    Delta/Parquet", so the Delta toggle is first-class. When
-    ``fmt="delta"`` and the runtime lacks delta-spark (this sandbox
-    does), the write FALLS BACK LOUDLY to parquet — a logged warning
-    per call, same layout, weaker isolation: the capability is gated,
-    never silently stubbed. Returns the format
-    actually written.
     """
-    if fmt == "delta":
-        from super_store_datawarehouse_spark.sources.sinks import (
-            delta_available,
-            write_delta_table,
-        )
-
-        if delta_available():
-            for name, df in tables.items():
-                write_delta_table(df, f"{out_dir}/{name}")
-            return "delta"
-        import warnings
-
-        warnings.warn(
-            "write_warehouse(fmt='delta'): delta-spark is not installed in "
-            "this runtime — falling back to plain parquet (same columnar "
-            "layout, no transaction log / time travel / MERGE). Install "
-            "delta-spark and set the catalog extensions to get ACID tables.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        fmt = "parquet"
-    if fmt not in ("parquet", "orc"):
-        raise ValueError(f"write_warehouse: unknown format {fmt!r}")
     for name, df in tables.items():
-        df.write.mode("overwrite").format(fmt).save(f"{out_dir}/{name}")
-    return fmt
+        df.write.mode("overwrite").parquet(f"{out_dir}/{name}")
 
 
 def register_warehouse_views(tables: dict[str, DataFrame]) -> None:

@@ -43,7 +43,6 @@ def _run_bloom(spark, tmp_path, ckpt="ckpt"):
         str(tmp_path / "out"),
         str(tmp_path / "state"),
         m_bits=1024,
-        k_hashes=2,
         checkpoint=str(tmp_path / ckpt),
     )
 

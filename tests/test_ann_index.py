@@ -32,7 +32,7 @@ def test_build_then_search_equals_in_plan_ivf(spark, vectors, tmp_path):
     queries = vectors.filter("vec_id < 5")
     got = {
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in ivf_index_search(spark, path, queries, k=3, nprobe=2).collect()
+        for r in ivf_index_search(spark, path, queries, k=3).collect()
     }
     want = {
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
@@ -62,7 +62,7 @@ def test_incremental_update_appends_into_existing_cells(spark, vectors, tmp_path
     assert used <= cent_ids
     # new vectors are findable: query one of the appended vectors
     q = batch.filter("vec_id = 250")
-    hits = ivf_index_search(spark, path, q, k=3, nprobe=2).collect()
+    hits = ivf_index_search(spark, path, q, k=3).collect()
     assert len(hits) >= 1
     assert all(r["query_id"] == 250 for r in hits)
 
@@ -145,7 +145,7 @@ def test_ivfadc_index_search_equals_in_plan_pq_ivf_topk(spark, vectors, tmp_path
     queries = vectors.filter("vec_id < 5")
     got = {
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["adist"])
-        for r in ivfadc_index_search(spark, path, queries, k=3, nprobe=2).collect()
+        for r in ivfadc_index_search(spark, path, queries, k=3).collect()
     }
     want = {
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["adist"])
@@ -223,8 +223,7 @@ def test_pq_index_refined_matches_in_plan_refined_topk(spark, vectors, tmp_path)
     want = {
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["adist"])
         for r in pq_topk_refined(
-            vectors, queries, k=3, m=4, dim=8, codebook_buckets=500,
-            salt=13, scale=1000,
+            vectors, queries, k=3, dim=8, codebook_buckets=500,
         ).collect()
     }
     assert got == want
@@ -275,4 +274,4 @@ def test_ivfadc_index_ensure_reuse_and_partial_rebuild(spark, vectors, tmp_path)
 
     # the rebuilt index answers queries
     q = vectors.filter("vec_id < 3")
-    assert len(ivfadc_index_search(spark, path, q, k=3, nprobe=2).collect()) > 0
+    assert len(ivfadc_index_search(spark, path, q, k=3).collect()) > 0

@@ -39,7 +39,7 @@ def _plan(df) -> str:
 
 def test_weighted_jaccard_is_uncached_and_reuses_exchange(spark):
     docs = load_table(spark, TESTDATA_SF, "documents")
-    out = dedup.weighted_jaccard_pairs(docs, n=2, max_doc_freq=25)
+    out = dedup.weighted_jaccard_pairs(docs, max_doc_freq=25)
     out.collect()  # executedPlan is final only after an action under AQE
     p = _plan(out)
     assert "InMemoryTableScan" not in p  # rule 1: no cache on the tf frame
@@ -50,7 +50,7 @@ def test_weighted_jaccard_is_uncached_and_reuses_exchange(spark):
 
 def test_ngram_jaccard_is_uncached(spark):
     docs = load_table(spark, TESTDATA_SF, "documents")
-    out = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.2)
+    out = dedup.ngram_jaccard_pairs(docs, threshold=0.2)
     out.collect()
     assert "InMemoryTableScan" not in _plan(out)
     release_scoped_caches()
@@ -69,7 +69,7 @@ def test_ppjoin_caches_ranked_exactly_once(spark):
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
     docs = load_table(spark, TESTDATA_SF, "documents")
-    out = dedup.ppjoin_jaccard_pairs(docs, n=3, threshold=0.8)
+    out = dedup.ppjoin_jaccard_pairs(docs, threshold=0.8)
     out.collect()
     p = _plan(out)
     assert "InMemoryTableScan" in p

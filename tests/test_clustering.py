@@ -55,7 +55,7 @@ def test_kmeans_matches_numpy_replica(spark, emb_pdf):
     got = {
         r["vec_id"]: (r["cluster"], r["dist2"])
         for r in kmeans_quantized(
-            load_table(spark, TESTDATA_SF, "embeddings"), k=5, iters=3, scale=1000
+            load_table(spark, TESTDATA_SF, "embeddings"), k=5, iters=3
         ).collect()
     }
     ids = emb_pdf["vec_id"].to_numpy()

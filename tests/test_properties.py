@@ -128,7 +128,7 @@ def test_countmin_estimate_upper_bounds_truth(spark, words):
     )
 
     toks = spark.createDataFrame([(w,) for w in words], ["word"])
-    sketch = countmin_build(toks, "word", depth=3, width=8)
+    sketch = countmin_build(toks, depth=3, width=8)
     per_row = Counter()
     for r in sketch.collect():
         per_row[r["r"]] += r["cnt"]
@@ -136,7 +136,7 @@ def test_countmin_estimate_upper_bounds_truth(spark, words):
     est = {
         r["word"]: r["est_cnt"]
         for r in countmin_estimate(
-            sketch, toks.distinct(), "word", depth=3, width=8
+            sketch, toks.distinct(), depth=3, width=8
         ).collect()
     }
     truth = Counter(words)

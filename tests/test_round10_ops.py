@@ -103,7 +103,7 @@ def test_stream_ivf_index_update_crash_resumes_exactly_once(
     assert cells.select("vid").distinct().count() == 240  # no dup, none missing
 
     q = vectors.filter("vec_id = 239")
-    hits = ivf_index_search(spark, index, q, k=3, nprobe=2).collect()
+    hits = ivf_index_search(spark, index, q, k=3).collect()
     assert len(hits) >= 1 and all(r["query_id"] == 239 for r in hits)
 
 
@@ -178,7 +178,7 @@ def test_stored_codes_faces_use_wide_pivot(spark, vectors, tmp_path):
         vectors, path2, m=4, dim=8, codebook_buckets=500, salt=13,
         codebook_size=16, centroid_fraction=0.05, centroid_salt=7,
     )
-    p2 = _plan(ivfadc_index_search(spark, path2, queries, k=3, nprobe=2))
+    p2 = _plan(ivfadc_index_search(spark, path2, queries, k=3))
     assert "collect_list" not in p2
     assert p2.count("BroadcastHashJoin") >= 4
 
@@ -447,4 +447,4 @@ def test_ivf_search_rejects_non_integral_query_ids(spark, vectors, tmp_path):
         "concat('doc-', cast(vec_id AS string)) AS vec_id", "embedding"
     )
     with pytest.raises(TypeError, match="integral"):
-        ivf_index_search(spark, index, q, k=3, nprobe=2)
+        ivf_index_search(spark, index, q, k=3)

@@ -32,8 +32,8 @@ def test_index_search_refuses_unbounded_query_assignment(
     ivf_index_build(vectors, path, max_cells=4)
     # within the bound: works
     q = vectors.filter("vec_id < 10")
-    assert ivf_index_search(spark, path, q, k=3, nprobe=2).count() > 0
+    assert ivf_index_search(spark, path, q, k=3).count() > 0
     # shrink the bound below |queries| x nprobe: must raise, not collect
     monkeypatch.setattr(ann_mod, "_MAX_ASSIGN_ROWS", 4)
     with pytest.raises(ValueError, match="contract-small"):
-        ivf_index_search(spark, path, q, k=3, nprobe=2).count()
+        ivf_index_search(spark, path, q, k=3).count()

@@ -66,7 +66,7 @@ def test_kmeans_fused_update_matches_unfused(spark):
     rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(300)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
     qdf = emb.select(
-        F.col("vec_id"), quantize_vec(F.col("embedding"), 1000).alias("q")
+        F.col("vec_id"), quantize_vec(F.col("embedding")).alias("q")
     )
     seeds = [
         (i, list(r["q"]))

@@ -27,7 +27,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def test_ivf_candidates_ranked_nested_probe_contract(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
-    scored = similarity.ivf_candidates_ranked(emb, q, 0.1, nprobe=4).cache()
+    scored = similarity.ivf_candidates_ranked(emb, q, 0.1).cache()
     try:
         for p in (1, 2, 4):
             # candidate set at probe_rank <= p == independent nprobe=p run

@@ -313,7 +313,7 @@ def test_stream_countmin_equals_batch(tmp_path, spark):
     want = {
         (r["r"], r["pos"]): r["cnt"]
         for r in countmin_build(
-            events.select(F.col("event_type").alias("word")), "word"
+            events.select(F.col("event_type").alias("word"))
         ).collect()
     }
     assert got == want
@@ -358,7 +358,7 @@ def test_stream_countmin_restart_exactly_once(tmp_path, spark):
     want = {
         (r["r"], r["pos"]): r["cnt"]
         for r in countmin_build(
-            events.select(F.col("event_type").alias("word")), "word"
+            events.select(F.col("event_type").alias("word"))
         ).collect()
     }
     assert got == want
@@ -700,7 +700,7 @@ def test_stream_ivf_index_update_applies_batches_exactly_once(tmp_path, spark):
 
     # a streamed vector is immediately searchable
     q = vectors.filter("vec_id = 299")
-    hits = ivf_index_search(spark, index, q, k=3, nprobe=2).collect()
+    hits = ivf_index_search(spark, index, q, k=3).collect()
     assert len(hits) >= 1 and all(r["query_id"] == 299 for r in hits)
 
 
@@ -763,7 +763,7 @@ def test_stream_ivf_index_update_fresh_data_after_checkpoint_loss(tmp_path, spar
 
     # the late-arriving vectors are searchable
     q = vectors.filter("vec_id = 259")
-    hits = ivf_index_search(spark, index, q, k=3, nprobe=2).collect()
+    hits = ivf_index_search(spark, index, q, k=3).collect()
     assert len(hits) >= 1 and all(r["query_id"] == 259 for r in hits)
 
 
@@ -802,7 +802,7 @@ def test_stream_bloom_dedup_matches_sequential_replay(tmp_path, spark):
     state = str(tmp_path / "bloom_state")
     ckpt = str(tmp_path / "ckpt")
     n = stream_bloom_dedup_to_parquet(
-        spark, src, out, state, m_bits=1024, k_hashes=2, checkpoint=ckpt
+        spark, src, out, state, m_bits=1024, checkpoint=ckpt
     )
     assert n == 2
     got = spark.read.parquet(out)
@@ -846,7 +846,7 @@ def test_stream_bloom_dedup_matches_sequential_replay(tmp_path, spark):
 
     # restart on the same checkpoint: nothing new emitted, no crash
     n2 = stream_bloom_dedup_to_parquet(
-        spark, src, out, state, m_bits=1024, k_hashes=2, checkpoint=ckpt
+        spark, src, out, state, m_bits=1024, checkpoint=ckpt
     )
     assert n2 == 0
     assert spark.read.parquet(out).count() == len(keys)
@@ -880,7 +880,7 @@ def test_stream_bloom_dedup_checkpoint_loss_self_heals(tmp_path, spark):
     out = str(tmp_path / "accepted")
     state = str(tmp_path / "bloom_state")
     ckpt = str(tmp_path / "ckpt")
-    stream_bloom_dedup_to_parquet(spark, src, out, state, 1024, 2, checkpoint=ckpt)
+    stream_bloom_dedup_to_parquet(spark, src, out, state, 1024, checkpoint=ckpt)
     before = sorted(
         (r["user_id"], r["event_type"])
         for r in spark.read.parquet(out).collect()
@@ -888,7 +888,7 @@ def test_stream_bloom_dedup_checkpoint_loss_self_heals(tmp_path, spark):
     assert before
     # checkpoint loss: ids restart, every file redelivered
     shutil.rmtree(ckpt)
-    n = stream_bloom_dedup_to_parquet(spark, src, out, state, 1024, 2, checkpoint=ckpt)
+    n = stream_bloom_dedup_to_parquet(spark, src, out, state, 1024, checkpoint=ckpt)
     assert n == 2  # batches processed, none emitted
     after = sorted(
         (r["user_id"], r["event_type"])
@@ -1090,8 +1090,7 @@ def test_stream_sessionize_matches_batch_on_finalized_sessions(tmp_path, spark):
     )
 
     out = str(tmp_path / "sessions")
-    n = stream_sessionize_to_parquet(spark, SF_DIR, out, gap="30 minutes",
-                                     watermark="2 hours")
+    n = stream_sessionize_to_parquet(spark, SF_DIR, out)
     assert n >= 1
     got = {
         (r["user_id"], r["session_start"], r["session_end"]):
@@ -1363,7 +1362,7 @@ def test_stream_countmin_marker_is_in_state(tmp_path, spark):
     want = {
         (r["r"], r["pos"]): r["cnt"]
         for r in countmin_build(
-            events.select(F.col("event_type").alias("word")), "word"
+            events.select(F.col("event_type").alias("word"))
         ).collect()
     }
     assert got == want  # exactly-once across the migration

@@ -168,3 +168,19 @@ def test_driver_code_cache_holds_the_working_set(spark):
         if p.getName() == "CodeCache" or p.getName().startswith("CodeHeap")
     )
     assert reserved >= 256 * 2**20
+
+
+def test_get_spark_defaults_to_the_cpus_this_process_may_run_on(monkeypatch):
+    """Without ``SPARK_GRAFT_CPUS`` the session asks for one local core and
+    one shuffle partition per CPU in the process's affinity mask. The
+    builder's options are inspected in place of starting a session."""
+    from pyspark.sql import SparkSession
+
+    from super_store_datawarehouse_spark.session import get_spark
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: dict(self._options))
+    n = len(os.sched_getaffinity(0))
+    options = get_spark()
+    assert options["spark.master"] == f"local[{n}]"
+    assert options["spark.sql.shuffle.partitions"] == str(n)

@@ -113,7 +113,7 @@ def test_vacuum_retention_drops_history_not_head(tmp_path, spark):
     path = str(tmp_path / "t")
     txn_write(spark.range(0, 50).repartition(4), path)
     txn_write(spark.range(0, 10), path, mode="overwrite")
-    removed = txn_vacuum(path, keep_versions=1)
+    removed = txn_vacuum(path)
     assert removed >= 1  # v1's files are unreferenced by the overwrite
     assert txn_versions(path) == [2]
     assert txn_read(spark, path).count() == 10
