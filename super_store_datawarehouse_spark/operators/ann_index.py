@@ -86,10 +86,6 @@ def ivf_index_build(
         # sort by cell id: parquet row-group min/max stats then prune
         # non-probed cells at search time
         .sortWithinPartitions("centroid_id")
-        # applied_batch = -1 marks build/batch-update rows; the
-        # streaming face writes its micro-batch id here so replays can
-        # be excluded with the marker INSIDE the same parquet commit
-        .withColumn("applied_batch", F.lit(-1).cast("long"))
     )
     cells.write.mode("overwrite").parquet(cell_path)
     made = spark.read.parquet(cell_path)
@@ -103,7 +99,6 @@ def ivf_index_update(
     spark: SparkSession,
     path: str,
     new_vectors: DataFrame,
-    applied_batch: int = -1,
 ) -> int:
     """Append a batch: assign new vectors to the EXISTING centroids and
     append their cell rows — O(batch), no index rebuild. Returns rows
@@ -126,13 +121,11 @@ def ivf_index_update(
         )
         .join(assign, "vid")
         .sortWithinPartitions("centroid_id")
-        .withColumn("applied_batch", F.lit(applied_batch).cast("long"))
     ).persist()
     try:
-        # Count BEFORE the append, against the persisted frame: the
-        # caller's lineage may read the cells table itself (the
-        # streaming content-dedup anti-join), and a post-write count
-        # would re-evaluate that scan against the just-appended files —
+        # Count BEFORE the append, against the persisted frame: a
+        # caller's lineage that reads the cells table itself would
+        # otherwise be re-evaluated against the just-appended files —
         # observing its own write and reporting 0. Counting first also
         # lets a no-op batch skip the (empty) append entirely.
         n = rows.count()
@@ -587,14 +580,12 @@ def pq_index_update(spark: SparkSession, path: str, new_vectors: DataFrame) -> i
     )
     codes = codes.persist()
     try:
-        # count AND fingerprint BEFORE the append (the ivf_index_update
-        # lesson, which bit this exact function in round 9's streaming
-        # face): ``new_vectors`` may derive from a read of the codes
-        # table itself (the streaming job's content-dedup anti-join), so
-        # any post-append evaluation observes its own write — the
-        # fingerprint would hash an EMPTY frame and the meta would
-        # silently stop tracking the corpus. Empty batches skip both
-        # writes entirely.
+        # count AND fingerprint BEFORE the append (as ivf_index_update
+        # does): if ``new_vectors`` derives from a read of the codes
+        # table itself, any post-append evaluation observes its own
+        # write — the fingerprint would hash an EMPTY frame and the
+        # meta would silently stop tracking the corpus. Empty batches
+        # skip both writes entirely.
         n_rows = codes.count()
         n = n_rows // m
         if n:

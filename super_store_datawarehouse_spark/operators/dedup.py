@@ -41,6 +41,24 @@ MERSENNE61 = (1 << 61) - 1
 _WIDEN_MIN_BYTES_PER_SLOT = 64 * 1024
 
 
+def _scan_bytes(df: DataFrame) -> int | None:
+    """On-disk bytes of ``df``'s file scan, or None when the size is
+    unknown: an in-memory frame (no input files), a scan with a
+    non-local file, or files that cannot be listed or stat'ed."""
+    import os
+
+    try:
+        files = [
+            f[len("file:"):] if f.startswith("file:") else None
+            for f in df.inputFiles()
+        ]
+        if not files or any(f is None for f in files):
+            return None
+        return sum(os.path.getsize(os.path.normpath(f)) for f in files)
+    except Exception:
+        return None
+
+
 def _widen_narrow_scan(df: DataFrame) -> DataFrame:
     """Repartition a file scan that is both narrower than the cluster's
     slot count and large enough that pinning the downstream explosion to
@@ -59,18 +77,13 @@ def _widen_narrow_scan(df: DataFrame) -> DataFrame:
     both failure modes out; at real scale the cap binds and this is the
     full cluster width."""
     import math
-    import os
 
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
+    size = _scan_bytes(df)
+    if size is None:
+        return df
     try:
-        files = [
-            f[len("file:"):] if f.startswith("file:") else None
-            for f in df.inputFiles()
-        ]
-        if not files or any(f is None for f in files):
-            return df
-        size = sum(os.path.getsize(os.path.normpath(f)) for f in files)
         parts = df.rdd.getNumPartitions()
     except Exception:
         return df
@@ -109,21 +122,9 @@ def _cache_if_corpus_scale(
     rejected. Callers that KNOW the frame's true regime pass
     ``override=False`` (bounded sample: never cache) or
     ``override=True`` (known corpus-scale in-memory frame)."""
-    import os
-
     if override is not None:
         return scoped_cache(frame) if override else frame
-    try:
-        files = [
-            f[len("file:"):] if f.startswith("file:") else None
-            for f in src.inputFiles()
-        ]
-        if not files or any(f is None for f in files):
-            return frame
-        size = sum(os.path.getsize(os.path.normpath(f)) for f in files)
-    except Exception:
-        return frame
-    if size >= _SHINGLE_CACHE_MIN_SRC_BYTES:
+    if _is_corpus_scale(src):
         return scoped_cache(frame)
     return frame
 
@@ -132,19 +133,8 @@ def _is_corpus_scale(src: DataFrame) -> bool:
     """True when ``src``'s file scan is at or above the corpus-scale
     threshold (the same ≥ ``_SHINGLE_CACHE_MIN_SRC_BYTES`` regime the
     shingle cache keys on). Non-file sources gate as toy-scale."""
-    import os
-
-    try:
-        files = [
-            f[len("file:"):] if f.startswith("file:") else None
-            for f in src.inputFiles()
-        ]
-        if not files or any(f is None for f in files):
-            return False
-        size = sum(os.path.getsize(os.path.normpath(f)) for f in files)
-    except Exception:
-        return False
-    return size >= _SHINGLE_CACHE_MIN_SRC_BYTES
+    size = _scan_bytes(src)
+    return size is not None and size >= _SHINGLE_CACHE_MIN_SRC_BYTES
 
 
 def normalize_text(text: Column | str) -> Column:
@@ -526,28 +516,17 @@ def jaccard_strategy_for(threshold: float) -> str:
     return "ppjoin" if threshold >= PPJOIN_CROSSOVER_THRESHOLD else "plain"
 
 
-def jaccard_pairs_auto(
-    df: DataFrame,
-    threshold: float = 0.2,
-    strategy: str = "auto",
-) -> DataFrame:
+def jaccard_pairs_auto(df: DataFrame, threshold: float = 0.2) -> DataFrame:
     """Exact n-gram Jaccard join with measured strategy dispatch.
 
     Both strategies return IDENTICAL rows (prefix filtering is lossless
     — x161's value oracle is the plain construction), so the choice is
-    purely a cost decision and safe to automate: ``auto`` applies the
-    sf10-measured crossover above, ``ppjoin``/``plain`` force a side.
+    purely a cost decision and safe to automate: the sf10-measured
+    crossover above picks the side.
     """
-    if strategy == "auto":
-        strategy = jaccard_strategy_for(threshold)
-    if strategy == "ppjoin":
+    if jaccard_strategy_for(threshold) == "ppjoin":
         return ppjoin_jaccard_pairs(df, threshold)
-    if strategy == "plain":
-        return ngram_jaccard_pairs(df, threshold)
-    raise ValueError(
-        f"jaccard_pairs_auto: unknown strategy {strategy!r} "
-        "(expected 'auto', 'ppjoin', or 'plain')"
-    )
+    return ngram_jaccard_pairs(df, threshold)
 
 
 def ngram_containment_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:

@@ -168,22 +168,16 @@ def _real_decode(payload: bytes) -> tuple[int, int, str] | None:
         return None
 
 
-def decode_assets(
-    df: DataFrame, fake: bool = False, on_unrecognized: str = "raise"
-) -> DataFrame:
+def decode_assets(df: DataFrame, fake: bool = False) -> DataFrame:
     """Decode binary payloads to typed metadata via mapInPandas.
 
     ``fake=False`` (default) performs a REAL decode: genuine
     PNG/GIF/BMP/JPEG payloads yield their actual encoded width, height
     and format via stdlib header parsing; other formats route through
-    Pillow when importable. An unrecognized payload either raises
-    (``on_unrecognized="raise"``, the loud missing-codec gate) or yields
-    NULL metadata columns (``on_unrecognized="null"``, the
-    corrupt-record-tolerant pipeline mode). ``fake=True`` keeps the
-    deterministic fake decoder for the SQL-oracled plumbing tests.
+    Pillow when importable. An unrecognized payload raises: the loud
+    missing-codec gate. ``fake=True`` keeps the deterministic fake
+    decoder for the SQL-oracled plumbing tests.
     """
-    if on_unrecognized not in ("raise", "null"):
-        raise ValueError(f"on_unrecognized must be raise|null, got {on_unrecognized!r}")
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -200,21 +194,15 @@ def decode_assets(
                     decoded = _fake_decode(b if b is not None else b"")
                 else:
                     decoded = _real_decode(b) if b else None
-                    if decoded is None and on_unrecognized == "raise":
+                    if decoded is None:
                         head = bytes(b[:8]) if b else b""
                         raise NotImplementedError(
                             f"unrecognized media payload (head={head!r}); "
-                            "install Pillow for non-PNG/GIF/BMP/JPEG formats "
-                            'or pass on_unrecognized="null"'
+                            "install Pillow for non-PNG/GIF/BMP/JPEG formats"
                         )
-                if decoded is None:
-                    widths.append(None)
-                    heights.append(None)
-                    formats.append(None)
-                else:
-                    widths.append(decoded[0])
-                    heights.append(decoded[1])
-                    formats.append(decoded[2])
+                widths.append(decoded[0])
+                heights.append(decoded[1])
+                formats.append(decoded[2])
             out["width"] = pd.array(widths, dtype="Int32")
             out["height"] = pd.array(heights, dtype="Int32")
             out["format"] = formats

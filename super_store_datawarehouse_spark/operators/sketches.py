@@ -264,18 +264,6 @@ def _positions_of_hash(h: Column, m_bits: int, k_hashes: int) -> Column:
     )
 
 
-def bloom_positions(key: Column | str, m_bits: int, k_hashes: int) -> Column:
-    """The ``k_hashes`` bit positions a key sets in an ``m_bits`` Bloom
-    filter (Bloom 1970): affine maps over the portable polynomial key
-    hash — the same coefficient generator the CMS rows use, so
-    membership replays exactly in any SQL engine. Returns array<long>
-    of length ``k_hashes`` (positions may repeat; a repeat just sets
-    the same bit twice). Inline convenience form — inside operators,
-    bind ``poly_word_hash`` to a column and use ``_positions_of_hash``
-    so the char fold is evaluated once per row."""
-    return _positions_of_hash(poly_word_hash(key), m_bits, k_hashes)
-
-
 def bloom_build(keys: DataFrame, key_col: str, m_bits: int = 256) -> DataFrame:
     """Build a Bloom filter over a key set as its SET-BIT LIST: one row
     per distinct set position (≤ min(m_bits, k·|keys|) rows).

@@ -39,27 +39,17 @@ def salted_count_distinct(
     )
 
 
-def salted_join(left: DataFrame, right: DataFrame, on: str, how: str = "inner") -> DataFrame:
-    """Equi-join with the left (large/skewed) side salted into n sub-keys
-    and the right side replicated n× — identical result to
-    ``left.join(right, on, how)``, but a hot key occupies n tasks
-    instead of one.
-
-    Only left-preserving joins are supported: under right/full outer the
-    replicated right side would emit n_salts-1 spurious null-left rows
-    per unmatched right row, silently corrupting the result.
+def salted_join(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
+    """Inner equi-join with the left (large/skewed) side salted into n
+    sub-keys and the right side replicated n× — identical result to
+    ``left.join(right, on)``, but a hot key occupies n tasks instead of
+    one.
 
     The salt is a deterministic hash of the left row's key plus a
     per-partition row index, so it spreads rows of the same key without
     requiring any extra column from the caller.
     """
     n_salts = 8
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi", "left_anti", "leftanti"}
-    if how not in allowed:
-        raise ValueError(
-            f"salted_join supports {sorted(allowed)} joins, not {how!r}: "
-            "build-side replication breaks right/full outer semantics"
-        )
     salt_l = F.pmod(
         F.xxhash64(F.col(on), F.spark_partition_id(), F.monotonically_increasing_id()),
         F.lit(n_salts),
@@ -68,4 +58,4 @@ def salted_join(left: DataFrame, right: DataFrame, on: str, how: str = "inner") 
     r2 = right.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<long>"))
     )
-    return l2.join(r2, [on, "__salt"], how).drop("__salt")
+    return l2.join(r2, [on, "__salt"]).drop("__salt")

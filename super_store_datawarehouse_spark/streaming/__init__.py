@@ -3,8 +3,7 @@
 Net-new capability beyond the reference surface (SURVEY §2.10: the
 reference has no streaming): event-time windows + watermarks for late
 data, streaming dedup, stateful counting, and the parquet-state upsert
-and quantile-summary sinks. ``jobs`` also keeps exactly-once sketch,
-dedup, monitor and index-update sinks that only their tests reach.
+and quantile-summary sinks.
 """
 
 from super_store_datawarehouse_spark.streaming.jobs import (

@@ -12,26 +12,22 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from super_store_datawarehouse_spark.functions.exact import cents
 
 
 # ---------------------------------------------------------------------------
-# Shared state-publish helpers (round-10 review: the swap sequence had
-# drifted into six near-verbatim copies). ONE protocol since round 11
-# (VERDICT r10 #7): in-state marker + .prev chain (_restore_prev_state/
-# _publish_state_atomic) — applied_batch (and query_id where the sink
-# guards lineage) live INSIDE the state parquet as constant columns, so
+# Shared state-publish helpers: one protocol, an in-state marker plus a
+# .prev chain (_restore_prev_state/_publish_state_atomic). applied_batch
+# and query_id live INSIDE the state parquet as constant columns, so
 # marker and state publish in one atomic directory swap: no instant
 # where a new state is visible beside an old marker. Crash recovery:
 # the previous state parks at <dir>.prev during the swap; readers
-# restore it if a crash strands the rename. Used by Misra–Gries,
-# Bloom-dedup, quantile, count-min, and HLL sinks (the last two moved
-# off their separate marker files in round 11; a legacy side file is
-# read once for migration and retired on the next publish). The upsert
-# sink carries no marker at all — its merge is idempotent per version
+# restore it if a crash strands the rename. The quantile-summary sink
+# uses the whole protocol. The upsert sink uses the swap and the
+# restore but carries no marker: its merge is idempotent per version
 # (latest event_id wins), so a replay rewrites the same state.
 # ---------------------------------------------------------------------------
 
@@ -68,44 +64,26 @@ def _publish_state_atomic(out_dir: str, merged: DataFrame) -> None:
         shutil.rmtree(prev_dir)
 
 
-def _read_state_meta(sess, out_dir: str, extra=(), legacy_reader=None):
-    """Read side of the one publish protocol (round-11 review: the
-    restore/read/max-marker sequence had started re-duplicating across
-    sinks the way the swap once did). Restores a stranded ``.prev``,
-    reads the state parquet, and pulls the in-state marker from a
-    ONE-ROW slice. Every marker column is written as a constant literal
-    over the whole state by ``_publish_state_atomic`` callers, so any
-    single row carries the full marker — ``limit(1)`` plans a
+def _read_state_meta(sess, out_dir: str, extra=()):
+    """Read side of the one publish protocol. Restores a stranded
+    ``.prev``, reads the state parquet, and pulls the in-state marker
+    from a ONE-ROW slice. Every marker column is written as a constant
+    literal over the whole state by ``_publish_state_atomic`` callers,
+    so any single row carries the full marker — ``limit(1)`` plans a
     CollectLimit that stops after the first non-empty partition, an
-    O(1)-row read per micro-batch instead of the former full-state
-    ``max()`` aggregate (an O(state) scan per trigger at 100 TB-class
-    state; VERDICT r11 #7). Returns ``(state, meta)``: ``state`` is the
-    state DataFrame (None when absent) and ``meta`` maps ``query_id``,
+    O(1)-row read per micro-batch instead of a full-state ``max()``
+    aggregate. Returns ``(state, meta)``: ``state`` is the state
+    DataFrame (None when absent) and ``meta`` maps ``query_id``,
     ``applied_batch``, and each ``(col, default)`` in ``extra`` to its
     marker value — with defaults (query_id None, applied_batch -1, the
-    given extras) when the state is absent, the column is missing, or
-    the state has 0 rows. A state carrying data but no
-    ``applied_batch`` column — written by a pre-round-11 side-marker
-    build — consults ``legacy_reader()`` (-> (query_id, applied_batch))
-    so migration honors the old marker once; the caller's next publish
-    embeds it in-state.
+    given extras) when the state is absent or has 0 rows.
     """
     defaults = {"query_id": None, "applied_batch": -1, **dict(extra)}
     _restore_prev_state(out_dir)
     if not os.path.isdir(out_dir):
         return None, defaults
     state = sess.read.parquet(out_dir)
-    if "applied_batch" not in state.columns:
-        q, a = legacy_reader() if legacy_reader else (None, -1)
-        return state, {**defaults, "query_id": q, "applied_batch": a}
-    cols = [
-        F.col("applied_batch"),
-        (
-            F.col("query_id") if "query_id" in state.columns else F.lit(None)
-        ).alias("query_id"),
-    ]
-    for col, _default in extra:
-        cols.append(F.col(col))
+    cols = ["applied_batch", "query_id"] + [col for col, _default in extra]
     rows = state.select(*cols).limit(1).collect()
     if not rows:  # 0-row state: fresh-state defaults (ADVICE r10)
         return state, defaults
@@ -273,126 +251,6 @@ def purchase_click_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name)
 
 
-class _ProgressCounter:
-    """Counts a streaming query's non-empty micro-batches through the
-    listener bus instead of ``query.recentProgress`` (which Spark caps
-    at ``spark.sql.streaming.numRecentProgressUpdates``, default 100 —
-    a >100-batch run would silently undercount; ADVICE r7 #4).
-
-    Listener events are delivered asynchronously but IN ORDER per
-    query, so draining until the query's ``lastProgress`` batchId has
-    been observed guarantees every earlier progress event was too.
-    """
-
-    def __init__(self, spark: SparkSession):
-        from pyspark.sql.streaming import StreamingQueryListener
-
-        outer = self
-
-        class _L(StreamingQueryListener):
-            def onQueryStarted(self, event):
-                pass
-
-            def onQueryProgress(self, event):
-                p = event.progress
-                outer._seen.append(
-                    (str(p.id), p.batchId, p.numInputRows)
-                )
-
-            def onQueryIdle(self, event):
-                pass
-
-            def onQueryTerminated(self, event):
-                pass
-
-        self._seen: list[tuple[str, int, int]] = []
-        self._spark = spark
-        self._listener = _L()
-        spark.streams.addListener(self._listener)
-
-    def non_empty_batches(self, query) -> int:
-        """Non-empty batch count for ``query``, draining the async bus
-        until its final progress (``lastProgress``) has been observed."""
-        import time as _time
-
-        drain_timeout_s = 10.0
-
-        last = query.lastProgress
-        if last is not None:
-            want = (str(last["id"]), last["batchId"])
-            deadline = _time.monotonic() + drain_timeout_s
-            while _time.monotonic() < deadline:
-                if any((qid, bid) == want for qid, bid, _ in self._seen):
-                    break
-                _time.sleep(0.05)
-        qid_want = str(query.id)
-        return sum(
-            1 for qid, _bid, n in self._seen if qid == qid_want and n > 0
-        )
-
-    def remove(self) -> None:
-        self._spark.streams.removeListener(self._listener)
-
-
-def stream_sessionize_to_parquet(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    checkpoint: str | None = None,
-) -> int:
-    """Streaming sessionization: ``session_window`` gap-merge per user
-    (the streaming twin of x26's batch session build / q22's operator),
-    append-mode, finalized sessions land in parquet exactly once.
-
-    The watermark bounds session state: an open session is held only
-    until the watermark passes its end + gap (no new event can extend
-    it), then emits ONCE and its state is dropped — the 100 TB/day
-    contract (state ∝ open sessions inside the watermark horizon, not
-    stream history). The native parquet sink + checkpoint give
-    exactly-once file commits without a foreachBatch escape hatch.
-    Returns the number of non-empty micro-batches processed, counted by
-    a StreamingQueryListener — NOT ``recentProgress``, which Spark caps
-    at ``spark.sql.streaming.numRecentProgressUpdates`` (default 100)
-    and would silently undercount runs with >100 micro-batches
-    (ADVICE r7 #4).
-    """
-    sess = (
-        read_events_stream(spark, src_dir)
-        .withWatermark("ts", "2 hours")
-        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("event_id").alias("first_event_id"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-            "first_event_id",
-        )
-    )
-    writer = (
-        sess.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-    )
-    writer = writer.option(
-        "checkpointLocation",
-        checkpoint or os.path.join(out_dir, "_checkpoint"),
-    )
-    counter = _ProgressCounter(spark)
-    try:
-        q = writer.start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return counter.non_empty_batches(q)
-    finally:
-        counter.remove()
-
-
 def enriched_nation_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static join: the events stream enriched against the static
     customer table (broadcast — no stream state at all), aggregated per
@@ -521,7 +379,7 @@ class _QueryIdHolder:
     additive sinks whose replay guard is otherwise just a batch-id
     watermark — batch ids restart at 0 under a new id, and skipping
     "replays" from a different lineage silently drops fresh data
-    forever (the round-5 advisory on the MG/CMS sinks).
+    forever.
     """
 
     def __init__(self) -> None:
@@ -549,15 +407,13 @@ def _check_query_lineage(
     """Raise — loudly, not skip — when additive sink state was written
     under a different streaming query id.
 
-    Additive counts (count-min counters, Misra-Gries summaries) cannot
-    be content-deduped the way the IVF stream dedups vector ids, so
-    when the lineage token changes there is no safe interpretation of
-    the batch-id watermark: ids at-or-below it may be fresh data (drop
-    = silent data loss) and ids above it may be replays (merge =
+    Weighted summary rows cannot be content-deduped, so when the
+    lineage token changes there is no safe interpretation of the
+    batch-id watermark: ids at-or-below it may be fresh data (drop =
+    silent data loss) and ids above it may be replays (merge =
     double-count). The only correct move is an explicit operator
-    decision, so fail with instructions. Legacy state without a stored
-    query id passes (the batch-id guard still covers the tested
-    restart-with-checkpoint contract).
+    decision, so fail with instructions. A fresh state (no stored
+    query id) passes.
     """
     if stored_qid is not None and stored_qid != current_qid:
         raise RuntimeError(
@@ -566,863 +422,11 @@ def _check_query_lineage(
             "(lost/recreated checkpoint, or run without its original "
             "checkpoint). Batch ids are checkpoint-scoped, so the replay "
             "guard cannot tell replays from fresh data across lineages, and "
-            "additive sketch counts cannot be content-deduped. Refusing to "
-            "merge: either restore the original checkpoint, or reset "
-            "explicitly by deleting the state directory and its marker "
-            "together with the new checkpoint."
+            "summary rows cannot be content-deduped. Refusing to merge: "
+            "either restore the original checkpoint, or reset explicitly "
+            "by deleting the state directory together with the new "
+            "checkpoint."
         )
-
-
-def stream_countmin_to_parquet(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    checkpoint: str | None = None,
-) -> int:
-    """Maintain a count-min sketch over a token stream: each micro-batch
-    builds its own partial sketch and *adds* it into the persisted one.
-
-    This leans on the sketch's defining algebraic property — counters
-    are sums, so (sketch of A) + (sketch of B) == sketch of A∪B exactly,
-    whatever the batch boundaries. The streaming state is d×W counters
-    total regardless of stream length: the natural shape for "rolling
-    vocabulary frequencies over an unbounded crawl" where exact counts
-    would grow with the vocabulary.
-
-    Exactly-once: an additive sink is NOT naturally idempotent —
-    foreachBatch is at-least-once, and replaying a batch after a crash
-    would double-add it. The sink therefore embeds the last applied
-    batch_id INSIDE the state parquet (constant ``applied_batch`` /
-    ``query_id`` columns, the Misra–Gries/Bloom/quantile in-state
-    protocol — VERDICT r10 #7) and skips batches at-or-below it: state
-    and marker publish in ONE atomic directory swap, so there is no
-    instant where a new sketch is visible beside an old marker (the
-    double-add crash window a separate marker file had). The embedded
-    QUERY id (checkpoint-durable) makes a run whose id differs — a
-    lost/recreated checkpoint, where batch ids restart at 0 and the
-    watermark would silently drop fresh batches forever — RAISE
-    instead of skipping (``_check_query_lineage``). A state written by
-    a pre-round-11 build (no marker columns) is migrated: its side
-    marker file is read once and the next publish embeds the marker.
-    ``test_stream_countmin_equals_batch`` pins batch≡stream;
-    ``test_stream_countmin_restart_exactly_once`` pins the restart
-    path; ``test_stream_countmin_checkpoint_loss_fails_loud`` pins the
-    lineage guard; ``test_stream_countmin_marker_is_in_state`` pins
-    the in-state protocol + legacy migration.
-    Returns micro-batches processed (skips excluded).
-    """
-    import json
-
-    from super_store_datawarehouse_spark.operators.sketches import countmin_build
-
-    ev = read_events_stream(spark, src_dir).select(
-        F.col("event_type").alias("word")
-    )
-    batches = {"n": 0}
-    applied_marker = out_dir + ".applied_batch"  # legacy side file (read-only)
-    qid = _QueryIdHolder()
-
-    def read_legacy_marker() -> tuple[str | None, int]:
-        try:
-            with open(applied_marker) as fh:
-                raw = fh.read().strip()
-        except OSError:
-            return None, -1
-        try:
-            rec = json.loads(raw)
-            return rec.get("query_id"), int(rec.get("applied_batch", -1))
-        except (ValueError, AttributeError):
-            try:  # legacy plain-int marker (pre-query-id format)
-                return None, int(raw)
-            except ValueError:
-                return None, -1
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        state, meta = _read_state_meta(
-            sess, out_dir, legacy_reader=read_legacy_marker
-        )
-        _check_query_lineage(
-            "stream_countmin_to_parquet", out_dir, meta["query_id"], qid.get()
-        )
-        if batch_id <= meta["applied_batch"]:
-            return  # replayed batch: already folded into the sketch
-        delta = countmin_build(batch_df)
-        if state is not None:
-            merged = (
-                state.select("r", "pos", "cnt")
-                .unionByName(delta)
-                .groupBy("r", "pos")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        else:
-            merged = delta
-        _publish_state_atomic(
-            out_dir,
-            merged.withColumn("applied_batch", F.lit(batch_id).cast("long"))
-            .withColumn("query_id", F.lit(qid.get())),
-        )
-        if os.path.exists(applied_marker):  # state is migrated: retire it
-            os.remove(applied_marker)
-        batches["n"] += 1
-
-    writer = ev.writeStream.outputMode("append").foreachBatch(merge_batch)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    qid.set(q.id)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return batches["n"]
-
-
-def stream_misra_gries_to_parquet(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    k: int = 8,
-    checkpoint: str | None = None,
-) -> int:
-    """Streaming heavy-hitter candidates: maintain a k-counter
-    Misra–Gries summary of the event-type stream across micro-batches
-    (the rolling "trending items" sketch).
-
-    Merge per batch = add the batch's exact counts into the persisted
-    summary, then subtract the (k+1)-th largest running count from
-    everything and drop the non-positives — the mergeable-summaries
-    merge (Agarwal et al. 2013). The persisted state is therefore <= k
-    rows FOREVER, and any item whose true stream count exceeds
-    N/(k+1) is guaranteed present regardless of batch boundaries
-    (same pigeonhole as the batch operator,
-    ``operators.sketches.misra_gries_candidates``).
-
-    Exactly-once: foreachBatch is at-least-once and this sink is
-    additive, so replays must be excluded transactionally. The applied
-    batch id is embedded as a constant ``applied_batch`` column INSIDE
-    the state parquet itself (together with the streaming QUERY id —
-    see below), so state and marker publish in one atomic directory
-    swap — there is no window where the new state is visible with the
-    old marker (the double-count hazard of a separate marker file).
-    On a run whose query id differs from the embedded one (lost or
-    recreated checkpoint: batch ids restart at 0 and the watermark
-    would silently drop fresh batches forever), the sink RAISES
-    instead of skipping (``_check_query_lineage``). The swap itself is
-    crash-recoverable: the previous state is
-    renamed to ``<out>.prev`` before the new directory lands, and
-    ``last_applied`` restores it if a crash strands the rename.
-    Returns micro-batches processed (skips excluded).
-    """
-    from pyspark.sql import Window
-
-    ev = read_events_stream(spark, src_dir).select(
-        F.col("event_type").alias("word")
-    )
-    batches = {"n": 0}
-    qid = _QueryIdHolder()
-
-    def read_state_marker() -> tuple[str | None, int]:
-        # query_id is embedded beside applied_batch (same atomic swap);
-        # legacy state predating the column reads as no lineage token
-        _, meta = _read_state_meta(spark, out_dir)
-        return meta["query_id"], meta["applied_batch"]
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        stored_qid, applied = read_state_marker()
-        _check_query_lineage("stream_misra_gries_to_parquet", out_dir, stored_qid, qid.get())
-        if batch_id <= applied:
-            return
-        sess = batch_df.sparkSession
-        delta = batch_df.groupBy("word").agg(F.count(F.lit(1)).alias("mg_cnt"))
-        if os.path.isdir(out_dir):
-            state = sess.read.parquet(out_dir).select("word", "mg_cnt")
-            merged = (
-                state.unionByName(delta)
-                .groupBy("word")
-                .agg(F.sum("mg_cnt").alias("mg_cnt"))
-            )
-        else:
-            merged = delta
-        # trim to k counters: subtract the (k+1)-th largest (0 when the
-        # summary already fits), drop non-positives. The ranked frame is
-        # summary+batch-vocab sized — tiny — so the single-partition
-        # window is deliberate, not a scale hazard.
-        ranked = merged.withColumn(
-            "__rn",
-            F.row_number().over(Window.orderBy(F.desc("mg_cnt"), F.col("word"))),
-        )
-        kth = ranked.filter(F.col("__rn") == k + 1).select(
-            F.col("mg_cnt").alias("__kth")
-        )
-        trimmed = (
-            ranked.join(F.broadcast(kth), F.lit(True), "left")
-            .select(
-                "word",
-                (F.col("mg_cnt") - F.coalesce(F.col("__kth"), F.lit(0))).alias(
-                    "mg_cnt"
-                ),
-            )
-            .filter(F.col("mg_cnt") > 0)
-        )
-        _publish_state_atomic(
-            out_dir,
-            trimmed.withColumn(
-                "applied_batch", F.lit(batch_id).cast("long")
-            ).withColumn("query_id", F.lit(qid.get())),
-        )
-        batches["n"] += 1
-
-    writer = ev.writeStream.outputMode("append").foreachBatch(merge_batch)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    qid.set(q.id)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return batches["n"]
-
-
-def stream_hll_to_parquet(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    checkpoint: str | None = None,
-) -> int:
-    """Maintain per-event-type HyperLogLog registers over the stream:
-    each micro-batch builds partial registers for its rows and
-    MAX-merges them into the persisted table — the register lattice is
-    a join-semilattice, so unlike the additive count-min sink this
-    merge is IDEMPOTENT: replaying a batch after a crash changes
-    nothing. The applied-batch marker exists only to report an accurate
-    processed count, not for correctness — and since round 11 it lives
-    INSIDE the state parquet (constant ``applied_batch`` column, the
-    in-state protocol every stateful sink now shares — VERDICT r10 #7),
-    so even the observability count publishes atomically with the
-    registers. A pre-round-11 state (no marker column) reads its legacy
-    side file once and is migrated on the next publish.
-
-    State is ≤ 64 registers per event type forever; the batch operator
-    (``operators.sketches.hll_distinct``) reads the same registers, so
-    stream == batch exactly (pinned by the test).
-    """
-    ev = read_events_stream(spark, src_dir).select("event_type", "user_id")
-    batches = {"n": 0}
-    applied_marker = out_dir + ".applied_batch"  # legacy side file (read-only)
-
-    def read_legacy_marker() -> int:
-        try:
-            with open(applied_marker) as fh:
-                return int(fh.read().strip())
-        except (OSError, ValueError):
-            return -1
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        h = (
-            F.conv(
-                F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-            ).cast("long")
-        )
-        regs = (
-            batch_df.select(
-                "event_type",
-                F.pmod(h, F.lit(64)).alias("bucket"),
-                (h / 64).cast("long").alias("w"),
-            )
-            .withColumn(
-                "rho",
-                F.when(
-                    F.col("w") > 0, F.lit(27) - F.length(F.expr("bin(w)"))
-                ).otherwise(F.lit(27)),
-            )
-            .groupBy("event_type", "bucket")
-            .agg(F.max("rho").alias("m"))
-        )
-        state, meta = _read_state_meta(
-            sess, out_dir, legacy_reader=lambda: (None, read_legacy_marker())
-        )
-        if batch_id <= meta["applied_batch"]:
-            return
-        if state is not None:
-            regs = (
-                state.select("event_type", "bucket", "m")
-                .unionByName(regs)
-                .groupBy("event_type", "bucket")
-                .agg(F.max("m").alias("m"))
-            )
-        _publish_state_atomic(
-            out_dir, regs.withColumn("applied_batch", F.lit(batch_id).cast("long"))
-        )
-        if os.path.exists(applied_marker):  # state is migrated: retire it
-            os.remove(applied_marker)
-        batches["n"] += 1
-
-    writer = ev.writeStream.outputMode("append").foreachBatch(merge_batch)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return batches["n"]
-
-
-def stream_drift_monitor(
-    spark: SparkSession,
-    src_dir: str,
-    reference: DataFrame,
-    out_path: str,
-    checkpoint: str | None = None,
-) -> int:
-    """Per-micro-batch distribution drift vs a frozen reference window:
-    the x199 chi-square statistic, computed live. ``reference`` fixes
-    the bin edges (global min/max) and expected shares; each batch's
-    value histogram lands in the same bins and appends one row
-    (batch_id, n_events, chi2_micro) to ``out_path`` — the production
-    shape of a data-quality monitor on an ingest stream (alert when
-    chi2 jumps).
-    """
-    bins = 10
-    ref_stats = (
-        reference.select(F.round(F.col("value") * 100).cast("long").alias("cents"))
-        .agg(
-            F.min("cents").alias("lo"),
-            F.max("cents").alias("hi"),
-            F.count(F.lit(1)).alias("ref_n"),
-        )
-        .collect()[0]
-    )
-    lo, hi, ref_n = ref_stats["lo"], ref_stats["hi"], ref_stats["ref_n"]
-    # clamp BOTH edges: live values below the frozen reference min must
-    # land in bin 0 (not a negative index the chi2 loop would silently
-    # skip while live_n still counts them), mirroring the bin-(bins-1)
-    # treatment of values above the reference max — otherwise downward
-    # range drift dilutes every bin instead of registering.
-    def binned(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.greatest(
-                F.lit(0),
-                F.least(
-                    F.lit(bins - 1),
-                    F.expr(
-                        f"(cast(round(value * 100) as long) - {lo}) * {bins}"
-                        f" div ({hi} - {lo} + 1)"
-                    ),
-                ),
-            ).alias("bin")
-        )
-
-    ref_counts = {
-        r["bin"]: r["n"]
-        for r in binned(reference)
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-
-    ev = read_events_stream(spark, src_dir).select("value")
-    batches = {"n": 0}
-
-    def monitor_batch(batch_df: DataFrame, batch_id: int) -> None:
-        got = {
-            r["bin"]: r["n"]
-            for r in binned(batch_df)
-            .groupBy("bin")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        live_n = sum(got.values())
-        if live_n == 0:
-            return
-        chi2_micro = 0
-        for b in range(bins):
-            ref_b, live_b = ref_counts.get(b, 0), got.get(b, 0)
-            num = live_b * ref_n - ref_b * live_n
-            chi2_micro += num * num // (max(ref_b, 1) * ref_n * live_n)
-        with open(out_path, "a") as fh:
-            fh.write(f"{batch_id}\t{live_n}\t{chi2_micro}\n")
-        batches["n"] += 1
-
-    writer = ev.writeStream.outputMode("append").foreachBatch(monitor_batch)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return batches["n"]
-
-
-def _read_parquet_if_exists(sess: SparkSession, path: str) -> DataFrame | None:
-    """Read a parquet table, returning None ONLY when the path does not
-    exist yet (the first micro-batch of a fresh index). Any OTHER read
-    failure propagates so Structured Streaming retries the micro-batch:
-    swallowing a transient IO error here would treat a whole
-    already-indexed batch as 'unseen' — its rows re-encode and
-    double-append, and the incremental XOR fingerprint cancels them
-    out, leaving the index meta attesting neither corpus (ADVICE r9)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return sess.read.parquet(path)
-    except AnalysisException as exc:
-        get_cond = getattr(exc, "getCondition", None) or getattr(
-            exc, "getErrorClass", None
-        )
-        cond = get_cond() if get_cond is not None else None
-        if cond == "PATH_NOT_FOUND" or "PATH_NOT_FOUND" in str(exc):
-            return None
-        raise
-
-
-def stream_ivf_index_update(
-    spark: SparkSession,
-    src_dir: str,
-    index_path: str,
-    checkpoint: str | None = None,
-) -> int:
-    """Streaming face of the persisted IVF index
-    (``operators/ann_index.py``): embedding batches arriving as
-    ``embeddings*.parquet`` files are assigned to the FROZEN coarse
-    quantizer and appended to the inverted lists — the index stays
-    queryable throughout, never rebuilt.
-
-    Exactly-once: appends are additive, so replayed micro-batches must
-    be excluded — and batch ids CANNOT be trusted for that. They are
-    checkpoint-scoped (a lost/recreated checkpoint, or a second stream,
-    restarts at 0, so a max-id guard drops fresh data forever), and
-    even replayed FILES can land on a higher id than the stored
-    maximum (FileStreamSource file ordering is not part of the
-    contract), which would duplicate their vectors under an
-    id-ordering fast path. Every batch therefore goes through CONTENT
-    dedup: its vectors are anti-joined on ``vec_id`` against the
-    inverted lists and only unseen ids are appended. The index
-    contract this rests on is already append-only-by-id (re-sent ids
-    are replays, never updates), so the anti-join is exact — a full
-    replay appends nothing, fresh data appends exactly its new
-    vectors regardless of what id it arrives under, and a
-    partially-applied crash batch self-heals. The survivors frame is
-    persisted across the update's write + count actions, so the
-    per-batch cost is ONE scan of the inverted lists — the price of
-    content-level exactly-once. Returns micro-batches that appended
-    rows.
-    """
-    from super_store_datawarehouse_spark.operators.ann_index import (
-        ivf_index_update,
-    )
-
-    schema = (
-        spark.read.option("pathGlobFilter", "embeddings*.parquet")
-        .parquet(src_dir)
-        .schema
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "embeddings*.parquet")
-        .parquet(src_dir)
-    )
-    cell_path = os.path.join(index_path, "cells")
-    batches = {"n": 0}
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        id_col = "vec_id" if "vec_id" in batch_df.columns else batch_df.columns[0]
-        stored = _read_parquet_if_exists(sess, cell_path)
-        seen = (
-            stored.select(F.col("vid").alias(id_col)) if stored is not None else None
-        )  # None: no cells yet — everything is new
-        survivors = (
-            batch_df.join(seen, id_col, "left_anti") if seen is not None else batch_df
-        )
-        # ivf_index_update persists the assigned rows, counts them
-        # BEFORE appending (the anti-join above reads the cells table —
-        # a post-write count would observe its own append), and skips
-        # the write entirely for a pure replay.
-        appended = ivf_index_update(
-            sess, index_path, survivors, applied_batch=batch_id
-        )
-        if appended:
-            batches["n"] += 1
-
-    writer = stream.writeStream.outputMode("append").foreachBatch(apply_batch)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return batches["n"]
-
-
-def stream_pq_index_update(
-    spark: SparkSession,
-    src_dir: str,
-    index_path: str,
-    checkpoint: str | None = None,
-) -> int:
-    """Streaming face of the persisted PQ index (round 9, mirroring
-    :func:`stream_ivf_index_update`): embedding batches are encoded
-    against the FROZEN codebook and their code rows appended — the
-    index stays queryable throughout, never rebuilt.
-
-    Exactly-once by CONTENT dedup (batch ids cannot be trusted — see
-    the IVF job's docstring for the checkpoint-scope and file-ordering
-    failure modes): each batch anti-joins on ``vec_id`` against the
-    stored code table and only unseen ids are encoded + appended, so a
-    full replay appends nothing and a partially-applied crash batch
-    self-heals. Commit-point note: ``pq_index_update`` appends codes
-    THEN overwrites the fingerprint meta; a crash between the two
-    leaves the meta stale, which is FAIL-SAFE — ``pq_index_ensure``
-    over the grown corpus sees a fingerprint mismatch and rebuilds
-    rather than serving an index it cannot attest (and the replay's
-    anti-join still appends nothing, so codes never duplicate).
-    Returns micro-batches that appended rows.
-    """
-    from super_store_datawarehouse_spark.operators.ann_index import (
-        pq_index_update,
-    )
-
-    schema = (
-        spark.read.option("pathGlobFilter", "embeddings*.parquet")
-        .parquet(src_dir)
-        .schema
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "embeddings*.parquet")
-        .parquet(src_dir)
-    )
-    codes_path = os.path.join(index_path, "pq_codes")
-    batches = {"n": 0}
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        id_col = "vec_id" if "vec_id" in batch_df.columns else batch_df.columns[0]
-        stored = _read_parquet_if_exists(sess, codes_path)
-        seen = (
-            stored.select(F.col("vid").alias(id_col)).distinct()
-            if stored is not None
-            else None
-        )  # None: no codes yet — everything is new
-        survivors = (
-            batch_df.join(seen, id_col, "left_anti") if seen is not None else batch_df
-        )
-        appended = pq_index_update(sess, index_path, survivors)
-        if appended:
-            batches["n"] += 1
-
-    writer = stream.writeStream.outputMode("append").foreachBatch(apply_batch)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return batches["n"]
-
-
-# Version token for the Bloom state's key derivation, embedded in the
-# state parquet. Bloom bit positions are a pure function of the key
-# string, so a key-format change invalidates EVERY persisted bit: a
-# resumed stream reading old-format state would silently re-admit
-# previously-seen pairs as fresh. Bump this constant whenever
-# length_prefixed_key (or the hash over it) changes shape, and the
-# resume guard below fails loudly instead.
-BLOOM_KEY_FORMAT = "lpk1"
-
-
-def length_prefixed_key(first: str, second: str) -> Column:
-    """Collision-free two-field dedup key: ``{len(first)}:{first}:{second}``.
-
-    A plain ``concat_ws(":")`` makes ("a:b", "c") and ("a", "b:c")
-    collide on "a:b:c" — in a Bloom-gated dedup stream that permanently
-    drops one fresh pair as a duplicate of the other. Prefixing the
-    first field's character length (``F.length`` counts characters, not
-    UTF-8 octets) pins the split point regardless of the fields'
-    contents. NULL fields coalesce to "" (NULL and empty share a key —
-    documented, harmless for dedup semantics).
-    """
-    a = F.coalesce(F.col(first).cast("string"), F.lit(""))
-    b = F.coalesce(F.col(second).cast("string"), F.lit(""))
-    return F.concat(F.length(a).cast("string"), F.lit(":"), a, F.lit(":"), b)
-
-
-def stream_bloom_dedup_to_parquet(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    state_dir: str,
-    m_bits: int = 4096,
-    checkpoint: str | None = None,
-) -> int:
-    """Streaming approximate first-occurrence dedup with BOUNDED state:
-    a Bloom filter (operators/sketches) gates (user_id, event_type)
-    keys — the pattern for unbounded-key streams where exact dedup
-    state would grow forever (Spark's dropDuplicates state is
-    per-key-unbounded; the Bloom stays ≤ m rows for the stream's whole
-    life, trading a quantified false-DROP rate, never a duplicate).
-
-    Per micro-batch, against the PRIOR filter state: batch keys that
-    are Bloom-negative are accepted (first occurrence of each new key
-    inside the batch by min event_id — deterministic), written to
-    ``out_dir/batch=<id>``, and their bits merged into the state.
-
-    Exactly-once publish: decisions land in the per-batch output
-    partition with ``mode=overwrite`` BEFORE the state swap, and a
-    batch that accepts NOTHING writes nothing. The two crash windows:
-    crash before the state swap → the replay recomputes IDENTICAL
-    decisions (state unchanged) and idempotently overwrites its own
-    partition; crash AFTER the swap (but before the checkpoint commit)
-    → the replay finds all its keys already in the filter, accepts
-    nothing, and — because empty results skip the write — the
-    originally-published partition survives intact. (Overwriting with
-    the empty frame there would ERASE the batch's accepted rows, the
-    classic at-least-once data-loss hole.) The state parquet embeds
-    ``applied_batch`` for observability and publishes by the same
-    atomic rename chain as ``stream_misra_gries_to_parquet``. After a
-    CHECKPOINT LOSS (ids restart at 0), no id guard exists to drop
-    fresh data: every batch is processed and the Bloom state itself
-    suppresses re-emission of already-accepted keys — redelivered
-    files emit nothing, fresh keys emit once. Operational contract
-    (documented, same as the IVF index stream): state_dir and out_dir
-    belong to the checkpoint — recycle all three together, since a
-    recycled batch id may otherwise overwrite an old partition of the
-    same name.
-
-    Returns micro-batches processed.
-    """
-    k_hashes = 2
-
-    ev = read_events_stream(spark, src_dir).select(
-        "event_id",
-        "user_id",
-        "event_type",
-        length_prefixed_key("user_id", "event_type").alias("key"),
-    )
-    batches = {"n": 0}
-    prev_dir = state_dir + ".prev"
-
-    def read_state_df(sess) -> DataFrame | None:
-        """Prior Bloom state as a DataFrame of set positions (or None
-        before the first swap) — the state stays distributed; nothing
-        is collected to the driver."""
-        if not os.path.isdir(state_dir) and os.path.isdir(prev_dir):
-            os.replace(prev_dir, state_dir)
-        if not os.path.isdir(state_dir):
-            return None
-        state = sess.read.parquet(state_dir)
-        # Key-format guard (mirrors the MG/CMS query-lineage guards):
-        # bit positions are a pure function of the key string, so state
-        # written under a different key derivation would silently
-        # re-admit previously-seen pairs. State WITHOUT the token is
-        # pre-round-7 state whose key derivation was the same lpk1 the
-        # token now names — its bits are still valid, so it resumes as
-        # implicit lpk1 (and the next state swap writes the token);
-        # forcing a full state/out/checkpoint reset for bits that are
-        # actually correct was the round-7 over-rejection (ADVICE r7
-        # #5). Only an EXPLICIT mismatch fails loudly.
-        if "key_format" not in state.columns:
-            state = state.withColumn("key_format", F.lit(BLOOM_KEY_FORMAT))
-        fmts = {r["key_format"] for r in state.select("key_format").distinct().collect()}
-        if fmts != {BLOOM_KEY_FORMAT}:
-            raise RuntimeError(
-                f"bloom dedup state at {state_dir} was written with key "
-                f"format(s) {sorted(fmts)!r}, expected {BLOOM_KEY_FORMAT!r}; "
-                "resuming would silently re-admit previously-seen keys. "
-                "Reset state_dir, out_dir, and the checkpoint together."
-            )
-        return state.select(F.col("pos").cast("long").alias("pos"))
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from super_store_datawarehouse_spark.operators.sketches import (
-            _positions_of_hash,
-            poly_word_hash,
-        )
-
-        sess = batch_df.sparkSession
-        state = read_state_df(sess)
-        # bind the O(len) char fold to a column once per row (the
-        # bound-column house rule); the affine maps over it are cheap
-        hashed = batch_df.withColumn("__h", poly_word_hash("key"))
-        pos = _positions_of_hash(F.col("__h"), m_bits, k_hashes)
-        if state is not None:
-            # A key is Bloom-negative iff >= 1 of its bit positions is
-            # unset. Set-oriented membership: explode the (distinct)
-            # positions and anti-join the broadcast state (<= m rows) —
-            # O(1) hash probes per position. The previous formulation
-            # collected every set bit to the DRIVER and inlined them as
-            # `isin(*bits)` literals — an interpreted O(|bits|)-per-probe
-            # predicate that measured 38 s/batch at 65k set bits vs ~1 s
-            # for the sibling sinks (round-7 streaming bench), and a
-            # design that could never leave a single machine.
-            unset_keys = (
-                hashed.select(
-                    "key", F.explode(F.array_distinct(pos)).alias("pos")
-                )
-                .join(F.broadcast(state), "pos", "left_anti")
-                .select("key")
-                .distinct()
-            )
-            negative = hashed.join(unset_keys, "key", "left_semi")
-        else:
-            negative = hashed
-        # first occurrence per NEW key within the batch, deterministic
-        accepted = (
-            negative.groupBy("key", "__h", "user_id", "event_type")
-            .agg(F.min("event_id").alias("event_id"))
-            .select("event_id", "user_id", "event_type", "key", "__h")
-        )
-        accepted.persist()
-        try:
-            if accepted.isEmpty():
-                # nothing new — and writing the empty frame would
-                # OVERWRITE this partition's rows when we are a replay
-                # of a batch whose state swap already landed (the
-                # crash-after-swap window); skipping keeps the
-                # originally-published decisions intact
-                batches["n"] += 1
-                return
-            # decisions first (idempotent per-batch partition) ...
-            accepted.drop("key", "__h").withColumn(
-                "applied_batch", F.lit(batch_id).cast("long")
-            ).write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"batch={batch_id}")
-            )
-            # ... then the state swap (atomic rename chain)
-            new_bits = (
-                accepted.select(F.explode_outer(pos).alias("pos"))
-                .filter(F.col("pos").isNotNull())
-                .select(F.col("pos").cast("long").alias("pos"))
-            )
-            if state is not None:
-                # prior state merges as a distributed union — the state
-                # never round-trips through the driver (the tmp-dir +
-                # atomic-rename chain below keeps the read-while-
-                # overwrite window safe exactly as before)
-                new_bits = new_bits.unionByName(state)
-            merged = (
-                new_bits.distinct()
-                .withColumn("applied_batch", F.lit(batch_id).cast("long"))
-                .withColumn("key_format", F.lit(BLOOM_KEY_FORMAT))
-            )
-            _publish_state_atomic(state_dir, merged)
-        finally:
-            accepted.unpersist()
-        batches["n"] += 1
-
-    writer = ev.writeStream.outputMode("append").foreachBatch(merge_batch)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return batches["n"]
-
-
-def stream_dq_monitor(
-    spark: SparkSession,
-    src_dir: str,
-    reference: DataFrame,
-    out_path: str,
-    checkpoint: str | None = None,
-) -> int:
-    """Streaming data-quality circuit breaker: every micro-batch of the
-    events file stream is scored against a FIXED expectation set
-    (``operators/dq.py``) and its report lands under
-    ``out_path/batch=<id>/`` — the gate an ingest pipeline reads before
-    promoting a batch.
-
-    Thresholds are frozen from ``reference`` once, on the driver
-    (value min/max, the known event_type domain), so every batch is
-    judged against the same contract — a batch cannot loosen the rules
-    for its successors. Four expectations per batch: value non-null,
-    value inside the reference range, event_type inside the reference
-    domain, event_id unique within the batch.
-
-    Exactly-once: the report for batch ``b`` is a deterministic pure
-    function of that batch's content, and it is written with
-    mode=overwrite into the batch's own directory — a replayed batch
-    rewrites byte-identical rows instead of appending duplicates, and a
-    crash between write and checkpoint commit self-heals the same way.
-    Returns the number of micro-batches that produced a report.
-    """
-    from super_store_datawarehouse_spark.operators.dq import expectations_report
-
-    stats = reference.agg(
-        F.min("value").alias("lo"),
-        F.max("value").alias("hi"),
-    ).collect()[0]
-    lo, hi = stats["lo"], stats["hi"]
-    # a reference that cannot define the contract is a caller error —
-    # fail loudly at arm time, not per-batch (an all-NULL value column
-    # would otherwise flag 100% of every batch, and NULL event_types
-    # would crash sorted() / an empty domain would crash isin())
-    if lo is None or hi is None:
-        raise ValueError(
-            "stream_dq_monitor: reference has no non-null 'value' rows; "
-            "cannot freeze a range expectation"
-        )
-    domain = sorted(
-        r["event_type"]
-        for r in reference.select("event_type").distinct().collect()
-        if r["event_type"] is not None
-    )
-    if not domain:
-        raise ValueError(
-            "stream_dq_monitor: reference has no non-null 'event_type' "
-            "rows; cannot freeze a domain expectation"
-        )
-
-    ev = read_events_stream(spark, src_dir)
-    batches = {"n": 0}
-
-    def report_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        key_counts = batch_df.groupBy("event_id").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        report = expectations_report(
-            [
-                ("value.not_null", batch_df, F.col("value").isNull()),
-                (
-                    "value.in_reference_range",
-                    batch_df,
-                    ~F.col("value").between(lo, hi),
-                ),
-                (
-                    "event_type.in_reference_domain",
-                    batch_df,
-                    ~F.col("event_type").isin(*domain),
-                ),
-                ("event_id.unique_in_batch", key_counts, F.col("cnt") > 1),
-            ]
-        ).withColumn("batch_id", F.lit(batch_id).cast("long"))
-        report.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out_path, f"batch={batch_id}")
-        )
-        batches["n"] += 1
-
-    writer = ev.writeStream.outputMode("append").foreachBatch(report_batch)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return batches["n"]
 
 
 def stream_quantile_summary_to_parquet(
@@ -1435,10 +439,9 @@ def stream_quantile_summary_to_parquet(
     checkpoint: str | None = None,
 ) -> int:
     """Streaming mergeable quantile summary over the event ``value``
-    stream (integer cents): the rank-sketch member of the streaming
-    sink family (Bloom dedup, Misra–Gries, CMS, HLL — this adds
-    percentiles). Batch twin: ``operators.sketches.
-    rank_compaction_summary`` / x334's oracled eval.
+    stream (integer cents): streaming percentiles. Batch twin:
+    ``operators.sketches.rank_compaction_summary`` / x334's oracled
+    eval.
 
     Per micro-batch: the batch's rows enter as weight-1 summary rows
     (stratum = Knuth hash of event_id mod ``strata``), union with the
@@ -1455,12 +458,12 @@ def stream_quantile_summary_to_parquet(
     ``k_now``; a reader's live guarantee for any nearest-rank read-off
     is ``rank_err < strata · err_unit + k_now`` — computable from the
     state alone, no external log (the same in-state attestation style
-    as the sinks' applied_batch markers).
+    as the applied_batch marker).
 
-    Exactly-once: identical contract to the Misra–Gries sink —
-    applied_batch + query_id embedded in the state parquet, atomic
-    directory swap with .prev crash recovery, lineage check raising on
-    a foreign checkpoint. Returns micro-batches applied.
+    Exactly-once: applied_batch + query_id embedded in the state
+    parquet, atomic directory swap with .prev crash recovery, lineage
+    check raising on a foreign checkpoint. Returns micro-batches
+    applied.
     """
     from super_store_datawarehouse_spark.operators.sampling import knuth_hash
     from super_store_datawarehouse_spark.operators.sketches import (

@@ -1,8 +1,8 @@
 """Round-6 regression tests for the round-5 ADVICE findings.
 
 One test per finding: NULL-label contract in the agreement metrics,
-duplicate-word determinism in unigram segmentation, collision-free
-stream-dedup keys, scoped-cache release, and the cross-partition
+duplicate-word determinism in unigram segmentation, scoped-cache
+release, and the cross-partition
 dimensionality guard in PCA.
 """
 
@@ -23,8 +23,6 @@ from super_store_datawarehouse_spark.session import (
     release_scoped_caches,
     scoped_cache,
 )
-from super_store_datawarehouse_spark.streaming.jobs import length_prefixed_key
-
 
 def test_classification_report_excludes_null_labels(spark):
     """(NULL, NULL) pairs must not create phantom classes or phantom
@@ -82,26 +80,6 @@ def test_unigram_segment_duplicate_words_sum_freqs_deterministically(spark):
     for w, (_f, seg, np_, _c) in got.items():
         assert seg is not None and seg.replace(" ", "") == w
         assert np_ >= 1
-
-
-def test_length_prefixed_key_separates_colliding_pairs(spark):
-    """("a:b","c") vs ("a","b:c") collide under concat_ws but must get
-    distinct dedup keys under the length-prefixed encoding."""
-    df = spark.createDataFrame(
-        [("a:b", "c"), ("a", "b:c"), (None, "x"), ("", "x")],
-        "user_id string, event_type string",
-    )
-    rows = df.select(
-        F.concat_ws(":", "user_id", "event_type").alias("naive"),
-        length_prefixed_key("user_id", "event_type").alias("key"),
-    ).collect()
-    naive = [r["naive"] for r in rows[:2]]
-    keys = [r["key"] for r in rows[:2]]
-    assert naive[0] == naive[1]  # the collision the fix targets
-    assert keys[0] != keys[1]
-    assert keys[0] == "3:a:b:c" and keys[1] == "1:a:b:c"
-    # NULL ≡ "" is the documented coalesce behavior
-    assert rows[2]["key"] == rows[3]["key"] == "0::x"
 
 
 def test_scoped_cache_release_unpersists(spark):
@@ -189,43 +167,3 @@ def test_pq_ivf_fixed_budget_caps_and_noop(spark):
         r["code"] for r in full.select("code").distinct().collect()
     )[:16]
     assert sorted(codes) == lowest
-
-
-def test_length_prefixed_key_injective_property(spark):
-    """Property: distinct (first, second) string pairs never share a
-    length-prefixed key (the injection concat_ws lacks)."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    # pure-python replica of the column expression
-    def lp(a, b):
-        a = "" if a is None else str(a)
-        b = "" if b is None else str(b)
-        return f"{len(a)}:{a}:{b}"
-
-    @settings(max_examples=300, deadline=None)
-    @given(
-        st.tuples(st.text(max_size=8), st.text(max_size=8)),
-        st.tuples(st.text(max_size=8), st.text(max_size=8)),
-    )
-    def check(p1, p2):
-        if p1 != p2:
-            assert lp(*p1) != lp(*p2)
-
-    check()
-    # the python replica matches the Spark column on a colliding sample
-    from pyspark.sql import functions as F
-
-    from super_store_datawarehouse_spark.streaming.jobs import (
-        length_prefixed_key,
-    )
-
-    rows = spark.createDataFrame(
-        [("a:b", "c"), ("a", "b:c"), ("", ""), ("::", ":")],
-        "user_id string, event_type string",
-    ).select(
-        "user_id", "event_type",
-        length_prefixed_key("user_id", "event_type").alias("k"),
-    ).collect()
-    for r in rows:
-        assert r["k"] == lp(r["user_id"], r["event_type"])

@@ -4,9 +4,6 @@
    its internal pushdown cache-barrier persists/unpersists only when the
    caller had not already persisted (ADVICE r7 #3 — the finally-unpersist
    silently dropped the caller's cache entry).
-2. ``_ProgressCounter`` (the ``recentProgress``-cap fix, ADVICE r7 #4)
-   counts non-empty batches correctly past the 100-entry cap that
-   ``query.recentProgress`` is subject to, and filters by query id.
 """
 
 from __future__ import annotations
@@ -42,56 +39,6 @@ def test_brute_force_topk_unpersists_own_barrier(spark):
     out = similarity.brute_force_topk(emb, q, k=3)
     assert out.count() > 0
     assert not q.is_cached  # its scoped barrier was released
-
-
-def test_progress_counter_not_capped_at_100(spark):
-    """The count derives from the listener stream, not recentProgress:
-    feed >100 synthetic progress entries and expect them ALL counted
-    (recentProgress would have retained only the last 100)."""
-    from super_store_datawarehouse_spark.streaming.jobs import _ProgressCounter
-
-    counter = _ProgressCounter(spark)
-    try:
-        qid = "11111111-2222-3333-4444-555555555555"
-        other = "99999999-8888-7777-6666-555555555555"
-        # 150 non-empty + 7 empty batches for our query, 5 for another
-        counter._seen.extend((qid, i, 40000) for i in range(150))
-        counter._seen.extend((qid, 150 + i, 0) for i in range(7))
-        counter._seen.extend((other, i, 123) for i in range(5))
-
-        class _FakeQuery:
-            id = qid
-            lastProgress = {"id": qid, "batchId": 156}
-
-        assert counter.non_empty_batches(_FakeQuery()) == 150
-    finally:
-        counter.remove()
-
-
-def test_sessionize_batch_count_matches_listener(tmp_path, spark):
-    """End-to-end: the returned batch count equals the number of staged
-    non-empty source files (maxFilesPerTrigger=1 => one batch each)."""
-    from super_store_datawarehouse_spark.streaming.jobs import (
-        stream_sessionize_to_parquet,
-    )
-
-    ev = load_table(spark, SF_DIR, "events")
-    src = tmp_path / "src"
-    os.makedirs(src, exist_ok=True)
-    for i in range(3):
-        stage = tmp_path / f"stage_{i}"
-        ev.filter(F.col("event_id") % 3 == i).coalesce(
-            1
-        ).write.parquet(str(stage), mode="overwrite")
-        part = [f for f in os.listdir(stage) if f.endswith(".parquet")][0]
-        os.rename(str(stage / part), str(src / f"events_b{i}.parquet"))
-    n = stream_sessionize_to_parquet(
-        spark,
-        str(src),
-        str(tmp_path / "out"),
-        checkpoint=str(tmp_path / "ckpt"),
-    )
-    assert n == 3
 
 
 def _registry():
@@ -180,5 +127,3 @@ def test_brute_force_topk_preserves_scoped_cache(spark):
         assert q.is_cached
     finally:
         release_scoped_caches()
-
-

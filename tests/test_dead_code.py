@@ -37,26 +37,7 @@ UNREFERENCED_OK.update({
     ("sources/translog.py", "txn_scan"): "stats pruning equals the full filter",
     ("sources/translog.py", "txn_upsert"): "latest version wins in a transactional upsert",
     ("sources/translog.py", "txn_vacuum"): "retention drops history, never the head",
-    ("streaming/jobs.py", "stream_bloom_dedup_to_parquet"): "key-format token guards Bloom state resume",
-    ("streaming/jobs.py", "stream_countmin_to_parquet"): "exactly-once count-min sink, in-state marker",
-    ("streaming/jobs.py", "stream_dq_monitor"): "idempotent replay of data-quality counts",
-    ("streaming/jobs.py", "stream_drift_monitor"): "drift flags on shifted value distributions",
-    ("streaming/jobs.py", "stream_hll_to_parquet"): "HLL registers equal the batch sketch",
-    ("streaming/jobs.py", "stream_ivf_index_update"): "IVF index append resumes exactly once after a crash",
-    ("streaming/jobs.py", "stream_misra_gries_to_parquet"): "heavy-hitter guarantee and atomic replay guard",
-    ("streaming/jobs.py", "stream_pq_index_update"): "PQ index append resumes exactly once after a crash",
-    ("streaming/jobs.py", "stream_sessionize_to_parquet"): "finalized sessions equal the batch sessionizer",
-    ("operators/sketches.py", "bloom_positions"): "reference bit positions for the Bloom sink's state",
 })
-
-
-# Options kept with one value in use: deployment paths stay configurable.
-ONE_VALUE_OK = {
-    ("streaming/jobs.py", "stream_hll_to_parquet", "checkpoint"):
-        "a deployment's checkpoint location; the default is a temp dir",
-    ("streaming/jobs.py", "stream_drift_monitor", "checkpoint"):
-        "a deployment's checkpoint location; the default is a temp dir",
-}
 
 
 def _py_files(*dirs: str) -> list[str]:
@@ -298,10 +279,7 @@ def test_every_option_takes_more_than_one_value():
     included, sets it to another value. One with a single value in use is
     a constant, and the function should say so."""
     single = _one_value_options()
-    bad = sorted(set(single) - set(ONE_VALUE_OK))
-    assert not bad, f"{len(bad)} options with one value in use: {bad}"
-    stale = sorted(set(ONE_VALUE_OK) - set(single))
-    assert not stale, f"exemptions for options that are gone or now vary: {stale}"
+    assert not single, f"{len(single)} options with one value in use: {single}"
 
 
 def _script(name: str):

@@ -3,30 +3,21 @@
 - VERDICT r9 #6: the ADC regime split (fused long join in-plan, wide
   pivot on stored codes) is an explicit tested contract, so a refactor
   cannot silently swap the regimes SCALE.md §16 measured.
-- VERDICT r9 #7: failure injection for the index streaming faces — the
-  stream dies AFTER the index append side-effect but BEFORE the
-  micro-batch commits, then restarts on the same checkpoint; the replay
-  must append nothing (exactly-once by content dedup + in-commit
-  markers).
-- ADVICE r9: refined-codebook budget guard, narrowed path-not-found
-  handling, single ADC helper definitions.
+- ADVICE r9: refined-codebook budget guard, single ADC helper
+  definitions.
 """
 
 from __future__ import annotations
 
 import ast
-import os
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
-from super_store_datawarehouse_spark.operators import ann_index as ann_mod
 from super_store_datawarehouse_spark.operators.ann_index import (
     ivf_index_build,
     ivf_index_search,
     pq_index_build,
-    pq_index_ensure,
     pq_index_search,
 )
 
@@ -36,113 +27,6 @@ def vectors(spark):
     rng = random.Random(101)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(240)]
     return spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-
-def _drop_file(vectors, tmp_path, src, vmin, vmax, name):
-    part_dir = tmp_path / f"stage_{name}"
-    vectors.filter(f"vec_id >= {vmin} and vec_id < {vmax}").coalesce(1).write.parquet(
-        str(part_dir), mode="overwrite"
-    )
-    part = [f for f in os.listdir(part_dir) if f.endswith(".parquet")][0]
-    os.rename(part_dir / part, os.path.join(src, name))
-
-
-class _OneShotCrash:
-    """Wrap an index-update function: run the REAL update (the side
-    effect lands), then raise once — the crash point a kill lands on
-    when it arrives between the parquet append and the checkpoint
-    commit."""
-
-    def __init__(self, real):
-        self.real = real
-        self.crashed = False
-
-    def __call__(self, spark, path, new_vectors, **kw):
-        n = self.real(spark, path, new_vectors, **kw)
-        if n and not self.crashed:
-            self.crashed = True
-            raise RuntimeError("injected crash after append, before commit")
-        return n
-
-
-def test_stream_ivf_index_update_crash_resumes_exactly_once(
-    tmp_path, spark, monkeypatch
-):
-    from super_store_datawarehouse_spark.streaming.jobs import (
-        stream_ivf_index_update,
-    )
-
-    rng = random.Random(103)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(240)]
-    vectors = spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-    index = str(tmp_path / "ivf")
-    ivf_index_build(vectors.filter("vec_id < 120"), index, fraction=0.06, salt=7)
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    _drop_file(vectors, tmp_path, src, 120, 180, "embeddings0.parquet")
-    _drop_file(vectors, tmp_path, src, 180, 240, "embeddings1.parquet")
-
-    crash = _OneShotCrash(ann_mod.ivf_index_update)
-    monkeypatch.setattr(ann_mod, "ivf_index_update", crash)
-    ckpt = str(tmp_path / "ckpt")
-    with pytest.raises(Exception, match="injected crash"):
-        stream_ivf_index_update(spark, src, index, checkpoint=ckpt)
-    assert crash.crashed
-    # the append landed but the batch never committed: the cells table
-    # holds the crash batch's rows exactly once already
-    monkeypatch.setattr(ann_mod, "ivf_index_update", crash.real)
-
-    # restart on the SAME checkpoint: the crash batch replays; its rows
-    # are already stored, so the content dedup must append nothing for
-    # them and continue with the remaining file
-    stream_ivf_index_update(spark, src, index, checkpoint=ckpt)
-    cells = spark.read.parquet(index + "/cells")
-    assert cells.count() == 240
-    assert cells.select("vid").distinct().count() == 240  # no dup, none missing
-
-    q = vectors.filter("vec_id = 239")
-    hits = ivf_index_search(spark, index, q, k=3).collect()
-    assert len(hits) >= 1 and all(r["query_id"] == 239 for r in hits)
-
-
-def test_stream_pq_index_update_crash_resumes_exactly_once(
-    tmp_path, spark, vectors, monkeypatch
-):
-    from super_store_datawarehouse_spark.streaming.jobs import (
-        stream_pq_index_update,
-    )
-
-    index = str(tmp_path / "pq")
-    budget = dict(m=4, dim=8, codebook_buckets=500, salt=13, codebook_size=16)
-    pq_index_build(vectors.filter("vec_id < 120"), index, **budget)
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    _drop_file(vectors, tmp_path, src, 120, 180, "embeddings0.parquet")
-    _drop_file(vectors, tmp_path, src, 180, 240, "embeddings1.parquet")
-
-    crash = _OneShotCrash(ann_mod.pq_index_update)
-    monkeypatch.setattr(ann_mod, "pq_index_update", crash)
-    ckpt = str(tmp_path / "ckpt")
-    with pytest.raises(Exception, match="injected crash"):
-        stream_pq_index_update(spark, src, index, checkpoint=ckpt)
-    assert crash.crashed
-    monkeypatch.setattr(ann_mod, "pq_index_update", crash.real)
-
-    stream_pq_index_update(spark, src, index, checkpoint=ckpt)
-    codes = spark.read.parquet(index + "/pq_codes")
-    # every vid exactly once (m code rows each), none missing
-    assert codes.count() == 240 * 4
-    assert codes.select("vid").distinct().count() == 240
-    # the incrementally-updated fingerprint survived the crash+resume:
-    # ensure over the full corpus attests the index without a rebuild
-    assert pq_index_ensure(vectors, index, **budget)["rebuilt"] is False
-
-    q = vectors.filter("vec_id = 239")
-    hits = pq_index_search(spark, index, q, k=3).collect()
-    assert len(hits) == 3 and all(r["query_id"] == 239 for r in hits)
 
 
 # -- ADC regime-split dispatch (VERDICT r9 #6) -------------------------------
@@ -213,22 +97,6 @@ def test_refined_build_rejects_codebook_size(spark, vectors, tmp_path):
             vectors, str(tmp_path / "x"), m=4, dim=8, codebook_buckets=500,
             salt=13, codebook_size=16, refined=True,
         )
-
-
-def test_read_parquet_if_exists_is_narrow(spark, tmp_path):
-    from super_store_datawarehouse_spark.streaming.jobs import (
-        _read_parquet_if_exists,
-    )
-
-    # missing path: the one legitimate "no index yet" case
-    assert _read_parquet_if_exists(spark, str(tmp_path / "nope")) is None
-    # any OTHER read failure must propagate (an empty dir raises
-    # UNABLE_TO_INFER_SCHEMA, standing in for transient IO errors —
-    # swallowing it would re-encode an already-indexed batch)
-    empty = tmp_path / "empty"
-    empty.mkdir()
-    with pytest.raises(Exception):
-        _read_parquet_if_exists(spark, str(empty))
 
 
 def test_adc_helpers_defined_once():

@@ -2,12 +2,13 @@
 
 - VERDICT r11 #7: the streaming sinks' in-state marker read must be an
   O(1)-row slice (the marker columns are constant per publish), not a
-  full-state aggregate — while keeping the fresh/0-row/legacy fallbacks
-  the sinks rely on for exactly-once and migration.
+  full-state aggregate — while keeping the fresh/0-row fallbacks the
+  sinks rely on for exactly-once.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from super_store_datawarehouse_spark.streaming.jobs import _read_state_meta
@@ -82,12 +83,14 @@ def test_kmeans_fused_update_matches_unfused(spark):
 
 
 def test_state_meta_legacy_state_without_marker_column(tmp_path, spark):
+    """A state with data but no ``applied_batch`` column (the shape a
+    side-marker build persisted) is refused loudly: resuming it as a
+    fresh state would re-apply every batch it already holds."""
+    from pyspark.errors import AnalysisException
+
     out = str(tmp_path / "legacy")
     spark.range(0, 10).select(F.col("id").alias("value")).write.mode(
         "overwrite"
     ).parquet(out)
-    state, meta = _read_state_meta(
-        spark, out, legacy_reader=lambda: ("old-qid", 3)
-    )
-    assert state is not None
-    assert meta["query_id"] == "old-qid" and meta["applied_batch"] == 3
+    with pytest.raises(AnalysisException, match="applied_batch"):
+        _read_state_meta(spark, out)
