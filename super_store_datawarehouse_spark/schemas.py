@@ -62,6 +62,21 @@ SUPERSTORE_CSV_SCHEMA = StructType(
 MONEY = DecimalType(10, 2)
 DISCOUNT = DecimalType(3, 2)
 
+# Aggregated money is summed in EXACT decimal, not double: raw CSV
+# measures carry ≤4 fractional digits, so ``cast(decimal(18,4))`` before
+# ``SUM`` makes every rollup order-independent and bit-identical across
+# partitionings — double summation is associative-order-sensitive, and at
+# exact half-cent ties the final cent would otherwise depend on the
+# shuffle layout (the reference's pandas float sums hit exactly this:
+# see tests/test_golden_xlsx_parity.py, which pins each tie cell).
+# Per-line derived doubles (lost_value has a division) are captured to
+# 10 fractional digits before summing — ≤5e-11 per-line capture error,
+# far below any cent boundary at this grain. A sum casts to MONEY once
+# per fact cell; ties round HALF_UP (away from zero), Spark's decimal
+# cast semantics.
+EXACT = "decimal(18,4)"  # raw CSV measures: ≤4 fractional digits
+EXACT_DERIVED = "decimal(28,10)"  # per-line derived doubles (lost_value)
+
 # Warehouse tables — setup_database.sql:32-107 (dims), :111-196 (facts).
 CALENDAR_SCHEMA = StructType(
     [

@@ -3,10 +3,12 @@
 One call builds the same 15 tables the reference loads into MySQL
 (etl.py:1187-1201), keyed by the reference table names. The merged lines
 are cached: one GROUPING SETS pass over them collects every dimension's
-members to the driver, which numbers them and returns each dimension as
-a one-partition LocalRelation (``dims``). The six facts stay lazy plans
-over the cached lines that broadcast those local leaves, so planning a
-fact never re-analyses a dimension's lineage.
+members and the cells of the four summary facts to the driver, which
+numbers the members, attaches their ids to the cells and returns each of
+those 13 tables as a one-partition LocalRelation (``dims``). The two
+line-grain facts, Item and Orders, stay lazy plans over the cached lines
+that broadcast those local leaves, so planning a fact never re-analyses
+a dimension's lineage.
 """
 
 from __future__ import annotations
@@ -19,9 +21,9 @@ from super_store_datawarehouse_spark.warehouse.ingest import merge_duplicate_ord
 
 
 def build_warehouse(spark: SparkSession, csv_path: str = DEFAULT_CSV_PATH) -> dict[str, DataFrame]:
-    """Build all 15 warehouse tables: the nine dimensions as local
-    relations (one Spark job collects their members), the six facts as
-    lazy plans."""
+    """Build all 15 warehouse tables: the nine dimensions and the four
+    summary facts as local relations (one Spark job collects them), Item
+    and Orders as lazy plans."""
     lines = merge_duplicate_order_lines(read_superstore_csv(spark, csv_path)).cache()
     d = dims.build_dimensions(lines)
     t = d.tables
@@ -33,16 +35,7 @@ def build_warehouse(spark: SparkSession, csv_path: str = DEFAULT_CSV_PATH) -> di
         "Orders": facts.build_orders_fact(
             lines, t["Customer"], t["Calendar"], d.location_keys, t["Shipping"]
         ),
-        "OrderM": facts.build_order_m_fact(lines, t["CalendarMonth"], t["State"]),
-        "ProductPerformance": facts.build_product_performance_fact(
-            lines, t["Category"], t["State"], t["CalendarMonth"]
-        ),
-        "ShippingBehavior": facts.build_shipping_behavior_fact(
-            lines, t["Shipping"], t["Category"], t["Region"]
-        ),
-        "ShippingBehaviorS": facts.build_shipping_behavior_s_fact(
-            lines, t["Shipping"], t["Category"], t["State"]
-        ),
+        **d.facts,
     }
 
 

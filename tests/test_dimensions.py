@@ -1,11 +1,15 @@
-"""The nine dimensions against an independent DuckDB derivation, and the
-15 built tables against their declared schemas.
+"""The nine dimensions, the duplicate-line merge, Orders and the four
+summary facts against an independent DuckDB derivation, and the 15 built
+tables against their declared schemas.
 
 The synthetic lines carry the cases where key order is easy to get
 wrong: a null natural key, a date that appears only as a ship date,
 cp1252 curly quotes, mixed-case and non-ASCII names (byte order differs
 from locale order), a product code with two names, and a (postal code,
-city) pair listed under two states.
+city) pair listed under two states. For the aggregations they add a
+3-line duplicate group whose lowest row id is not first in the file, a
+line with no order date, a state listed under two regions and a mean
+ship delay of exactly 2.5.
 """
 
 from __future__ import annotations
@@ -52,6 +56,28 @@ LINES = [
     (7, "O7", D(2024, 1, 2), D(2024, 1, 5), "Standard Class", "C3", "bob", "Home Office",
      "Canada", "Toronto", "Ontario", "M5V", "North", "P2", "Technology", "Phones",
      "zeta lamp", 12.0, 1, 0.0, 4.0),
+    # no order date: drops from the facts, but its profit still counts in
+    # the running profit of (Furniture, S1)
+    (8, "O9", None, D(2023, 3, 7), "Standard Class", "C2", "Ängel Ávila", "Corporate",
+     "United States", "Beta", "S1", "10001", "East", "P5", "Furniture", "Bookcases",
+     "“Quoted” name", 2.0, 1, 0.0, 5.5),
+    # one (order, product) on three lines, the lowest row id second in the
+    # file; the merged line keeps row 9's ship mode, and its 3-day delay
+    # beside line 1's 2 days makes a mean of 2.5 for (Standard Class,
+    # Furniture, East)
+    (12, "O8", D(2024, 1, 2), D(2024, 1, 5), "First Class", "C1", "Ann Lee", "Consumer",
+     "United States", "Alpha", "S1", "10001", "East", "P1", "Furniture", "Chairs",
+     "Widget", 8.0, 2, 0.2, 1.1),
+    (9, "O8", D(2024, 1, 2), D(2024, 1, 5), "Standard Class", "C1", "Ann Lee", "Consumer",
+     "United States", "Alpha", "S1", "10001", "East", "P1", "Furniture", "Chairs",
+     "Widget", 4.0, 1, 0.0, 0.7),
+    (10, "O8", D(2024, 1, 2), D(2024, 1, 5), "Second Class", "C1", "Ann Lee", "Consumer",
+     "United States", "Alpha", "S1", "10001", "East", "P1", "Furniture", "Chairs",
+     "Widget", 6.0, 3, 0.4, -0.3),
+    # S2 again, now under East as well as West: joins on the state fan out
+    (11, "O10", D(2023, 7, 4), D(2023, 7, 6), "Same Day", "C4", "Zed", None,
+     "United States", "Eta", "S2", "33333", "East", "P3", "Office Supplies", "Paper",
+     "Äpple", 9.0, 2, 0.0, 1.25),
 ]
 
 DDL = """CREATE TABLE lines (
@@ -64,8 +90,23 @@ DDL = """CREATE TABLE lines (
 # Today's semantics, derived in SQL: members are the distinct natural
 # keys; ids are ROW_NUMBER (DENSE_RANK for year_id and country_id) over
 # the natural key, ascending with NULLS FIRST and byte-wise strings;
-# parents attach by inner joins on their names.
+# parents attach by inner joins on their names. The facts aggregate the
+# merged lines: a duplicate group keeps the line of its lowest row id,
+# with the group's sums. Money sums are exact decimals, rounded half up
+# once per cell (DuckDB's decimal cast truncates, so ``money`` rounds
+# first); a mean ship delay rounds half to even.
 ORACLE = {
+    "merged": """
+        SELECT l.row_id, l.order_id, l.order_date, l.ship_date, l.ship_mode,
+               l.customer_code, l.customer_name, l.segment, l.country, l.city, l.state,
+               l.postal_code, l.region, l.product_code, l.category, l.sub_category,
+               l.product_name, g.sales, g.quantity,
+               CASE WHEN g.n = 1 THEN l.discount ELSE g.dq / g.q END, g.profit
+        FROM lines l JOIN (
+            SELECT MIN(row_id) AS row_id, COUNT(*) AS n, SUM(sales) AS sales,
+                   SUM(quantity) AS quantity, SUM(profit) AS profit,
+                   SUM(discount * quantity) AS dq, SUM(quantity) AS q
+            FROM lines GROUP BY order_id, product_code) g USING (row_id)""",
     "_cal": """
         SELECT full_date, year(full_date) AS year_number, month(full_date) AS month_number,
                monthname(full_date) AS month_name, day(full_date) AS day_number,
@@ -91,7 +132,8 @@ ORACLE = {
         FROM (SELECT DISTINCT region, country FROM lines)""",
     "State": """
         SELECT s.state_id, s.state, r.region_id, s.region, r.country_id, s.country
-        FROM (SELECT *, ROW_NUMBER() OVER (ORDER BY state NULLS FIRST) AS state_id
+        FROM (SELECT *, ROW_NUMBER() OVER (ORDER BY state NULLS FIRST, region NULLS FIRST,
+                                           country NULLS FIRST) AS state_id
               FROM (SELECT DISTINCT state, region, country FROM lines)) s
         JOIN "Region" r ON s.region = r.region_name""",
     "Location": """
@@ -121,29 +163,95 @@ ORACLE = {
         JOIN (SELECT *, ROW_NUMBER() OVER (ORDER BY sub_category NULLS FIRST) AS sub_category_id
               FROM (SELECT DISTINCT sub_category FROM lines)) s
           ON p.sub_category = s.sub_category""",
+    "Orders": """
+        SELECT oc.calendar_id, sc.calendar_id, c.customer_id, k.location_id, sh.shipping_id,
+               m.order_id, money(o.sales), money(o.quantity), money(o.lost_value),
+               money(o.profit)
+        FROM (SELECT order_id, MIN(row_id) AS row_id, SUM(quantity) AS quantity,
+                     SUM(sales::DECIMAL(18,4)) AS sales, SUM(profit::DECIMAL(18,4)) AS profit,
+                     SUM(lost::DECIMAL(28,10)) AS lost_value
+              FROM merged_lost GROUP BY order_id) o
+        JOIN merged m USING (row_id)
+        JOIN "Calendar" oc ON m.order_date = oc.full_date
+        JOIN "Calendar" sc ON m.ship_date = sc.full_date
+        JOIN "Customer" c ON m.customer_code = c.customer_code
+        JOIN (SELECT postal_code, city_name, MAX(location_id) AS location_id
+              FROM "Location" GROUP BY ALL) k
+          ON m.postal_code = k.postal_code AND m.city = k.city_name
+        JOIN "Shipping" sh ON m.ship_mode = sh.ship_mode""",
+    "OrderM": """
+        SELECT cm.calendar_month_id, s.state_id, money(SUM(m.sales::DECIMAL(18,4))),
+               money(SUM(m.quantity)), money(SUM(m.lost::DECIMAL(28,10))),
+               money(SUM(m.profit::DECIMAL(18,4)))
+        FROM merged_lost m
+        JOIN "CalendarMonth" cm ON year(m.order_date) = cm.year_number
+                               AND month(m.order_date) = cm.calendar_month_number
+        JOIN "State" s ON m.state = s.state_name
+        GROUP BY cm.calendar_month_id, s.state_id""",
+    "ProductPerformance": """
+        SELECT c.category_id, s.state_id, cm.calendar_month_id, money(t.sales),
+               money(t.profit), money(t.running), t.quantity::INTEGER
+        FROM (SELECT *, SUM(profit) OVER (PARTITION BY category, state
+                                          ORDER BY y NULLS FIRST, m NULLS FIRST) AS running
+              FROM (SELECT category, state, year(order_date) AS y, month(order_date) AS m,
+                           SUM(sales::DECIMAL(18,4)) AS sales,
+                           SUM(profit::DECIMAL(18,4)) AS profit, SUM(quantity) AS quantity
+                    FROM merged GROUP BY ALL)) t
+        JOIN "Category" c ON t.category = c.category_name
+        JOIN "State" s ON t.state = s.state_name
+        JOIN "CalendarMonth" cm ON t.y = cm.year_number AND t.m = cm.calendar_month_number""",
+    "ShippingBehavior": """
+        SELECT sh.shipping_id, c.category_id, r.region_id,
+               round_even(AVG(date_diff('day', m.order_date, m.ship_date)), 0)::INTEGER,
+               COUNT(*)::INTEGER
+        FROM merged m
+        JOIN "Shipping" sh ON m.ship_mode = sh.ship_mode
+        JOIN "Category" c ON m.category = c.category_name
+        JOIN "Region" r ON m.region = r.region_name
+        GROUP BY ALL""",
+    "ShippingBehaviorS": """
+        SELECT sh.shipping_id, c.category_id, s.state_id,
+               round_even(AVG(date_diff('day', m.order_date, m.ship_date)), 0)::INTEGER,
+               COUNT(*)::INTEGER
+        FROM merged m
+        JOIN "Shipping" sh ON m.ship_mode = sh.ship_mode
+        JOIN "Category" c ON m.category = c.category_name
+        JOIN "State" s ON m.state = s.state_name
+        GROUP BY ALL""",
 }
+DIMENSIONS = ("Calendar", "CalendarMonth", "Customer", "Region", "State", "Location",
+              "Category", "Product", "Shipping")
 
 
-def _oracle_dims() -> dict[str, list[tuple]]:
+def _oracle() -> dict[str, list[tuple]]:
     con = duckdb.connect()
     try:
         con.execute(DDL)
         con.executemany(f"INSERT INTO lines VALUES ({', '.join('?' * len(LINE_COLS))})", LINES)
+        con.execute("CREATE MACRO money(x) AS round(x, 2)::DECIMAL(10,2)")
         out = {}
         for name, sql in ORACLE.items():
             # name the columns as the warehouse does, so later derivations
             # can join on them
-            cols = ["full_date", "year_number", "month_number", "month_name", "day_number",
-                    "year_id", "calendar_id"] if name == "_cal" else WAREHOUSE_SCHEMAS[name].names
+            cols = {
+                "_cal": ["full_date", "year_number", "month_number", "month_name",
+                         "day_number", "year_id", "calendar_id"],
+                "merged": LINE_COLS,
+            }.get(name) or WAREHOUSE_SCHEMAS[name].names
             con.execute(f'CREATE TABLE "{name}" AS SELECT * FROM ({sql}) t({", ".join(cols)})')
             out[name] = con.execute(f'SELECT * FROM "{name}"').fetchall()
+            if name == "merged":
+                con.execute(
+                    "CREATE VIEW merged_lost AS SELECT *, CASE WHEN discount < 1 "
+                    "THEN sales / (1 - discount) - sales ELSE 0 END AS lost FROM merged"
+                )
         del out["_cal"]
         return out
     finally:
         con.close()
 
 
-def _lines_frame(spark):
+def _lines_frame(spark, lines=LINES):
     from pyspark.sql import types as T
 
     types = {
@@ -152,14 +260,14 @@ def _lines_frame(spark):
         "profit": T.DoubleType(),
     }
     schema = T.StructType([T.StructField(c, types.get(c, T.StringType())) for c in LINE_COLS])
-    return spark.createDataFrame(LINES, schema)
+    return spark.createDataFrame(lines, schema)
 
 
 def test_dimensions_match_duckdb_derivation(spark):
     from super_store_datawarehouse_spark.warehouse import dims
 
     got = dims.build_dimensions(_lines_frame(spark)).tables
-    expected = _oracle_dims()
+    expected = {name: rows for name, rows in _oracle().items() if name in DIMENSIONS}
     assert sorted(got) == sorted(expected)
     for name, rows in expected.items():
         assert got[name].columns == WAREHOUSE_SCHEMAS[name].names, name
@@ -168,6 +276,55 @@ def test_dimensions_match_duckdb_derivation(spark):
     assert len(expected["Product"]) == 6  # P1 under two names
     assert any(r[1] is None for r in expected["Location"])  # null postal code
     assert any(r[1] == D(2024, 3, 2) for r in expected["Calendar"])  # ship-only date
+
+
+def _canon(rows) -> Counter:
+    """Rows as a multiset, doubles to 9 decimals (sums of 3 doubles may
+    differ in the last bit between engines)."""
+    return Counter(tuple(round(v, 9) if isinstance(v, float) else v for v in r) for r in rows)
+
+
+def test_merge_matches_duckdb_derivation(spark):
+    from super_store_datawarehouse_spark.warehouse.ingest import merge_duplicate_order_lines
+
+    got = merge_duplicate_order_lines(_lines_frame(spark)).select(*LINE_COLS).collect()
+    expected = _oracle()["merged"]
+    assert _canon(got) == _canon(expected)
+    # the 3-line group keeps row 9, second in the file, with the group's sums
+    (o8,) = [r for r in expected if r[1] == "O8"]
+    assert (o8[0], o8[4], o8[17], o8[18]) == (9, "Standard Class", 18.0, 6)
+    assert o8[19] == pytest.approx((0.2 * 2 + 0.4 * 3) / 6)
+
+
+@pytest.mark.parametrize(
+    "table", ["Orders", "OrderM", "ProductPerformance", "ShippingBehavior", "ShippingBehaviorS"]
+)
+def test_built_facts_match_duckdb_derivation(built, table):
+    assert Counter(tuple(r) for r in built[table].collect()) == Counter(_oracle()[table])
+
+
+def test_fact_derivation_exercises_the_hard_cases():
+    from decimal import Decimal
+
+    expected = _oracle()
+    ids = {name: {r[1]: r[0] for r in expected[name]} for name in ("Category", "Shipping")}
+    s2 = {r[0] for r in expected["State"] if r[1] == "S2"}
+    (s1,) = {r[0] for r in expected["State"] if r[1] == "S1"}
+    month = {(r[4], r[1]): r[0] for r in expected["CalendarMonth"]}
+    assert len(s2) == 2  # S2 under two regions
+    # OrderM's (July 2023, S2) cell fans out to both S2 ids
+    assert {r[1] for r in expected["OrderM"] if r[0] == month[2023, 7]} >= s2
+    # (Furniture, S1) from March 2023 on: 5.50 of the line with no order
+    # date, then 2.25 - 1.50
+    furniture = ids["Category"]["Furniture"]
+    (march,) = [r for r in expected["ProductPerformance"]
+                if r[:3] == (furniture, s1, month[2023, 3])]
+    assert march[4:6] == (Decimal("0.75"), Decimal("6.25"))
+    # (Standard Class, Furniture, East): delays 2 and 3, and one unknown
+    (east,) = [r for r in expected["ShippingBehavior"]
+               if r[:2] == (ids["Shipping"]["Standard Class"], furniture)
+               and r[2] == next(x[0] for x in expected["Region"] if x[1] == "East")]
+    assert east[3:] == (2, 3)
 
 
 def _write_csv(path) -> None:
@@ -206,18 +363,20 @@ def test_built_tables_match_declared_schemas(built, table):
 
 def test_built_dimensions_match_duckdb_derivation(built):
     """The CSV path (cp1252 decode, date parse) yields the same members."""
-    expected = _oracle_dims()
-    for name, rows in expected.items():
-        assert Counter(tuple(r) for r in built[name].collect()) == Counter(rows), name
-    # every line resolves all four Item keys except the one with no postal code
-    assert built["Item"].count() == len(LINES) - 1
+    expected = _oracle()
+    for name in DIMENSIONS:
+        assert Counter(tuple(r) for r in built[name].collect()) == Counter(expected[name]), name
+    # every merged line resolves all four Item keys except the one with no
+    # postal code and the one with no order date
+    assert built["Item"].count() == len(expected["merged"]) - 2
 
 
 def test_member_cap_names_the_dimension(spark, monkeypatch):
     from super_store_datawarehouse_spark.warehouse import dims
 
-    # 5 order dates and 7 ship dates (one null), each set within a cap of
-    # 7, but 11 Calendar members together
+    # 6 order dates and 7 ship dates (one null in each), each set within a
+    # cap of 7, but 11 Calendar members together; the 68 members and fact
+    # cells pass the collect's cap of 70
     monkeypatch.setattr(dims, "MAX_MEMBERS", 7)
     with pytest.raises(ValueError, match="dimension Calendar has more than MAX_MEMBERS=7"):
         dims.build_dimensions(_lines_frame(spark))
@@ -226,8 +385,29 @@ def test_member_cap_names_the_dimension(spark, monkeypatch):
 def test_member_collect_overrun_names_the_dimension(spark, monkeypatch):
     from super_store_datawarehouse_spark.warehouse import dims
 
-    # 34 members over the six grouping sets pass six caps of 2, so the
-    # collect stops before the per-dimension check
+    # 68 members and fact cells over the ten grouping sets pass ten caps
+    # of 2, so the collect stops before the per-table check
     monkeypatch.setattr(dims, "MAX_MEMBERS", 2)
     with pytest.raises(ValueError, match="dimension Calendar has more than MAX_MEMBERS=2"):
         dims.build_dimensions(_lines_frame(spark))
+
+
+def test_fact_cap_names_the_fact(spark, monkeypatch):
+    from super_store_datawarehouse_spark.warehouse import dims
+
+    def line(row_id, state, postal, product, category):
+        return (row_id, f"O{row_id}", D(2023, 1, 10), D(2023, 1, 10), "Standard Class", "C1",
+                "Ann Lee", "Consumer", "United States", "Alpha", state, postal, "East",
+                product, category, "Sub", "Name", 1.0, 1, 0.0, 0.5)
+
+    lines = _lines_frame(spark, [
+        line(1, "S1", "10001", "P1", "Furniture"),
+        line(2, "S1", "10001", "P2", "Technology"),
+        line(3, "S2", "20002", "P1", "Furniture"),
+        line(4, "S2", "20002", "P2", "Technology"),
+    ])
+    # every dimension has at most 2 members, but ProductPerformance and
+    # ShippingBehaviorS have 4 cells (2 categories x 2 states)
+    monkeypatch.setattr(dims, "MAX_MEMBERS", 3)
+    with pytest.raises(ValueError, match="fact ProductPerformance has more than MAX_MEMBERS=3"):
+        dims.build_dimensions(lines)

@@ -160,16 +160,16 @@ def _assert_cells(ours, theirs, cols, exact_sum=None) -> None:
 
 # ---------------------------------------------------------------- OrderM
 
-def test_orderm_cell_exact(warehouse, ref, ddb):
+def test_orderm_cell_exact(reference_warehouse, ref, ddb):
     look = ref["look"]
     theirs = {
         (*look["cm"][r["calendar_month_id"]], look["state"][r["state_id"]]): r
         for r in ref["sheets"]["OrderM"]
     }
     rows = (
-        warehouse["OrderM"]
-        .join(F.broadcast(warehouse["CalendarMonth"]), "calendar_month_id")
-        .join(F.broadcast(warehouse["State"].select("state_id", "state_name")),
+        reference_warehouse["OrderM"]
+        .join(F.broadcast(reference_warehouse["CalendarMonth"]), "calendar_month_id")
+        .join(F.broadcast(reference_warehouse["State"].select("state_id", "state_name")),
               "state_id")
         .collect()
     )
@@ -195,7 +195,7 @@ def test_orderm_cell_exact(warehouse, ref, ddb):
 
 # --------------------------------------------------- ProductPerformance
 
-def test_product_performance_cell_exact(warehouse, ref, ddb):
+def test_product_performance_cell_exact(reference_warehouse, ref, ddb):
     look = ref["look"]
     theirs = {
         (look["cat"][r["category_id"]], look["state"][r["state_id"]],
@@ -203,11 +203,11 @@ def test_product_performance_cell_exact(warehouse, ref, ddb):
         for r in ref["sheets"]["ProductPerformance"]
     }
     rows = (
-        warehouse["ProductPerformance"]
-        .join(F.broadcast(warehouse["Category"]), "category_id")
-        .join(F.broadcast(warehouse["State"].select("state_id", "state_name")),
+        reference_warehouse["ProductPerformance"]
+        .join(F.broadcast(reference_warehouse["Category"]), "category_id")
+        .join(F.broadcast(reference_warehouse["State"].select("state_id", "state_name")),
               "state_id")
-        .join(F.broadcast(warehouse["CalendarMonth"]), "calendar_month_id")
+        .join(F.broadcast(reference_warehouse["CalendarMonth"]), "calendar_month_id")
         .collect()
     )
     ours = {
@@ -246,7 +246,7 @@ def test_product_performance_cell_exact(warehouse, ref, ddb):
 
 # ----------------------------------------------------- ShippingBehavior
 
-def _shipping_parity(warehouse, ref, table, geo_sheet_key, geo_dim, geo_col):
+def _shipping_parity(reference_warehouse, ref, table, geo_sheet_key, geo_dim, geo_col):
     look = ref["look"]
     theirs = {
         (look["ship"][r["shipping_id"]], look["cat"][r["category_id"]],
@@ -254,10 +254,10 @@ def _shipping_parity(warehouse, ref, table, geo_sheet_key, geo_dim, geo_col):
         for r in ref["sheets"][table]
     }
     rows = (
-        warehouse[table]
-        .join(F.broadcast(warehouse["Shipping"]), "shipping_id")
-        .join(F.broadcast(warehouse["Category"]), "category_id")
-        .join(F.broadcast(warehouse[geo_dim].select(f"{geo_col}_id",
+        reference_warehouse[table]
+        .join(F.broadcast(reference_warehouse["Shipping"]), "shipping_id")
+        .join(F.broadcast(reference_warehouse["Category"]), "category_id")
+        .join(F.broadcast(reference_warehouse[geo_dim].select(f"{geo_col}_id",
                                                     f"{geo_col}_name")),
               f"{geo_col}_id")
         .collect()
@@ -269,19 +269,19 @@ def _shipping_parity(warehouse, ref, table, geo_sheet_key, geo_dim, geo_col):
     _assert_cells(ours, theirs, ["shipping_delay", "method_freq"])
 
 
-def test_shipping_behavior_cell_exact(warehouse, ref):
-    _shipping_parity(warehouse, ref, "ShippingBehavior", "region",
+def test_shipping_behavior_cell_exact(reference_warehouse, ref):
+    _shipping_parity(reference_warehouse, ref, "ShippingBehavior", "region",
                      "Region", "region")
 
 
-def test_shipping_behavior_s_cell_exact(warehouse, ref):
-    _shipping_parity(warehouse, ref, "ShippingBehaviorS", "state",
+def test_shipping_behavior_s_cell_exact(reference_warehouse, ref):
+    _shipping_parity(reference_warehouse, ref, "ShippingBehaviorS", "state",
                      "State", "state")
 
 
 # --------------------------------------------------------------- Orders
 
-def test_orders_cell_exact(warehouse, ref, ddb):
+def test_orders_cell_exact(reference_warehouse, ref, ddb):
     look = ref["look"]
     theirs = {}
     for r in ref["sheets"]["Orders"]:
@@ -293,9 +293,9 @@ def test_orders_cell_exact(warehouse, ref, ddb):
         theirs[r["order_code"]] = row
     assert len(theirs) == len(ref["sheets"]["Orders"])  # order_code unique
 
-    cal = warehouse["Calendar"].select("calendar_id", "full_date")
+    cal = reference_warehouse["Calendar"].select("calendar_id", "full_date")
     rows = (
-        warehouse["Orders"]
+        reference_warehouse["Orders"]
         .join(F.broadcast(cal.select(
             F.col("calendar_id").alias("order_calendar_id"),
             F.col("full_date").cast("string").alias("order_date"))),
@@ -304,10 +304,10 @@ def test_orders_cell_exact(warehouse, ref, ddb):
             F.col("calendar_id").alias("shipping_calendar_id"),
             F.col("full_date").cast("string").alias("ship_date"))),
             "shipping_calendar_id")
-        .join(F.broadcast(warehouse["Customer"]
+        .join(F.broadcast(reference_warehouse["Customer"]
                           .select("customer_id", "customer_code")),
               "customer_id")
-        .join(F.broadcast(warehouse["Shipping"]), "shipping_id")
+        .join(F.broadcast(reference_warehouse["Shipping"]), "shipping_id")
         .collect()
     )
     ours = {r["order_code"]: r for r in rows}
@@ -328,7 +328,7 @@ def test_orders_cell_exact(warehouse, ref, ddb):
 
 # ----------------------------------------------------------------- Item
 
-def test_item_cell_exact(warehouse, ref):
+def test_item_cell_exact(reference_warehouse, ref):
     look = ref["look"]
     theirs = {}
     for r in ref["sheets"]["Item"]:
@@ -340,14 +340,14 @@ def test_item_cell_exact(warehouse, ref):
         theirs[key] = row
 
     rows = (
-        warehouse["Item"]
-        .join(F.broadcast(warehouse["Product"]
+        reference_warehouse["Item"]
+        .join(F.broadcast(reference_warehouse["Product"]
                           .select("product_id", "product_code")),
               "product_id")
-        .join(F.broadcast(warehouse["Calendar"].select(
+        .join(F.broadcast(reference_warehouse["Calendar"].select(
             "calendar_id", F.col("full_date").cast("string").alias("order_date"))),
             "calendar_id")
-        .join(F.broadcast(warehouse["Customer"]
+        .join(F.broadcast(reference_warehouse["Customer"]
                           .select("customer_id", "customer_code")),
               "customer_id")
         .collect()
@@ -362,7 +362,7 @@ def test_item_cell_exact(warehouse, ref):
 
 # ------------------------------------------------------------ dimensions
 
-def test_dim_cell_parity(warehouse, ref):
+def test_dim_cell_parity(reference_warehouse, ref):
     """Natural-key parity of every dimension's descriptive columns."""
     sheets = ref["sheets"]
 
@@ -397,7 +397,7 @@ def test_dim_cell_parity(warehouse, ref):
                 r["full_date"] = _serial_to_date(r["full_date"])
         theirs = {tuple(norm(k, r[k]) for k in keys): r for r in ref_rows}
         assert len(theirs) == len(ref_rows), f"{table}: ref natural key not unique"
-        our_df = warehouse[table]
+        our_df = reference_warehouse[table]
         if table == "Calendar":
             our_df = our_df.withColumn("full_date",
                                        F.col("full_date").cast("string"))

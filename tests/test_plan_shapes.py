@@ -277,3 +277,45 @@ def test_x284_anomalies_is_window_plus_broadcasts(plans):
     p = plans("x313_seasonal_anomalies")
     assert "Window" in p
     assert "SortMergeJoin" not in p and "CartesianProduct" not in p
+
+
+@pytest.fixture(scope="module")
+def etl_plan(spark, warehouse, warehouse_csv):
+    """Executed plan of the cached lines or of a warehouse table."""
+    from super_store_datawarehouse_spark.sources.superstore import read_superstore_csv
+    from super_store_datawarehouse_spark.warehouse.ingest import merge_duplicate_order_lines
+
+    frames = {
+        "lines": merge_duplicate_order_lines(read_superstore_csv(spark, warehouse_csv)),
+        **warehouse,
+    }
+
+    def plan_of(name: str) -> str:
+        df = frames[name]
+        df.collect()
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    return plan_of
+
+
+@pytest.mark.parametrize("name", ["lines", "Item", "Orders"])
+def test_line_merge_and_order_rollup_use_no_sort_aggregate(etl_plan, name):
+    """The duplicate-line merge and the per-order rollup carry 14 and 6
+    string attributes; as min_by aggregates their buffer has variable
+    width and Spark plans an interpreted SortAggregate. A window that keeps
+    each group's first line needs none."""
+    p = etl_plan(name)
+    assert "Window" in p
+    assert "SortAggregate" not in p
+
+
+@pytest.mark.parametrize(
+    "name", ["OrderM", "ProductPerformance", "ShippingBehavior", "ShippingBehaviorS"]
+)
+def test_summary_facts_are_local_relations(etl_plan, name):
+    """The summary facts come back from the dimensions' pass: writing one
+    reads no lines and shuffles nothing."""
+    p = etl_plan(name)
+    assert "LocalTableScan" in p
+    assert "Exchange" not in p
+    assert "InMemoryTableScan" not in p

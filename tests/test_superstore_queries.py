@@ -1,16 +1,14 @@
 """The 13 reference queries: SQL form ≡ DataFrame form, plus sanity
 properties of each result (SURVEY §7.2 dual API surface).
 
-The warehouse comes from the reference CSV when it is present, otherwise
-from a CSV made by the benchmark's seeded generator (``perfbench/gen.py``,
-imported as is).
+The warehouse is the shared ``warehouse`` fixture: the reference CSV when
+it is present, otherwise a small generated one (``tests/conftest.py``).
 """
 
 from __future__ import annotations
 
 import math
 import os
-import sys
 
 import pytest
 
@@ -19,30 +17,11 @@ from super_store_datawarehouse_spark.plans.superstore_queries import (
     run_df,
     run_sql,
 )
-from super_store_datawarehouse_spark.warehouse.pipeline import (
-    build_warehouse,
-    register_warehouse_views,
-)
-
-from tests.conftest import REFERENCE_CSV
-
-sys.path.append(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"))
-import gen  # noqa: E402
-
-# The smallest seed-0 generated CSV on which the assertions below have what
-# they need: all 49 states (q10), all 4 ship modes (q07) and at least 10
-# products in every category (q13). Its literal Q1 bug keeps 8.5 % of the
-# sales, under the 10 % that test allows.
-GENERATED_LINES = 467
+from super_store_datawarehouse_spark.warehouse.pipeline import register_warehouse_views
 
 
 @pytest.fixture(scope="module")
-def views(request, spark, tmp_path_factory):
-    if os.path.exists(REFERENCE_CSV):
-        warehouse = request.getfixturevalue("warehouse")
-    else:
-        out_dir = str(tmp_path_factory.mktemp("superstore"))
-        warehouse = build_warehouse(spark, gen.superstore_csv(out_dir, 0, GENERATED_LINES).path)
+def views(warehouse):
     register_warehouse_views(warehouse)
     return warehouse
 

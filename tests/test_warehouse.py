@@ -1,10 +1,11 @@
 """Golden-output tests for the Superstore warehouse (SURVEY §5).
 
-Cardinalities come from the reference's export
-``superstore_dw_export.xlsx`` (SURVEY §1.4); measure identities and
-integrity invariants replace the DDL's PK/FK constraints (FIXTURES.md
-§F2); cross-engine value checks use DuckDB over the same CSV as an
-independent oracle.
+Measure identities and integrity invariants replace the DDL's PK/FK
+constraints (FIXTURES.md §F2); cross-engine value checks use DuckDB over
+the same CSV as an independent oracle. They run over the shared
+``warehouse`` fixture, built from a generated CSV when the reference's is
+absent. Cardinalities come from the reference's export
+``superstore_dw_export.xlsx`` (SURVEY §1.4) and need the reference CSV.
 """
 
 from __future__ import annotations
@@ -31,22 +32,20 @@ GOLDEN_CARDINALITIES = {
     "ShippingBehaviorS": 458,
 }
 
-CSV = "/root/reference/Sample - Superstore.csv"
-
 
 @pytest.fixture(scope="module")
-def csv_utf8(tmp_path_factory):
+def csv_utf8(tmp_path_factory, warehouse_csv):
     """UTF-8 transcoding of the cp1252 CSV (DuckDB reads UTF-8 only)."""
     out = tmp_path_factory.mktemp("csv") / "superstore_utf8.csv"
     out.write_text(
-        open(CSV, encoding="windows-1252").read(), encoding="utf-8"
+        open(warehouse_csv, encoding="windows-1252").read(), encoding="utf-8"
     )
     return str(out)
 
 
 @pytest.mark.parametrize("table,expected", sorted(GOLDEN_CARDINALITIES.items()))
-def test_golden_cardinality(warehouse, table, expected):
-    assert warehouse[table].count() == expected
+def test_golden_cardinality(reference_warehouse, table, expected):
+    assert reference_warehouse[table].count() == expected
 
 
 def test_item_preserves_all_measures(warehouse, csv_utf8):
@@ -62,7 +61,7 @@ def test_item_preserves_all_measures(warehouse, csv_utf8):
     ).first()
     # money is DECIMAL(10,2)-rounded per row; worst-case drift vs the
     # unrounded CSV totals is 0.005 per row
-    tol = 0.005 * 9986
+    tol = 0.005 * warehouse["Item"].count()
     assert float(got[0]) == pytest.approx(sales, abs=tol)
     assert int(got[1]) == int(qty)
     assert float(got[2]) == pytest.approx(profit, abs=tol)
