@@ -7,8 +7,10 @@ imported as is), so it carries every reference quirk at the benchmark's
 rates. One process starts Spark at ``local[<cores>]`` with a 2 GiB driver
 heap, calls ``build_warehouse`` and ``write_warehouse`` once, and prints
 the wall time and the process-tree CPU (Python driver, JVM and workers;
-JVM start included), the number of Spark jobs the build and the write
-ran (from the status tracker) and the row count of every written table.
+JVM start included), the peak resident memory of that process tree (the
+sum of each live process's high-water mark, read before Spark stops),
+the number of Spark jobs the build and the write ran (from the status
+tracker) and the row count of every written table.
 
 This is not part of tier-1 or of the benchmark: it checks that a cut in
 fixed per-operation cost does not hide a cost that grows with the data.
@@ -34,7 +36,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 
 import gen  # noqa: E402
-from tracing import tree_cpu_s  # noqa: E402
+from tracing import tree_cpu_s, tree_peak_rss_mb  # noqa: E402
 
 SEED = 0
 
@@ -60,11 +62,13 @@ def main() -> int:
     write_warehouse(build_warehouse(spark, info.path), args.out)
     wall, cpu = time.perf_counter() - t0, tree_cpu_s() - cpu0
     jobs = len(spark.sparkContext.statusTracker().getJobIdsForGroup())
+    peak_rss = tree_peak_rss_mb()
     spark.stop()
 
     print(f"csv {info.path}: {info.rows} lines, {info.merged_lines} merged")
     print(f"wall_s {wall:.1f}")
     print(f"cpu_s {cpu:.1f}")
+    print(f"peak_rss_mb {peak_rss:.0f}")
     print(f"spark_jobs {jobs}")
     for name in sorted(os.listdir(args.out)):
         table_dir = os.path.join(args.out, name)

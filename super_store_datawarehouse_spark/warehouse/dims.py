@@ -20,11 +20,15 @@ broadcast build side"). This module keeps that shape:
 3. the driver numbers the members. A surrogate id is the row_number of
    its natural key: ascending, NULLS FIRST, strings byte-wise (Spark's
    binary collation and Python's code-point order agree). ``year_id``
-   and ``country_id`` are dense ranks. A parent attaches by its name
-   with inner-join semantics: a null name matches nothing, and a name
-   under two parents (a state in two regions) fans out;
-4. the driver attaches those ids to the fact cells by the same
-   inner-join rule and computes what is not a plain sum: the running
+   and ``country_id`` are dense ranks. A parent attaches with
+   inner-join semantics, where a key holding a null matches nothing:
+   a Location member to the State row of its own (state, region,
+   country), a State member to the Region row of its own (region,
+   country), and every other child by its parent's name. A state under
+   two regions is two State rows, and each Location row names its own;
+4. the driver attaches those ids to the fact cells by name, with the
+   same inner-join rule (a state under two regions fans out to both of
+   its ids), and computes what is not a plain sum: the running
    profit of ProductPerformance, over each (category, state) in (year,
    month) order with NULLS FIRST and before the joins, so the cell of a
    null order date still counts; and the mean ship delay, rounded
@@ -131,19 +135,21 @@ def _dense_rank(values) -> dict:
     return {v: i for i, v in _numbered((v,) for v in values)}
 
 
-def _by_name(rows, col: int) -> dict:
-    """Inner-join build side keyed by ``row[col]``; a null key never matches."""
+def _by_key(rows, *cols: int) -> dict:
+    """Inner-join build side keyed by the tuple of ``row[c]`` for ``cols``;
+    a key holding a null never matches."""
     out = defaultdict(list)
     for r in rows:
-        if r[col] is not None:
-            out[r[col]].append(r)
+        key = tuple(r[c] for c in cols)
+        if None not in key:
+            out[key].append(r)
     return out
 
 
 def _ids(rows) -> dict:
     """Inner-join build side from a dimension's name (``row[1]``) to its
     ids (``row[0]``)."""
-    return {name: [r[0] for r in rs] for name, rs in _by_name(rows, 1).items()}
+    return {name: [r[0] for r in rs] for (name,), rs in _by_key(rows, 1).items()}
 
 
 def _rows(table: pa.Table, cols) -> list[tuple]:
@@ -275,13 +281,13 @@ def _geography(locations: set[tuple]) -> dict[str, list[tuple]]:
         (i, r, country_id[c], c)
         for i, r, c in _numbered((r, c) for _, _, _, c, r in locations)
     ]
-    regions = _by_name(region, 1)
+    regions = _by_key(region, 1, 3)  # (region, country)
     state = [
         (i, s, reg[0], r, reg[2], c)
         for i, s, r, c in _numbered((s, r, c) for _, _, s, c, r in locations)
-        for reg in regions.get(r, ())
+        for reg in regions.get((r, c), ())
     ]
-    states = _by_name(state, 1)
+    states = _by_key(state, 1, 3, 5)  # (state, region, country)
     city_id = {
         (ct, s): i
         for i, ct, s in _numbered((ct, s) for _, ct, s, _, _ in locations)
@@ -291,7 +297,7 @@ def _geography(locations: set[tuple]) -> dict[str, list[tuple]]:
         (i, p, st[4], c, st[2], r, st[0], s, city_id[ct, s], ct, p)
         for i, p, ct, s, c, r in _numbered(locations)
         if (ct, s) in city_id
-        for st in states.get(s, ())
+        for st in states.get((s, r, c), ())
     ]
     return {"Region": region, "State": state, "Location": location}
 

@@ -90,11 +90,13 @@ DDL = """CREATE TABLE lines (
 # Today's semantics, derived in SQL: members are the distinct natural
 # keys; ids are ROW_NUMBER (DENSE_RANK for year_id and country_id) over
 # the natural key, ascending with NULLS FIRST and byte-wise strings;
-# parents attach by inner joins on their names. The facts aggregate the
-# merged lines: a duplicate group keeps the line of its lowest row id,
-# with the group's sums. Money sums are exact decimals, rounded half up
-# once per cell (DuckDB's decimal cast truncates, so ``money`` rounds
-# first); a mean ship delay rounds half to even.
+# parents attach by inner joins: a State to the Region of its (region,
+# country), a Location to the State of its (state, region, country), any
+# other child, and every fact id, by its parent's name. The facts
+# aggregate the merged lines: a duplicate group keeps the line of its
+# lowest row id, with the group's sums. Money sums are exact decimals,
+# rounded half up once per cell (DuckDB's decimal cast truncates, so
+# ``money`` rounds first); a mean ship delay rounds half to even.
 ORACLE = {
     "merged": """
         SELECT l.row_id, l.order_id, l.order_date, l.ship_date, l.ship_mode,
@@ -135,14 +137,15 @@ ORACLE = {
         FROM (SELECT *, ROW_NUMBER() OVER (ORDER BY state NULLS FIRST, region NULLS FIRST,
                                            country NULLS FIRST) AS state_id
               FROM (SELECT DISTINCT state, region, country FROM lines)) s
-        JOIN "Region" r ON s.region = r.region_name""",
+        JOIN "Region" r ON s.region = r.region_name AND s.country = r.country_name""",
     "Location": """
         SELECT l.location_id, l.postal_code, s.country_id, l.country, s.region_id, l.region,
                s.state_id, l.state, c.city_id, l.city, l.postal_code
         FROM (SELECT *, ROW_NUMBER() OVER (ORDER BY postal_code NULLS FIRST, city NULLS FIRST,
                                            state NULLS FIRST) AS location_id
               FROM (SELECT DISTINCT postal_code, city, state, country, region FROM lines)) l
-        JOIN "State" s ON l.state = s.state_name
+        JOIN "State" s ON l.state = s.state_name AND l.region = s.region_name
+                      AND l.country = s.country_name
         JOIN (SELECT *, ROW_NUMBER() OVER (ORDER BY city NULLS FIRST, state NULLS FIRST) AS city_id
               FROM (SELECT DISTINCT city, state FROM lines)) c
           ON l.city = c.city AND l.state = c.state""",
@@ -276,6 +279,12 @@ def test_dimensions_match_duckdb_derivation(spark):
     assert len(expected["Product"]) == 6  # P1 under two names
     assert any(r[1] is None for r in expected["Location"])  # null postal code
     assert any(r[1] == D(2024, 3, 2) for r in expected["Calendar"])  # ship-only date
+    # S2 under two regions: each Location row is one member with its own
+    # region's id
+    location = got["Location"].collect()
+    assert len({r.location_id for r in location}) == len(location)
+    region_id = {r.region_name: r.region_id for r in got["Region"].collect()}
+    assert all(r.region_id == region_id[r.region_name] for r in location)
 
 
 def _canon(rows) -> Counter:

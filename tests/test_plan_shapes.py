@@ -281,7 +281,7 @@ def test_x284_anomalies_is_window_plus_broadcasts(plans):
 
 @pytest.fixture(scope="module")
 def etl_plan(spark, warehouse, warehouse_csv):
-    """Executed plan of the cached lines or of a warehouse table."""
+    """Executed plan of the merged lines or of a warehouse table."""
     from super_store_datawarehouse_spark.sources.superstore import read_superstore_csv
     from super_store_datawarehouse_spark.warehouse.ingest import merge_duplicate_order_lines
 
@@ -303,10 +303,23 @@ def test_line_merge_and_order_rollup_use_no_sort_aggregate(etl_plan, name):
     """The duplicate-line merge and the per-order rollup carry 14 and 6
     string attributes; as min_by aggregates their buffer has variable
     width and Spark plans an interpreted SortAggregate. A window that keeps
-    each group's first line needs none."""
+    each group's first line needs none. Item reads the checkpointed lines,
+    so its plan holds no window of its own."""
     p = etl_plan(name)
-    assert "Window" in p
+    if name != "Item":
+        assert "Window" in p
     assert "SortAggregate" not in p
+
+
+@pytest.mark.parametrize("name", ["Item", "Orders"])
+def test_line_facts_read_the_checkpointed_lines(etl_plan, name):
+    """Item and Orders read the build's one row-form copy of the merged
+    lines: no columnar cache to decode, and the CSV is parsed once per
+    build, not once per fact."""
+    p = etl_plan(name)
+    assert "Scan ExistingRDD" in p
+    assert "InMemoryTableScan" not in p
+    assert "FileScan csv" not in p
 
 
 @pytest.mark.parametrize(
@@ -319,3 +332,14 @@ def test_summary_facts_are_local_relations(etl_plan, name):
     assert "LocalTableScan" in p
     assert "Exchange" not in p
     assert "InMemoryTableScan" not in p
+    assert "ExistingRDD" not in p
+
+
+def test_build_leaves_the_cache_manager_empty(spark, warehouse_csv):
+    """The build caches nothing: its lines live in a local checkpoint that
+    goes with the returned frames, not in the session's cache manager."""
+    from super_store_datawarehouse_spark.warehouse import build_warehouse
+
+    spark.catalog.clearCache()
+    build_warehouse(spark, warehouse_csv)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
