@@ -14,14 +14,18 @@ tracker) and the row count of every written table.
 
 This is not part of tier-1 or of the benchmark: it checks that a cut in
 fixed per-operation cost does not hide a cost that grows with the data.
-To compare two checkouts, run each one's copy on the same ``--data`` dir
-and compare the printed counts (and the written tables under ``--out``).
+To compare two checkouts, run each one's copy on the same ``--data`` dir,
+the second with ``--compare`` naming the first one's ``--out``: each
+table of both outputs is read with ``pyarrow``, and the script exits 1,
+naming the table, when its column names and types or its sorted rows
+differ.
 
 The CSV uses generator seed 0. ``--rows`` is 250,000 by default; at
 1,000,000 it checks the headroom of the dimension cap
 (``dims.MAX_MEMBERS``).
 
 Usage: python scripts/scale_check.py [--rows 250000] [--data DIR] [--out DIR]
+       [--compare OTHER_OUT]
 """
 
 from __future__ import annotations
@@ -46,6 +50,7 @@ def main() -> int:
     ap.add_argument("--rows", type=int, default=250_000)
     ap.add_argument("--data", default=os.path.join(ROOT, ".perfbench", "data"))
     ap.add_argument("--out", default=os.path.join(ROOT, ".perfbench", "scale-warehouse"))
+    ap.add_argument("--compare", metavar="OTHER_OUT", help="a warehouse to compare --out with")
     args = ap.parse_args()
 
     import pyarrow.parquet as pq
@@ -77,7 +82,35 @@ def main() -> int:
         files = [f for f in os.listdir(table_dir) if f.endswith(".parquet")]
         rows = sum(pq.read_metadata(os.path.join(table_dir, f)).num_rows for f in files)
         print(f"{name:20s} {rows:9d} rows {len(files):3d} files")
+    if args.compare:
+        differ = differing_tables(args.out, args.compare)
+        for name in differ:
+            print(f"differs from {args.compare}: {name}")
+        return 1 if differ else 0
     return 0
+
+
+def differing_tables(out: str, other: str) -> list[str]:
+    """The tables of ``out`` or ``other`` whose column names and types, or
+    whose rows in sorted order, differ between the two (a table missing
+    from one side differs)."""
+    import pyarrow.parquet as pq
+
+    mine, theirs = (
+        {n for n in os.listdir(d) if os.path.isdir(os.path.join(d, n))} for d in (out, other)
+    )
+    differ = sorted(mine ^ theirs)
+    for name in sorted(mine & theirs):
+        a, b = (pq.read_table(os.path.join(d, name)) for d in (out, other))
+        columns = [(f.name, f.type) for f in a.schema]
+        if columns != [(f.name, f.type) for f in b.schema]:
+            differ.append(name)
+            continue
+        keys = [(c, "ascending") for c in a.column_names]
+        a, b = a.sort_by(keys), b.sort_by(keys)
+        if a.num_rows != b.num_rows or not all(x.equals(y) for x, y in zip(a.columns, b.columns)):
+            differ.append(name)
+    return differ
 
 
 if __name__ == "__main__":

@@ -71,9 +71,9 @@ DISCOUNT = DecimalType(3, 2)
 # see tests/test_golden_xlsx_parity.py, which pins each tie cell).
 # Per-line derived doubles (lost_value has a division) are captured to
 # 10 fractional digits before summing — ≤5e-11 per-line capture error,
-# far below any cent boundary at this grain. A sum casts to MONEY once
-# per fact cell; ties round HALF_UP (away from zero), Spark's decimal
-# cast semantics.
+# far below any cent boundary at this grain. A sum rounds to MONEY once
+# per fact cell, ties HALF_UP (away from zero): Spark's decimal cast in
+# Item and Orders, the same rule on the driver for the summary facts.
 EXACT = "decimal(18,4)"  # raw CSV measures: ≤4 fractional digits
 EXACT_DERIVED = "decimal(28,10)"  # per-line derived doubles (lost_value)
 

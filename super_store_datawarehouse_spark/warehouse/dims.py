@@ -26,19 +26,23 @@ broadcast build side"). This module keeps that shape:
    country), a State member to the Region row of its own (region,
    country), and every other child by its parent's name. A state under
    two regions is two State rows, and each Location row names its own;
-4. the driver attaches those ids to the fact cells by name, with the
-   same inner-join rule (a state under two regions fans out to both of
-   its ids), and computes what is not a plain sum: the running
-   profit of ProductPerformance, over each (category, state) in (year,
-   month) order with NULLS FIRST and before the joins, so the cell of a
-   null order date still counts; and the mean ship delay, rounded
-   half-even from its sum and count;
-5. each table comes back as an Arrow-backed LocalRelation typed by
-   ``schemas.WAREHOUSE_SCHEMAS`` and coalesced to one partition, so it
-   writes one file and every fact join broadcasts it for free. A fact's
-   sums arrive as summed and cast to money or int once per cell, as a
-   projection over its LocalRelation; no cast touches a sum over a
-   dimension's grouping set.
+4. the driver attaches those ids to the fact cells with the same
+   inner-join rule: a state id by the cell's (state, region, country)
+   and a region id by its (region, country), so each cell counts under
+   one State or Region row, and every other id by name. It computes
+   what is not a plain sum: the running profit of ProductPerformance,
+   over each (category, State row) in (year, month) order with NULLS
+   FIRST and before the joins, so the cell of a null order date still
+   counts; and the mean ship delay, rounded half-even from its sum and
+   count;
+5. each table is built once as an Arrow table typed by
+   ``schemas.WAREHOUSE_SCHEMAS``, in which a fact's exact sums round to
+   money half up (away from zero), as Spark's decimal cast rounds them
+   in Item and Orders, and a value its type cannot hold raises. It comes
+   back as a one-partition LocalRelation created from that table, so
+   every fact join broadcasts it for free, and ``write_warehouse``
+   writes the same table from the driver (``arrow_table``). The frame
+   and the file hold the same cells by construction.
 
 Ids are deterministic but need not equal the reference's insertion-order
 AUTO_INCREMENT values (SURVEY §7.3); correctness comparisons join on
@@ -56,6 +60,7 @@ semantics, and are derived here once per build.
 from __future__ import annotations
 
 import decimal
+import weakref
 from collections import defaultdict
 from itertools import groupby
 from typing import NamedTuple
@@ -64,7 +69,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DecimalType, LongType, StringType, StructField, StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from super_store_datawarehouse_spark.functions.scalars import lost_value
 from super_store_datawarehouse_spark.schemas import EXACT, EXACT_DERIVED, WAREHOUSE_SCHEMAS
@@ -85,10 +91,14 @@ _SETS = {
     "locations": ("Location", ("postal_code", "city", "state", "country", "region")),
     "ship_modes": ("Shipping", ("ship_mode",)),
     "products": ("Product", ("product_code", "product_name", "category", "sub_category")),
-    "order_m": ("OrderM", ("_y", "_m", "state")),
-    "product_performance": ("ProductPerformance", ("category", "state", "_y", "_m")),
-    "shipping_behavior": ("ShippingBehavior", ("ship_mode", "category", "region")),
-    "shipping_behavior_s": ("ShippingBehaviorS", ("ship_mode", "category", "state")),
+    "order_m": ("OrderM", ("_y", "_m", "state", "region", "country")),
+    "product_performance": (
+        "ProductPerformance", ("category", "state", "region", "country", "_y", "_m")
+    ),
+    "shipping_behavior": ("ShippingBehavior", ("ship_mode", "category", "region", "country")),
+    "shipping_behavior_s": (
+        "ShippingBehaviorS", ("ship_mode", "category", "state", "region", "country")
+    ),
 }
 # Summary fact -> the sums its cells carry, after its grain columns.
 _SUMS = {
@@ -113,6 +123,11 @@ _LOCATION_KEYS = StructType(
         StructField("location_id", LongType()),
     ]
 )
+
+
+# Each frame _local returns -> the Arrow table it was created from, so that
+# write_warehouse writes that table from the driver
+_ARROW: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 class Dimensions(NamedTuple):
@@ -146,10 +161,10 @@ def _by_key(rows, *cols: int) -> dict:
     return out
 
 
-def _ids(rows) -> dict:
-    """Inner-join build side from a dimension's name (``row[1]``) to its
-    ids (``row[0]``)."""
-    return {name: [r[0] for r in rs] for (name,), rs in _by_key(rows, 1).items()}
+def _ids(rows, *cols: int) -> dict:
+    """Inner-join build side from the key ``cols`` of a dimension's rows
+    (as in ``_by_key``) to their ids (``row[0]``)."""
+    return {key: [r[0] for r in rs] for key, rs in _by_key(rows, *cols).items()}
 
 
 def _rows(table: pa.Table, cols) -> list[tuple]:
@@ -222,7 +237,7 @@ def build_dimensions(lines: DataFrame) -> Dimensions:
     }
     product_keys, location_keys = _probe_maps(spark, rows["Product"], rows["Location"])
     facts = {
-        name: _fact(spark, name, fact_rows)
+        name: _local(spark, fact_rows, WAREHOUSE_SCHEMAS[name])
         for name, fact_rows in _summary_facts(cells, rows).items()
     }
     return Dimensions(tables, product_keys, location_keys, facts)
@@ -240,16 +255,36 @@ def _over_cap(name: str) -> ValueError:
     )
 
 
-def _local(spark, rows: list[tuple], schema, cast_to=None) -> DataFrame:
-    """One-partition LocalRelation of ``rows`` typed by ``schema``; with
-    ``cast_to``, each column is then cast to its type there, a projection
-    that the optimizer folds into the relation."""
-    cols = list(zip(*rows)) or [[] for _ in schema.names]
-    table = pa.table({name: pa.array(col) for name, col in zip(schema.names, cols)})
-    df = spark.createDataFrame(table, schema)
-    if cast_to is not None:
-        df = df.select(*(F.col(f.name).cast(f.dataType) for f in cast_to))
-    return df.coalesce(1)
+def arrow_table(df: DataFrame) -> pa.Table | None:
+    """The Arrow table a frame returned by this module was created from,
+    or None for any other frame, one derived from such a frame included."""
+    return _ARROW.get(df)
+
+
+def _local(spark, rows: list[tuple], schema: StructType) -> DataFrame:
+    """One-partition LocalRelation of ``rows``, created from an Arrow table
+    typed by ``schema`` and kept for ``arrow_table``. A decimal cell rounds
+    half up (away from zero) to its column's scale, as Spark's decimal
+    cast does; a value its column's type cannot hold raises."""
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [() for _ in schema.names]
+    table = pa.Table.from_arrays(
+        [pa.array(_rounded(col, f.type), f.type) for col, f in zip(cols, arrow)], schema=arrow
+    )
+    df = spark.createDataFrame(table, schema).coalesce(1)
+    _ARROW[df] = table
+    return df
+
+
+def _rounded(col, dtype: pa.DataType):
+    if not pa.types.is_decimal(dtype):
+        return col
+    step = decimal.Decimal(1).scaleb(-dtype.scale)
+    with decimal.localcontext(prec=38):
+        return [
+            None if v is None else decimal.Decimal(v).quantize(step, decimal.ROUND_HALF_UP)
+            for v in col
+        ]
 
 
 def _calendar(dates: set[tuple]) -> dict[str, list[tuple]]:
@@ -320,26 +355,28 @@ def _products(products: set[tuple]) -> dict[str, list[tuple]]:
 def _summary_facts(cells: dict[str, list[tuple]], dims: dict[str, list[tuple]]) -> dict:
     """The rows of the four summary facts (reference etl.py:685-1131) from
     their cells and the dimension rows, in declared column order with the
-    sums as summed. Every id attaches by an inner join on its name."""
+    sums as summed. Every id attaches by an inner join: a state id on the
+    cell's (state, region, country), a region id on its (region, country),
+    and every other id on its name."""
     month = {(y, m): (i,) for i, m, _, _, y in dims["CalendarMonth"] if y is not None}
-    state, region = _ids(dims["State"]), _ids(dims["Region"])
-    category, shipping = _ids(dims["Category"]), _ids(dims["Shipping"])
+    state, region = _ids(dims["State"], 1, 3, 5), _ids(dims["Region"], 1, 3)
+    category, shipping = _ids(dims["Category"], 1), _ids(dims["Shipping"], 1)
 
     # cumulative profit: the pandas sort + groupby-cumsum (etl.py:852-855)
-    # over the exact monthly profits of each (category, state), before the
-    # joins drop the null month; rounded to money once per cell
+    # over the exact monthly profits of each (category, state member),
+    # before the joins drop the null month
     performance = []
-    ordered = sorted(cells["ProductPerformance"], key=lambda c: _nulls_first(c[:4]))
+    ordered = sorted(cells["ProductPerformance"], key=lambda c: _nulls_first(c[:6]))
     with decimal.localcontext(prec=38, traps=[decimal.Inexact]):
-        for (cat, st), group in groupby(ordered, key=lambda c: c[:2]):
+        for (cat, st, reg, ctry), group in groupby(ordered, key=lambda c: c[:4]):
             running = None
-            for _, _, y, m, sales, profit, qty in group:
+            for *_, y, m, sales, profit, qty in group:
                 if profit is not None:
                     running = profit if running is None else running + profit
                 performance += [
                     (c, s, cm, sales, profit, running, qty)
-                    for c in category.get(cat, ())
-                    for s in state.get(st, ())
+                    for c in category.get((cat,), ())
+                    for s in state.get((st, reg, ctry), ())
                     for cm in month.get((y, m), ())
                 ]
 
@@ -348,42 +385,23 @@ def _summary_facts(cells: dict[str, list[tuple]], dims: dict[str, list[tuple]]) 
         # reference's is; the mean is a double, as Spark's avg is
         return [
             (sm, c, g, None if n == 0 else round(total / n), freq)
-            for mode, cat, place, total, n, freq in cells[fact]
-            for sm in shipping.get(mode, ())
-            for c in category.get(cat, ())
-            for g in geo.get(place, ())
+            for mode, cat, *place, total, n, freq in cells[fact]
+            for sm in shipping.get((mode,), ())
+            for c in category.get((cat,), ())
+            for g in geo.get(tuple(place), ())
         ]
 
     return {
         "OrderM": [
             (cm, s, *sums)
-            for y, m, st, *sums in cells["OrderM"]
+            for y, m, st, reg, ctry, *sums in cells["OrderM"]
             for cm in month.get((y, m), ())
-            for s in state.get(st, ())
+            for s in state.get((st, reg, ctry), ())
         ],
         "ProductPerformance": performance,
         "ShippingBehavior": shipping_behavior("ShippingBehavior", region),
         "ShippingBehaviorS": shipping_behavior("ShippingBehaviorS", state),
     }
-
-
-def _fact(spark, name: str, rows: list[tuple]) -> DataFrame:
-    """``name``'s one-partition LocalRelation: ``rows`` hold its ids and
-    its sums as summed, each sum cast to its declared type once per cell.
-    Every money sum arrives exact in decimal(38,10), which holds any value
-    the money cast accepts."""
-    schema = WAREHOUSE_SCHEMAS[name]
-    raw = StructType(
-        [
-            StructField(
-                f.name,
-                DecimalType(38, 10) if isinstance(f.dataType, DecimalType) else LongType(),
-                f.nullable,
-            )
-            for f in schema
-        ]
-    )
-    return _local(spark, rows, raw, cast_to=schema)
 
 
 def _probe_maps(spark, product: list[tuple], location: list[tuple]) -> tuple[DataFrame, DataFrame]:

@@ -6,10 +6,19 @@ are materialized once, as rows, by a local checkpoint: one GROUPING SETS
 pass over them collects every dimension's members and the cells of the
 four summary facts to the driver, which numbers the members, attaches
 their ids to the cells and returns each of those 13 tables as a
-one-partition LocalRelation (``dims``). The two line-grain facts, Item
-and Orders, stay lazy plans over the checkpointed lines that broadcast
-those local leaves, so planning a fact never re-analyses a dimension's
-lineage, and the CSV is parsed once per build.
+one-partition LocalRelation made from an Arrow table (``dims``). The two
+line-grain facts, Item and Orders, stay lazy plans over the checkpointed
+lines that broadcast those local leaves, so planning a fact never
+re-analyses a dimension's lineage, and the CSV is parsed once per build.
+
+``write_warehouse`` writes the 13 driver-built tables from their Arrow
+tables with ``pyarrow.parquet``, one file each, as the reference loads
+its in-memory dimensions from the driver (etl.py:538-541). A Spark write
+of a table the driver already holds would cost a job whose fixed
+start-up, not its few thousand rows, sets its price. Parquet is one
+format whoever writes it: Spark reads back the same types and values.
+Item and Orders, the only tables whose rows are on the executors, stay
+Spark writes.
 
 The checkpoint is a single bounded materialization inside one build
 call, the use ``session.checkpoint_cut`` leaves to ``localCheckpoint``.
@@ -24,6 +33,13 @@ Orders must then be rebuilt by a new call.
 
 from __future__ import annotations
 
+import os
+import uuid
+from urllib.parse import urlsplit
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyarrow.fs import FileSystem, FileType
 from pyspark.sql import DataFrame, SparkSession
 
 from super_store_datawarehouse_spark.sources.superstore import DEFAULT_CSV_PATH, read_superstore_csv
@@ -53,13 +69,41 @@ def build_warehouse(spark: SparkSession, csv_path: str = DEFAULT_CSV_PATH) -> di
 
 
 def write_warehouse(tables: dict[str, DataFrame], out_dir: str) -> None:
-    """Persist every table as parquet (the reference's INSERT sink, S6).
+    """Persist every table as parquet at ``out_dir/<name>`` (the
+    reference's INSERT sink, S6), replacing what is there.
 
-    Set-oriented columnar writes — the reference's 500/50/10/100-row
-    commit batching (etl.py:538-541 etc.) has no equivalent cost here.
+    A table ``build_warehouse`` made on the driver (the nine dimensions
+    and the four summary facts) is written from its Arrow table by
+    ``pyarrow.parquet`` as one file, without a Spark job: the driver
+    already holds every cell. Any other frame, Item, Orders or one
+    derived from a driver-built table, is a Spark write. ``out_dir`` is
+    a local path or a URI that ``pyarrow.fs`` opens; any other scheme
+    raises before a table is written.
     """
+    fs, root = FileSystem.from_uri(
+        out_dir if urlsplit(out_dir).scheme else os.path.abspath(out_dir)
+    )
     for name, df in tables.items():
-        df.write.mode("overwrite").parquet(f"{out_dir}/{name}")
+        table = dims.arrow_table(df)
+        if table is None:
+            df.write.mode("overwrite").parquet(f"{out_dir}/{name}")
+        else:
+            _write_parquet(fs, f"{root}/{name}", table)
+
+
+def _write_parquet(fs: FileSystem, path: str, table: pa.Table) -> None:
+    """Spark's overwrite of ``path`` with ``table`` as its one data file:
+    the directory is removed, the file is written under a hidden name and
+    renamed, and ``_SUCCESS`` marks the end. Every column is written
+    optional, as Spark writes it."""
+    if fs.get_file_info(path).type != FileType.NotFound:
+        fs.delete_dir(path)
+    fs.create_dir(path)
+    part = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+    nullable = pa.schema([f.with_nullable(True) for f in table.schema])
+    pq.write_table(table.cast(nullable), f"{path}/.{part}", filesystem=fs, compression="snappy")
+    fs.move(f"{path}/.{part}", f"{path}/{part}")
+    fs.open_output_stream(f"{path}/_SUCCESS").close()
 
 
 def register_warehouse_views(tables: dict[str, DataFrame]) -> None:

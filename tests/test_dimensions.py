@@ -1,6 +1,7 @@
 """The nine dimensions, the duplicate-line merge, Orders and the four
 summary facts against an independent DuckDB derivation, and the 15 built
-tables against their declared schemas.
+tables against their declared schemas and against what Spark reads back
+from their parquet.
 
 The synthetic lines carry the cases where key order is easy to get
 wrong: a null natural key, a date that appears only as a ship date,
@@ -15,6 +16,7 @@ ship delay of exactly 2.5.
 from __future__ import annotations
 
 import datetime as dt
+import os
 from collections import Counter
 
 import duckdb
@@ -90,9 +92,10 @@ DDL = """CREATE TABLE lines (
 # Today's semantics, derived in SQL: members are the distinct natural
 # keys; ids are ROW_NUMBER (DENSE_RANK for year_id and country_id) over
 # the natural key, ascending with NULLS FIRST and byte-wise strings;
-# parents attach by inner joins: a State to the Region of its (region,
-# country), a Location to the State of its (state, region, country), any
-# other child, and every fact id, by its parent's name. The facts
+# parents attach by inner joins: a State, and a fact's region id, to the
+# Region of its (region, country), a Location, and a fact's state id, to
+# the State of its (state, region, country), and any other child or fact
+# id by its parent's name. The facts
 # aggregate the merged lines: a duplicate group keeps the line of its
 # lowest row id, with the group's sums. Money sums are exact decimals,
 # rounded half up once per cell (DuckDB's decimal cast truncates, so
@@ -189,19 +192,21 @@ ORACLE = {
         FROM merged_lost m
         JOIN "CalendarMonth" cm ON year(m.order_date) = cm.year_number
                                AND month(m.order_date) = cm.calendar_month_number
-        JOIN "State" s ON m.state = s.state_name
+        JOIN "State" s ON m.state = s.state_name AND m.region = s.region_name
+                      AND m.country = s.country_name
         GROUP BY cm.calendar_month_id, s.state_id""",
     "ProductPerformance": """
         SELECT c.category_id, s.state_id, cm.calendar_month_id, money(t.sales),
                money(t.profit), money(t.running), t.quantity::INTEGER
-        FROM (SELECT *, SUM(profit) OVER (PARTITION BY category, state
+        FROM (SELECT *, SUM(profit) OVER (PARTITION BY category, state, region, country
                                           ORDER BY y NULLS FIRST, m NULLS FIRST) AS running
-              FROM (SELECT category, state, year(order_date) AS y, month(order_date) AS m,
-                           SUM(sales::DECIMAL(18,4)) AS sales,
+              FROM (SELECT category, state, region, country, year(order_date) AS y,
+                           month(order_date) AS m, SUM(sales::DECIMAL(18,4)) AS sales,
                            SUM(profit::DECIMAL(18,4)) AS profit, SUM(quantity) AS quantity
                     FROM merged GROUP BY ALL)) t
         JOIN "Category" c ON t.category = c.category_name
-        JOIN "State" s ON t.state = s.state_name
+        JOIN "State" s ON t.state = s.state_name AND t.region = s.region_name
+                      AND t.country = s.country_name
         JOIN "CalendarMonth" cm ON t.y = cm.year_number AND t.m = cm.calendar_month_number""",
     "ShippingBehavior": """
         SELECT sh.shipping_id, c.category_id, r.region_id,
@@ -210,7 +215,7 @@ ORACLE = {
         FROM merged m
         JOIN "Shipping" sh ON m.ship_mode = sh.ship_mode
         JOIN "Category" c ON m.category = c.category_name
-        JOIN "Region" r ON m.region = r.region_name
+        JOIN "Region" r ON m.region = r.region_name AND m.country = r.country_name
         GROUP BY ALL""",
     "ShippingBehaviorS": """
         SELECT sh.shipping_id, c.category_id, s.state_id,
@@ -219,7 +224,8 @@ ORACLE = {
         FROM merged m
         JOIN "Shipping" sh ON m.ship_mode = sh.ship_mode
         JOIN "Category" c ON m.category = c.category_name
-        JOIN "State" s ON m.state = s.state_name
+        JOIN "State" s ON m.state = s.state_name AND m.region = s.region_name
+                      AND m.country = s.country_name
         GROUP BY ALL""",
 }
 DIMENSIONS = ("Calendar", "CalendarMonth", "Customer", "Region", "State", "Location",
@@ -321,8 +327,14 @@ def test_fact_derivation_exercises_the_hard_cases():
     (s1,) = {r[0] for r in expected["State"] if r[1] == "S1"}
     month = {(r[4], r[1]): r[0] for r in expected["CalendarMonth"]}
     assert len(s2) == 2  # S2 under two regions
-    # OrderM's (July 2023, S2) cell fans out to both S2 ids
-    assert {r[1] for r in expected["OrderM"] if r[0] == month[2023, 7]} >= s2
+    # each line counts under the one state id of its (state, region,
+    # country): the sums over states equal those of the dated merged lines
+    dated = [r for r in expected["merged"] if r[2] is not None]
+    for fact, sales, quantity, profit in (("OrderM", 2, 3, 5), ("ProductPerformance", 3, 6, 4)):
+        rows = expected[fact]
+        assert _cents(r[sales] for r in rows) == _cents(r[17] for r in dated), fact
+        assert sum(r[quantity] for r in rows) == sum(r[18] for r in dated), fact
+        assert _cents(r[profit] for r in rows) == _cents(r[20] for r in dated), fact
     # (Furniture, S1) from March 2023 on: 5.50 of the line with no order
     # date, then 2.25 - 1.50
     furniture = ids["Category"]["Furniture"]
@@ -334,6 +346,10 @@ def test_fact_derivation_exercises_the_hard_cases():
                if r[:2] == (ids["Shipping"]["Standard Class"], furniture)
                and r[2] == next(x[0] for x in expected["Region"] if x[1] == "East")]
     assert east[3:] == (2, 3)
+
+
+def _cents(values) -> int:
+    return sum(round(v * 100) for v in values)
 
 
 def _write_csv(path) -> None:
@@ -380,11 +396,83 @@ def test_built_dimensions_match_duckdb_derivation(built):
     assert built["Item"].count() == len(expected["merged"]) - 2
 
 
+# the tables build_warehouse makes on the driver; Item and Orders are Spark plans
+DRIVER_BUILT = sorted(set(WAREHOUSE_SCHEMAS) - {"Item", "Orders"})
+
+
+@pytest.mark.parametrize("fixture", ["built", "warehouse"])
+def test_written_tables_read_back_as_built(spark, request, tmp_path, fixture):
+    """``write_warehouse`` round trip: Spark reads back every table with
+    its declared types, nullable as every parquet column is, and with its
+    built rows. Each driver-built table is one data file, and a second
+    write to the same directory replaces every file of the first."""
+    from pyspark.sql.types import StructField, StructType
+
+    from super_store_datawarehouse_spark.warehouse import write_warehouse
+
+    tables = request.getfixturevalue(fixture)
+
+    def data_files():
+        return {t: {f for f in os.listdir(tmp_path / t) if f.startswith("part-")} for t in tables}
+
+    write_warehouse(tables, str(tmp_path))
+    first = data_files()
+    write_warehouse(tables, str(tmp_path))
+    second = data_files()
+    for t, df in tables.items():
+        assert second[t] and not second[t] & first[t], t
+        if t in DRIVER_BUILT:
+            assert sorted(os.listdir(tmp_path / t)) == ["_SUCCESS", *second[t]], t
+        back = spark.read.parquet(str(tmp_path / t))
+        declared = [StructField(f.name, f.dataType, True) for f in WAREHOUSE_SCHEMAS[t]]
+        assert back.schema == StructType(declared), t
+        assert Counter(back.collect()) == Counter(df.collect()), t
+
+
+def test_driver_rounding_matches_the_spark_cast(spark):
+    """A driver-built decimal rounds as Spark's cast of its exact sum does:
+    ties half up, away from zero, at cent and at integer grain. A value
+    its type cannot hold raises on both paths, as an int does."""
+    from decimal import Decimal
+
+    import pyarrow as pa
+    from pyspark.errors import ArithmeticException
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import DecimalType, IntegerType, StructField, StructType
+
+    from super_store_datawarehouse_spark.schemas import MONEY
+    from super_store_datawarehouse_spark.warehouse import dims
+
+    def exact(values):
+        return spark.createDataFrame([(Decimal(v),) for v in values], "v decimal(38,10)")
+
+    def local(values, dtype):
+        return dims._local(spark, [(v,) for v in values], StructType([StructField("v", dtype)]))
+
+    values = ["1.005", "-1.005", "0.015", "-0.015", "2.5", "-2.5", "99999999.994"]
+    for dtype in (MONEY, DecimalType(10, 0)):
+        cast = exact(values).select(F.col("v").cast(dtype)).collect()
+        got = local([Decimal(v) for v in values], dtype)
+        assert got.collect() == cast, dtype
+        assert dims.arrow_table(got)["v"].to_pylist() == [r.v for r in cast], dtype
+    assert local([Decimal("-1.005")], MONEY).first().v == Decimal("-1.01")
+
+    over = "99999999.995"  # 100000000.00 needs 11 digits
+    with pytest.raises(ArithmeticException):
+        exact([over]).select(F.col("v").cast(MONEY)).collect()
+    with pytest.raises(pa.ArrowInvalid):
+        local([Decimal(over)], MONEY)
+    with pytest.raises(ArithmeticException):
+        spark.range(1).select(F.lit(2**31).cast(IntegerType())).collect()
+    with pytest.raises(pa.ArrowInvalid):
+        local([2**31], IntegerType())
+
+
 def test_member_cap_names_the_dimension(spark, monkeypatch):
     from super_store_datawarehouse_spark.warehouse import dims
 
     # 6 order dates and 7 ship dates (one null in each), each set within a
-    # cap of 7, but 11 Calendar members together; the 68 members and fact
+    # cap of 7, but 11 Calendar members together; the 70 members and fact
     # cells pass the collect's cap of 70
     monkeypatch.setattr(dims, "MAX_MEMBERS", 7)
     with pytest.raises(ValueError, match="dimension Calendar has more than MAX_MEMBERS=7"):
@@ -394,7 +482,7 @@ def test_member_cap_names_the_dimension(spark, monkeypatch):
 def test_member_collect_overrun_names_the_dimension(spark, monkeypatch):
     from super_store_datawarehouse_spark.warehouse import dims
 
-    # 68 members and fact cells over the ten grouping sets pass ten caps
+    # 70 members and fact cells over the ten grouping sets pass ten caps
     # of 2, so the collect stops before the per-table check
     monkeypatch.setattr(dims, "MAX_MEMBERS", 2)
     with pytest.raises(ValueError, match="dimension Calendar has more than MAX_MEMBERS=2"):

@@ -343,3 +343,25 @@ def test_build_leaves_the_cache_manager_empty(spark, warehouse_csv):
     spark.catalog.clearCache()
     build_warehouse(spark, warehouse_csv)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_driver_built_tables_write_without_a_spark_job(spark, warehouse, tmp_path):
+    """The nine dimensions and the four summary facts are written from the
+    driver's Arrow tables, with no Spark job; Item and Orders stay Spark
+    writes."""
+    from super_store_datawarehouse_spark.warehouse import write_warehouse
+
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def jobs_to_write(tables) -> int:
+        bus.waitUntilEmpty()
+        before = set(tracker.getJobIdsForGroup())
+        write_warehouse(tables, str(tmp_path))
+        bus.waitUntilEmpty()
+        return len(set(tracker.getJobIdsForGroup()) - before)
+
+    line_facts = ("Item", "Orders")
+    assert jobs_to_write({n: df for n, df in warehouse.items() if n not in line_facts}) == 0
+    for name in line_facts:
+        assert jobs_to_write({name: warehouse[name]}) >= 1, name
