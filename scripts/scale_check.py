@@ -10,7 +10,12 @@ the wall time and the process-tree CPU (Python driver, JVM and workers;
 JVM start included), the peak resident memory of that process tree (the
 sum of each live process's high-water mark, read before Spark stops),
 the number of Spark jobs the build and the write ran (from the status
-tracker) and the row count of every written table.
+tracker) and the row count of every written table. It then serves the
+written star as ``serve_mix`` does: each table read back with
+``spark.read.parquet`` and registered with ``register_warehouse_views``,
+and each of the 13 dashboard queries run once in SQL and once in
+DataFrame form. It prints the tables the serving gate coalesced to one
+partition (``session.serving_frame``) and the Spark jobs of each query.
 
 This is not part of tier-1 or of the benchmark: it checks that a cut in
 fixed per-operation cost does not hide a cost that grows with the data.
@@ -68,6 +73,7 @@ def main() -> int:
     wall, cpu = time.perf_counter() - t0, tree_cpu_s() - cpu0
     jobs = len(spark.sparkContext.statusTracker().getJobIdsForGroup())
     peak_rss = tree_peak_rss_mb()
+    gated, query_jobs = serve(spark, args.out)
     spark.stop()
 
     print(f"csv {info.path}: {info.rows} lines, {info.merged_lines} merged")
@@ -82,12 +88,45 @@ def main() -> int:
         files = [f for f in os.listdir(table_dir) if f.endswith(".parquet")]
         rows = sum(pq.read_metadata(os.path.join(table_dir, f)).num_rows for f in files)
         print(f"{name:20s} {rows:9d} rows {len(files):3d} files")
+    print(f"served in one partition: {' '.join(gated) or '(none)'}")
+    for name, (sql, df) in query_jobs.items():
+        print(f"{name:30s} jobs sql {sql:2d} df {df:2d}")
     if args.compare:
         differ = differing_tables(args.out, args.compare)
         for name in differ:
             print(f"differs from {args.compare}: {name}")
         return 1 if differ else 0
     return 0
+
+
+def serve(spark, out: str) -> tuple[list[str], dict[str, tuple[int, int]]]:
+    """Serve the star at ``out``: the tables the serving gate coalesced,
+    and each query's Spark jobs in SQL and in DataFrame form."""
+    from super_store_datawarehouse_spark.plans.superstore_queries import (
+        SUPERSTORE_QUERIES,
+        run_df,
+        run_sql,
+    )
+    from super_store_datawarehouse_spark.session import serving_frame
+    from super_store_datawarehouse_spark.warehouse.pipeline import register_warehouse_views
+
+    names = sorted(n for n in os.listdir(out) if os.path.isdir(os.path.join(out, n)))
+    tables = {n: spark.read.parquet(os.path.join(out, n)) for n in names}
+    register_warehouse_views(tables)
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def jobs(df) -> int:
+        bus.waitUntilEmpty()
+        before = set(tracker.getJobIdsForGroup())
+        df.toArrow()
+        bus.waitUntilEmpty()
+        return len(set(tracker.getJobIdsForGroup()) - before)
+
+    gated = [n for n, df in tables.items() if serving_frame(df) is not df]
+    return gated, {
+        q: (jobs(run_sql(spark, q)), jobs(run_df(tables, q))) for q in sorted(SUPERSTORE_QUERIES)
+    }
 
 
 def differing_tables(out: str, other: str) -> list[str]:

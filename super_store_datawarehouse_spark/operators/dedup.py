@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from super_store_datawarehouse_spark.operators.text import words
-from super_store_datawarehouse_spark.session import scoped_cache
+from super_store_datawarehouse_spark.session import scan_bytes, scoped_cache
 
 MERSENNE61 = (1 << 61) - 1
 
@@ -39,24 +39,6 @@ MERSENNE61 = (1 << 61) - 1
 # overhead when a toy corpus is spread over 32 tasks — so the higher
 # threshold stands; a 6 MB corpus still hangs without widening.
 _WIDEN_MIN_BYTES_PER_SLOT = 64 * 1024
-
-
-def _scan_bytes(df: DataFrame) -> int | None:
-    """On-disk bytes of ``df``'s file scan, or None when the size is
-    unknown: an in-memory frame (no input files), a scan with a
-    non-local file, or files that cannot be listed or stat'ed."""
-    import os
-
-    try:
-        files = [
-            f[len("file:"):] if f.startswith("file:") else None
-            for f in df.inputFiles()
-        ]
-        if not files or any(f is None for f in files):
-            return None
-        return sum(os.path.getsize(os.path.normpath(f)) for f in files)
-    except Exception:
-        return None
 
 
 def _widen_narrow_scan(df: DataFrame) -> DataFrame:
@@ -80,7 +62,7 @@ def _widen_narrow_scan(df: DataFrame) -> DataFrame:
 
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    size = _scan_bytes(df)
+    size = scan_bytes(df)
     if size is None:
         return df
     try:
@@ -133,7 +115,7 @@ def _is_corpus_scale(src: DataFrame) -> bool:
     """True when ``src``'s file scan is at or above the corpus-scale
     threshold (the same ≥ ``_SHINGLE_CACHE_MIN_SRC_BYTES`` regime the
     shingle cache keys on). Non-file sources gate as toy-scale."""
-    size = _scan_bytes(src)
+    size = scan_bytes(src)
     return size is not None and size >= _SHINGLE_CACHE_MIN_SRC_BYTES
 
 

@@ -28,6 +28,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from super_store_datawarehouse_spark.session import serving_frame
+
 Tables = dict[str, DataFrame]
 
 SUPERSTORE_QUERIES: dict[str, dict] = {}
@@ -317,15 +319,16 @@ def q10_cumulative_sales_pct(t: Tables) -> DataFrame:
         .agg(F.sum("sales_order").alias("total_sales"))
     )
     w_cum = Window.orderBy("state_name")
-    w_all = Window.partitionBy()
+    # the SQL form's scalar subquery (A11), so both forms plan alike
+    total = t["Orders"].select(F.sum("sales_order")).scalar()
     return (
         per_state.select(
             "state_name",
             "total_sales",
             F.sum("total_sales").over(w_cum).alias("accumulated_sales"),
-            F.round(
-                F.sum("total_sales").over(w_cum) / F.sum("total_sales").over(w_all) * 100, 2
-            ).alias("cumulative_percentage"),
+            F.round(F.sum("total_sales").over(w_cum) / total * 100, 2).alias(
+                "cumulative_percentage"
+            ),
         )
         .orderBy("cumulative_percentage")
     )
@@ -464,5 +467,8 @@ def run_sql(spark, name: str) -> DataFrame:
 
 
 def run_df(tables: Tables, name: str) -> DataFrame:
-    """Run a query's DataFrame form."""
-    return SUPERSTORE_QUERIES[name]["df"](tables)
+    """Run a query's DataFrame form over each table's
+    ``session.serving_frame``, the frames ``register_warehouse_views``
+    gives the SQL form: a table read from a small local star is served
+    in one partition. Each table is sized on its first query only."""
+    return SUPERSTORE_QUERIES[name]["df"]({n: serving_frame(df) for n, df in tables.items()})

@@ -38,8 +38,9 @@ from __future__ import annotations
 
 import os
 import threading
+import weakref
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -92,6 +93,49 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def scan_bytes(df: DataFrame) -> int | None:
+    """On-disk bytes of ``df``'s file scan, or None when the size is
+    unknown: an in-memory frame (no input files), a scan with a
+    non-local file, or files that cannot be listed or stat'ed.
+
+    The one size helper: the dedup family's scan gates and the serving
+    gate (:func:`serving_frame`) both read it, and each takes its safe
+    branch on None."""
+    try:
+        files = [
+            f[len("file:"):] if f.startswith("file:") else None
+            for f in df.inputFiles()
+        ]
+        if not files or any(f is None for f in files):
+            return None
+        return sum(os.path.getsize(os.path.normpath(f)) for f in files)
+    except Exception:
+        return None
+
+
+# Each frame serving_frame has sized -> its one-partition form, or None
+# when the frame serves as it is
+_SERVING: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def serving_frame(df: DataFrame) -> DataFrame:
+    """``df`` as a query should read it: ``df.coalesce(1)`` when its file
+    scan is known to total at most ``spark.sql.files.openCostInBytes``
+    (Spark's own estimate of what opening one file costs, 4 MiB by
+    default), else ``df`` itself. An in-memory frame, a scan of a
+    non-``file:`` path and a larger scan keep their plans.
+
+    Over a one-partition leaf an aggregate, a window or a sort needs no
+    shuffle and an ORDER BY no range-sampling job. Each frame is sized
+    once, on its first call; the result is kept while the frame lives."""
+    if df not in _SERVING:
+        size = scan_bytes(df)
+        limit = df.sparkSession._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+        _SERVING[df] = df.coalesce(1) if size is not None and size <= limit else None
+    gated = _SERVING[df]
+    return df if gated is None else gated
 
 
 def checkpoint_cut(df):

@@ -40,6 +40,12 @@ RENAMES = {
     "Profit": "profit",
 }
 
+# The 27 code points cp1252 defines in 0x80-0x9F, as latin-1 reads their
+# bytes and as cp1252 decodes them. The five bytes it leaves undefined there
+# (0x81, 0x8D, 0x8F, 0x90, 0x9D) keep their latin-1 reading.
+_C1 = bytes(b for b in range(0x80, 0xA0) if b not in (0x81, 0x8D, 0x8F, 0x90, 0x9D))
+_CP1252_FROM_LATIN1 = (_C1.decode("latin-1"), _C1.decode("cp1252"))
+
 
 def read_superstore_csv(spark: SparkSession, path: str = DEFAULT_CSV_PATH) -> DataFrame:
     """Read the Superstore order-lines CSV with typed columns.
@@ -50,9 +56,9 @@ def read_superstore_csv(spark: SparkSession, path: str = DEFAULT_CSV_PATH) -> Da
     and removes repeated per-site parsing.
     """
     # Spark 4 does not accept windows-1252 as a CSV charset. latin-1 and
-    # cp1252 agree everywhere except 0x80-0x9F; this file uses only 0x93 /
-    # 0x94 from that range (cp1252 curly quotes), so a latin-1 read plus a
-    # two-character translate reproduces the cp1252 decode byte-exactly.
+    # cp1252 agree everywhere except 0x80-0x9F, so a latin-1 read plus one
+    # translate of that range (_CP1252_FROM_LATIN1) reproduces the cp1252
+    # decode byte-exactly.
     # escape='"' selects RFC-4180 doubled-quote escaping ("" inside quoted
     # fields) — Spark's default backslash escaping misparses product names
     # containing embedded quotes and shifts every later column.
@@ -68,7 +74,7 @@ def read_superstore_csv(spark: SparkSession, path: str = DEFAULT_CSV_PATH) -> Da
     for field in SUPERSTORE_CSV_SCHEMA.fields:
         col = F.col(field.name)
         if field.dataType.simpleString() == "string":
-            col = F.translate(col, "\x93\x94", "“”")
+            col = F.translate(col, *_CP1252_FROM_LATIN1)
         new = RENAMES[field.name]
         if new in ("order_date", "ship_date"):
             col = F.to_date(col, "M/d/yyyy")

@@ -38,10 +38,12 @@ import uuid
 from urllib.parse import urlsplit
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyarrow.fs import FileSystem, FileType
 from pyspark.sql import DataFrame, SparkSession
 
+from super_store_datawarehouse_spark.session import serving_frame
 from super_store_datawarehouse_spark.sources.superstore import DEFAULT_CSV_PATH, read_superstore_csv
 from super_store_datawarehouse_spark.warehouse import dims, facts
 from super_store_datawarehouse_spark.warehouse.ingest import merge_duplicate_order_lines
@@ -95,18 +97,34 @@ def _write_parquet(fs: FileSystem, path: str, table: pa.Table) -> None:
     """Spark's overwrite of ``path`` with ``table`` as its one data file:
     the directory is removed, the file is written under a hidden name and
     renamed, and ``_SUCCESS`` marks the end. Every column is written
-    optional, as Spark writes it."""
+    optional, as Spark writes it. Only a column that repeats a value is
+    dictionary-encoded: an all-distinct column, a key, is written PLAIN,
+    as Spark's writer falls back to when the dictionary does not pay."""
     if fs.get_file_info(path).type != FileType.NotFound:
         fs.delete_dir(path)
     fs.create_dir(path)
     part = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
     nullable = pa.schema([f.with_nullable(True) for f in table.schema])
-    pq.write_table(table.cast(nullable), f"{path}/.{part}", filesystem=fs, compression="snappy")
+    repeats = [
+        name
+        for name, col in zip(table.column_names, table.columns)
+        if pc.count_distinct(col, mode="all").as_py() < len(col)
+    ]
+    pq.write_table(
+        table.cast(nullable),
+        f"{path}/.{part}",
+        filesystem=fs,
+        compression="snappy",
+        use_dictionary=repeats,
+    )
     fs.move(f"{path}/.{part}", f"{path}/{part}")
     fs.open_output_stream(f"{path}/_SUCCESS").close()
 
 
 def register_warehouse_views(tables: dict[str, DataFrame]) -> None:
-    """Expose all tables to spark.sql under their reference names."""
+    """Expose all tables to spark.sql under their reference names, each
+    view over its table's ``session.serving_frame``: a table read from a
+    small local star is served in one partition, any other frame as it
+    is. ``superstore_queries.run_df`` reads the same frames."""
     for name, df in tables.items():
-        df.createOrReplaceTempView(name)
+        serving_frame(df).createOrReplaceTempView(name)

@@ -76,6 +76,24 @@ def warehouse(spark, warehouse_csv):
 
 
 @pytest.fixture(scope="session")
+def star_dir(warehouse, tmp_path_factory) -> str:
+    """The ``warehouse`` written by ``write_warehouse``: a small local star."""
+    from super_store_datawarehouse_spark.warehouse import write_warehouse
+
+    out = str(tmp_path_factory.mktemp("star"))
+    write_warehouse(warehouse, out)
+    return out
+
+
+@pytest.fixture(scope="session")
+def star(spark, star_dir):
+    """Each table of ``star_dir`` read back with ``spark.read.parquet``, as
+    a serving session reads the warehouse."""
+    names = sorted(n for n in os.listdir(star_dir) if os.path.isdir(os.path.join(star_dir, n)))
+    return {n: spark.read.parquet(os.path.join(star_dir, n)) for n in names}
+
+
+@pytest.fixture(scope="session")
 def reference_warehouse(request, warehouse_csv):
     """The warehouse, for tests that pin figures of the reference CSV."""
     if warehouse_csv != REFERENCE_CSV:

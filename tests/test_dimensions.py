@@ -352,7 +352,7 @@ def _cents(values) -> int:
     return sum(round(v * 100) for v in values)
 
 
-def _write_csv(path) -> None:
+def _write_csv(path, lines=LINES) -> None:
     """The synthetic lines as a Superstore CSV: M/d/yyyy dates, cp1252."""
     import csv
 
@@ -368,7 +368,7 @@ def _write_csv(path) -> None:
     with open(path, "w", encoding="cp1252", newline="") as f:
         w = csv.writer(f, lineterminator="\n")
         w.writerow(RENAMES)  # source header, in LINE_COLS order
-        w.writerows([cell(v) for v in line] for line in LINES)
+        w.writerows([cell(v) for v in line] for line in lines)
 
 
 @pytest.fixture(scope="module")
@@ -394,6 +394,33 @@ def test_built_dimensions_match_duckdb_derivation(built):
     # every merged line resolves all four Item keys except the one with no
     # postal code and the one with no order date
     assert built["Item"].count() == len(expected["merged"]) - 2
+
+
+def test_csv_decodes_every_cp1252_byte(spark, tmp_path):
+    """A product name holding each of the 27 characters cp1252 defines in
+    0x80-0x9F reads back as Python's cp1252 decode of its bytes."""
+    from super_store_datawarehouse_spark.sources.superstore import read_superstore_csv
+
+    raw = bytes(b for b in range(0x80, 0xA0) if b not in (0x81, 0x8D, 0x8F, 0x90, 0x9D))
+    name = raw.decode("cp1252")
+    line = LINES[0][:16] + (name,) + LINES[0][17:]
+    _write_csv(tmp_path / "superstore.csv", [line])
+    (row,) = read_superstore_csv(spark, str(tmp_path / "superstore.csv")).collect()
+    assert row["product_name"] == name
+
+
+def test_written_keys_are_plain_and_repeats_keep_their_dictionary(star_dir):
+    """A driver-written table dictionary-encodes only the columns that
+    repeat a value: Calendar's all-distinct keys are PLAIN, its month names
+    keep their dictionary."""
+    import pyarrow.parquet as pq
+
+    (part,) = [f for f in os.listdir(os.path.join(star_dir, "Calendar")) if f.endswith(".parquet")]
+    meta = pq.ParquetFile(os.path.join(star_dir, "Calendar", part)).metadata.row_group(0)
+    encodings = {meta.column(i).path_in_schema: meta.column(i).encodings for i in range(meta.num_columns)}
+    for key in ("calendar_id", "full_date"):
+        assert "PLAIN" in encodings[key] and not any("DICTIONARY" in e for e in encodings[key])
+    assert "RLE_DICTIONARY" in encodings["month_name"]
 
 
 # the tables build_warehouse makes on the driver; Item and Orders are Spark plans

@@ -6,9 +6,18 @@ before it shows up in bench numbers."""
 
 from __future__ import annotations
 
+import os
+import re
+
 import pytest
 
+from super_store_datawarehouse_spark.plans.superstore_queries import (
+    SUPERSTORE_QUERIES,
+    run_df,
+    run_sql,
+)
 from super_store_datawarehouse_spark.sources.testdata import load_table  # noqa: F401
+from super_store_datawarehouse_spark.warehouse.pipeline import register_warehouse_views
 from tests.conftest import TESTDATA_SF
 
 
@@ -64,8 +73,6 @@ def test_x62_pagerank_iterations_are_broadcast_only(plans):
 def test_x01_dedup_scans_only_needed_columns(plans):
     p = plans("q14_dedup_exact")
     # ReadSchema pruned to the two referenced columns
-    import re
-
     m = re.search(r"ReadSchema: struct<([^>]*)>", p)
     assert m, p
     cols = {c.split(":")[0] for c in m.group(1).split(",") if c}
@@ -351,17 +358,68 @@ def test_driver_built_tables_write_without_a_spark_job(spark, warehouse, tmp_pat
     writes."""
     from super_store_datawarehouse_spark.warehouse import write_warehouse
 
-    tracker = spark.sparkContext.statusTracker()
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-
     def jobs_to_write(tables) -> int:
-        bus.waitUntilEmpty()
-        before = set(tracker.getJobIdsForGroup())
-        write_warehouse(tables, str(tmp_path))
-        bus.waitUntilEmpty()
-        return len(set(tracker.getJobIdsForGroup()) - before)
+        return _jobs(spark, lambda: write_warehouse(tables, str(tmp_path)))
 
     line_facts = ("Item", "Orders")
     assert jobs_to_write({n: df for n, df in warehouse.items() if n not in line_facts}) == 0
     for name in line_facts:
         assert jobs_to_write({name: warehouse[name]}) >= 1, name
+
+
+def _jobs(spark, action) -> int:
+    """Spark jobs ``action`` launches, from the status tracker with the
+    listener bus drained before and after."""
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup())
+    action()
+    bus.waitUntilEmpty()
+    return len(set(tracker.getJobIdsForGroup()) - before)
+
+
+def _shuffles(df) -> int:
+    """Shuffle Exchanges in ``df``'s executed plan; a BroadcastExchange
+    does not count."""
+    df.collect()
+    return len(re.findall(r"\bExchange\b", df._jdf.queryExecution().executedPlan().toString()))
+
+
+def test_q01_on_a_small_star_plans_no_shuffle(spark, star):
+    """Served from a small local star, both forms of q01 read one-partition
+    leaves: the aggregate and the ORDER BY need no shuffle and no
+    range-sampling job."""
+    register_warehouse_views(star)
+    assert _shuffles(run_sql(spark, "q01_sales_by_month")) == 0
+    assert _shuffles(run_df(star, "q01_sales_by_month")) == 0
+
+
+@pytest.mark.parametrize("name", sorted(SUPERSTORE_QUERIES))
+def test_twins_launch_the_same_jobs_on_a_small_star(spark, star, name):
+    """The SQL form and the DataFrame form of each query plan over the same
+    served frames and launch the same number of Spark jobs."""
+    register_warehouse_views(star)
+    sql = _jobs(spark, lambda: run_sql(spark, name).collect())
+    assert sql == _jobs(spark, lambda: run_df(star, name).collect())
+
+
+def test_serving_gate_keeps_the_plans_of_other_frames(spark, warehouse, star_dir):
+    """An in-memory frame, and a star whose files total more than
+    ``spark.sql.files.openCostInBytes``, serve as they are: q01 keeps its
+    shuffle."""
+    from super_store_datawarehouse_spark.session import serving_frame
+
+    assert all(serving_frame(df) is df for df in warehouse.values())
+    assert _shuffles(run_df(warehouse, "q01_sales_by_month")) > 0
+    key = "spark.sql.files.openCostInBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        big = {n: spark.read.parquet(os.path.join(star_dir, n)) for n in ("Orders", "Calendar")}
+        assert all(serving_frame(df) is df for df in big.values())
+        register_warehouse_views(big)
+        assert _shuffles(run_sql(spark, "q01_sales_by_month")) > 0
+        assert _shuffles(run_df(big, "q01_sales_by_month")) > 0
+    finally:
+        spark.conf.set(key, saved)

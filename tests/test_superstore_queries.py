@@ -163,3 +163,27 @@ def test_get_spark_defaults_to_the_cpus_this_process_may_run_on(monkeypatch):
     options = get_spark()
     assert options["spark.master"] == f"local[{n}]"
     assert options["spark.sql.shuffle.partitions"] == str(n)
+
+
+@pytest.fixture
+def star_views(star, views):
+    """The views over the written star for one test, then back over the
+    in-memory warehouse for the tests after it."""
+    register_warehouse_views(star)
+    yield star
+    register_warehouse_views(views)
+
+
+@pytest.mark.parametrize("name", sorted(SUPERSTORE_QUERIES))
+def test_small_star_twins_return_the_ungated_rows(spark, star_views, name):
+    """Read back from a small local star, every table serves in one
+    partition, and both forms of each query return the rows its
+    DataFrame form returns over the ungated frames."""
+    from super_store_datawarehouse_spark.session import serving_frame
+
+    assert all(serving_frame(df) is not df for df in star_views.values())
+    ungated = SUPERSTORE_QUERIES[name]["df"](star_views)
+    cols = sorted(ungated.columns)
+    expected = _canon(ungated.collect(), cols)
+    assert _canon(run_sql(spark, name).collect(), cols) == expected
+    assert _canon(run_df(star_views, name).collect(), cols) == expected
