@@ -2,9 +2,8 @@
 """Deterministic sf1 scale-up: 10 key-shifted copies of the driver's
 sf0.1 tables -> /root/repo/testdata_sf1 (bench-only; never committed).
 
-VERDICT r3 next-round #8 asks for one measured bench point at sf1
-(~6M lineitem) so the "survives 100x" claim rests on measurement, not
-plan reading. The driver's generator isn't available, so sf1 is built
+One measured bench point at sf1 (~6M lineitem) lets a "survives 100x"
+claim rest on measurement, not plan reading. The driver's generator isn't available, so sf1 is built
 by replicating sf0.1 with per-copy key shifts that preserve referential
 integrity (copy i shifts every surrogate key by i * stride, stride =
 max(key)+1 of the base table):

@@ -141,7 +141,7 @@ def main() -> int:
             lines.append(f"- **{n}**: {', '.join(f)}")
     # Full scanned-name appendix: lets the registry≡PLAN_AUDIT pytest
     # invariant assert SET equality, so this report can never again
-    # certify a smaller surface than what ships (VERDICT r7 #2).
+    # certify a smaller surface than what ships.
     lines += ["", "## Scanned queries", ""]
     scanned = sorted([n for n, _f, _r in rows] + [n for n, _f in bad])
     lines += [f"- {n}" for n in scanned]

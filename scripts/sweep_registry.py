@@ -1,4 +1,4 @@
-"""Full-registry scale sweep (VERDICT r9 #3): run EVERY registered
+"""Full-registry scale sweep: run EVERY registered
 query once, cold, sequentially, at a decade directory (default
 testdata_sf10), and record per-query wall seconds + status to JSONL.
 
@@ -16,11 +16,11 @@ sf10 rows would benchmark driver materialization, not the engine).
 Timeout: each query runs under its own job group with
 ``interruptOnCancel``; a watchdog cancels the group at --timeout
 seconds and the row records status=timeout. Declared exact baselines
-known to exceed any reasonable timeout at sf10 (measured decade points
-already in SCALE.md) are annotated via DECLARED_SLOW so a timeout on
+known to exceed any reasonable timeout at sf10 (each with a measured
+decade point) are annotated via DECLARED_SLOW so a timeout on
 them reads as "declared", not "straggler".
 
-Declared-budget lane (VERDICT r10 #6): the DECLARED_SLOW entries
+Declared-budget lane: the DECLARED_SLOW entries
 burn their full timeout (~67 min of every sweep) proving a documented
 fact — each already has a measured decade point and a contract-scale
 twin in the registry that the same sweep covers (q34→q35/x327 LSH
@@ -63,12 +63,12 @@ from super_store_datawarehouse_spark.session import (
 import __spark_entry__ as entrymod
 
 # Declared exact/quadratic baselines with an already-recorded sf10
-# decade point (SCALE.md section cited): a timeout here is the
+# decade point: a timeout here is the
 # documented cost of the declared form, not an undeclared straggler.
 DECLARED_SLOW = {
-    "q34_embedding_near_dup": "exact GEMM near-dup baseline; sf10 1966s (SCALE §13)",
-    "x318_pq_ivf_hash_fraction": "O(fraction*n^2) IVFADC baseline; sf10 257s (SCALE §13)",
-    "x317_ngram_jaccard_exact": "exact shingle self-join baseline; sf10 measured (SCALE §13/§15)",
+    "q34_embedding_near_dup": "exact GEMM near-dup baseline; sf10 1966s",
+    "x318_pq_ivf_hash_fraction": "O(fraction*n^2) IVFADC baseline; sf10 257s",
+    "x317_ngram_jaccard_exact": "exact shingle self-join baseline; sf10 measured",
     "x134_pq_refined_topk": (
         "hash-fraction refined codebook (x318's O(fraction*n^2) encode family; "
         "ship config is the capped book: q33/q20 lifecycle)"
@@ -80,12 +80,12 @@ DECLARED_SLOW = {
         "filter-before-distinct fix; 'the coarser banding is the declared "
         "trade of the auditable variant, the production path keeps 16-bit "
         "chunks' (dedup.simhash_near_pairs docstring). The xxhash64 16-bit-chunk "
-        "production path is measured separately in SCALE §17."
+        "production path is measured separately."
     ),
     "q35_semantic_dedup_pairs": (
         "declared fixed-k quadratic: the oracle-pinned k=8 puts ~n/8 vectors "
         "per cluster, so the within-cluster exact stage is n^2/8 pairs "
-        "(SCALE §15: oracle k=8 >22min, contract k=80 runs 65.6s at sf10; "
+        "(oracle k=8 >22min, contract k=80 runs 65.6s at sf10; "
         "'in a 100 TB deployment k grows with the corpus' — dedup.py docstring)"
     ),
     "x18_stream_dedup": (

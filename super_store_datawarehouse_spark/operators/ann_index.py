@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from super_store_datawarehouse_spark.operators.similarity import (
+    IVF_NPROBE,
+    TOP_K,
     _pq_codes_and_dtab,
     _prep,
     dot,
@@ -47,7 +49,7 @@ def _paths(path: str) -> tuple[str, str]:
 def ivf_index_build(
     corpus: DataFrame,
     path: str,
-    fraction: float | str = "auto",
+    fraction: float = 0.03,
     salt: int = 7,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -55,10 +57,10 @@ def ivf_index_build(
 ) -> dict:
     """Build and persist the index; returns {n_centroids, n_vectors}.
 
-    ``fraction="auto"`` (default) sizes nlist at √n; ``max_cells``
-    additionally caps it at a fixed count (the k lowest-id sample
-    vectors — see ``ivf_centroids``), the bound real deployments pin so
-    the quantizer that gets FROZEN into the index has a known size.
+    ``max_cells`` caps the centroid count at a fixed number (the k
+    lowest-id sample vectors — see ``ivf_centroids``), the bound real
+    deployments pin so the quantizer that gets FROZEN into the index has
+    a known size.
     """
     cent_path, cell_path = _paths(path)
     cents = ivf_centroids(
@@ -136,7 +138,7 @@ def ivf_index_update(
     return n
 
 
-# Bounded driver-side materialization (ADVICE r10): the literal
+# Bounded driver-side materialization: the literal
 # IN-filter plan is only valid while |queries| x nprobe stays
 # contract-small. The bound used to live in a comment; a caller passing
 # a corpus-scaled query frame got a silent driver OOM / megabyte-IN
@@ -159,16 +161,10 @@ def _collect_assignment(q_assign: DataFrame, what: str) -> list[tuple]:
     return [(r["query_id"], int(r["centroid_id"])) for r in rows]
 
 
-def ivf_index_search(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-) -> DataFrame:
-    """Top-k per query over the persisted index. Same arithmetic and
-    tie order as ``similarity.ivf_topk`` — only the corpus side comes
+def ivf_index_search(spark: SparkSession, path: str, queries: DataFrame) -> DataFrame:
+    """Top-``TOP_K`` per query over the persisted index. Same arithmetic
+    and tie order as ``similarity.ivf_topk`` — only the corpus side comes
     from the stored inverted lists instead of an in-plan assignment."""
-    nprobe = 2
     cent_path, cell_path = _paths(path)
     stored = spark.read.parquet(cent_path)
     q_assign = ivf_assign(
@@ -176,7 +172,7 @@ def ivf_index_search(
         stored.select(
             F.col("centroid_id").alias("vec_id"), F.col("embedding")
         ),
-        nprobe,
+        IVF_NPROBE,
         "vec_id",
         "embedding",
         "query_id",
@@ -244,13 +240,13 @@ def ivf_index_search(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "rank", "cosine")
     )
 
 
 # ---------------------------------------------------------------------------
-# Persisted PQ index (VERDICT r8 #5). The expensive half of every PQ
+# Persisted PQ index. The expensive half of every PQ
 # query is the corpus ENCODE pass — one |corpus|×|codebook| assignment
 # GEMM (x306's sf10 recording: ~71 s of a 79 s eval). A production
 # index pays it once: the codebook and the integer code table persist
@@ -324,7 +320,7 @@ def pq_index_build(
         # pq_index_ensure's reuse decision — a caller would get an
         # uncapped book with no warning, and flipping codebook_size
         # under refined=True would force a rebuild that produces a
-        # bit-identical index (ADVICE r9). Fail loudly instead.
+        # bit-identical index. Fail loudly instead.
         raise ValueError(
             "refined=True builds an uncapped Lloyd-refined codebook; "
             "pass codebook_size=None (got "
@@ -357,7 +353,7 @@ def pq_index_build(
     else:
         # persist the deterministic codebook sample FIRST, then encode
         # against the STORED copy — the refined branch's pattern
-        # (round 12, VERDICT r11 #6): the former order built the same
+        # so the sample is built once: the former order built the same
         # sample twice (one hash-bucket scan + TakeOrdered job inside
         # the encode helper, a second for persisting). One sample job,
         # and the codes provably match the book the index serves.
@@ -477,7 +473,7 @@ def pq_index_ensure(
     return {"rebuilt": True, **stats}
 
 
-def pq_index_search(spark: SparkSession, path: str, queries: DataFrame, k: int = 5) -> DataFrame:
+def pq_index_search(spark: SparkSession, path: str, queries: DataFrame) -> DataFrame:
     """ADC top-k over the persisted code table — bit-identical to
     ``similarity.pq_topk`` at the same budget (shared ``pq_adc_topk_wide`` /
     ``pq_query_dtab`` arithmetic), but the corpus side is a 3-int-column
@@ -488,15 +484,10 @@ def pq_index_search(spark: SparkSession, path: str, queries: DataFrame, k: int =
     sub = spark.read.parquet(book_path)
     codes = spark.read.parquet(codes_path)
     dtab = pq_query_dtab(queries, sub, sd, "embedding", "vec_id")
-    return pq_adc_topk_wide(codes, dtab, k, meta["m"])
+    return pq_adc_topk_wide(codes, dtab, meta["m"])
 
 
-def ivfadc_index_search(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-) -> DataFrame:
+def ivfadc_index_search(spark: SparkSession, path: str, queries: DataFrame) -> DataFrame:
     """IVFADC top-k over the persisted stores — bit-identical to the
     in-plan ``similarity.pq_ivf_topk`` at the same budgets (pinned by
     test): candidates from the stored cell assignments (a 2-int-column
@@ -505,7 +496,6 @@ def ivfadc_index_search(
     O(|corpus|·nprobe/n_centroids) candidate rows and no corpus vector
     is re-read or re-encoded.
     """
-    nprobe = 2
     cent_path, cell_path = _paths(path)
     _book, codes_path, meta_path = _pq_paths(path)
     meta = spark.read.parquet(meta_path).first()
@@ -514,7 +504,7 @@ def ivfadc_index_search(
     stored_cents = spark.read.parquet(cent_path).select(
         F.col("centroid_id").alias("vec_id"), F.col("embedding")
     )
-    q_assign = ivf_assign(queries, stored_cents, nprobe, "vec_id", "embedding", "query_id")
+    q_assign = ivf_assign(queries, stored_cents, IVF_NPROBE, "vec_id", "embedding", "query_id")
     # one GEMM execution + literal rebuild (see ivf_index_search): the
     # probed cell ids become a literal IN-filter on the sorted cells
     # scan, so row-group stats skip non-probed cells
@@ -549,7 +539,7 @@ def ivfadc_index_search(
     sub = spark.read.parquet(_book)
     codes = spark.read.parquet(codes_path)
     dtab = pq_query_dtab(queries, sub, sd, "embedding", "vec_id")
-    return pq_adc_topk_bounded_wide(cand, codes, dtab, k, meta["m"])
+    return pq_adc_topk_bounded_wide(cand, codes, dtab, meta["m"])
 
 
 def pq_index_update(spark: SparkSession, path: str, new_vectors: DataFrame) -> int:
@@ -625,7 +615,7 @@ def ivfadc_index_ensure(
     codebook_buckets: int = 300,
     salt: int = 13,
     codebook_size: int | None = 256,
-    centroid_fraction: float | str = 0.03,
+    centroid_fraction: float = 0.03,
     centroid_salt: int = 7,
     max_cells: int | None = None,
     id_col: str = "vec_id",

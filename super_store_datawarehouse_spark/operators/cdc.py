@@ -2,16 +2,13 @@
 
 The reference rebuilds its warehouse from scratch each load
 (``etl/`` full reload, SURVEY §2.1 S6); at 100 TB a full rebuild is not
-an option, so the engine adds set-oriented incremental primitives:
+an option, so the engine adds a set-oriented upsert.
 
-- ``apply_upserts``: latest-version-wins merge of an update batch into a
-  base table. One shuffle on the key (window rank), no driver loop; the
-  idiom Delta's MERGE compiles to when no deletion vector support
-  exists. At scale the window shuffle is the unavoidable cost of
-  key-level reconciliation; AQE balances skewed keys.
-- ``new_rows_only``: anti-join incremental ingest — the "skip rows we
-  already loaded" half of the reference's inner-join-or-skip pattern,
-  reused for idempotent re-ingestion.
+``apply_upserts`` is a latest-version-wins merge of an update batch into
+a base table. One shuffle on the key (window rank), no driver loop; the
+idiom Delta's MERGE compiles to when no deletion vector support exists.
+At scale the window shuffle is the unavoidable cost of key-level
+reconciliation; AQE balances skewed keys.
 """
 
 from __future__ import annotations
@@ -22,13 +19,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def apply_upserts(
-    base: DataFrame,
-    updates: DataFrame,
-    keys: Sequence[str],
-    version_col: str = "version",
-) -> DataFrame:
-    """Merge ``updates`` into ``base``, keeping the highest ``version_col``
+def apply_upserts(base: DataFrame, updates: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Merge ``updates`` into ``base``, keeping the highest ``version``
     row per key (latest-wins upsert).
 
     Versions must be unique per key (a CDC log sequence number /
@@ -36,17 +28,10 @@ def apply_upserts(
     updates a strictly higher version than base.
     """
     unioned = base.unionByName(updates)
-    w = Window.partitionBy(*keys).orderBy(F.desc(version_col))
+    w = Window.partitionBy(*keys).orderBy(F.desc("version"))
     return (
         unioned.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
 
-
-def new_rows_only(
-    incoming: DataFrame, existing: DataFrame, keys: Sequence[str]
-) -> DataFrame:
-    """Rows of ``incoming`` whose key is absent from ``existing`` —
-    left_anti join, the idempotent-append gate."""
-    return incoming.join(existing.select(*keys), list(keys), "left_anti")

@@ -38,6 +38,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from super_store_datawarehouse_spark.session import scoped_cache
 
+#: k-means clusters and assignment passes (one centroid update between
+#: two passes), as the semantic-dedup and cluster-report queries run it.
+KMEANS_K, KMEANS_ITERS = 8, 2
+#: Power-iteration rounds of the first principal direction.
+PCA_ITERS = 3
+
 
 def _trunc_div(a: int, b: int) -> int:
     """Truncating integer division (toward zero), matching Spark ``div``
@@ -53,83 +59,26 @@ def quantize_vec(vec: Column) -> Column:
     return F.transform(vec, lambda v: (v.cast("double") * scale).cast("long"))
 
 
-def assign_clusters(qdf: DataFrame, centroids: list[tuple[int, list[int]]]) -> DataFrame:
-    """Map-only assignment: argmin of integer squared distance to each
-    centroid, ties to the lowest centroid id.
-
-    Centroids are embedded as an array-of-struct literal (k·d ints), so
-    the stage is pure whole-stage-codegen projection — no join, no
-    shuffle; on a cluster the literal ships inside the serialized plan
-    exactly like a broadcast var.
-    """
-    cent_arr = F.array(
-        *[
-            F.struct(
-                F.lit(cid).alias("cid"),
-                F.array(*[F.lit(int(c)).cast("long") for c in cvec]).alias("c"),
-            )
-            for cid, cvec in centroids
-        ]
-    )
-    dist_structs = F.transform(
-        cent_arr,
-        lambda s: F.struct(
-            F.aggregate(
-                F.zip_with(F.col("q"), s["c"], lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("dist2"),
-            s["cid"].alias("cid"),
-        ),
-    )
-    best = F.array_min(dist_structs)
-    return qdf.withColumn("cluster", best["cid"]).withColumn("dist2", best["dist2"])
-
-
-def update_centroids(
-    assigned: DataFrame,
-    prev: list[tuple[int, list[int]]],
-) -> list[tuple[int, list[int]]]:
-    """One reduce: per-cluster component sums (d+1 aggregates, map-side
-    partial combine) → k rows to the driver → trunc-div means. Empty
-    clusters keep their previous centroid."""
-    dim = len(prev[0][1])
-    sums = (
-        assigned.groupBy("cluster")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            *[F.sum(F.col("q")[i]).alias(f"s{i}") for i in range(dim)],
-        )
-        .collect()
-    )
-    by_cid = {
-        row["cluster"]: [_trunc_div(row[f"s{i}"], row["n"]) for i in range(dim)]
-        for row in sums
-    }
-    return [(cid, by_cid.get(cid, cvec)) for cid, cvec in prev]
-
-
 def updated_centroids_np(
     qdf: DataFrame,
     centroids: list[tuple[int, list[int]]],
 ) -> list[tuple[int, list[int]]]:
     """Fused assign+partial-sum centroid update — one Arrow pass.
 
-    ``update_centroids(assign_clusters_np(qdf, c), c)`` ships the FULL
-    working set back across the Python boundary (every row carries its
-    d-wide ``q`` array out of the assignment mapInPandas) and then runs
-    a (d+1)-aggregate JVM reduce over it. The update only needs the
-    k×(d+1) per-cluster sums, so this twin computes the argmin AND the
-    per-cluster component sums inside the same numpy batch loop and
-    emits k rows per batch — the Python→JVM traffic drops from
-    O(rows·d) to O(k·d·batches) and the JVM aggregate runs over those
-    slim partials (guide §2.3 "aggregate before you shuffle" applied to
-    the §4 Python boundary). Integer addition commutes exactly, so the
-    sums — and the trunc-div means — are bit-identical to the unfused
-    path (pinned by test_kmeans_fused_update_matches_unfused).
+    An unfused update would ship the FULL working set back across the
+    Python boundary (every row carrying its d-wide ``q`` array out of the
+    assignment mapInPandas) and then run a (d+1)-aggregate JVM reduce
+    over it. The update only needs the k×(d+1) per-cluster sums, so this
+    computes the argmin AND the per-cluster component sums inside the
+    same numpy batch loop and emits k rows per batch — the Python→JVM
+    traffic is O(k·d·batches), not O(rows·d), and the JVM aggregate runs
+    over those slim partials (aggregate before you shuffle, applied to
+    the Python boundary). Integer addition commutes exactly, so the sums
+    — and the trunc-div means — are bit-identical to the unfused path
+    (pinned by test_kmeans_fused_update_matches_unfused).
 
-    Returns the updated centroid list (empty clusters keep their
-    previous centroid), exactly like :func:`update_centroids`.
+    Returns the updated centroid list; empty clusters keep their
+    previous centroid.
     """
     import numpy as np
     import pandas as pd
@@ -187,24 +136,23 @@ def assign_clusters_np(
     centroids: list[tuple[int, list[int]]],
     out_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Arrow-vectorized assignment twin of :func:`assign_clusters`.
+    """Arrow-vectorized assignment: argmin of integer squared distance to
+    each centroid, ties to the lowest centroid id.
 
-    The expression-tree version evaluates a k×d literal fold per row in
-    the interpreted expression engine (higher-order functions are not
+    An expression-tree version would evaluate a k×d literal fold per row
+    in the interpreted expression engine (higher-order functions are not
     whole-stage-codegen), which dominates wall-clock for d≥64. This path
-    moves the same integer arithmetic into one numpy batch op per Arrow
-    batch: dist² = Σ(q−c)² over int64, argmin ties to the lowest
-    centroid id (np.argmin returns the first minimum ⇒ same
-    tie-breaking, because centroids are ordered by cid). Bit-identical
-    to the SQL twin — ``test_kmeans_assignment_paths_identical`` proves
-    it on every call path.
+    runs the integer arithmetic as one numpy batch op per Arrow batch:
+    dist² = Σ(q−c)² over int64, argmin ties to the lowest centroid id
+    (np.argmin returns the first minimum, and centroids are ordered by
+    cid). ``test_kmeans_matches_numpy_replica`` pins it against an
+    independent replica.
 
     ``out_cols`` limits which input columns are carried through the
     Arrow output (plus cluster/dist2). The default ships every input
-    column, mirroring :func:`assign_clusters`; callers that only
-    consume ids should pass them explicitly so the d-wide ``q`` array
-    does not cross the Python→JVM boundary once per row (guide §4:
-    pass only the columns the consumer needs).
+    column; callers that only consume ids should pass them explicitly so
+    the d-wide ``q`` array does not cross the Python→JVM boundary once
+    per row.
     """
     import numpy as np
 
@@ -238,20 +186,12 @@ def assign_clusters_np(
     return qdf.mapInPandas(part, schema=out_schema)
 
 
-def kmeans_quantized(
-    emb: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    impl: str = "numpy",
-) -> DataFrame:
-    """Lloyd's k-means, ``iters`` assignment passes with ``iters - 1``
-    centroid updates between them; returns per-point (id, cluster,
-    dist2) from the final assignment. Deterministic: seeds are the k
-    lowest ids, all arithmetic integer.
-
-    ``impl='numpy'`` (default) runs assignment through the Arrow-batch
-    vectorized path; ``impl='sql'`` uses the pure-expression twin. Both
-    produce bit-identical results (integer arithmetic, same tie-breaks).
+def kmeans_quantized(emb: DataFrame) -> DataFrame:
+    """Lloyd's k-means with ``KMEANS_K`` clusters, ``KMEANS_ITERS``
+    assignment passes and ``KMEANS_ITERS - 1`` centroid updates between
+    them; returns per-point (id, cluster, dist2) from the final
+    assignment. Deterministic: seeds are the k lowest ids, all
+    arithmetic integer.
     """
     # Iterative working set: cache the quantized vectors so each
     # assignment/update pass reads memory, not the source scan (at 100 TB
@@ -261,30 +201,24 @@ def kmeans_quantized(
             F.col("vec_id"), quantize_vec(F.col("embedding")).alias("q")
         )
     )
-    seed_rows = qdf.orderBy("vec_id").limit(k).collect()
+    seed_rows = qdf.orderBy("vec_id").limit(KMEANS_K).collect()
     centroids = [(i, list(row["q"])) for i, row in enumerate(seed_rows)]
-    if impl == "numpy":
-        # fused assign+partial-sum update per iteration (one Arrow pass
-        # emitting k×(d+1) partials instead of assignment rows carrying
-        # q back through Arrow + a (d+1)-aggregate JVM reduce); the
-        # final assignment ships only (id, cluster, dist2) out of
-        # Python — the d-wide q array never crosses the boundary
-        # row-wise (guide §4 / §2.3)
-        for _ in range(iters - 1):
-            centroids = updated_centroids_np(qdf, centroids)
-        return assign_clusters_np(qdf, centroids, out_cols=["vec_id"]).select(
-            "vec_id", "cluster", "dist2"
-        )
-    assigned = assign_clusters(qdf, centroids)
-    for _ in range(iters - 1):
-        centroids = update_centroids(assigned, centroids)
-        assigned = assign_clusters(qdf, centroids)
-    return assigned.select("vec_id", "cluster", "dist2")
+    # fused assign+partial-sum update per iteration (one Arrow pass
+    # emitting k×(d+1) partials instead of assignment rows carrying q
+    # back through Arrow + a (d+1)-aggregate JVM reduce); the final
+    # assignment ships only (id, cluster, dist2) out of Python — the
+    # d-wide q array never crosses the boundary row-wise
+    for _ in range(KMEANS_ITERS - 1):
+        centroids = updated_centroids_np(qdf, centroids)
+    return assign_clusters_np(qdf, centroids, out_cols=["vec_id"]).select(
+        "vec_id", "cluster", "dist2"
+    )
 
 
-def pca_power_iteration(emb: DataFrame, n_iter: int = 3) -> list[int]:
-    """First principal direction of a vector column by distributed
-    power iteration — v ← (XᵀX)v, renormalized each round — with every
+def pca_power_iteration(emb: DataFrame) -> list[int]:
+    """First principal direction of a vector column by ``PCA_ITERS``
+    rounds of distributed power iteration — v ← (XᵀX)v, renormalized
+    each round — with every
     step in exact int64 arithmetic so the whole trajectory replays in
     any SQL engine.
 
@@ -303,9 +237,9 @@ def pca_power_iteration(emb: DataFrame, n_iter: int = 3) -> list[int]:
       (XᵀX)v == G·v bit-for-bit — the iterate sequence is IDENTICAL to
       the former matrix-free per-round shuffles (and to the SQL
       oracle's unrolled CTEs), but the data is scanned ONCE instead of
-      2·n_iter times and no per-round Spark jobs exist at all. At
+      2·PCA_ITERS times and no per-round Spark jobs exist at all. At
       100 TB this is the optimal shape for tall-skinny X: one pass,
-      d² ints of communication, O(n_iter·d²) driver work.
+      d² ints of communication, O(PCA_ITERS·d²) driver work.
 
     Overflow headroom: |x| ≤ X milli-units → |G_jk| ≤ n·X²; at X≈1000
     that stays inside int64 up to n ≈ 9·10¹² rows. The driver-side
@@ -379,7 +313,7 @@ def pca_power_iteration(emb: DataFrame, n_iter: int = 3) -> list[int]:
     for r in g_rows:
         G[r["__j"]][r["__k"]] = r["__g"]
     v = [v_scale] * d
-    for _ in range(n_iter):
+    for _ in range(PCA_ITERS):
         u = [sum(G[j][k] * v[k] for k in range(d)) for j in range(d)]
         mx = max(abs(x) for x in u) or 1
         # trunc-toward-zero division, matching SQL `div` on negatives

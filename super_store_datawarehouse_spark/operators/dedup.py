@@ -97,7 +97,7 @@ def _cache_if_corpus_scale(
     Non-file sources (in-memory frames) stay uncached — their explode
     recompute carries no scan cost at all.
 
-    ``override`` (ADVICE r8): the auto gate reads the FULL source scan
+    ``override``: the auto gate reads the FULL source scan
     size even when ``src`` is a heavily filtered subset of it — a
     bounded sample of a 100 TB corpus would gate as corpus-scale and
     re-add the cache in exactly the toy shape the round-8 measurements
@@ -293,7 +293,6 @@ def weighted_jaccard_pairs(
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.2,
-    max_doc_freq: int | None = None,
     corpus_cache: bool | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity join.
@@ -305,41 +304,21 @@ def ngram_jaccard_pairs(
     Shingles are pre-hashed to 8-byte ints so the self-join shuffles
     fixed-width keys, not strings.
 
-    ``max_doc_freq`` (VERDICT r5 #7) is the hot-key guard: the plain
-    self-join fans out quadratically on the corpus's hottest shingles —
-    exactly the keys that explode at 100 TB (a shingle in d documents
-    contributes d² join rows). When set, shingles appearing in more
-    than ``max_doc_freq`` documents are dropped from the universe
-    BEFORE sizes and the join — the same df-capped stop-shingle
-    contract as :func:`weighted_jaccard_pairs`. Semantics, spelled out:
-
-    * the result is the EXACT Jaccard of the capped shingle sets (both
-      intersection and union shrink consistently — sizes are computed
-      after the filter), value-oracled as such (x315);
-    * relative to the uncapped join it is PRUNING, not approximation
-      error in disguise: a pair whose overlap lives only in stop
-      shingles can be missed, and boilerplate-heavy pairs lose their
-      boilerplate mass (usually the desired behavior — "everything
-      shares the cookie banner" is the classic near-dup false
-      positive);
-    * a cap at or above the corpus max df is a bit-identical no-op —
-      the uncapped SQL is then an exact oracle for the capped run.
+    The self-join fans out quadratically on the corpus's hottest
+    shingles (a shingle in d documents contributes d² join rows): this
+    is the declared exact baseline. The df-capped form is
+    :func:`weighted_jaccard_pairs`; the lossless pruned one is
+    :func:`ppjoin_jaccard_pairs`.
     """
     sh = word_shingles(df, hashed=True)
-    if max_doc_freq is not None:
-        dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-        sh = sh.join(
-            dfreq.filter(F.col("__df") <= max_doc_freq).select("shingle"),
-            "shingle",
-        )
     # Size-conditional cache (see _cache_if_corpus_scale): at toy scale
     # the consuming branches' fused explodes + ReuseExchange beat the
     # columnar cache's build/read tax; at corpus scale the k-branch
     # explode recompute dominates and the cache wins (sf10: 23.8 s
     # cached vs 42.8 s recomputed). ``corpus_cache`` lets callers whose
     # ``df`` is a bounded sample of a large source override the
-    # file-size gate (ADVICE r8 — the gate would otherwise read the
-    # full source scan and cache a toy frame).
+    # file-size gate (the gate would otherwise read the full source
+    # scan and cache a toy frame).
     sh = _cache_if_corpus_scale(sh, df, override=corpus_cache)
     sizes = sh.groupBy("sid").agg(F.count(F.lit(1)).alias("n_shingles"))
 
@@ -479,8 +458,8 @@ def ppjoin_jaccard_pairs(df: DataFrame, threshold: float = 0.2) -> DataFrame:
     )
 
 
-# Measured dispatch boundary for exact-Jaccard joins (SCALE.md "PPJoin
-# threshold crossover at sf10", 60M-row decade): prefix filtering wins
+# Measured dispatch boundary for exact-Jaccard joins (the PPJoin
+# threshold crossover at sf10, the 60M-row decade): prefix filtering wins
 # at t=0.8 (33.9 s vs 52.6 s plain — prefixes ≈ 20% of each doc prune
 # ~96% of candidate mass), TIES at t=0.5 (45.8 s vs 42.3 s), and LOSES
 # at t=0.2 (307.6 s vs 65.0 s — prefixes ≈ 80% of each doc plus the
@@ -757,7 +736,7 @@ def minhash_lsh_pairs_md5(df: DataFrame) -> DataFrame:
     (the xxhash64 fast path); md5 costs ~2× xxhash64 per shingle, which
     disappears under the explode+join that dominates at scale.
 
-    Exactness contract (ADVICE r8): the md5 SIGNATURE path is bit-exact,
+    Exactness contract: the md5 SIGNATURE path is bit-exact,
     but candidate VERIFICATION runs on xxhash64-hashed shingles (8-byte
     keys — the verifier's re-derived explodes and both shuffles go
     fixed-width, measured ~4× cheaper than string re-explodes). A hash
@@ -1065,7 +1044,7 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95) -> DataFram
     return probe.mapInPandas(score, "id_a long, id_b long, cosine double")
 
 
-def semantic_near_dup_pairs(df: DataFrame, threshold: float = 0.35, k: int = 8) -> DataFrame:
+def semantic_near_dup_pairs(df: DataFrame) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster
     the embedding space with k-means, then compute exact cosine pairs
     only *within* each cluster.
@@ -1079,10 +1058,10 @@ def semantic_near_dup_pairs(df: DataFrame, threshold: float = 0.35, k: int = 8) 
     (both stages are deterministic integer / fold arithmetic). In a
     100 TB deployment k grows with the corpus (k ≈ n / target cluster
     size, thousands+), keeping per-cluster pair blocks bounded and the
-    cluster-key shuffle well spread; k=8 here mirrors the oracled q45
-    configuration.
+    cluster-key shuffle well spread; here k is ``KMEANS_K`` = 8, the
+    oracled q45 configuration.
 
-    Pairs whose true cosine crosses ``threshold`` but whose members land
+    Pairs whose true cosine crosses the 0.35 threshold but whose members land
     in different clusters are missed — that is SemDeDup's documented
     approximation, and exactly why the within-cluster stage can afford
     to be exact.
@@ -1092,7 +1071,8 @@ def semantic_near_dup_pairs(df: DataFrame, threshold: float = 0.35, k: int = 8) 
     )
     from super_store_datawarehouse_spark.operators.similarity import dot
 
-    assigned = kmeans_quantized(df, k=k).select(F.col("vec_id").alias("vid"), "cluster")
+    threshold = 0.35
+    assigned = kmeans_quantized(df).select(F.col("vec_id").alias("vid"), "cluster")
     e = (
         df.select(
             F.col("vec_id").alias("vid"),
@@ -1261,12 +1241,7 @@ def cross_split_contamination(df: DataFrame, n: int = 5) -> DataFrame:
 # -- Incremental MinHash-LSH index -------------------------------------------
 
 
-def longest_shared_spans(
-    df: DataFrame,
-    n: int = 5,
-    max_doc_freq: int = 10,
-    min_span: int | None = None,
-) -> DataFrame:
+def longest_shared_spans(df: DataFrame) -> DataFrame:
     """Longest duplicated token span per document pair — the
     substring-dedup signal of Lee et al. 2022 ("Deduplicating Training
     Data Makes Language Models Better"), re-expressed relationally
@@ -1278,22 +1253,20 @@ def longest_shared_spans(
     token span, so the classic gaps-and-islands trick (``pos -
     row_number()`` per (pair, delta)) recovers each maximal run in one
     window pass: a run of r consecutive shingles == a shared span of
-    r + n - 1 tokens. Returns the longest span per pair (ties broken on
-    earliest start_a, start_b) of at least ``min_span`` tokens
-    (default n + 1, i.e. runs of >= 2 shingles).
+    r + n - 1 tokens, with n = 5. Returns the longest span per pair (ties
+    broken on earliest start_a, start_b) of at least n + 1 = 6 tokens,
+    i.e. runs of >= 2 shingles.
 
     Scale: the only quadratic surface is the shingle self-join, bounded
-    by dropping shingles whose document frequency exceeds
-    ``max_doc_freq`` (and keeping only df >= 2 — unshared shingles
-    can't start a span). That is the standard stop-shingle guard: a
-    globally common n-gram inside a long verbatim span can split the
-    reported run at its position — acceptable for a dedup *signal*;
-    raise ``max_doc_freq`` when exact maximal spans matter more than
-    join fan-out. Everything else is one window + one groupBy on
-    (pair, delta) keys.
+    by dropping shingles whose document frequency exceeds 10 (and
+    keeping only df >= 2 — unshared shingles can't start a span). That is
+    the standard stop-shingle guard: a globally common n-gram inside a
+    long verbatim span can split the reported run at its position —
+    acceptable for a dedup *signal*. Everything else is one window + one
+    groupBy on (pair, delta) keys.
     """
-    if min_span is None:
-        min_span = n + 1
+    n, max_doc_freq = 5, 10
+    min_span = n + 1
     df = _widen_narrow_scan(df)
     # bound-column tokenization: see word_shingles — an inline words()
     # would re-run the regex split per shingle inside the lambda

@@ -1,78 +1,15 @@
-"""Incremental aggregate maintenance: merge a delta's partial
-aggregates into a materialized rollup without recomputing the base.
-
-At 100 TB the daily pattern is: a rollup table holds per-key partial
-states (count, sum, min, max — all associative+commutative merges);
-each new partition/day aggregates only its own rows, and the two states
-merge with one full-outer join on the rollup key. Cost is
-O(delta + rollup), never O(history). AVG is maintained as (sum, count)
-and finalized at read time — never merged as an average.
+"""Incremental maintenance without a recompute: the delta rule for an
+equi-join, and a row-level diff of two snapshots of a keyed table.
 
 The reference recomputes its warehouse from scratch every run
-(`etl.py` drops and reloads all tables); this operator is the
-incremental replacement for that pattern.
+(`etl.py` drops and reloads all tables); these operators touch only the
+delta, or classify each key once.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-#: aggregate name → (aggregation fn for build, merge fn for combine)
-MERGEABLE = {
-    "count": (lambda c: F.count(c), lambda a, b: a + b),
-    "sum": (lambda c: F.sum(c), lambda a, b: a + b),
-    "min": (lambda c: F.min(c), lambda a, b: F.least(a, b)),
-    "max": (lambda c: F.max(c), lambda a, b: F.greatest(a, b)),
-}
-
-
-def build_partials(
-    df: DataFrame, keys: list[str], specs: dict[str, tuple[str, str]]
-) -> DataFrame:
-    """Aggregate ``df`` to per-key partial states.
-
-    ``specs`` maps output column → (agg kind, input column), e.g.
-    ``{"n": ("count", "v"), "total": ("sum", "v")}``.
-    """
-    aggs = [MERGEABLE[kind][0](F.col(col)).alias(out) for out, (kind, col) in specs.items()]
-    return df.groupBy(*keys).agg(*aggs)
-
-
-def merge_partials(
-    base: DataFrame, delta: DataFrame, keys: list[str], specs: dict[str, tuple[str, str]]
-) -> DataFrame:
-    """Merge two partial-state tables: full-outer join on the keys, then
-    per-column associative combine (missing side = identity). The result
-    equals ``build_partials`` over the concatenated inputs exactly —
-    asserted by ``test_incremental_agg_equals_full_recompute`` — because
-    count/sum/min/max merges are order-independent."""
-    b = base.select(
-        *[F.col(k).alias(f"_bk_{k}") for k in keys],
-        *[F.col(out).alias(f"_b_{out}") for out in specs],
-    )
-    d = delta.select(
-        *[F.col(k).alias(f"_dk_{k}") for k in keys],
-        *[F.col(out).alias(f"_d_{out}") for out in specs],
-    )
-    cond = None
-    for k in keys:
-        eq = b[f"_bk_{k}"] == d[f"_dk_{k}"]
-        cond = eq if cond is None else (cond & eq)
-    joined = b.join(d, cond, "full_outer")
-    out_cols = [
-        F.coalesce(F.col(f"_bk_{k}"), F.col(f"_dk_{k}")).alias(k) for k in keys
-    ]
-    for out, (kind, _col) in specs.items():
-        merge = MERGEABLE[kind][1]
-        bb, dd = F.col(f"_b_{out}"), F.col(f"_d_{out}")
-        out_cols.append(
-            F.when(bb.isNull(), dd)
-            .when(dd.isNull(), bb)
-            .otherwise(merge(bb, dd))
-            .alias(out)
-        )
-    return joined.select(*out_cols)
 
 
 def join_delta(

@@ -249,18 +249,18 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def sample_frames(
-    df: DataFrame, every_ms: int = 1000, max_frames: int = 8, fake: bool = False
-) -> DataFrame:
-    """Sample frames from video payloads: one output row per frame.
+def sample_frames(df: DataFrame, fake: bool = False) -> DataFrame:
+    """Sample frames from video payloads: one output row per frame, one
+    frame a second.
 
     The one-to-many mapInPandas shape for frame extraction — each Arrow
     batch of payloads yields a larger batch of (asset_id, frame_no,
     ts_ms) rows. STUB like ``decode_assets``: real extraction needs
     ffmpeg; ``fake=True`` derives the frame count from the payload byte
-    length (1 + byte_len % max_frames), so the distributed plumbing and
-    fan-out are exercised end-to-end and SQL-verifiable.
+    length (1 + byte_len % 8), so the distributed plumbing and fan-out
+    are exercised end-to-end and SQL-verifiable.
     """
+    every_ms, max_frames = 1000, 8
 
     def frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -47,16 +47,15 @@ def _splitmix64_np(x):
     return z ^ (z >> np.uint64(31))
 
 
-def build_bloom(
-    build: DataFrame, key_col: str, n_bits: int | None = None, n_hashes: int = 5
-) -> tuple["object", int, int]:
+def build_bloom(build: DataFrame, key_col: str) -> tuple["object", int, int]:
     """Collect the build side's distinct int keys and pack them into a
     Bloom bitmap (numpy uint64 words).
 
-    Sizing: default n_bits = 16 bits/key rounded up to a power of two
-    (~0.05% FPR at k=5), driver memory n_bits/8 bytes — 2 MB for a
-    million keys, broadcast like any build side.
+    Sizing: n_bits = 16 bits/key rounded up to a power of two (~0.05% FPR
+    at k=5 hashes), driver memory n_bits/8 bytes — 2 MB for a million
+    keys, broadcast like any build side.
     """
+    n_hashes = 5
     import numpy as np
 
     keys = (
@@ -67,9 +66,7 @@ def build_bloom(
         .to_numpy()
         .astype(np.uint64)
     )
-    n = max(len(keys), 1)
-    if n_bits is None:
-        n_bits = 1 << max(10, math.ceil(math.log2(16 * n)))
+    n_bits = 1 << max(10, math.ceil(math.log2(16 * max(len(keys), 1))))
     bitmap = np.zeros(n_bits // 64, dtype=np.uint64)
     h1 = _splitmix64_np(keys)
     h2 = _splitmix64_np(keys ^ np.uint64(_SM_GAMMA)) | np.uint64(1)

@@ -85,7 +85,7 @@ def hash_sample_n(
     The count-bound twin of :func:`hash_sample` (which keeps fraction·n
     rows and therefore grows with the corpus): evals that use it stay
     FLAT-cost as the corpus scales — the brute-force ground-truth
-    contract for recall evals at 100 TB (VERDICT r6 #7). Plans as one
+    contract for recall evals at 100 TB. Plans as one
     ``TakeOrderedAndProject`` (streaming top-n per partition + n-row
     merge — never a full sort), and the rank is statically SQL-
     expressible (:func:`hash_sample_n_sql`) so sampled evals keep full
@@ -180,7 +180,6 @@ def stratified_exact_sample(
     key_col: str,
     strata_col: str,
     percent: int,
-    salt: int = 0,
 ) -> DataFrame:
     """Exact-allocation stratified sampling: exactly ``n_h * percent //
     100`` rows from every stratum (vs :func:`stratified_hash_sample`,
@@ -194,7 +193,7 @@ def stratified_exact_sample(
     pre-split hot strata on a hash prefix and take per-split quotas.
     """
     w = Window.partitionBy(strata_col).orderBy(
-        knuth_hash(key_col, salt), F.col(key_col)
+        knuth_hash(key_col), F.col(key_col)
     )
     wg = Window.partitionBy(strata_col)
     return (
@@ -376,11 +375,7 @@ def priority_sql(weight: str, key: str, salt: int = 0) -> str:
     )
 
 
-def temperature_quotas(
-    df: DataFrame,
-    domain_col: str,
-    target_pct: int = 33,
-) -> DataFrame:
+def temperature_quotas(df: DataFrame, domain_col: str) -> DataFrame:
     """Per-domain quotas for α=0.5 temperature-scaled mixture sampling.
 
     Multilingual / multi-source corpora are rebalanced by sampling
@@ -392,7 +387,7 @@ def temperature_quotas(
     engine, keeping quota arithmetic exact where ``pow(n, 0.7)`` would
     drift in the last ulp between libms.
 
-    Quota: ``w_d = floor(sqrt(n_d))``, ``T = total · target_pct / 100``
+    Quota: ``w_d = floor(sqrt(n_d))``, ``T = total · 33 / 100``
     (integer div), ``quota_d = min(n_d, T · w_d / W)`` with
     ``W = Σ w_d``. All int64.
 
@@ -413,7 +408,7 @@ def temperature_quotas(
             "target_n",
             F.least(
                 F.col("n_docs"),
-                F.expr(f"((__tot * {int(target_pct)}) div 100) * weight div __w_sum"),
+                F.expr("((__tot * 33) div 100) * weight div __w_sum"),
             ),
         )
         .drop("__tot", "__w_sum")

@@ -45,9 +45,9 @@ def token_postings(df: DataFrame) -> DataFrame:
     )
 
 
-def inverted_index(df: DataFrame, postings_head: int = 5) -> DataFrame:
+def inverted_index(df: DataFrame) -> DataFrame:
     """Per-term posting-list summary: document frequency, collection
-    frequency, first document, and the head of the (doc_id, pos)-sorted
+    frequency, first document, and the first 5 entries of the (doc_id, pos)-sorted
     posting list rendered ``doc:pos`` (an ordered-collect exercised
     end-to-end — the full sorted list is materialized per term, which IS
     the index payload; only the head is projected out here).
@@ -61,7 +61,7 @@ def inverted_index(df: DataFrame, postings_head: int = 5) -> DataFrame:
     """
     p = token_postings(df)
     postings = F.slice(
-        F.sort_array(F.collect_list(F.struct("doc_id", "pos"))), 1, postings_head
+        F.sort_array(F.collect_list(F.struct("doc_id", "pos"))), 1, 5
     )
     return p.groupBy("term").agg(
         F.count_distinct("doc_id").alias("df"),

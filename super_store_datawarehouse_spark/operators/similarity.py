@@ -21,6 +21,15 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+#: Neighbours each top-k search returns per query.
+TOP_K = 5
+#: Cells an IVF query probes (the centroids are ``ivf_centroids``' 3 %
+#: hash sample).
+IVF_NPROBE = 2
+#: Product quantization: subspaces, the codebook's hash-bucket threshold
+#: out of 10,000, and the sample's hash salt.
+PQ_M, PQ_BUCKETS, PQ_SALT = 4, 300, 13
+
 
 def dot(a: Column, b: Column) -> Column:
     """Left-to-right double-precision dot product of two array columns."""
@@ -31,8 +40,8 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+def brute_force_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact top-``TOP_K`` cosine neighbors for each query vector.
 
     Executed as a blocked GEMM (the q34 technique): the query set is
     collected + broadcast (the small side — it was a broadcast join
@@ -66,7 +75,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataF
     # sf10 broadcast-hazard audit). If the caller ALREADY persisted the
     # frame (e.g. via scoped_cache), that cache IS the barrier — do not
     # persist/unpersist here, or the finally would silently evict the
-    # caller's own entry (ADVICE r7 #3).
+    # caller's own entry.
     we_persisted = not queries.is_cached
     if we_persisted:
         queries = queries.persist()
@@ -84,7 +93,6 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataF
     q_mat = np.stack(q_rows["qv"].to_numpy())
     q_nrm = q_rows["qnrm"].to_numpy()
     bc = spark.sparkContext.broadcast((q_ids, q_mat, q_nrm))
-    kk = k
 
     def score(batches):
         ids_q, mat_q, nrm_q = bc.value
@@ -101,7 +109,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataF
             cos = cdot / np.outer(nrm, nrm_q)
             # exclude self-matches from ranking entirely
             cos[vids[:, None] == ids_q[None, :]] = -np.inf
-            take = min(kk, len(vids))
+            take = min(TOP_K, len(vids))
             # stable argsort on -cos keeps neighbor_id-ascending ties
             sel = np.argsort(-cos, axis=0, kind="stable")[:take]
             out_q, out_n, out_c = [], [], []
@@ -126,7 +134,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataF
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "rank", "cosine")
     )
 
@@ -179,13 +187,7 @@ def _all_table_signatures(n_planes: int, n_tables: int, dim: int):
     return sigs
 
 
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_tables: int = 16,
-    dim: int = 64,
-) -> DataFrame:
+def lsh_topk(corpus: DataFrame, queries: DataFrame, n_tables: int = 16) -> DataFrame:
     """Approximate top-k: multi-table hyperplane LSH + exact re-rank.
 
     Single-table sign-LSH has poor recall when true neighbors sit at
@@ -195,9 +197,9 @@ def lsh_topk(
     1-(1-p^k)^L while the equi-join still touches only bucket-mates —
     at corpus scale the cost is L signature columns and an L-way
     exploded join, not an all-pairs product. Each table has 4 planes;
-    more tables → higher recall.
+    more tables → higher recall. Embeddings are 64-dimensional.
     """
-    n_planes = 4
+    n_planes, dim = 4, 64
     sig_udf = _all_table_signatures(n_planes, n_tables, dim)
 
     def with_buckets(df: DataFrame, idc: str, vc: str, nrm: str) -> DataFrame:
@@ -225,7 +227,7 @@ def lsh_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "rank", "cosine")
     )
 
@@ -244,7 +246,7 @@ def lsh_multiprobe_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     not another corpus explode — the cheapest recall knob there is.
     Candidates are exact-cosine re-ranked like :func:`lsh_topk`.
     """
-    k, n_planes, n_tables, dim = 5, 4, 4, 64
+    n_planes, n_tables, dim = 4, 4, 64
     sig_udf = _all_table_signatures(n_planes, n_tables, dim)
     c = _prep(corpus, "vec_id", "embedding", "neighbor_id", "cv", "cnrm")
     q = _prep(queries, "vec_id", "embedding", "query_id", "qv", "qnrm")
@@ -277,7 +279,7 @@ def lsh_multiprobe_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "rank", "cosine")
     )
 
@@ -349,7 +351,7 @@ def scalar_quantize_unit(df: DataFrame) -> DataFrame:
 
 def ivf_centroids(
     corpus: DataFrame,
-    fraction: float | str = 0.03,
+    fraction: float = 0.03,
     id_col: str = "vec_id",
     salt: int = 7,
     max_cells: int | None = None,
@@ -364,29 +366,18 @@ def ivf_centroids(
     centroid density follows data density. No global sort/limit, so it
     scales to any corpus size.
 
-    ``fraction="auto"`` picks the textbook nlist ≈ √n: fraction =
-    1/√n, so assignment cost is n^1.5 and expected cell size is √n —
-    the balance real IVF deployments use. A FIXED fraction makes
-    assignment O(fraction·n²), fine for an oracle-pinned configuration
-    at test scale but not the setting to ship at 100 TB. ("auto" costs
-    one count() before planning; the oracle-pinned harness queries keep
-    fixed fractions because a static SQL oracle can't see n.)
-
-    ``max_cells`` caps nlist at a FIXED count: the ``max_cells``
-    lowest-id vectors of the hash sample (one TakeOrderedAndProject —
-    no count(), so unlike "auto" this stays expressible in a static
-    SQL oracle: ``... ORDER BY id LIMIT k``). Round-6 sf10 finding:
-    with fraction semantics both the IVF cell set AND the PQ codebook
-    grow linearly with the corpus, making assignment/encode
-    O(fraction·n²) — the fixed budget is the ship configuration.
+    A fixed fraction makes assignment O(fraction·n²), fine for an
+    oracle-pinned configuration at test scale. ``max_cells`` caps nlist
+    at a FIXED count: the ``max_cells`` lowest-id vectors of the hash
+    sample (one TakeOrderedAndProject, no count(), so it stays
+    expressible in a static SQL oracle: ``... ORDER BY id LIMIT k``).
+    With a fraction alone both the IVF cell set and the PQ codebook grow
+    linearly with the corpus, making assignment and encode
+    O(fraction·n²) (measured at sf10); the fixed budget is the ship
+    configuration.
     """
-    import math
-
     from super_store_datawarehouse_spark.operators.sampling import hash_sample
 
-    if fraction == "auto":
-        n = corpus.count()
-        fraction = 1.0 / math.sqrt(n) if n else 1.0
     out = hash_sample(corpus, id_col, fraction, salt=salt)
     if max_cells is not None:
         out = out.orderBy(id_col).limit(max_cells)
@@ -409,7 +400,7 @@ def ivf_assign(
     NESTED by construction — the rank-``p`` assignment rows are exactly
     the ``nprobe=p`` assignment — so one ranked ``nprobe=max`` pass
     yields every smaller-nprobe frontier by a ``probe_rank <= p``
-    filter (the x306 single-pass rewrite, VERDICT r7 #3).
+    filter (the x306 single-pass rewrite).
 
     Executed as a blocked GEMM over Arrow batches (the q34 technique):
     centroids are collected and broadcast (they are a small sample of
@@ -487,15 +478,9 @@ def ivf_assign(
     return v.mapInPandas(assign, out_schema)
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    centroid_fraction: float | str = 0.03,
-    nprobe: int = 2,
-) -> DataFrame:
+def ivf_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF-style ANN: hash-sampled centroids partition the corpus into
-    cells; each query exactly re-ranks only the cells its ``nprobe``
+    cells; each query exactly re-ranks only the cells its ``IVF_NPROBE``
     nearest centroids own.
 
     The scale path vs brute force: candidate generation is an equi-join
@@ -506,9 +491,9 @@ def ivf_topk(
     ``brute_force_topk``, so the whole algorithm (centroid choice,
     assignment, ranking) is reproducible by the SQL oracle.
     """
-    cents = ivf_centroids(corpus, centroid_fraction, "vec_id")
+    cents = ivf_centroids(corpus)
     c_assign = ivf_assign(corpus, cents, 1, "vec_id", "embedding", "neighbor_id")
-    q_assign = ivf_assign(queries, cents, nprobe, "vec_id", "embedding", "query_id")
+    q_assign = ivf_assign(queries, cents, IVF_NPROBE, "vec_id", "embedding", "query_id")
 
     # merge hint (round-12 sf1 broadcast audit): c_assign is one row per
     # CORPUS vector behind a stat-less mapInPandas — the static planner
@@ -536,16 +521,12 @@ def ivf_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "rank", "cosine")
     )
 
 
-def ivf_candidates_ranked(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroid_fraction: float | str = 0.03,
-) -> DataFrame:
+def ivf_candidates_ranked(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Every corpus vector in a query's ``nprobe`` = 4 nearest cells, scored
     ONCE and tagged with its cell's probe rank: ``(query_id,
     neighbor_id, probe_rank, cosine)``.
@@ -556,12 +537,12 @@ def ivf_candidates_ranked(
     the nprobe=p candidate set, with its scores. A recall/cost frontier
     over several nprobe settings therefore needs ONE corpus assignment
     + ONE candidate scoring pass instead of one full IVF search per
-    setting (the x306 3×-work collapse, VERDICT r7 #3). All arithmetic
+    setting (the x306 3×-work collapse). All arithmetic
     is the same bit-exact double fold as :func:`ivf_topk`, so every
     derived frontier remains reproducible by the SQL oracle.
     """
     nprobe = 4
-    cents = ivf_centroids(corpus, centroid_fraction, "vec_id")
+    cents = ivf_centroids(corpus)
     ca = ivf_assign(corpus, cents, 1, "vec_id", "embedding", "neighbor_id")
     qa = ivf_assign(
         queries, cents, nprobe, "vec_id", "embedding", "query_id", with_rank=True
@@ -632,20 +613,9 @@ def sq_l2(a: Column, b: Column) -> Column:
     )
 
 
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    m: int = 4,
-    codebook_buckets: int = 300,
-    salt: int = 13,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int | None = None,
-    codebook_size: int | None = None,
-) -> DataFrame:
+def pq_topk(corpus: DataFrame, queries: DataFrame, dim: int | None = None) -> DataFrame:
     """Product-quantization ANN (Jégou et al., PAMI 2011): split each
-    vector into ``m`` subspaces, encode every corpus vector as its
+    vector into ``PQ_M`` subspaces, encode every corpus vector as its
     nearest sampled codeword per subspace, and answer queries with
     asymmetric distance computation (ADC) — the query stays exact, the
     corpus collapses to m small codes.
@@ -673,18 +643,15 @@ def pq_topk(
             "pass dim= explicitly (the embedding length; e.g. dim=64 for "
             "the testdata embeddings table)"
         )
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sd = dim // m
-
+    if dim % PQ_M:
+        raise ValueError(f"dim {dim} not divisible by m={PQ_M}")
     codes, dtab = _pq_codes_and_dtab(
-        corpus, queries, m, sd, codebook_buckets, salt, vec_col, id_col,
-        codebook_size=codebook_size,
+        corpus, queries, PQ_M, dim // PQ_M, PQ_BUCKETS, PQ_SALT, "embedding", "vec_id"
     )
-    return pq_adc_topk(codes, dtab, k)
+    return pq_adc_topk(codes, dtab)
 
 
-def pq_adc_topk(codes: DataFrame, dtab: DataFrame, k: int) -> DataFrame:
+def pq_adc_topk(codes: DataFrame, dtab: DataFrame) -> DataFrame:
     """ADC scoring + per-query top-k over a ``(vid, j, code)`` code table
     and a ``(query_id, j, code, d)`` distance table — the IN-PLAN form
     (pq_topk / pq_topk_refined), where ``codes`` streams out of the
@@ -713,12 +680,10 @@ def pq_adc_topk(codes: DataFrame, dtab: DataFrame, k: int) -> DataFrame:
             ).alias("adist"),
         )
     )
-    return _adc_rank(approx, k)
+    return _adc_rank(approx)
 
 
-def pq_adc_topk_bounded(
-    cand: DataFrame, codes: DataFrame, dtab: DataFrame, k: int
-) -> DataFrame:
+def pq_adc_topk_bounded(cand: DataFrame, codes: DataFrame, dtab: DataFrame) -> DataFrame:
     """In-plan ADC over a pre-bounded ``(query_id, neighbor_id)``
     candidate set (pq_ivf_topk's IVFADC tail) — same fused-join regime
     argument as :func:`pq_adc_topk`."""
@@ -735,14 +700,14 @@ def pq_adc_topk_bounded(
             ).alias("adist"),
         )
     )
-    return _adc_rank(approx, k)
+    return _adc_rank(approx)
 
 
-def _adc_rank(approx: DataFrame, k: int) -> DataFrame:
+def _adc_rank(approx: DataFrame) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
     return (
         approx.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "rank", "adist")
     )
 
@@ -769,9 +734,7 @@ def _adc_sum(m: int) -> Column:
     return adist
 
 
-def pq_adc_topk_wide(
-    codes: DataFrame, dtab: DataFrame, k: int, m: int = 4
-) -> DataFrame:
+def pq_adc_topk_wide(codes: DataFrame, dtab: DataFrame, m: int) -> DataFrame:
     """STORED-CODES ADC (the persisted index's regime): pivot the code
     table wide, then ``m`` broadcast hash lookups on the contract-small
     distance tables, summed in subspace order — no aggregation on the
@@ -791,11 +754,11 @@ def pq_adc_topk_wide(
     approx = out.filter(F.col("query_id") != F.col("vid")).select(
         "query_id", F.col("vid").alias("neighbor_id"), _adc_sum(m).alias("adist")
     )
-    return _adc_rank(approx, k)
+    return _adc_rank(approx)
 
 
 def pq_adc_topk_bounded_wide(
-    cand: DataFrame, codes: DataFrame, dtab: DataFrame, k: int, m: int = 4
+    cand: DataFrame, codes: DataFrame, dtab: DataFrame, m: int
 ) -> DataFrame:
     """Stored-codes ADC over a pre-bounded candidate set (the persisted
     IVFADC search) — same regime argument as :func:`pq_adc_topk_wide`."""
@@ -807,7 +770,7 @@ def pq_adc_topk_bounded_wide(
         )
         out = out.join(F.broadcast(dj), ["query_id", f"c{j}"])
     approx = out.select("query_id", "neighbor_id", _adc_sum(m).alias("adist"))
-    return _adc_rank(approx, k)
+    return _adc_rank(approx)
 
 
 def _pq_codes_and_dtab(
@@ -1086,45 +1049,29 @@ def pq_refined_codebook(
     )
 
 
-def pq_topk_refined(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    dim: int | None = None,
-    codebook_buckets: int = 300,
-) -> DataFrame:
+def pq_topk_refined(corpus: DataFrame, queries: DataFrame, dim: int | None = None) -> DataFrame:
     """PQ ADC top-k against the Lloyd-refined codebook: identical join
     topology to :func:`pq_topk` (encode + broadcast distance tables),
     only the codewords change — demonstrating that codebook training
     slots into the pipeline without touching its scale shape."""
-    m, salt, scale = 4, 13, 1000
     if dim is None:
         raise ValueError("pass dim= explicitly (the embedding length)")
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sd = dim // m
+    if dim % PQ_M:
+        raise ValueError(f"dim {dim} not divisible by m={PQ_M}")
     sub = pq_refined_codebook(
-        corpus, m, dim, codebook_buckets, salt, scale, "embedding", "vec_id"
+        corpus, PQ_M, dim, PQ_BUCKETS, PQ_SALT, 1000, "embedding", "vec_id"
     )
     codes, dtab = _pq_codes_and_dtab(
-        corpus, queries, m, sd, codebook_buckets, salt, "embedding", "vec_id", sub=sub
+        corpus, queries, PQ_M, dim // PQ_M, PQ_BUCKETS, PQ_SALT, "embedding", "vec_id",
+        sub=sub,
     )
-    return pq_adc_topk(codes, dtab, k)
+    return pq_adc_topk(codes, dtab)
 
 
 def pq_ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    m: int = 4,
     dim: int | None = None,
-    codebook_buckets: int = 300,
-    salt: int = 13,
-    centroid_fraction: float | str = 0.03,
-    nprobe: int = 2,
-    centroid_salt: int = 7,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     max_cells: int | None = None,
     codebook_size: int | None = None,
 ) -> DataFrame:
@@ -1136,7 +1083,7 @@ def pq_ivf_topk(
     rows, which is exactly the scan PQ exists to avoid. Here the
     candidate set is bounded FIRST by the IVF coarse quantizer
     (:func:`ivf_assign`): corpus vectors live in one cell, a query
-    probes its ``nprobe`` nearest cells, and ADC runs only on the
+    probes its ``IVF_NPROBE`` nearest cells, and ADC runs only on the
     cell-joined candidates — per-query work drops from O(|corpus|) to
     O(|corpus|·nprobe/n_centroids) expected, and every shuffle is an
     equi-join on (centroid_id) or (query_id, j, code).
@@ -1148,15 +1095,12 @@ def pq_ivf_topk(
     """
     if dim is None:
         raise ValueError("pass dim= explicitly (the embedding length)")
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sd = dim // m
+    if dim % PQ_M:
+        raise ValueError(f"dim {dim} not divisible by m={PQ_M}")
 
-    cents = ivf_centroids(
-        corpus, centroid_fraction, id_col, salt=centroid_salt, max_cells=max_cells
-    )
-    c_assign = ivf_assign(corpus, cents, 1, id_col, vec_col, "neighbor_id")
-    q_assign = ivf_assign(queries, cents, nprobe, id_col, vec_col, "query_id")
+    cents = ivf_centroids(corpus, max_cells=max_cells)
+    c_assign = ivf_assign(corpus, cents, 1, "vec_id", "embedding", "neighbor_id")
+    q_assign = ivf_assign(queries, cents, IVF_NPROBE, "vec_id", "embedding", "query_id")
     # candidate pairs: bounded by cell co-membership, never corpus×queries.
     # Broadcast the QUERY assignment explicitly (|queries|·nprobe rows —
     # contract-small): both sides are stat-less mapInPandas outputs and
@@ -1172,7 +1116,7 @@ def pq_ivf_topk(
     )
 
     codes, dtab = _pq_codes_and_dtab(
-        corpus, queries, m, sd, codebook_buckets, salt, vec_col, id_col,
+        corpus, queries, PQ_M, dim // PQ_M, PQ_BUCKETS, PQ_SALT, "embedding", "vec_id",
         codebook_size=codebook_size,
     )
-    return pq_adc_topk_bounded(cand, codes, dtab, k)
+    return pq_adc_topk_bounded(cand, codes, dtab)

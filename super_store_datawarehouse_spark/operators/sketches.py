@@ -26,6 +26,14 @@ from pyspark.sql import functions as F
 from super_store_datawarehouse_spark.operators.dedup import _minhash_coeffs
 
 CMS_MOD = 1 << 31
+#: Misra–Gries counters per partition; the heavy hitters are the items
+#: with count·(MG_K + 1) > N.
+MG_K = 30
+#: Bloom filter width in bits.
+BLOOM_BITS = 256
+#: Rank-compaction summary: strata, and the compaction step k. The
+#: read-off rank error is < QS_STRATA·(QS_K − 1) + QS_K.
+QS_STRATA, QS_K = 32, 64
 
 
 def poly_word_hash(col: Column | str) -> Column:
@@ -101,9 +109,10 @@ def countmin_estimate(
     )
 
 
-def misra_gries_candidates(tokens: DataFrame, k: int = 30) -> DataFrame:
+def misra_gries_candidates(tokens: DataFrame) -> DataFrame:
     """Per-partition Misra–Gries summaries (Misra & Gries 1982) — the
-    deterministic heavy-hitter sketch: k counters per partition, so the
+    deterministic heavy-hitter sketch: k = ``MG_K`` counters per
+    partition, so the
     full pass over an arbitrarily large token stream returns at most
     k·num_partitions candidate rows.
 
@@ -122,6 +131,7 @@ def misra_gries_candidates(tokens: DataFrame, k: int = 30) -> DataFrame:
     """
     import pandas as pd
 
+    k = MG_K
     out_schema = "word string, mg_cnt long"
 
     def summarize(batches):
@@ -142,18 +152,18 @@ def misra_gries_candidates(tokens: DataFrame, k: int = 30) -> DataFrame:
     return tokens.select("word").mapInPandas(summarize, schema=out_schema)
 
 
-def heavy_hitters_exact(tokens: DataFrame, k: int = 30) -> DataFrame:
-    """Exact heavy hitters (count·(k+1) > N) at sketch cost: MG
+def heavy_hitters_exact(tokens: DataFrame) -> DataFrame:
+    """Exact heavy hitters (count·(MG_K+1) > N) at sketch cost: MG
     candidates (tiny) → semi-join recount of candidates only → exact
     threshold filter. The only full-data shuffle keys on the candidate
     subset, never the whole vocabulary."""
-    cand = misra_gries_candidates(tokens, k).select("word").distinct()
+    cand = misra_gries_candidates(tokens).select("word").distinct()
     total = tokens.count()
     return (
         tokens.join(F.broadcast(cand), "word", "left_semi")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") * (k + 1) > F.lit(total))
+        .filter(F.col("cnt") * (MG_K + 1) > F.lit(total))
     )
 
 
@@ -264,13 +274,13 @@ def _positions_of_hash(h: Column, m_bits: int, k_hashes: int) -> Column:
     )
 
 
-def bloom_build(keys: DataFrame, key_col: str, m_bits: int = 256) -> DataFrame:
+def bloom_build(keys: DataFrame, key_col: str) -> DataFrame:
     """Build a Bloom filter over a key set as its SET-BIT LIST: one row
-    per distinct set position (≤ min(m_bits, k·|keys|) rows).
+    per distinct set position (≤ min(BLOOM_BITS, k·|keys|) rows).
 
     A bitmap and its set-bit list are the same object; the list form is
-    what makes the filter value-oracle-able and engine-portable, and at
-    any ``m_bits`` it stays at most ``m_bits`` rows — broadcastable by
+    what makes the filter value-oracle-able and engine-portable, and it
+    stays at most ``BLOOM_BITS`` rows — broadcastable by
     construction. Build is one explode + distinct (hash-agg shuffle on
     the position key, at most m distinct values).
     """
@@ -279,7 +289,7 @@ def bloom_build(keys: DataFrame, key_col: str, m_bits: int = 256) -> DataFrame:
         keys.select(poly_word_hash(key_col).alias("__h"))
         .select(
             F.explode_outer(
-                _positions_of_hash(F.col("__h"), m_bits, k_hashes)
+                _positions_of_hash(F.col("__h"), BLOOM_BITS, k_hashes)
             ).alias("pos")
         )
         .filter(F.col("pos").isNotNull())
@@ -296,7 +306,7 @@ def bloom_bits(bloom: DataFrame) -> list[int]:
     return sorted(r["pos"] for r in bloom.collect())
 
 
-def bloom_probe(df: DataFrame, key_col: str, bits: list[int], m_bits: int = 256) -> DataFrame:
+def bloom_probe(df: DataFrame, key_col: str, bits: list[int]) -> DataFrame:
     """Flag each row whose key is Bloom-POSITIVE (all ``k_hashes``
     positions set). One-sided like the real thing: every true member is
     positive; non-members are positive with the classic
@@ -311,7 +321,7 @@ def bloom_probe(df: DataFrame, key_col: str, bits: list[int], m_bits: int = 256)
     k_hashes = 2
     if not bits:
         return df.withColumn("bloom_positive", F.lit(False))
-    pos = _positions_of_hash(F.col("__h"), m_bits, k_hashes)
+    pos = _positions_of_hash(F.col("__h"), BLOOM_BITS, k_hashes)
     return (
         df.withColumn("__h", poly_word_hash(key_col))
         .withColumn("bloom_positive", F.forall(pos, lambda p: p.isin(*bits)))
@@ -323,13 +333,7 @@ def bloom_probe(df: DataFrame, key_col: str, bits: list[int], m_bits: int = 256)
 # Mergeable quantile summary — deterministic stratified rank compaction
 # --------------------------------------------------------------------------
 
-def rank_compaction_summary(
-    df: DataFrame,
-    value_col: str,
-    key_col: str,
-    strata: int = 32,
-    k: int = 64,
-) -> DataFrame:
+def rank_compaction_summary(df: DataFrame, value_col: str, key_col: str) -> DataFrame:
     """Mergeable distributed quantile summary via DETERMINISTIC
     stratified rank compaction — the sketch-family answer to "exact
     nearest-rank percentiles need a per-key sort of the whole column"
@@ -339,11 +343,11 @@ def rank_compaction_summary(
     Construction (both engines can replay it, so it value-oracles like
     the rest of the sketch family, unlike randomized KLL/GK):
 
-    - route each row to one of ``strata`` strata by the portable Knuth
+    - route each row to one of P = ``QS_STRATA`` strata by the portable Knuth
       hash of ``key_col`` (value-independent routing: each stratum is a
       uniform 1/P systematic sample of the column);
     - sort each stratum (fully parallel — this is the piece that
-      replaces the single global sort), keep every ``k``-th value with
+      replaces the single global sort), keep every k-th (``QS_K``) value with
       weight k, plus the stratum maximum with the remainder weight, so
       stratum weights sum exactly to the stratum count;
     - the summary is those ≤ P + N/k (value, weight) rows. Merge of two
@@ -359,12 +363,12 @@ def rank_compaction_summary(
     additionally overshoot the target by up to its own weight (< k),
     giving the read-off guarantee ``0 ≤ rank_err < P·(k−1) + k``, the
     bound a caller sizes (P, k) against, at summary size N/k (the
-    q40, q15 and x337 oracles certify exactly this). k=1 degenerates
-    to the exact column.
+    q40, q15 and x337 oracles certify exactly this).
 
     Returns (stratum, value, weight) — value/weight are what a reader
     needs; stratum is kept so tests can assert per-stratum invariants.
     """
+    strata, k = QS_STRATA, QS_K
     w_rank = Window.partitionBy("__b").orderBy(value_col, key_col)
     w_all = Window.partitionBy("__b")
     from super_store_datawarehouse_spark.operators.sampling import knuth_hash
@@ -474,15 +478,10 @@ def weighted_rank_compaction(summary: DataFrame, k: int) -> DataFrame:
 
 
 def grouped_rank_compaction_summary(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    key_col: str,
-    strata: int = 32,
-    k: int = 64,
+    df: DataFrame, group_col: str, value_col: str, key_col: str
 ) -> DataFrame:
     """Per-group :func:`rank_compaction_summary`: windows partition by
-    (group, stratum), so EVERY group's sort spreads across ``strata``
+    (group, stratum), so EVERY group's sort spreads across ``QS_STRATA``
     parallel tasks — the scale answer to the declared few-groups
     ceiling of the exact forms (an exact window median funnels each group
     through ONE task no matter how many executors; here a 3-group
@@ -492,6 +491,7 @@ def grouped_rank_compaction_summary(
     """
     from super_store_datawarehouse_spark.operators.sampling import knuth_hash
 
+    strata, k = QS_STRATA, QS_K
     ranked = (
         df.select(
             F.col(group_col).alias("grp"),

@@ -21,16 +21,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_count_distinct(
-    df: DataFrame, key_cols: list[str], value_col: str, n_buckets: int = 32
-) -> DataFrame:
+def salted_count_distinct(df: DataFrame, key_cols: list[str], value_col: str) -> DataFrame:
     """Exact COUNT(DISTINCT value) per key via value-hash bucketing.
 
-    Phase 1 groups by (key, hash(value) % n): each task deduplicates only
+    Phase 1 groups by (key, hash(value) % 32): each task deduplicates only
     its bucket's values. Phase 2 sums the per-bucket distinct counts —
     exact because buckets partition the value space.
     """
-    bucket = F.pmod(F.xxhash64(value_col), F.lit(n_buckets)).alias("__bucket")
+    bucket = F.pmod(F.xxhash64(value_col), F.lit(32)).alias("__bucket")
     partial = df.groupBy(*key_cols, bucket).agg(
         F.countDistinct(value_col).alias("__partial")
     )

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _BUCKET_SECONDS = {"1 hour": 3600, "1 day": 86400, "1 minute": 60}
+#: Hours in the seasonal cycle of the hourly decomposition.
+PERIOD = 24
 
 
 def asof_join(
@@ -217,18 +219,18 @@ def interval_join(
     )
 
 
-def seasonal_decompose(series: DataFrame, period: int = 24) -> DataFrame:
-    """Classical additive seasonal decomposition (the moving-average
-    method of Macaulay 1931, the `decompose()` of every stats stack):
-    trend by centered moving average, seasonal indices as the per-phase
-    mean of the detrended series, remainder as what's left.
+def seasonal_decompose(series: DataFrame) -> DataFrame:
+    """Classical additive seasonal decomposition of an hourly series with
+    a daily period (``PERIOD`` = 24; the moving-average method of
+    Macaulay 1931, the `decompose()` of every stats stack): trend by
+    centered moving average, seasonal indices as the per-phase mean of
+    the detrended series, remainder as what's left.
 
     Exactness contract (what lets the whole decomposition value-oracle
-    cross-engine): the trend numerator stays INTEGER. For even
-    ``period`` the classical 2×m MA weights the two window ends by ½ —
+    cross-engine): the trend numerator stays INTEGER. The period is
+    even, so the classical 2×m MA weights the two window ends by ½ —
     scaled by 2·period the numerator is ``2·Σwindow − (first+last)``,
-    pure int64; for odd ``period`` it is the plain window sum scaled by
-    ``period``. The per-phase seasonal mean likewise averages the
+    pure int64. The per-phase seasonal mean likewise averages the
     INTEGER quantity ``scale·y − trend_numerator``, so no float is ever
     summed in either engine — each output value is produced by one or
     two IEEE divisions/subtractions of identical operands, which every
@@ -244,7 +246,7 @@ def seasonal_decompose(series: DataFrame, period: int = 24) -> DataFrame:
     the upstream aggregation, declared.
     The 2·period-row seasonal-index frame broadcasts back.
     """
-    base, seas, scale = _decompose_base(series, period)
+    base, seas, scale = _decompose_base(series)
     trend = F.col("__tnum").cast("double") / F.lit(float(scale))
     seasonal = F.col("__snum").cast("double") / (
         F.lit(float(scale)) * F.col("__sn").cast("double")
@@ -261,28 +263,25 @@ def seasonal_decompose(series: DataFrame, period: int = 24) -> DataFrame:
     )
 
 
-def _decompose_base(series: DataFrame, period: int) -> tuple[DataFrame, DataFrame, int]:
+def _decompose_base(series: DataFrame) -> tuple[DataFrame, DataFrame, int]:
     """Shared integer core of the decomposition: per-row scaled trend
     numerator + phase (``base``) and per-phase seasonal numerator sums
     (``seas``), everything int64 — see :func:`seasonal_decompose` for
     the exactness contract."""
+    period = PERIOD
     half = period // 2
-    scale = 2 * period if period % 2 == 0 else period
+    scale = 2 * period
     w = Window.orderBy("h").rowsBetween(-half, half)
     wlag = Window.orderBy("h")
     y = F.col("y").cast("long")
-    if period % 2 == 0:
-        # 2 x (sum of 2·half+1 rows) - ends == classical half-weighted MA,
-        # scaled by 2·period
-        tnum = (
-            F.lit(2) * F.sum(y).over(w)
-            - F.lag(y, half).over(wlag)
-            - F.lead(y, half).over(wlag)
-        )
-        full = F.count(F.lit(1)).over(w) == (period + 1)
-    else:
-        tnum = F.sum(y).over(w)
-        full = F.count(F.lit(1)).over(w) == period
+    # 2 x (sum of 2·half+1 rows) - ends == classical half-weighted MA,
+    # scaled by 2·period
+    tnum = (
+        F.lit(2) * F.sum(y).over(w)
+        - F.lag(y, half).over(wlag)
+        - F.lead(y, half).over(wlag)
+    )
+    full = F.count(F.lit(1)).over(w) == (period + 1)
     # integer div end-to-end (CAST(double AS BIGINT) rounds in DuckDB
     # but truncates in Spark — the house cross-engine trap). The phase
     # assumes HOURLY spacing — see seasonal_anomalies' docstring.
@@ -304,9 +303,10 @@ def _decompose_base(series: DataFrame, period: int) -> tuple[DataFrame, DataFram
     return base, seas, scale
 
 
-def seasonal_anomalies(series: DataFrame, period: int = 24, n_sigma: int = 2) -> DataFrame:
+def seasonal_anomalies(series: DataFrame) -> DataFrame:
     """Anomaly flags on the decomposition remainder, judged against the
-    remainder's PER-PHASE spread (3 am behaves like other 3 ams) — and
+    remainder's PER-PHASE spread (3 am behaves like other 3 ams), at
+    n_sigma = 2 — and
     the test is an INTEGER comparison, so the flag itself value-oracles
     with no float tolerance anywhere:
 
@@ -329,10 +329,11 @@ def seasonal_anomalies(series: DataFrame, period: int = 24, n_sigma: int = 2) ->
     scale-invariant) or window the series.
 
     The phase (hours-since-epoch mod period) assumes an HOURLY series;
-    any other spacing aliases phases silently (a daily series at period
-    12 puts every row in one phase).
+    any other spacing aliases phases silently (a daily series puts every
+    row in one phase).
     """
-    base, seas, scale = _decompose_base(series, period)
+    n_sigma = 2
+    base, seas, scale = _decompose_base(series)
     joined = base.join(F.broadcast(seas), "phase")
     num = F.col("__sn") * (
         F.lit(scale) * F.col("y") - F.col("__tnum")

@@ -95,9 +95,10 @@ def quality_components(text: Column | str) -> dict[str, Column]:
     }
 
 
-def quality_keep(text: Column | str, min_tokens: int = 10) -> Column:
-    """Keep/drop classification from integer-threshold rules (no float edges)."""
-    max_avg_token_len = 12.0
+def quality_keep(text: Column | str) -> Column:
+    """Keep/drop classification from integer-threshold rules (no float
+    edges): at least 10 tokens, of at most 12 characters on average."""
+    min_tokens, max_avg_token_len = 10, 12.0
     comps = quality_components(text)
     return (
         (comps["n_tokens"] >= min_tokens) & (comps["avg_token_len"] <= max_avg_token_len)
@@ -122,15 +123,12 @@ def poly_fingerprint(text: Column | str) -> Column:
     )
 
 
-def chunk_words(
-    text: Column | str, chunk_size: int = 50, stride: int = 40,
-    presplit: bool = False,
-) -> Column:
+def chunk_words(text: Column | str, presplit: bool = False) -> Column:
     """Overlapping fixed-word-count chunks for LLM context windows.
 
     Returns array<struct<chunk_no, chunk_text, n_words>> — explode it for
-    one row per chunk. Chunk i starts at word i·stride (stride <
-    chunk_size gives overlap); the tail chunk may be short. Pure array
+    one row per chunk. Chunk i holds the 50 words from word i·40, so
+    neighbours overlap by 10 words; the tail chunk may be short. Pure array
     expressions (sequence → slice → array_join): codegen'd, no Python,
     and reproducible in any engine with list slicing.
 
@@ -141,6 +139,7 @@ def chunk_words(
     EXPRESSIONS per element — an inline regex split would re-run once
     per chunk (the word_shingles lesson, ~2 slices x len/stride chunks).
     """
+    chunk_size, stride = 50, 40
     w = (F.col(text) if isinstance(text, str) else text) if presplit else words(text)
     starts = F.sequence(F.lit(1), F.greatest(F.size(w), F.lit(1)), F.lit(stride))
     return F.transform(
@@ -224,8 +223,8 @@ def stopword_hits_by_lang(docs: DataFrame) -> DataFrame:
     )
 
 
-def bpe_learn(words: DataFrame, n_merges: int = 3):
-    """Learn the first ``n_merges`` byte-pair-encoding merges from a
+def bpe_learn(words: DataFrame):
+    """Learn the first 3 byte-pair-encoding merges from a
     (word, frequency) table — Sennrich et al. 2016's tokenizer-training
     loop, distributed.
 
@@ -255,7 +254,7 @@ def bpe_learn(words: DataFrame, n_merges: int = 3):
         F.col("freq").cast("long").alias("freq"),
     ).localCheckpoint()
     merges: list[tuple[int, str, str, int]] = []
-    for rank in range(1, n_merges + 1):
+    for rank in range(1, 4):
         top = (
             seq.selectExpr("freq", "split(trim(s), '  ') AS sy")
             .selectExpr(
@@ -409,11 +408,11 @@ UNIGRAM_COUNT_CAP = 100_000
 UNIGRAM_MAX_PIECE = 4
 
 
-def unigram_segment(df: DataFrame, max_piece: int = UNIGRAM_MAX_PIECE) -> DataFrame:
+def unigram_segment(df: DataFrame) -> DataFrame:
     """Unigram-LM-style subword segmentation by exact Viterbi DP — the
     SentencePiece decoding step (Kudo 2018), distributed, integer-exact.
 
-    The piece inventory is every substring of length 1..``max_piece``
+    The piece inventory is every substring of length 1..``UNIGRAM_MAX_PIECE``
     observed in the corpus, scored by total occurrence count weighted by
     word frequency. Real unigram LM minimizes Σ −log p(piece); floats
     don't replay bit-for-bit across engines, so the cost is the integer
@@ -438,6 +437,7 @@ def unigram_segment(df: DataFrame, max_piece: int = UNIGRAM_MAX_PIECE) -> DataFr
     Returns (word, freq, seg, n_pieces, cost); ``seg`` joins pieces
     with single spaces and concatenates back to the word exactly.
     """
+    max_piece = UNIGRAM_MAX_PIECE
     # Collapse duplicate words up front (freqs sum). Without this, the
     # piece-map dropDuplicates([__w, piece]) below would arbitrarily
     # assign each piece to ONE of the duplicate (__w, __f) groups; the

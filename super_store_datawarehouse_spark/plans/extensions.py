@@ -202,7 +202,7 @@ _COSINE_FOLD = (
 def x329_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.brute_force_topk(emb, queries, k=5)
+    return similarity.brute_force_topk(emb, queries)
 
 
 # --------------------------------------------------------------------------
@@ -525,7 +525,7 @@ _E_FOLD2 = (
 def x308_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.lsh_topk(emb, queries, k=5)
+    return similarity.lsh_topk(emb, queries)
 
 
 # --------------------------------------------------------------------------
@@ -849,7 +849,7 @@ def x36_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             F.explode(
-                chunk_words(F.col("__ws"), chunk_size=50, stride=40, presplit=True)
+                chunk_words(F.col("__ws"), presplit=True)
             ).alias("c"),
         )
         .select("doc_id", "c.chunk_no", "c.chunk_text", "c.n_words")
@@ -1083,7 +1083,7 @@ def q36_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from super_store_datawarehouse_spark.operators.multimodal import sample_frames
 
     docs = load_table(spark, sf_dir, "documents")
-    return sample_frames(texts_as_assets(docs), every_ms=1000, max_frames=8, fake=True)
+    return sample_frames(texts_as_assets(docs), fake=True)
 
 
 # --------------------------------------------------------------------------
@@ -1148,7 +1148,7 @@ _E_FOLD = _COSINE_FOLD.format(
 def x263_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.ivf_topk(emb, queries, k=5, centroid_fraction=0.03, nprobe=2)
+    return similarity.ivf_topk(emb, queries)
 
 
 # --------------------------------------------------------------------------
@@ -1216,7 +1216,7 @@ def x43_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("o_orderstatus", F.lit("X"))
         .withColumn("version", F.lit(2))
     )
-    merged = apply_upserts(base, updates, ["o_orderkey"], "version")
+    merged = apply_upserts(base, updates, ["o_orderkey"])
     return merged.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
         money_sum("o_totalprice", "total_price"),
@@ -1278,7 +1278,7 @@ def x45_stopwords_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so dedup must collapse whole connected components. Spark runs iterative
 # min-label propagation (operators/graph.py); the oracle reproduces the
 # exact same fixpoint with a recursive CTE (transitive closure + MIN).
-# Edges = q19's MinHash-LSH pairs at threshold 0.2 (VERDICT r10 #4: the
+# Edges = q19's MinHash-LSH pairs at threshold 0.2 (the
 # exact n-gram-Jaccard edge build let the planner broadcast the shingle
 # side on a garbage estimate — correct answers, but the plan flipped
 # between broadcast and sort-merge depending on accumulated heap, the
@@ -1442,7 +1442,7 @@ def q45_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from super_store_datawarehouse_spark.operators.clustering import kmeans_quantized
 
     emb = load_table(spark, sf_dir, "embeddings")
-    assigned = kmeans_quantized(emb, k=8, iters=2)
+    assigned = kmeans_quantized(emb)
     return (
         assigned.groupBy("cluster")
         .agg(
@@ -1464,7 +1464,7 @@ def q45_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # nodes with no in-edges keep the teleport mass via left join.
 # --------------------------------------------------------------------------
 # Promoted to the q26 driver slot in round 9 (ex-x289 — the graph
-# family's second driver row alongside q47; VERDICT r8 #3).
+# family's second driver row alongside q47).
 @harness_query(
     "q26_trade_pagerank",
     oracle="""
@@ -1520,11 +1520,11 @@ def q26_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expensive part of PageRank is building the edge rollup from the
     # fact join; collect the ≤n²-row rollup once (capped), then run the
     # unrolled iterations as DRIVER-SIDE integer arithmetic over those
-    # ≤625 rows (round 12, VERDICT r11 #4 / guide §5): the former plan
+    # ≤625 rows: the former plan
     # chained two 32-partition contribution shuffles + four broadcast
     # builds over ≤25-row frames PER RUN — pure scheduler wait (run/cpu
     # was ~14× with the fact join itself map-only). Same bounded-driver
-    # contract as clustering.update_centroids; every op is the oracle's
+    # contract as clustering.updated_centroids_np; every op is the oracle's
     # truncating integer div on non-negative ints, so values are
     # bit-identical. Like the oracle's joins to nation, an edge with an
     # end outside nation is dropped before the out-weights are summed.
@@ -1746,9 +1746,7 @@ _SQOFF_FOLD = (
 def x125_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.pq_topk(
-        emb, queries, k=5, m=4, codebook_buckets=300, salt=13, dim=64
-    )
+    return similarity.pq_topk(emb, queries, dim=64)
 
 
 # --------------------------------------------------------------------------
@@ -1843,18 +1841,7 @@ def x125_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x318_pq_ivf_hash_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.pq_ivf_topk(
-        emb,
-        queries,
-        k=5,
-        m=4,
-        dim=64,
-        codebook_buckets=300,
-        salt=13,
-        centroid_fraction=0.03,
-        nprobe=2,
-        centroid_salt=7,
-    )
+    return similarity.pq_ivf_topk(emb, queries, dim=64)
 
 
 # --------------------------------------------------------------------------
@@ -2070,9 +2057,7 @@ def x338_selection_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x134_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.pq_topk_refined(
-        emb, queries, k=5, dim=64, codebook_buckets=300
-    )
+    return similarity.pq_topk_refined(emb, queries, dim=64)
 
 
 # --------------------------------------------------------------------------
@@ -2083,7 +2068,7 @@ def x134_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CTEs verbatim, the cosine is the q34 left-to-right fold.
 # --------------------------------------------------------------------------
 # Promoted to the q35 driver slot in round 9 (ex-x135 — SemDeDup's
-# first driver row; q34 covers only the GEMM primitive; VERDICT r8 #3).
+# first driver row; q34 covers only the GEMM primitive).
 @harness_query(
     "q35_semantic_dedup_pairs",
     oracle=_KMEANS_A2_CTES
@@ -2104,7 +2089,7 @@ def x134_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q35_semantic_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return dedup.semantic_near_dup_pairs(emb, threshold=0.35, k=8)
+    return dedup.semantic_near_dup_pairs(emb)
 
 
 # --------------------------------------------------------------------------
@@ -2274,7 +2259,7 @@ def x141_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 52.6 s plain at sf10 — ~96% of candidate mass pruned); the old t=0.2
 # registration ran the algorithm in its measured LOSING region (307.6 s
 # vs 65.0 s at sf10 — prefixes ≈ 80% of each doc), kept only as the
-# documented negative result in SCALE.md. jaccard_pairs_auto encodes
+# documented negative result. jaccard_pairs_auto encodes
 # the boundary (ppjoin at t ≥ 0.7, plain below), pinned by unit test.
 # Promoted to the q43 driver slot in the round-8 rotation (ex-x161);
 # the slot's former computation is x325_dedup_clusters.
@@ -2320,7 +2305,7 @@ def q43_ppjoin_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the DuckDB twin can value-oracle the whole pipeline.
 # --------------------------------------------------------------------------
 # Promoted to the q17 driver slot in round 9 (ex-x172 — the curation
-# family's driver row; VERDICT r8 #3).
+# family's driver row).
 @harness_query(
     "q17_boilerplate_chunk_scrub",
     oracle="""
@@ -2479,7 +2464,7 @@ def x177_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("word")
     )
     words = words.localCheckpoint()  # one materialization feeds all 3 passes
-    return heavy_hitters_exact(words, k=30).orderBy("word")
+    return heavy_hitters_exact(words).orderBy("word")
 
 
 # --------------------------------------------------------------------------
@@ -2546,7 +2531,7 @@ def q50_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    merges, _ = bpe_learn(wf, n_merges=3)
+    merges, _ = bpe_learn(wf)
     return merges.orderBy("merge_rank")
 
 
@@ -2897,7 +2882,7 @@ def q41_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    v = pca_power_iteration(emb, n_iter=3)
+    v = pca_power_iteration(emb)
     return spark.createDataFrame(
         [(i + 1, x) for i, x in enumerate(v)], "dim long, loading long"
     ).orderBy("dim")
@@ -3363,9 +3348,7 @@ def x270_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x271_longest_shared_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.longest_shared_spans(
-        docs, n=5, max_doc_freq=10
-    ).orderBy("doc_a", "doc_b")
+    return dedup.longest_shared_spans(docs).orderBy("doc_a", "doc_b")
 
 
 # --------------------------------------------------------------------------
@@ -3678,7 +3661,7 @@ def x277_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("dom"),
     )
-    quotas = temperature_quotas(docs, "dom", target_pct=33)
+    quotas = temperature_quotas(docs, "dom")
     kept = quota_sample(docs, "doc_id", "dom", quotas)
     kept_agg = kept.groupBy("dom").agg(
         F.count(F.lit(1)).alias("n_kept"), F.sum("doc_id").alias("kept_id_sum")
@@ -3737,7 +3720,7 @@ def x278_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return (
-        inverted_index(docs, postings_head=5)
+        inverted_index(docs)
         .orderBy(F.col("cf").desc(), F.col("term"))
         .limit(30)
     )
@@ -3936,8 +3919,8 @@ def q10_bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # benchmark keys: the eval split + a deliberately leaked 3% of train
     keys = docs.filter((F.col("b") < 300) | (F.col("b") >= 9700)).select("norm")
     tr = docs.filter(F.col("b") >= 300)
-    bits = bloom_bits(bloom_build(keys, "norm", m_bits=256))
-    probed = bloom_probe(tr, "norm", bits, m_bits=256)
+    bits = bloom_bits(bloom_build(keys, "norm"))
+    probed = bloom_probe(tr, "norm", bits)
     # exact-membership audit join — this is the expensive path the Bloom
     # pre-filter exists to shrink; no broadcast hint (the key set is a
     # corpus fraction, so Catalyst/AQE must pick the strategy by size)
@@ -4085,7 +4068,7 @@ def x319_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
         F.count(F.lit(1)).alias("y")
     )
-    return seasonal_decompose(hourly, period=24).orderBy("h")
+    return seasonal_decompose(hourly).orderBy("h")
 
 
 # --------------------------------------------------------------------------
@@ -4163,7 +4146,7 @@ def x313_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("y"),
     )
-    return seasonal_anomalies(hourly, period=24, n_sigma=2).orderBy("h")
+    return seasonal_anomalies(hourly).orderBy("h")
 
 
 # --------------------------------------------------------------------------
@@ -4393,9 +4376,9 @@ def _int8_recall_eval(
     """Int8 quantization-recall eval over a deterministic fixed-size hash
     sample of the CORPUS side (queries always come from the full table):
     both brute-force rankings are GEMMs over ``sample_n`` vectors
-    regardless of corpus scale — the flat-cost eval contract (VERDICT r6
-    #7). q31 (ex-x321) value-oracles it at sample_n=200, a bound that
-    binds against the 500-vector sf0.01 corpus (the x316 lesson:
+    regardless of corpus scale — the flat-cost eval contract. q31
+    (ex-x321) value-oracles it at sample_n=200, a bound that binds
+    against the 500-vector sf0.01 corpus (the x316 lesson:
     capacity caps must be exercised where they bind; sample_n=500 would
     NOT bind there)."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -4413,13 +4396,13 @@ def _int8_recall_eval(
     # cache-barrier itself lives inside brute_force_topk (scoped to its
     # query collect), so no extra cache is taken here
     queries_raw = emb.filter(F.col("vec_id") < 10)
-    full_top = similarity.brute_force_topk(corpus, queries_raw, k=5).select(
+    full_top = similarity.brute_force_topk(corpus, queries_raw).select(
         "query_id", "neighbor_id"
     )
     quant_corpus = similarity.scalar_quantize_unit(corpus)
     quant_q = similarity.scalar_quantize_unit(queries_raw)
     quant_top = (
-        similarity.brute_force_topk(quant_corpus, quant_q, k=5)
+        similarity.brute_force_topk(quant_corpus, quant_q)
         .select("query_id", "neighbor_id")
         .withColumn("hit", F.lit(1))
     )
@@ -4806,7 +4789,7 @@ def q29_knn_classification_report(spark: SparkSession, sf_dir: str) -> DataFrame
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 100)
-    topk = similarity.brute_force_topk(emb, queries, k=5)
+    topk = similarity.brute_force_topk(emb, queries)
     labels = emb.select("vec_id", "label")
     votes = (
         topk.join(labels, topk["neighbor_id"] == labels["vec_id"])
@@ -4943,11 +4926,11 @@ def _x303_oracle() -> str:
 def x327_lsh_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
-    exact = similarity.brute_force_topk(emb, q, k=5).select(
+    exact = similarity.brute_force_topk(emb, q).select(
         "query_id", "neighbor_id"
     )
     single = (
-        similarity.lsh_topk(emb, q, k=5, n_tables=4)
+        similarity.lsh_topk(emb, q, n_tables=4)
         .select("query_id", "neighbor_id")
         .withColumn("s_hit", F.lit(1))
     )
@@ -5249,7 +5232,7 @@ def _x306_oracle() -> str:
 
 @harness_query("x306_ivf_nprobe_frontier", oracle=_x306_oracle())
 def x306_ivf_nprobe_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Single-pass nested-probe form (VERDICT r7 #3): probe sets at
+    # Single-pass nested-probe form: probe sets at
     # nprobe ∈ {1,2,4} are prefixes of the same ranked probe list and
     # every corpus vector lives in exactly one cell, so ONE corpus
     # assignment + ONE candidate-scoring pass at nprobe=4, tagged with
@@ -5268,14 +5251,13 @@ def x306_ivf_nprobe_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frontier branches (a lazy cache re-executes its child in every
     # branch that starts before the first one materializes it)
     exact = localize(
-        similarity.brute_force_topk(emb, q, k=5).select("query_id", "neighbor_id")
+        similarity.brute_force_topk(emb, q).select("query_id", "neighbor_id")
     )
     # candidate rows = |queries| x probed-cell occupancy, which is
     # data-DEPENDENT (clustered embeddings can overfill hot cells), so
     # overflow falls back to an eager scoped cache instead of raising
-    # (ADVICE r8 medium)
     scored = localize(
-        similarity.ivf_candidates_ranked(emb, q, 0.03),
+        similarity.ivf_candidates_ranked(emb, q),
         on_overflow="cache",
     )
     out = None
@@ -5390,18 +5372,8 @@ def q46_markov_next_event_accuracy(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-# --------------------------------------------------------------------------
-# q17 — the n-gram Jaccard hot-key guard (VERDICT r5 #7). A df cap far
-# above any corpus df is a bit-identical no-op of the capped code path
-# (the extra df aggregate + semi filter), so the uncapped exact SQL
-# (x317) is then its oracle. q17 (a q slot since the round-7
-# rotation; registered as x315 before that) runs a LOW cap and
-# oracles the exact capped-universe
-# semantics in SQL (filter shingles by document frequency FIRST, then
-# the same sizes/join/threshold) — proving the cap is well-defined
-# pruning, not an unoracled recall hole. The cap is what holds at scale:
-# x315 measured 8.8x under the exact form's fan-out at sf10 (SCALE.md).
-# --------------------------------------------------------------------------
+# x317's exact n-gram Jaccard SQL: the pair set the x114 invariants below
+# are checked against.
 _X317_SQL_BODY = _HARNESS["x317_ngram_jaccard_exact"][1]
 
 
@@ -5508,20 +5480,7 @@ assert "LIMIT 512" in _Q33_ORACLE and "LIMIT 256" in _Q33_ORACLE
 def q33_pq_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.pq_ivf_topk(
-        emb,
-        queries,
-        k=5,
-        m=4,
-        dim=64,
-        codebook_buckets=300,
-        salt=13,
-        centroid_fraction=0.03,
-        nprobe=2,
-        centroid_salt=7,
-        max_cells=512,
-        codebook_size=256,
-    )
+    return similarity.pq_ivf_topk(emb, queries, dim=64, max_cells=512, codebook_size=256)
 
 
 _X321_SAMPLE_N = 200
@@ -5592,7 +5551,7 @@ def q31_int8_recall_gt_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q13 (ex-x322, promoted in the round-8 rotation; the slot's former
 # computation is x323_repetition_signals) — PAIR-COVERAGE-AWARE
 # sample-bounded near-dup detector agreement
-# (round-8 revision of the round-7 uniform-sample form, VERDICT r7 #4).
+# (the revision of a uniform-sample form).
 # Round 7's version hash-sampled DOCUMENTS uniformly; a uniform sample
 # catches a dup pair only when BOTH members land in it, so a fixed tiny
 # sample over a huge corpus yields zero pairs and a vacuous (NULL)
@@ -5748,14 +5707,14 @@ def q13_near_dup_overlap_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtrees dedupe via ReuseExchange without a cache. corpus_cache=False:
     # the universe is a ~(base_n + comp_n x member_cap)-doc sample, so the
     # shingle frame is toy-regime regardless of the SOURCE scan size the
-    # auto gate would read (ADVICE r8).
+    # auto gate would read.
     e = dedup.ngram_jaccard_pairs(
         universe, threshold=0.2, corpus_cache=False
     ).select("id_a", "id_b")
     # Band rows of the UNIVERSE via a fresh banding pass over the
     # ~(base_n + comp_n × member_cap)-doc sample instead of re-deriving
-    # the CORPUS-wide banding and filtering it (round 12, VERDICT r11
-    # #4: push the sample before the pair generation). A band bucket is
+    # the CORPUS-wide banding and filtering it (push the sample before
+    # the pair generation). A band bucket is
     # a pure function of the document text, so banding the sampled docs
     # yields bit-identical (sid, band, bucket) rows to filtering the
     # corpus banding — but the candidate branches' cost now scales with
@@ -5805,9 +5764,9 @@ def q13_near_dup_overlap_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round-10 persisted-index lifecycle queries (VERDICT r9 #1): the
-# operators/ann_index.py module (the round-9 flagship) was verified
-# only by pytest bit-equality and SCALE timings; these register its
+# Persisted-index lifecycle queries: the operators/ann_index.py module
+# was verified only by pytest bit-equality and scale timings; these
+# register its
 # full lifecycle — build → ensure (fingerprint hit, NO re-encode) →
 # search, plus the O(batch) update faces — in the value-oracled
 # registry, so the persisted paths are checked at every gate exactly
@@ -5872,7 +5831,7 @@ def q20_pq_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fingerprint reuse contract is broken"
         )
     queries = emb.filter(F.col("vec_id") < 10)
-    return ann_index.pq_index_search(spark, path, queries, k=5)
+    return ann_index.pq_index_search(spark, path, queries)
 
 
 # Composed IVFADC lifecycle at exactly q33's fixed budgets — the oracle
@@ -5903,7 +5862,7 @@ def x331_ivfadc_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             "the two-half reuse contract is broken"
         )
     queries = emb.filter(F.col("vec_id") < 10)
-    return ann_index.ivfadc_index_search(spark, path, queries, k=5)
+    return ann_index.ivfadc_index_search(spark, path, queries)
 
 
 # IVF update round-trip: build on the EVEN-id half (centroids frozen
@@ -5935,7 +5894,7 @@ def x332_ivf_index_update_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     if not appended:
         raise AssertionError("ivf_index_update appended no rows for a non-empty batch")
     queries = emb.filter(F.col("vec_id") < 10)
-    return ann_index.ivf_index_search(spark, path, queries, k=5)
+    return ann_index.ivf_index_search(spark, path, queries)
 
 
 # PQ update round-trip: codes encoded under the even-half's FROZEN
@@ -5972,7 +5931,7 @@ def x333_pq_index_update_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
             "ensure() re-encoded a corpus the index already contains"
         )
     queries = emb.filter(F.col("vec_id") < 10)
-    return ann_index.pq_index_search(spark, path, queries, k=5)
+    return ann_index.pq_index_search(spark, path, queries)
 
 
 # --------------------------------------------------------------------------
@@ -6063,7 +6022,7 @@ def q40_quantile_summary_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §15 cache-strategy rule). x337's GROUPED build is the opposite
     # regime (cache wins 30.7→25.1 s) because its per-branch recompute
     # carries the extra group column through every window sort.
-    summ = rank_compaction_summary(base, "v", "rk", strata=32, k=64)
+    summ = rank_compaction_summary(base, "v", "rk")
     ests = summary_quantiles(
         summ, [("p50", 50), ("p90", 90), ("p99", 99)]
     ).withColumn(
@@ -6195,7 +6154,7 @@ def q15_stream_quantile_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.replace(os.path.join(part_dir, part), os.path.join(src, "events.parquet"))
     shutil.rmtree(part_dir)
     applied = stream_quantile_summary_to_parquet(
-        spark, src, out, strata=8, k=32, max_rows=1 << 62, checkpoint=ckpt
+        spark, src, out, max_rows=1 << 62, checkpoint=ckpt
     )
     state = spark.read.parquet(out)
     meta = state.agg(
@@ -6312,7 +6271,7 @@ def x337_grouped_quantile_summary(spark: SparkSession, sf_dir: str) -> DataFrame
     # same single-execution policy as q40: the grouped read-off
     # branches per target over the summary subtree
     summ = scoped_cache(
-        grouped_rank_compaction_summary(base, "grp", "v", "rk", strata=32, k=64)
+        grouped_rank_compaction_summary(base, "grp", "v", "rk")
     )
     ests = grouped_summary_quantiles(summ, [("p50", 50), ("p90", 90)])
     # per-group certification: one counting pass joined to the

@@ -2,7 +2,7 @@
 
 The reference renders each of its 13 analytical queries with
 matplotlib/seaborn (``Data_Analysis.ipynb``) and ships a Power BI
-dashboard — the one surface VERDICT r3 flagged as absent here. This
+dashboard, a surface the engine otherwise lacks. This
 module closes it without adding dependencies: hand-built SVG (stdlib
 string assembly, validated by ``xml.etree`` in tests) for bar and line
 charts, plus ``render_reference_report`` which runs the reference

@@ -293,8 +293,8 @@ def localize(df, max_rows: int = 100_000, on_overflow: str = "raise"):
     to an EAGER scoped cache (materialized here via ``count()``, so the
     lineage still runs exactly once and no branch stampedes it), and
     the query keeps its distributed plan at a modest read-path cost
-    (ADVICE r8: a hard ValueError at plan-build time is the wrong
-    failure mode for a shape that would merely run slower).
+    (a hard ValueError at plan-build time is the wrong failure mode
+    for a shape that would merely run slower).
     """
     try:
         table = collect_capped(df, max_rows, "localize()")

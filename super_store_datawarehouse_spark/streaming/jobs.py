@@ -85,7 +85,7 @@ def _read_state_meta(sess, out_dir: str, extra=()):
     state = sess.read.parquet(out_dir)
     cols = ["applied_batch", "query_id"] + [col for col, _default in extra]
     rows = state.select(*cols).limit(1).collect()
-    if not rows:  # 0-row state: fresh-state defaults (ADVICE r10)
+    if not rows:  # 0-row state: fresh-state defaults, never int(None)
         return state, defaults
     row = rows[0]
     meta = dict(defaults)
@@ -357,7 +357,7 @@ def stream_upserts_to_parquet(
             state = batch_df.sparkSession.read.parquet(out_dir)
         else:
             state = batch_df.limit(0)
-        merged = apply_upserts(state, batch_df, ["user_id"], "version")
+        merged = apply_upserts(state, batch_df, ["user_id"])
         _publish_state_atomic(out_dir, merged)
         batches["n"] += 1
 
@@ -433,8 +433,6 @@ def stream_quantile_summary_to_parquet(
     spark: SparkSession,
     src_dir: str,
     out_dir: str,
-    strata: int = 8,
-    k: int = 32,
     max_rows: int = 4096,
     checkpoint: str | None = None,
 ) -> int:
@@ -444,11 +442,12 @@ def stream_quantile_summary_to_parquet(
     eval.
 
     Per micro-batch: the batch's rows enter as weight-1 summary rows
-    (stratum = Knuth hash of event_id mod ``strata``), union with the
+    (stratum = Knuth hash of event_id mod 8 strata), union with the
     persisted summary — merge IS union for this sketch — then one
     ``weighted_rank_compaction`` bounds the state again. If the
     compacted state still exceeds ``max_rows``, the compaction step k
-    DOUBLES until it fits (KLL-style coarsening), so the state stays
+    (32 at the start) DOUBLES until it fits (KLL-style coarsening), so
+    the state stays
     bounded FOREVER while the error grows only with the logged budget,
     never silently.
 
@@ -470,6 +469,8 @@ def stream_quantile_summary_to_parquet(
         weighted_rank_compaction,
     )
 
+    strata, k = 8, 32
+
     ev = read_events_stream(spark, src_dir).select(
         F.round(F.col("value") * 100).cast("long").alias("value"),
         F.pmod(knuth_hash("event_id"), F.lit(strata)).alias("stratum"),
@@ -482,7 +483,7 @@ def stream_quantile_summary_to_parquet(
         # a zero-row state parquet (an empty FIRST micro-batch — e.g. a
         # zero-row source file — has no marker row to read) falls back
         # to the fresh-state defaults instead of crashing on int(None)
-        # forever after (ADVICE r10); _read_state_meta owns that rule
+        # forever after; _read_state_meta owns that rule
         state, meta = _read_state_meta(
             sess, out_dir, extra=(("k_now", k), ("err_unit", 0))
         )
@@ -519,7 +520,7 @@ def stream_quantile_summary_to_parquet(
             # an empty compaction (zero-row micro-batch on fresh state)
             # has nothing to attest: publishing a 0-row state parquet
             # would strand a state with no marker row to read on every
-            # later batch (ADVICE r10). Leave the state absent —
+            # later batch. Leave the state absent —
             # an empty batch contributes no rows, so leaving its
             # applied-marker un-advanced makes a checkpoint replay of
             # it a no-op, not a duplicate.

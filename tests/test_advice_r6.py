@@ -1,6 +1,4 @@
-"""Round-6 regression tests for the round-5 ADVICE findings.
-
-One test per finding: NULL-label contract in the agreement metrics,
+"""Regression tests, one per finding: NULL-label contract in the agreement metrics,
 duplicate-word determinism in unigram segmentation, scoped-cache
 release, and the cross-partition
 dimensionality guard in PCA.

@@ -1,4 +1,4 @@
-"""Round-7 ADVICE regression test: scoped_cache()/release_scoped_caches()
+"""Regression test: scoped_cache()/release_scoped_caches()
 are lock-guarded, so concurrent registration + release never corrupts
 the registry.
 """

@@ -1,9 +1,11 @@
-"""Round-8 ADVICE regression tests.
+"""Regression tests for caller caches and the audit documents.
 
 1. ``brute_force_topk`` must not evict a CALLER-persisted queries frame:
    its internal pushdown cache-barrier persists/unpersists only when the
-   caller had not already persisted (ADVICE r7 #3 — the finally-unpersist
-   silently dropped the caller's cache entry).
+   caller had not already persisted (a finally-unpersist once silently
+   dropped the caller's cache entry).
+2. PLAN_AUDIT.md's scanned set and README's harness counts track the
+   registry.
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ def test_brute_force_topk_preserves_caller_cache(spark):
     try:
         q.count()  # materialize the caller's cache
         assert q.is_cached
-        out = similarity.brute_force_topk(emb, q, k=3)
+        out = similarity.brute_force_topk(emb, q)
         assert out.count() > 0
         # the operator's internal barrier must not have evicted it
         assert q.is_cached
@@ -36,7 +38,7 @@ def test_brute_force_topk_unpersists_own_barrier(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
     assert not q.is_cached
-    out = similarity.brute_force_topk(emb, q, k=3)
+    out = similarity.brute_force_topk(emb, q)
     assert out.count() > 0
     assert not q.is_cached  # its scoped barrier was released
 
@@ -50,8 +52,8 @@ def _registry():
 def test_plan_audit_scanned_set_matches_registry():
     """PLAN_AUDIT.md certifies the anti-pattern scan; its scanned-query
     appendix must equal the live registry, so the audit doc can never
-    certify a smaller surface than what ships (VERDICT r7 #2 — round 7
-    shipped a 317-query registry with a '316 queries scanned' audit)."""
+    certify a smaller surface than what ships (a 317-query registry once
+    shipped with a '316 queries scanned' audit)."""
     import re
 
     entrymod = _registry()
@@ -75,8 +77,8 @@ def test_plan_audit_scanned_set_matches_registry():
 
 def test_readme_surface_counts_match_registry():
     """README's 'N harness queries, M fully value-oracled' line must
-    track the registry (VERDICT r7 #2: README certified 316/313 while
-    the registry held 317/314)."""
+    track the registry (README once certified 316/313 while the registry
+    held 317/314)."""
     import re
 
     entrymod = _registry()
@@ -97,8 +99,7 @@ def test_readme_surface_counts_match_registry():
 
 
 def test_brute_force_topk_preserves_scoped_cache(spark):
-    """VERDICT r8 open item: the ``is_cached`` guard must cover
-    ``scoped_cache`` too. scoped_cache returns the SAME DataFrame object
+    """The ``is_cached`` guard must cover ``scoped_cache`` too. scoped_cache returns the SAME DataFrame object
     it cached, so the guard sees it directly; additionally pin the
     empirical Spark-4 behavior that an equal-plan REBUILT object neither
     reads as cached nor evicts the original's entry on unpersist — i.e.
@@ -115,7 +116,7 @@ def test_brute_force_topk_preserves_scoped_cache(spark):
     try:
         q.count()
         assert q.is_cached
-        out = similarity.brute_force_topk(emb, q, k=3)
+        out = similarity.brute_force_topk(emb, q)
         assert out.count() > 0
         assert q.is_cached  # the operator's barrier did not evict it
 

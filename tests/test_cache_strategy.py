@@ -63,8 +63,8 @@ def test_ppjoin_caches_ranked_exactly_once(spark):
     # The plan STRING prints the relation block once per consuming scan,
     # so "exactly once" is asserted on materialized persistent RDDs
     # (one cached DataFrame == one RDD), not on substring counts
-    # (ADVICE r8: the old `>= 1` could not catch an accidental second
-    # cache on this path). New RDD ids are counted, not the map's size:
+    # (a `>= 1` could not catch an accidental second cache on this
+    # path). New RDD ids are counted, not the map's size:
     # the ContextCleaner may unpersist an earlier test's RDD meanwhile.
     release_scoped_caches()
     jsc = spark.sparkContext._jsc
@@ -99,7 +99,7 @@ def test_localize_refuses_unbounded_frames(spark):
 
 
 def test_localize_overflow_falls_back_to_eager_cache(spark):
-    # ADVICE r8 (medium): data-dependent bounds must degrade to a cache,
+    # data-dependent bounds must degrade to a cache,
     # not raise at plan-build time
     release_scoped_caches()
     out = localize(spark.range(0, 50), max_rows=10, on_overflow="cache")

@@ -23,23 +23,6 @@ UNREFERENCED_OK = {
         "write_warehouse will observe its quality counters on the writes that run",
 }
 
-# Public functions that only their own tests reach, kept for now because
-# those tests pin behaviour (exactly-once replay, crash recovery, merge
-# algebra) that a change deleting them must retire together with them:
-# ROADMAP item 5 lists them. Each reason names what the tests pin.
-UNREFERENCED_OK.update({
-    ("operators/cdc.py", "new_rows_only"): "anti-join idempotent append",
-    ("operators/incremental.py", "build_partials"): "partial aggregates merge to the full recompute",
-    ("operators/incremental.py", "merge_partials"): "partial aggregates merge to the full recompute",
-    ("sources/sinks.py", "compact_parquet"): "compaction survives a crash at every step",
-    ("sources/translog.py", "txn_compact"): "compaction keeps rows and old readers",
-    ("sources/translog.py", "txn_diff_versions"): "version diff reports churn and schema drift",
-    ("sources/translog.py", "txn_scan"): "stats pruning equals the full filter",
-    ("sources/translog.py", "txn_upsert"): "latest version wins in a transactional upsert",
-    ("sources/translog.py", "txn_vacuum"): "retention drops history, never the head",
-})
-
-
 def _py_files(*dirs: str) -> list[str]:
     out = []
     for d in dirs:
@@ -197,25 +180,39 @@ def _literal(node: ast.AST):
     return type(v), v
 
 
-def _one_value_options() -> list[tuple[str, str, str]]:
-    """``(file, function, parameter)`` of every package option with one
-    value in use.
+def _callers(root: str = ROOT) -> list[str]:
+    """The files under ``root`` whose calls count as uses: the package,
+    ``__spark_entry__.py``, the benchmark and the scripts. Tests do not
+    count: an option only a test sets is a constant the product never
+    varies."""
+    entry = os.path.join(root, "__spark_entry__.py")
+    dirs = ("super_store_datawarehouse_spark", "perfbench", "scripts")
+    return _py_files(*(os.path.join(root, d) for d in dirs)) + (
+        [entry] if os.path.exists(entry) else []
+    )
+
+
+def _one_value_options(callers: list[str], pkg: str = PKG) -> list[tuple[str, str, str]]:
+    """``(file, function, parameter)`` of every option of the package at
+    ``pkg`` with one value in use.
 
     A call passes an option when its bare function name, or the name an
     ``import ... as`` alias stands for, matches the ``def`` and it gives
     that parameter by keyword or by position; a call that unpacks
-    ``*args`` or ``**kwargs`` passes every option. Calls come
-    from the package, ``__spark_entry__.py``, the benchmark, the scripts
-    and the tests. An option has one value in use when no call passes it,
-    or every call passes the literal that is its default. An argument
+    ``*args`` or ``**kwargs`` passes every option. Calls come from the
+    ``callers`` files. An option has one value in use when no call passes
+    it, or every call passes the literal that is its default. An argument
     that is itself such an option of the calling function counts as its
-    default, so the search repeats until nothing changes."""
-    sources = _py_files(PKG, *(os.path.join(ROOT, d) for d in ("perfbench", "scripts", "tests")))
-    trees = {f: _parse(f) for f in sources + [os.path.join(ROOT, "__spark_entry__.py")]}
+    default, so the search repeats until nothing changes. The options of
+    a function in ``UNREFERENCED_OK`` are not checked: it has no caller
+    yet, so none of its options has a value in use."""
+    trees = {f: _parse(f) for f in dict.fromkeys(_py_files(pkg) + list(callers))}
     opts = []
-    for f in _py_files(PKG):
-        rel = os.path.relpath(f, PKG).replace(os.sep, "/")
-        opts += [(rel, *o) for o in _options(trees[f])]
+    for f in _py_files(pkg):
+        rel = os.path.relpath(f, pkg).replace(os.sep, "/")
+        opts += [
+            (rel, *o) for o in _options(trees[f]) if (rel, o[0].name) not in UNREFERENCED_OK
+        ]
     calls = []  # (callee name, call, enclosing def)
     for tree in trees.values():
         alias = {
@@ -275,11 +272,26 @@ def _one_value_options() -> list[tuple[str, str, str]]:
 
 
 def test_every_option_takes_more_than_one_value():
-    """A parameter default is an option only while some caller, a test
-    included, sets it to another value. One with a single value in use is
-    a constant, and the function should say so."""
-    single = _one_value_options()
+    """A parameter default is an option only while some caller outside the
+    tests sets it to another value. One with a single value in use is a
+    constant, and the function should say so."""
+    single = _one_value_options(_callers())
     assert not single, f"{len(single)} options with one value in use: {single}"
+
+
+def test_an_option_only_a_test_sets_is_reported(tmp_path):
+    """A package option set only from a file under ``tests/`` has one value
+    in use; the same option set from a file under ``scripts/`` has two."""
+    pkg = tmp_path / "super_store_datawarehouse_spark"
+    (pkg / "operators").mkdir(parents=True)
+    (pkg / "operators" / "probe.py").write_text("def probe(df, k: int = 8):\n    return df\n")
+    call = "from super_store_datawarehouse_spark.operators.probe import probe\nprobe(None, k=3)\n"
+    probe = ("operators/probe.py", "probe", "k")
+    for d, reported in (("tests", True), ("scripts", False)):
+        (tmp_path / d).mkdir()
+        (tmp_path / d / "use_probe.py").write_text(call)
+        assert (probe in _one_value_options(_callers(str(tmp_path)), str(pkg))) is reported, d
+        (tmp_path / d / "use_probe.py").unlink()
 
 
 def _script(name: str):

@@ -49,63 +49,19 @@ def test_asof_join_matches_bruteforce(spark, left, right):
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     rows=st.lists(st.tuples(KEYS, st.integers(0, 20)), min_size=1, max_size=40),
-    n_buckets=st.sampled_from([1, 2, 7, 32]),
 )
-def test_salted_count_distinct_is_exact(spark, rows, n_buckets):
+def test_salted_count_distinct_is_exact(spark, rows):
     from super_store_datawarehouse_spark.operators.skew import salted_count_distinct
 
     df = spark.createDataFrame(rows, ["k", "v"])
     got = {
         r["k"]: r["n_distinct_v"]
-        for r in salted_count_distinct(df, ["k"], "v", n_buckets).collect()
+        for r in salted_count_distinct(df, ["k"], "v").collect()
     }
     want = {}
     for k, v in rows:
         want.setdefault(k, set()).add(v)
     assert got == {k: len(vs) for k, vs in want.items()}
-
-
-@settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    rows=st.lists(
-        st.tuples(st.integers(0, 4), st.integers(-1000, 1000)), min_size=1, max_size=16
-    ),
-    cut=st.integers(0, 16),
-)
-def test_incremental_merge_equals_full_for_any_split(spark, rows, cut):
-    """For ANY split point of the input, merging the two halves' partial
-    aggregates equals aggregating the whole — the associativity the
-    incremental-maintenance operator depends on."""
-    from super_store_datawarehouse_spark.operators.incremental import (
-        build_partials,
-        merge_partials,
-    )
-
-    cut = min(cut, len(rows))
-    schema = "k long, v long"
-    specs = {
-        "n": ("count", "v"),
-        "s": ("sum", "v"),
-        "mn": ("min", "v"),
-        "mx": ("max", "v"),
-    }
-    full_df = spark.createDataFrame(rows, schema)
-    a = rows[:cut] or [(99, 0)]  # createDataFrame rejects empty lists;
-    b = rows[cut:] or [(99, 0)]  # pad both sides with a sentinel key
-    pad = [(99, 0)] if (not rows[:cut] or not rows[cut:]) else []
-    merged = merge_partials(
-        build_partials(spark.createDataFrame(a, schema), ["k"], specs),
-        build_partials(spark.createDataFrame(b, schema), ["k"], specs),
-        ["k"],
-        specs,
-    )
-    full = build_partials(spark.createDataFrame(rows + pad, schema), ["k"], specs)
-    as_map = lambda df: {r["k"]: (r["n"], r["s"], r["mn"], r["mx"]) for r in df.collect()}  # noqa: E731
-    got, want = as_map(merged), as_map(full)
-    if pad:
-        # drop the sentinel key before comparing real aggregates
-        got.pop(99, None), want.pop(99, None)
-    assert got == want
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
@@ -160,7 +116,7 @@ def test_bloom_prefilter_never_drops_members(spark, keys, probes):
     probe = spark.createDataFrame([(p,) for p in probes], "k long") if probes else None
     if probe is None:
         return
-    bloom = build_bloom(build, "k", n_bits=1 << 12, n_hashes=3)
+    bloom = build_bloom(build, "k")
     kept = [r["k"] for r in bloom_prefilter(probe, "k", bloom).collect()]
     member = set(keys)
     from collections import Counter
@@ -247,7 +203,7 @@ def test_bpe_merges_partition_invariant(spark):
     want = None
     for parts in (1, 4):
         wf = spark.createDataFrame(wf_rows, ["w", "freq"]).repartition(parts)
-        merges, _ = bpe_learn(wf, n_merges=3)
+        merges, _ = bpe_learn(wf)
         got = [tuple(r) for r in merges.orderBy("merge_rank").collect()]
         if want is None:
             want = got
@@ -297,7 +253,7 @@ def test_canonical_url_idempotent_and_order_free(
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     docs=st.lists(
-        st.lists(st.sampled_from("abcdef"), min_size=5, max_size=14),
+        st.lists(st.sampled_from("abc"), min_size=5, max_size=16),
         min_size=2,
         max_size=5,
     )
@@ -305,19 +261,18 @@ def test_canonical_url_idempotent_and_order_free(
 def test_longest_shared_spans_matches_bruteforce(spark, docs):
     """The islands formulation must agree with a per-pair brute-force
     longest-common-substring (token-level) computation whenever no
-    shingle is df-capped away (max_doc_freq >= n_docs)."""
+    shingle is df-capped away (at most 5 documents, under the cap of
+    10)."""
     from super_store_datawarehouse_spark.operators.dedup import (
         longest_shared_spans,
     )
 
-    n = 3
+    n = 5  # the operator's shingle width
     texts = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
     df = spark.createDataFrame(texts, ["doc_id", "text"])
     got = {
         (r["doc_a"], r["doc_b"]): r["span_tokens"]
-        for r in longest_shared_spans(
-            df, n=n, max_doc_freq=len(docs), min_span=n + 1
-        ).collect()
+        for r in longest_shared_spans(df).collect()
     }
 
     def lcs_tokens(a: list, b: list) -> int:
@@ -370,9 +325,8 @@ def test_triangle_count_matches_bruteforce(spark, edges):
     rows=st.lists(
         st.tuples(st.integers(0, 500), st.integers(0, 4)), min_size=2, max_size=40
     ).filter(lambda r: len({k for k, _ in r}) == len(r)),
-    pct=st.integers(1, 100),
 )
-def test_temperature_quota_sample_invariants(spark, rows, pct):
+def test_temperature_quota_sample_invariants(spark, rows):
     """Per-domain kept counts equal the integer-arithmetic quotas, the
     kept sets are the lowest Knuth ranks, and membership is stable
     under repartitioning."""
@@ -385,7 +339,7 @@ def test_temperature_quota_sample_invariants(spark, rows, pct):
     )
 
     df = spark.createDataFrame(rows, ["doc_id", "dom"])
-    quotas = temperature_quotas(df, "dom", pct)
+    quotas = temperature_quotas(df, "dom")
     qrows = {r["dom"]: r for r in quotas.collect()}
     # quotas replicate in plain python
     counts = {}
@@ -394,7 +348,7 @@ def test_temperature_quota_sample_invariants(spark, rows, pct):
     tot = sum(counts.values())
     wsum = sum(math.isqrt(n) for n in counts.values())
     for d, n in counts.items():
-        want = min(n, (tot * pct // 100) * math.isqrt(n) // wsum)
+        want = min(n, (tot * 33 // 100) * math.isqrt(n) // wsum)  # a 33 % target
         assert qrows[d]["target_n"] == want and qrows[d]["weight"] == math.isqrt(n)
     kept = sorted(r["doc_id"] for r in quota_sample(df, "doc_id", "dom", quotas).collect())
     kept7 = sorted(

@@ -1,6 +1,6 @@
 """Reporting layer: SVG charts are well-formed XML whose mark counts
 match the data, and the reference report renders end-to-end over the
-real warehouse (closes VERDICT r3 "What's missing #4")."""
+real warehouse (the reference's Power BI dashboard surface)."""
 
 from __future__ import annotations
 

@@ -1,10 +1,11 @@
-"""Round-10 hardening tests.
+"""ANN and sketch hardening tests.
 
-- VERDICT r9 #6: the ADC regime split (fused long join in-plan, wide
-  pivot on stored codes) is an explicit tested contract, so a refactor
-  cannot silently swap the regimes SCALE.md §16 measured.
-- ADVICE r9: refined-codebook budget guard, single ADC helper
-  definitions.
+- The ADC regime split (fused long join in-plan, wide pivot on stored
+  codes) is an explicit tested contract, so a refactor cannot silently
+  swap the regimes measured at sf10.
+- Refined-codebook budget guard, single ADC helper definitions.
+- Mergeable quantile summary bounds, edit-distance blocking, id-type
+  contract of the IVF search.
 """
 
 from __future__ import annotations
@@ -29,8 +30,8 @@ def vectors(spark):
     return spark.createDataFrame(rows, ["vec_id", "embedding"])
 
 
-# -- ADC regime-split dispatch (VERDICT r9 #6) -------------------------------
-# SCALE.md §16 measured: IN-PLAN the fused long join wins (the wide
+# -- ADC regime-split dispatch ------------------------------------------------
+# Measured at sf10: IN-PLAN the fused long join wins (the wide
 # pivot adds a shuffle + m broadcast builds that re-run the encode
 # lineage); on STORED codes the wide pivot wins 2.4-3.2×. Pin each
 # face to its measured winner via plan structure: the long form's
@@ -48,7 +49,7 @@ def test_stored_codes_faces_use_wide_pivot(spark, vectors, tmp_path):
         vectors, path, m=4, dim=8, codebook_buckets=500, salt=13, codebook_size=16
     )
     queries = vectors.filter("vec_id < 5")
-    p = _plan(pq_index_search(spark, path, queries, k=3))
+    p = _plan(pq_index_search(spark, path, queries))
     assert "collect_list" not in p  # not the long/fused regime
     assert p.count("BroadcastHashJoin") >= 4  # m per-subspace lookups
 
@@ -62,7 +63,7 @@ def test_stored_codes_faces_use_wide_pivot(spark, vectors, tmp_path):
         vectors, path2, m=4, dim=8, codebook_buckets=500, salt=13,
         codebook_size=16, centroid_fraction=0.05, centroid_salt=7,
     )
-    p2 = _plan(ivfadc_index_search(spark, path2, queries, k=3))
+    p2 = _plan(ivfadc_index_search(spark, path2, queries))
     assert "collect_list" not in p2
     assert p2.count("BroadcastHashJoin") >= 4
 
@@ -74,21 +75,14 @@ def test_in_plan_faces_use_fused_long_join(spark, vectors):
     )
 
     queries = vectors.filter("vec_id < 5")
-    p = _plan(
-        pq_topk(vectors, queries, k=3, m=4, dim=8, codebook_buckets=500, salt=13)
-    )
+    p = _plan(pq_topk(vectors, queries, dim=8))
     assert "collect_list" in p  # the sorted-parts fold == the long regime
 
-    p2 = _plan(
-        pq_ivf_topk(
-            vectors, queries, k=3, m=4, dim=8, codebook_buckets=500, salt=13,
-            centroid_fraction=0.05, centroid_salt=7, nprobe=2,
-        )
-    )
+    p2 = _plan(pq_ivf_topk(vectors, queries, dim=8))
     assert "collect_list" in p2
 
 
-# -- ADVICE r9 ---------------------------------------------------------------
+# -- refined-codebook budget guard, single ADC helpers ------------------------
 
 
 def test_refined_build_rejects_codebook_size(spark, vectors, tmp_path):
@@ -134,15 +128,15 @@ def _frame(spark, values, start_key=0):
 
 def test_quantile_summary_rank_bound(spark):
     from super_store_datawarehouse_spark.operators.sketches import (
+        QS_K,
+        QS_STRATA,
         rank_compaction_summary,
     )
 
     rnd = random.Random(7)
     values = [rnd.randrange(1_000_000) for _ in range(20_000)]
-    strata, k = 8, 32
-    summ = rank_compaction_summary(
-        _frame(spark, values), "v", "rk", strata=strata, k=k
-    )
+    strata, k = QS_STRATA, QS_K
+    summ = rank_compaction_summary(_frame(spark, values), "v", "rk")
     for pct in (10, 50, 90, 99):
         est, n_total = _estimate(spark, summ, pct)
         assert n_total == len(values)
@@ -155,32 +149,16 @@ def test_quantile_summary_rank_bound(spark):
 
 def test_quantile_summary_weights_partition_count(spark):
     from super_store_datawarehouse_spark.operators.sketches import (
+        QS_K,
+        QS_STRATA,
         rank_compaction_summary,
     )
 
     values = list(range(1, 5001))
-    summ = rank_compaction_summary(
-        _frame(spark, values), "v", "rk", strata=4, k=16
-    ).collect()
+    summ = rank_compaction_summary(_frame(spark, values), "v", "rk").collect()
     assert sum(r["weight"] for r in summ) == len(values)
     # summary is bounded: at most one tail row per stratum beyond N/k
-    assert len(summ) <= len(values) // 16 + 4
-
-
-def test_quantile_summary_k1_is_exact(spark):
-    from super_store_datawarehouse_spark.operators.sketches import (
-        rank_compaction_summary,
-    )
-
-    rnd = random.Random(11)
-    values = [rnd.randrange(10_000) for _ in range(3_000)]
-    summ = rank_compaction_summary(
-        _frame(spark, values), "v", "rk", strata=4, k=1
-    )
-    for pct in (50, 95):
-        est, n_total = _estimate(spark, summ, pct)
-        target = (pct * n_total + 99) // 100
-        assert est == sorted(values)[target - 1]
+    assert len(summ) <= len(values) // QS_K + QS_STRATA
 
 
 def test_quantile_summary_merge_is_union(spark):
@@ -189,17 +167,17 @@ def test_quantile_summary_merge_is_union(spark):
     plus one crossing overshoot) — partial summaries per shard/day
     combine without touching raw data."""
     from super_store_datawarehouse_spark.operators.sketches import (
+        QS_K,
+        QS_STRATA,
         rank_compaction_summary,
     )
 
     rnd = random.Random(13)
     a = [rnd.randrange(1_000_000) for _ in range(8_000)]
     b = [rnd.randrange(1_000_000) for _ in range(12_000)]
-    strata, k = 8, 32
-    sa = rank_compaction_summary(_frame(spark, a), "v", "rk", strata, k)
-    sb = rank_compaction_summary(
-        _frame(spark, b, start_key=len(a)), "v", "rk", strata, k
-    )
+    strata, k = QS_STRATA, QS_K
+    sa = rank_compaction_summary(_frame(spark, a), "v", "rk")
+    sb = rank_compaction_summary(_frame(spark, b, start_key=len(a)), "v", "rk")
     merged = sa.unionByName(sb)
     both = a + b
     for pct in (50, 90):
@@ -271,6 +249,8 @@ def test_grouped_quantile_summary_per_group_bound(spark):
     per-stratum tails only (bound-accurate, not exact — the tail is
     the stratum MAX carrying the whole remainder weight)."""
     from super_store_datawarehouse_spark.operators.sketches import (
+        QS_K,
+        QS_STRATA,
         grouped_rank_compaction_summary,
         grouped_summary_quantiles,
     )
@@ -284,8 +264,8 @@ def test_grouped_quantile_summary_per_group_bound(spark):
             rows.append((g, rnd.randrange(1_000_000), i))
             i += 1
     df = spark.createDataFrame(rows, "grp string, v long, rk long")
-    strata, k = 4, 16
-    summ = grouped_rank_compaction_summary(df, "grp", "v", "rk", strata, k)
+    strata, k = QS_STRATA, QS_K
+    summ = grouped_rank_compaction_summary(df, "grp", "v", "rk")
     ests = {
         (r["group"], r["q"]): (r["est"], r["n_group"])
         for r in grouped_summary_quantiles(
@@ -315,4 +295,4 @@ def test_ivf_search_rejects_non_integral_query_ids(spark, vectors, tmp_path):
         "concat('doc-', cast(vec_id AS string)) AS vec_id", "embedding"
     )
     with pytest.raises(TypeError, match="integral"):
-        ivf_index_search(spark, index, q, k=3)
+        ivf_index_search(spark, index, q)

@@ -1,6 +1,6 @@
-"""Round-12 optimization tests.
+"""Streaming-state and k-means update tests.
 
-- VERDICT r11 #7: the streaming sinks' in-state marker read must be an
+- The streaming sinks' in-state marker read must be an
   O(1)-row slice (the marker columns are constant per publish), not a
   full-state aggregate — while keeping the fresh/0-row fallbacks the
   sinks rely on for exactly-once.
@@ -50,16 +50,37 @@ def test_state_meta_absent_and_zero_row_defaults(tmp_path, spark):
     assert meta == {"query_id": None, "applied_batch": -1}
 
 
+def _update_centroids(assigned, prev):
+    """The unfused update: per-cluster component sums in one JVM
+    aggregate over the assignment rows, trunc-div means on the driver;
+    empty clusters keep their previous centroid."""
+    from super_store_datawarehouse_spark.operators.clustering import _trunc_div
+
+    dim = len(prev[0][1])
+    sums = (
+        assigned.groupBy("cluster")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            *[F.sum(F.col("q")[i]).alias(f"s{i}") for i in range(dim)],
+        )
+        .collect()
+    )
+    by_cid = {
+        row["cluster"]: [_trunc_div(row[f"s{i}"], row["n"]) for i in range(dim)]
+        for row in sums
+    }
+    return [(cid, by_cid.get(cid, cvec)) for cid, cvec in prev]
+
+
 def test_kmeans_fused_update_matches_unfused(spark):
-    """Round-12 k-means optimization: the fused assign+partial-sum
-    Arrow pass must produce bit-identical centroid updates to the
-    unfused assign→JVM-aggregate path (integer sums commute exactly)."""
+    """The k-means update: the fused assign+partial-sum Arrow pass must
+    produce bit-identical centroid updates to the unfused
+    assign→JVM-aggregate path (integer sums commute exactly)."""
     import random
 
     from super_store_datawarehouse_spark.operators.clustering import (
         assign_clusters_np,
         quantize_vec,
-        update_centroids,
         updated_centroids_np,
     )
 
@@ -73,11 +94,11 @@ def test_kmeans_fused_update_matches_unfused(spark):
         (i, list(r["q"]))
         for i, r in enumerate(qdf.orderBy("vec_id").limit(5).collect())
     ]
-    unfused = update_centroids(assign_clusters_np(qdf, seeds), seeds)
+    unfused = _update_centroids(assign_clusters_np(qdf, seeds), seeds)
     fused = updated_centroids_np(qdf, seeds)
     assert fused == unfused
     # a second round from the updated centroids stays identical too
-    assert updated_centroids_np(qdf, fused) == update_centroids(
+    assert updated_centroids_np(qdf, fused) == _update_centroids(
         assign_clusters_np(qdf, fused), fused
     )
 

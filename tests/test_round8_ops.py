@@ -2,8 +2,9 @@
 
 1. ``ivf_candidates_ranked`` — the nested-probe contract: filtering the
    one ranked nprobe=4 pass at ``probe_rank <= p`` reproduces exactly
-   the candidate set AND the top-k frontier of an independent
-   ``ivf_topk`` run at nprobe=p (the x306 single-pass rewrite).
+   the candidate set of an independent nprobe=p assignment, and at
+   p = ``IVF_NPROBE`` the top-k frontier of ``ivf_topk`` (the x306
+   single-pass rewrite).
 2. ``minhash_band_rows_md5`` — bucket membership is a pure function of
    document text (corpus-subset invariance), and the refactored
    ``minhash_lsh_pairs_md5`` built on it is unchanged vs its oracle
@@ -27,11 +28,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def test_ivf_candidates_ranked_nested_probe_contract(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
-    scored = similarity.ivf_candidates_ranked(emb, q, 0.1).cache()
+    scored = similarity.ivf_candidates_ranked(emb, q).cache()
     try:
         for p in (1, 2, 4):
             # candidate set at probe_rank <= p == independent nprobe=p run
-            cents = similarity.ivf_centroids(emb, 0.1)
+            cents = similarity.ivf_centroids(emb)
             ca = similarity.ivf_assign(emb, cents, 1, "vec_id", "embedding", "neighbor_id")
             qa = similarity.ivf_assign(q, cents, p, "vec_id", "embedding", "query_id")
             want = {
@@ -49,7 +50,9 @@ def test_ivf_candidates_ranked_nested_probe_contract(spark):
                 .collect()
             }
             assert got == want, f"nprobe={p} candidate set mismatch"
-            # top-k frontier derived from the one pass == ivf_topk at p
+            if p != similarity.IVF_NPROBE:
+                continue
+            # top-k frontier derived from the one pass == ivf_topk
             from pyspark.sql import Window
 
             w = Window.partitionBy("query_id").orderBy(
@@ -58,13 +61,11 @@ def test_ivf_candidates_ranked_nested_probe_contract(spark):
             approx = (
                 scored.filter(F.col("probe_rank") <= p)
                 .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= 3)
+                .filter(F.col("rank") <= similarity.TOP_K)
             )
             want_top = {
                 (r["query_id"], r["neighbor_id"], r["rank"])
-                for r in similarity.ivf_topk(
-                    emb, q, k=3, centroid_fraction=0.1, nprobe=p
-                ).collect()
+                for r in similarity.ivf_topk(emb, q).collect()
             }
             got_top = {
                 (r["query_id"], r["neighbor_id"], r["rank"])

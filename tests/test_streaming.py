@@ -370,11 +370,10 @@ def test_stream_quantile_summary_bound_and_restart(tmp_path, spark):
 
     out = str(tmp_path / "qsum")
     ckpt = str(tmp_path / "ckpt")
-    strata, max_rows = 8, 512
+    strata, max_rows = 8, 512  # the sink's strata
     assert (
         stream_quantile_summary_to_parquet(
-            spark, src, out, strata=strata, k=32, max_rows=max_rows,
-            checkpoint=ckpt,
+            spark, src, out, max_rows=max_rows, checkpoint=ckpt
         )
         == 3
     )
@@ -410,8 +409,7 @@ def test_stream_quantile_summary_bound_and_restart(tmp_path, spark):
     # restart from the same checkpoint: nothing re-applies
     assert (
         stream_quantile_summary_to_parquet(
-            spark, src, out, strata=strata, k=32, max_rows=max_rows,
-            checkpoint=ckpt,
+            spark, src, out, max_rows=max_rows, checkpoint=ckpt
         )
         == 0
     )
@@ -421,7 +419,7 @@ def test_stream_quantile_summary_bound_and_restart(tmp_path, spark):
         return sorted(tuple(r) for r in spark.read.parquet(out).collect())
 
     before = rows()
-    kw = dict(strata=strata, k=32, max_rows=max_rows)
+    kw = dict(max_rows=max_rows)
     # wiped checkpoint = a new query id re-reading the files under batch
     # ids 0-2: the batch-id watermark would skip them silently, so the
     # lineage check refuses loudly and leaves the state untouched
@@ -442,7 +440,7 @@ def test_stream_quantile_summary_bound_and_restart(tmp_path, spark):
 
 
 def test_stream_quantile_summary_survives_empty_first_batch(tmp_path, spark):
-    """ADVICE r10: a zero-row FIRST micro-batch must not poison the
+    """A zero-row FIRST micro-batch must not poison the
     sink — the old code published a 0-row state parquet whose max()
     metadata read None, so int(None) crashed every subsequent batch.
     Now an empty compaction on fresh state publishes nothing, and the
@@ -469,7 +467,7 @@ def test_stream_quantile_summary_survives_empty_first_batch(tmp_path, spark):
     drop(events.limit(0), "events0.parquet")  # zero-row first file
     out = str(tmp_path / "qsum")
     ckpt = str(tmp_path / "ckpt")
-    kw = dict(strata=4, k=32, max_rows=512, checkpoint=ckpt)
+    kw = dict(max_rows=512, checkpoint=ckpt)
     assert stream_quantile_summary_to_parquet(spark, src, out, **kw) == 1
     assert not os.path.isdir(out)  # nothing published for the empty batch
 

@@ -34,7 +34,7 @@ _NS = 'xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"'
 
 
 def test_read_sheet_row_wider_than_header(tmp_path):
-    """ADVICE r4: a data row carrying trailing unlabeled cells (wider
+    """A data row carrying trailing unlabeled cells (wider
     than the header row) must be truncated to the header width, not
     left longer than the inferred schema."""
     sheet = f"""<?xml version="1.0"?><worksheet {_NS}><sheetData>
